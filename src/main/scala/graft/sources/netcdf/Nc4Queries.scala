@@ -104,7 +104,7 @@ object Hdf5IO {
   def readAttrs(spark: SparkSession, dir: String): DataFrame = {
     val p = new Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val rows = NetCDF4Util.listFiles(fs, p).flatMap { f =>
+    val rows = NetCDF4.listFiles(fs, p).flatMap { f =>
       val meta = Hdf5Format.readMeta(fs, f)
       def attRows(varName: String, atts: Seq[Hdf5Format.H5Attr]) = atts.flatMap { a =>
         a.text match {
@@ -234,7 +234,7 @@ object Nc4Queries {
     * `streamNumpyData` appends records to ONE netCDF-4 file; parallel
     * Spark writers append one part file per task, the only layout N
     * concurrent writers can have, and
-    * `NcIO.compactIfNeeded4(maxFiles=1, parts=1)` folds the parts
+    * `NcIO.compactIfNeeded(NetCDF4, maxFiles=1, parts=1)` folds the parts
     * back into ONE self-contained .nc4 with record order preserved —
     * so a reference user's single-growing-file expectation is a
     * maintenance POLICY on top of the parallel sink, not a format
@@ -249,7 +249,7 @@ object Nc4Queries {
       .write.format(SRC).mode("overwrite").save(out)
     li.filter(col("l_orderkey") % 2 === 1).repartition(2)
       .write.format(SRC).mode("append").option("partprefix", "b").save(out)
-    NcIO.compactIfNeeded4(s, out, maxFiles = 1, parts = 1,
+    NcIO.compactIfNeeded(s, NetCDF4, out, maxFiles = 1, parts = 1,
       options = Map("h5ver" -> "2", "shuffle" -> "true"))
     val outFs = new org.apache.hadoop.fs.Path(out)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -270,7 +270,7 @@ object Nc4Queries {
     * nc3 twin is nc_multifile_union; wild corpora split along time
     * into directories of HDF5 containers just as often): two dirs
     * written deterministically, presented as ONE dataset with records
-    * re-based by cumulative header counts ([[NcIO.multifile4]] —
+    * re-based by cumulative header counts ([[NcIO.multifile]] —
     * metadata reads only, the union stays a pure scan union with all
     * per-file pruning intact); a record-ordinal-weighted decimal sum
     * pins every re-based index. */
@@ -286,7 +286,7 @@ object Nc4Queries {
     li.filter(col("l_orderkey") % 2 === 1).repartition(1)
       .sortWithinPartitions("l_orderkey", "l_linenumber")
       .write.format(SRC).mode("overwrite").option("h5ver", "2").save(outB)
-    NcIO.multifile4(s, Seq(outA, outB))
+    NcIO.multifile(s, NetCDF4, Seq(outA, outB))
       .agg(count(lit(1)).as("n"),
         max(col("record")).as("max_record"),
         sum(col("record").cast(DecimalType(18, 0)) *
@@ -860,7 +860,7 @@ object Nc4Queries {
       .save(out)
     val p = new Path(out)
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val sparseWin = NetCDF4Util.listFiles(fs, p).forall { f =>
+    val sparseWin = NetCDF4.listFiles(fs, p).forall { f =>
       val mv = Hdf5Format.readMeta(fs, f).vars.find(_.name == "v").get
       mv.chunks.length < (mv.numRecs + 127) / 128
     }
@@ -1067,7 +1067,7 @@ object Nc4Queries {
       .save(out)
     val p = new Path(out)
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    NetCDF4Util.listFiles(fs, p).zipWithIndex.foreach { case (f, i) =>
+    NetCDF4.listFiles(fs, p).zipWithIndex.foreach { case (f, i) =>
       if (i % 3 != 2) {
         val len = fs.getFileStatus(f).getLen.toInt
         val bytes = new Array[Byte](len)
@@ -1866,7 +1866,7 @@ object Nc4Queries {
     }
     val p = new Path(out)
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val rows = NetCDF4Util.listFiles(fs, p).flatMap { f =>
+    val rows = NetCDF4.listFiles(fs, p).flatMap { f =>
       val meta = Hdf5Format.readMeta(fs, f)
       meta.vars.flatMap { v =>
         val sorted = v.chunks.sortBy(_.startRec)

@@ -1,6 +1,5 @@
 package graft.sources.netcdf
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -16,42 +15,14 @@ import org.apache.spark.sql.types.LongType
   * story must survive the container change too — the HDF5 writer
   * records the same CF `actual_range` zone maps
   * ([[Hdf5Format.Hdf5Writer]]), the source checks pushed value
-  * filters against them per part file ([[NetCDF4Source]]), and the
+  * filters against them per part file ([[ChunkedScan]]), and the
   * header-only metadata pass reads them via [[Hdf5Format.readMeta]].
   * The selection algorithms themselves are SHARED with the classic
-  * side (the [[ValueSel]] trait): one implementation, two on-disk
+  * side (the [[ValueSel]] class): one implementation, two on-disk
   * generations, zero drift between them. */
-object Nc4Sel extends ValueSel {
+object Nc4Sel extends ValueSel(NetCDF4) {
 
-  private val SRC = "graft.sources.netcdf.NetCDF4Source"
-
-  protected def open(spark: SparkSession, dir: String): DataFrame =
-    spark.read.format(SRC).load(dir)
-
-  protected def coordRanges(spark: SparkSession, dir: String,
-      coordVar: String): Seq[(Double, Double)] = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    NetCDF4Util.listFiles(fs, p).flatMap { f =>
-      val meta = Hdf5Format.readMeta(fs, f)
-      if (meta.numRecs == 0L) None
-      else meta.vars.find(_.name == coordVar).flatMap(_.range)
-    }
-  }
-
-  protected def coordRangePairs(spark: SparkSession, dir: String,
-      v1: String, v2: String): Seq[((Double, Double), (Double, Double))] = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    NetCDF4Util.listFiles(fs, p).flatMap { f =>
-      val meta = Hdf5Format.readMeta(fs, f)
-      if (meta.numRecs == 0L) None
-      else for {
-        r1 <- meta.vars.find(_.name == v1).flatMap(_.range)
-        r2 <- meta.vars.find(_.name == v2).flatMap(_.range)
-      } yield (r1, r2)
-    }
-  }
+  private val SRC = NetCDF4.provider
 
   /** The range-bucketed sorted lineitem fixture every sel gate scans:
     * 8 part files with disjoint `l_orderkey` zone maps, written in

@@ -2,33 +2,21 @@ package graft.sources.netcdf
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.write._
-import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
+import org.apache.spark.sql.connector.write.{DataWriter, WriterCommitMessage}
 import org.apache.spark.sql.types._
 
-/** DSv2 write path for the netcdf4 source — the reference's headline
-  * capability (`NetCDF4Streamer.createStreamerVariable` +
-  * `streamNumpyData` stream rows into a chunked netCDF-4/HDF5
-  * variable) as the standard Spark write surface:
-  *
-  *   - batch:  `df.write.format("netcdf4").mode("append"|"overwrite").save(dir)`
-  *   - stream: `df.writeStream.format("netcdf4").option("path", dir).start()`
-  *
-  * Each task streams its rows through [[Hdf5Format.Hdf5Writer]] — the
-  * same chunk-at-a-time pipeline the reference applies (rows buffer
-  * into one `chunkRecs`-sized chunk per variable; a full chunk runs
-  * fletcher32 → shuffle → deflate and is retired) — and lands one
-  * self-contained `.nc4` part file via temp-name rename. Names are
-  * deterministic per (epoch, partition), so Spark task/epoch retries
-  * replace rather than duplicate: append-only exactly-once without a
-  * commit log, exactly like the classic-format twin [[NcWriteBuilder]].
-  *
-  * Scale shape: a 1000-executor job writes 1000 independent HDF5
-  * files with zero coordination — no shuffle, no driver funnel, no
-  * shared mutable header. The multi-file dir IS the dataset (the
-  * netcdf4 reader unions part files and concatenates their record
-  * spaces), which is how a 100 TB array store has to be laid out
-  * anyway: nobody serializes 100 TB through one HDF5 file.
+/** The netCDF-4 container's per-task writer ([[NetCDF4]]): one HDF5
+  * part file per non-empty task, streamed through the same
+  * chunk-at-a-time pipeline the reference applies (rows buffer into
+  * one `chunkRecs`-sized chunk per variable; a full chunk runs
+  * fletcher32 → shuffle → deflate and is retired) and landed as a
+  * self-contained `.nc4` file via temp-name rename. The
+  * [[Hdf5Format.Hdf5Writer]] is created lazily on the first row so
+  * array lengths absent from the `arrayLens` option can be inferred
+  * from live data (HDF5 dataspace dims are fixed per variable).
+  * Retired chunks hold only their filtered (deflated) bytes, so task
+  * memory is bounded by chunk size + compressed output — the file
+  * assembles once, at commit, in `finish()`'s single sizing pass.
   *
   * Options: `chunkRecs` (records per HDF5 chunk, default 4096),
   * `deflate` (default true), `shuffle` (byte-shuffle filter, default
@@ -38,87 +26,11 @@ import org.apache.spark.sql.types._
   * `stringWidth` (fixed string width, default 32), `vlenStrings`
   * (store StringType as netCDF-4 vlen `str` — 16-byte global-heap
   * refs in chunks, payloads in GCOL collections — instead of fixed
-  * width; default false), `arrayLens`
-  * (`col=len,...` for array columns; omitted lengths infer from each
-  * task's first row), `partPrefix` (distinguishes independent append
-  * jobs — same-name parts replace by design), `densegroups` (dense
+  * width; default false), `arrayLens`, `densegroups` (dense
   * root-group link storage: fractal heap + v2 B-tree, h5ver=2),
   * `denseattrs` (dense per-variable attribute storage, h5ver=2),
   * `chunkindex` (`btree1` | `fixedarray` | `btree2` | `single` |
-  * `implicit` — the on-disk chunk index generation).
-  */
-class Nc4WriteBuilder(schema: StructType, dir: String, options: Map[String, String])
-    extends WriteBuilder with SupportsTruncate {
-
-  require(dir != null, "netcdf4 write requires a path")
-  require(!schema.fieldNames.contains("record"),
-    "column name `record` is reserved for the netcdf4 record index")
-  private var truncateFirst = false
-
-  override def truncate(): WriteBuilder = { truncateFirst = true; this }
-
-  override def build(): Write = new Nc4Write(schema, dir, options, truncateFirst)
-}
-
-class Nc4Write(schema: StructType, dir: String, options: Map[String, String],
-    truncateFirst: Boolean) extends Write {
-
-  override def toBatch: BatchWrite = new Nc4BatchWrite(schema, dir, options, truncateFirst)
-
-  override def toStreaming: StreamingWrite =
-    new Nc4StreamingWrite(schema, dir, options, truncateFirst)
-
-  override def description(): String = s"netcdf4 write $dir"
-}
-
-class Nc4BatchWrite(schema: StructType, dir: String, options: Map[String, String],
-    truncateFirst: Boolean) extends BatchWrite {
-
-  private val serConf = NcWriteConf.prepareDir(dir, truncateFirst)
-
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    Nc4WriterFactory(schema, dir, options, serConf)
-
-  // per-task rename-into-place under the output commit coordinator is
-  // the whole commit (see NcBatchWrite)
-  override def commit(messages: Array[WriterCommitMessage]): Unit = ()
-  override def abort(messages: Array[WriterCommitMessage]): Unit = ()
-}
-
-class Nc4StreamingWrite(schema: StructType, dir: String, options: Map[String, String],
-    truncateFirst: Boolean) extends StreamingWrite {
-
-  private val serConf = NcWriteConf.prepareDir(dir, truncateFirst)
-
-  override def createStreamingWriterFactory(info: PhysicalWriteInfo): StreamingDataWriterFactory =
-    Nc4WriterFactory(schema, dir, options, serConf)
-
-  override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = ()
-  override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = ()
-}
-
-private[netcdf] case class Nc4WriterFactory(schema: StructType, dir: String,
-    options: Map[String, String], serConf: SerializableHadoopConf)
-    extends DataWriterFactory with StreamingDataWriterFactory {
-
-  private def prefix: String = options.get("partprefix").map(p => s"$p-").getOrElse("")
-
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new Nc4DataWriter(schema, dir, s"part-$prefix" + f"$partitionId%05d", options, serConf)
-
-  override def createWriter(partitionId: Int, taskId: Long,
-      epochId: Long): DataWriter[InternalRow] =
-    new Nc4DataWriter(schema, dir, s"part-$prefix" + f"e$epochId%05d-$partitionId%05d",
-      options, serConf)
-}
-
-/** One HDF5 part file per non-empty task. The [[Hdf5Format.Hdf5Writer]]
-  * is created lazily on the first row so array lengths absent from the
-  * `arrayLens` option can be inferred from live data (HDF5 dataspace
-  * dims are fixed per variable). Rows stream into per-variable chunk
-  * buffers; retired chunks hold only their filtered (deflated) bytes,
-  * so task memory is bounded by chunk size + compressed output — the
-  * file assembles once, at commit, in `finish()`'s single sizing pass. */
+  * `implicit` — the on-disk chunk index generation). */
 private[netcdf] class Nc4DataWriter(schema: StructType, dir: String, baseName: String,
     options: Map[String, String], serConf: SerializableHadoopConf)
     extends DataWriter[InternalRow] {

@@ -93,34 +93,63 @@ object NcIO {
     ()
   }
 
-  /** Total records in a netcdf3 dir — header metadata only, no record
+  /** Total records in a dataset dir — header metadata only, no record
     * data is read (one small read per part file). */
-  def recordCount(spark: org.apache.spark.sql.SparkSession, dir: String): Long = {
+  def recordCount(spark: org.apache.spark.sql.SparkSession, container: ChunkedContainer,
+      dir: String): Long = {
     val p = new Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(p).map(_.getPath)
-      .filter { f =>
-        val n = f.getName
-        n.endsWith(".nc") || n.endsWith(".nc.gz") || n.endsWith(".ncz")
-      }
-      .map(f => NcFormat.readMeta(fs, f).numRecs).sum
+    container.listFiles(fs, p).map(f => container.numRecs(container.readMeta(fs, f))).sum
   }
 
-  /** Compact a netcdf3 dir's many small part files into `parts` larger
-    * ones, preserving record order — the maintenance companion of the
+  /** MFDataset-style multi-file aggregation: present several dataset
+    * dirs as ONE dataset along a contiguous record dimension, each
+    * dir's records re-based by the cumulative record counts of the
+    * dirs before it. Offsets come from [[recordCount]] header reads
+    * (metadata-scale, like a parquet footer list), so the union plan
+    * stays a pure scan union — no shuffle, no count jobs; all
+    * per-file pruning/pushdown of the DSv2 still applies under the
+    * record-shift projection. */
+  def multifile(spark: org.apache.spark.sql.SparkSession, container: ChunkedContainer,
+      dirs: Seq[String]): DataFrame = {
+    import org.apache.spark.sql.functions.{col, lit}
+    val offsets = dirs.map(recordCount(spark, container, _)).scanLeft(0L)(_ + _)
+    dirs.zip(offsets).map { case (d, off) =>
+      spark.read.format(container.provider).load(d)
+        .withColumn("record", col("record") + lit(off))
+    }.reduce(_.unionByName(_))
+  }
+
+  // ---------------------------------------------------------------
+  // Maintenance for streaming sinks: the reference's `streamNumpyData`
+  // appends records to ONE growing file; parallel Spark writers append
+  // one part file per task (the only layout N concurrent writers can
+  // have), and these ops close the gap — `parts = 1` rewrites a dir of
+  // appended parts into a SINGLE self-contained file, record order
+  // preserved.
+  // ---------------------------------------------------------------
+
+  /** Compact a dir's many small part files into `parts` larger ones,
+    * preserving record order — the maintenance companion of the
     * streaming sink (per-epoch part files accumulate; small files cost
     * a scan partition each and metadata reads per file). Range
     * partitioning on `record` keeps partition i strictly before
     * partition i+1, so the rewritten dir presents the identical record
-    * sequence; one range shuffle of the data, no driver involvement. */
-  def compact(spark: org.apache.spark.sql.SparkSession, srcDir: String, dstDir: String,
-      parts: Int): Unit = {
+    * sequence; one range shuffle of the data, no driver involvement.
+    * Reads and writes through the container's DSv2 source; `options`
+    * forwards writer knobs (chunkrecs, deflate, chunkindex, h5ver,
+    * compressChunks, ...). */
+  def compact(spark: org.apache.spark.sql.SparkSession, container: ChunkedContainer,
+      srcDir: String, dstDir: String, parts: Int,
+      options: Map[String, String] = Map.empty): Unit = {
     import org.apache.spark.sql.functions.col
-    val df = spark.read.format("graft.sources.netcdf.NetCDF3Source").load(srcDir)
+    val df = spark.read.format(container.provider).load(srcDir)
     val dataCols = df.columns.filterNot(_ == "record").map(col(_)).toSeq
-    write(df.repartitionByRange(parts, col("record"))
+    df.repartitionByRange(parts, col("record"))
       .sortWithinPartitions("record")
-      .select(dataCols: _*), dstDir)
+      .select(dataCols: _*)
+      .write.format(container.provider).mode("overwrite").options(options)
+      .save(dstDir)
   }
 
   /** In-place [[compact]]: rewrite `dir`'s parts into `parts` larger
@@ -128,12 +157,12 @@ object NcIO {
     * parked at `.old` until the new one is in place, so a failure
     * mid-swap can be rolled back and readers never see a half-written
     * dir under the original name). */
-  def compactInPlace(spark: org.apache.spark.sql.SparkSession, dir: String,
-      parts: Int): Unit = {
+  def compactInPlace(spark: org.apache.spark.sql.SparkSession, container: ChunkedContainer,
+      dir: String, parts: Int, options: Map[String, String] = Map.empty): Unit = {
     val p = new Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tmp = new Path(dir + s".compact-${java.util.UUID.randomUUID()}")
-    compact(spark, dir, tmp.toString, parts)
+    compact(spark, container, dir, tmp.toString, parts, options)
     val old = new Path(dir + ".old")
     fs.delete(old, true)
     if (!fs.rename(p, old))
@@ -148,113 +177,19 @@ object NcIO {
   /** Size-threshold maintenance hook for streaming sinks: when `dir`
     * has accumulated more than `maxFiles` part files (per-epoch sink
     * residue), compact them in place to `parts` files. Returns whether
-    * compaction ran. Call between epochs (e.g. from a foreachBatch
-    * body after the epoch's write) — never while a batch is mid-write
-    * to the same dir. */
-  def compactIfNeeded(spark: org.apache.spark.sql.SparkSession, dir: String,
-      maxFiles: Int, parts: Int): Boolean = {
+    * compaction ran. `maxFiles = 1, parts = 1` is the
+    * single-growing-file policy: appends accumulate, the hook folds
+    * them back into one self-contained file. Call between epochs (e.g.
+    * from a foreachBatch body after the epoch's write) — never while a
+    * batch is mid-write to the same dir. */
+  def compactIfNeeded(spark: org.apache.spark.sql.SparkSession, container: ChunkedContainer,
+      dir: String, maxFiles: Int, parts: Int,
+      options: Map[String, String] = Map.empty): Boolean = {
     val p = new Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val n = fs.listStatus(p).map(_.getPath.getName)
-      .count(f => f.endsWith(".nc") || f.endsWith(".nc.gz") || f.endsWith(".ncz"))
-    if (n > maxFiles) { compactInPlace(spark, dir, parts); true } else false
-  }
-
-  // ---------------------------------------------------------------
-  // netCDF-4/HDF5 twins: the reference's `streamNumpyData` appends
-  // records to ONE growing file; parallel Spark writers append one
-  // part file per task (the only layout N concurrent writers can
-  // have), and these maintenance ops close the gap — `parts = 1`
-  // rewrites a dir of appended parts into a SINGLE self-contained
-  // .nc4 file, record order preserved.
-  // ---------------------------------------------------------------
-
-  private val SRC4 = "graft.sources.netcdf.NetCDF4Source"
-
-  /** Total records in a netCDF-4/HDF5 dir — header metadata only. */
-  def recordCount4(spark: org.apache.spark.sql.SparkSession, dir: String): Long = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    NetCDF4Util.listFiles(fs, p).map(f => Hdf5Format.readMeta(fs, f).numRecs).sum
-  }
-
-  /** [[multifile]] for netCDF-4 dirs: MFDataset semantics over HDF5
-    * containers — offsets from [[recordCount4]] header reads, the
-    * union a pure scan union with all per-file pruning intact. */
-  def multifile4(spark: org.apache.spark.sql.SparkSession, dirs: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val offsets = dirs.map(recordCount4(spark, _)).scanLeft(0L)(_ + _)
-    dirs.zip(offsets).map { case (d, off) =>
-      spark.read.format(SRC4).load(d)
-        .withColumn("record", col("record") + lit(off))
-    }.reduce(_.unionByName(_))
-  }
-
-  /** [[compact]] for netCDF-4 dirs: read through the `netcdf4` DSv2,
-    * range-partition on `record` (partition i strictly precedes
-    * i+1), write through the same DSv2 — `options` forwards writer
-    * knobs (chunkrecs, deflate, chunkindex, h5ver, ...). */
-  def compact4(spark: org.apache.spark.sql.SparkSession, srcDir: String, dstDir: String,
-      parts: Int, options: Map[String, String] = Map.empty): Unit = {
-    import org.apache.spark.sql.functions.col
-    val df = spark.read.format(SRC4).load(srcDir)
-    val dataCols = df.columns.filterNot(_ == "record").map(col(_)).toSeq
-    var w = df.repartitionByRange(parts, col("record"))
-      .sortWithinPartitions("record")
-      .select(dataCols: _*)
-      .write.format(SRC4).mode("overwrite")
-    options.foreach { case (k, v) => w = w.option(k, v) }
-    w.save(dstDir)
-  }
-
-  /** In-place [[compact4]] with the same park-and-swap protocol as
-    * [[compactInPlace]]. */
-  def compactInPlace4(spark: org.apache.spark.sql.SparkSession, dir: String,
-      parts: Int, options: Map[String, String] = Map.empty): Unit = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(dir + s".compact-${java.util.UUID.randomUUID()}")
-    compact4(spark, dir, tmp.toString, parts, options)
-    val old = new Path(dir + ".old")
-    fs.delete(old, true)
-    if (!fs.rename(p, old))
-      throw new java.io.IOException(s"compactInPlace4: failed to park $dir")
-    if (!fs.rename(tmp, p)) {
-      fs.rename(old, p) // roll back
-      throw new java.io.IOException(s"compactInPlace4: failed to swap in $tmp")
-    }
-    fs.delete(old, true)
-  }
-
-  /** [[compactIfNeeded]] for netCDF-4 dirs (counts .nc4/.h5/.hdf5
-    * parts). `maxFiles = 1, parts = 1` is the single-growing-file
-    * policy: appends accumulate, the hook folds them back into one
-    * self-contained netCDF-4 file. */
-  def compactIfNeeded4(spark: org.apache.spark.sql.SparkSession, dir: String,
-      maxFiles: Int, parts: Int, options: Map[String, String] = Map.empty): Boolean = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val n = fs.listStatus(p).map(_.getPath)
-      .count(f => f.getName.endsWith(".nc4") || f.getName.endsWith(".h5") ||
-        f.getName.endsWith(".hdf5"))
-    if (n > maxFiles) { compactInPlace4(spark, dir, parts, options); true } else false
-  }
-
-  /** MFDataset-style multi-file aggregation: present several netcdf3
-    * dirs as ONE dataset along a contiguous record dimension, each
-    * dir's records re-based by the cumulative record counts of the
-    * dirs before it. Offsets come from [[recordCount]] header reads
-    * (metadata-scale, like a parquet footer list), so the union plan
-    * stays a pure scan union — no shuffle, no count jobs; all
-    * per-file pruning/pushdown of the DSv2 still applies under the
-    * record-shift projection. */
-  def multifile(spark: org.apache.spark.sql.SparkSession, dirs: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val offsets = dirs.map(recordCount(spark, _)).scanLeft(0L)(_ + _)
-    dirs.zip(offsets).map { case (d, off) =>
-      spark.read.format("graft.sources.netcdf.NetCDF3Source").load(d)
-        .withColumn("record", col("record") + lit(off))
-    }.reduce(_.unionByName(_))
+    if (container.listFiles(fs, p).size > maxFiles) {
+      compactInPlace(spark, container, dir, parts, options); true
+    } else false
   }
 
   /** All attributes across the part files of `dir`, one row per
@@ -287,17 +222,13 @@ object NcIO {
     import spark.implicits._
     val p = new Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parts = fs.listStatus(p).map(_.getPath)
-      .filter { f =>
-        val n = f.getName
-        n.endsWith(".nc") || n.endsWith(".nc.gz") || n.endsWith(".ncz")
-      }.sortBy(_.getName)
+    val parts = NetCDF3.listFiles(fs, p)
     if (parts.length <= DRIVER_ATTR_FILES) {
-      parts.toSeq.flatMap(f => attrRowsOf(fs, f))
+      parts.flatMap(f => attrRowsOf(fs, f))
         .toDF("file", "var_name", "attr_name", "idx", "sval", "dval")
     } else {
       val serConf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
-      val names = parts.map(_.toString).toSeq
+      val names = parts.map(_.toString)
       val slices = math.max(1, math.min(names.length / 16, 4096))
       spark.sparkContext.parallelize(names, slices)
         .flatMap { n =>
@@ -369,7 +300,7 @@ object NcIO {
 }
 
 /** Row-at-a-time part-file writer shared by the [[NcIO]] RDD job and
-  * the DSv2 batch/streaming write paths ([[NcWrite]]): rows spool
+  * the DSv2 batch/streaming write paths ([[NcDataWriter]]): rows spool
   * locally through the chunked [[NcFormat.Writer]], and `commit()`
   * (optionally gzips and) uploads to `dir/<baseName>.nc[.gz]` via a
   * temp-name rename, so task retries and re-executed streaming epochs

@@ -495,7 +495,7 @@ object NcQueries {
     // audits) find the checkpointed stream adds nothing and the dir
     // already at its 2 compacted files. The invariant either way:
     // after the hook, the dir is within the file budget.
-    NcIO.compactIfNeeded(s, out, maxFiles = 2, parts = 2)
+    NcIO.compactIfNeeded(s, NetCDF3, out, maxFiles = 2, parts = 2)
     val outFs = new org.apache.hadoop.fs.Path(out)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
     val nParts = outFs.listStatus(new org.apache.hadoop.fs.Path(out))
@@ -600,7 +600,7 @@ object NcQueries {
       .sortWithinPartitions("l_orderkey", "l_linenumber"), outA))
     stageOnce(outB)(NcIO.write(li.filter(col("l_orderkey") % 2 === 1).repartition(1)
       .sortWithinPartitions("l_orderkey", "l_linenumber"), outB))
-    NcIO.multifile(s, Seq(outA, outB))
+    NcIO.multifile(s, NetCDF3, Seq(outA, outB))
       .agg(count(lit(1)).as("n"),
         max(col("record")).as("max_record"),
         sum(col("record").cast(DecimalType(18, 0)) * dec(col("l_quantity")))
@@ -674,7 +674,7 @@ object NcQueries {
     NcIO.write(li.repartitionByRange(8, col("l_orderkey"), col("l_linenumber"))
       .sortWithinPartitions("l_orderkey", "l_linenumber")
       .select("l_orderkey", "l_linenumber", "l_quantity"), small)
-    NcIO.compact(s, small, big, parts = 2)
+    NcIO.compact(s, NetCDF3, small, big, parts = 2)
     s.read.format(SRC).load(big)
       .agg(count(lit(1)).as("n"),
         max(col("record")).as("max_record"),

@@ -10,10 +10,11 @@ import org.apache.spark.sql.types.DoubleType
   * the algorithms need only (a) a way to open the corpus dir as a
   * DataFrame whose scan prunes on pushed value filters, and (b) the
   * per-part-file `actual_range` zone maps from a header-only metadata
-  * pass. [[NcSel]] binds them to the classic netcdf3 source,
-  * [[Nc4Sel]] to the netCDF-4/HDF5 source — same selection semantics
-  * on both on-disk generations, which is exactly the xarray contract
-  * (`sel()` behaves identically on netcdf3 and netCDF-4 files).
+  * pass, both supplied by the [[ChunkedContainer]]. [[NcSel]] binds
+  * them to the classic netcdf3 container, [[Nc4Sel]] to netCDF-4/HDF5
+  * — same selection semantics on both on-disk generations, which is
+  * exactly the xarray contract (`sel()` behaves identically on netcdf3
+  * and netCDF-4 files).
   *
   * [[range]] is a plain value filter: the pushed predicate is checked
   * against each part file's `actual_range` header attribute, so files
@@ -31,20 +32,35 @@ import org.apache.spark.sql.types.DoubleType
   * header read per part file on the driver; above ~metadata scale it
   * would fan out to executors exactly like [[NcIO.readAttrs]].
   */
-private[netcdf] trait ValueSel {
+private[netcdf] abstract class ValueSel(container: ChunkedContainer) {
 
   /** Open the corpus dir through the container's pruning source. */
-  protected def open(spark: SparkSession, dir: String): DataFrame
+  private def open(spark: SparkSession, dir: String): DataFrame =
+    spark.read.format(container.provider).load(dir)
+
+  /** Headers of the dir's non-empty part files. */
+  private def headers(spark: SparkSession, dir: String): Seq[container.Meta] = {
+    val p = new Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    container.listFiles(fs, p).map(container.readMeta(fs, _)).filter(container.numRecs(_) > 0)
+  }
 
   /** Per-file (min, max) of `coordVar` from the part-file headers. */
-  protected def coordRanges(spark: SparkSession, dir: String,
-      coordVar: String): Seq[(Double, Double)]
+  private def coordRanges(spark: SparkSession, dir: String,
+      coordVar: String): Seq[(Double, Double)] =
+    headers(spark, dir).flatMap(container.actualRange(_, coordVar))
 
   /** Per-file zone-map range PAIRS for two coordinate variables in
     * one metadata pass (files with either range missing are skipped —
     * conservative: they are simply never prunable). */
-  protected def coordRangePairs(spark: SparkSession, dir: String,
-      v1: String, v2: String): Seq[((Double, Double), (Double, Double))]
+  private def coordRangePairs(spark: SparkSession, dir: String,
+      v1: String, v2: String): Seq[((Double, Double), (Double, Double))] =
+    headers(spark, dir).flatMap { m =>
+      for {
+        r1 <- container.actualRange(m, v1)
+        r2 <- container.actualRange(m, v2)
+      } yield (r1, r2)
+    }
 
   /** Inclusive-lo / exclusive-hi value selection on a coordinate
     * variable; pushes the filter so zone maps prune part files. */
@@ -276,45 +292,9 @@ private[netcdf] trait ValueSel {
 }
 
 /** [[ValueSel]] bound to the classic netcdf3 source. */
-object NcSel extends ValueSel {
+object NcSel extends ValueSel(NetCDF3) {
 
-  private val SRC = "graft.sources.netcdf.NetCDF3Source"
-
-  protected def open(spark: SparkSession, dir: String): DataFrame =
-    spark.read.format(SRC).load(dir)
-
-  protected def coordRanges(spark: SparkSession, dir: String,
-      coordVar: String): Seq[(Double, Double)] = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parts = fs.listStatus(p).map(_.getPath).filter { f =>
-      val n = f.getName
-      n.endsWith(".nc") || n.endsWith(".nc.gz") || n.endsWith(".ncz")
-    }
-    parts.toSeq.flatMap { f =>
-      val meta = NcFormat.readMeta(fs, f)
-      if (meta.numRecs == 0L) None
-      else meta.vars.find(_.name == coordVar).flatMap(_.range)
-    }
-  }
-
-  protected def coordRangePairs(spark: SparkSession, dir: String,
-      v1: String, v2: String): Seq[((Double, Double), (Double, Double))] = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parts = fs.listStatus(p).map(_.getPath).filter { f =>
-      val n = f.getName
-      n.endsWith(".nc") || n.endsWith(".nc.gz") || n.endsWith(".ncz")
-    }
-    parts.toSeq.flatMap { f =>
-      val meta = NcFormat.readMeta(fs, f)
-      if (meta.numRecs == 0L) None
-      else for {
-        r1 <- meta.vars.find(_.name == v1).flatMap(_.range)
-        r2 <- meta.vars.find(_.name == v2).flatMap(_.range)
-      } yield (r1, r2)
-    }
-  }
+  private val SRC = NetCDF3.provider
 
   /** Driver-contract query: range-bucketed sorted write (disjoint
     * per-file zone maps), then nearest-record selection for three

@@ -1,56 +1,8 @@
 package graft.sources.netcdf
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.SparkContext
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.write._
-import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
+import org.apache.spark.sql.connector.write.{DataWriter, WriterCommitMessage}
 import org.apache.spark.sql.types._
-
-/** DSv2 write path for the netcdf3 source — the standard Spark write
-  * surface over the same part-file writer [[NcIO]] uses:
-  *
-  *   - batch:  `df.write.format("netcdf3").mode("append"|"overwrite").save(dir)`
-  *   - stream: `df.writeStream.format("netcdf3").option("path", dir).start()`
-  *
-  * This is the Spark-native form of the reference's headline API
-  * (`createStreamerVariable` + `streamNumpyData`): each task streams
-  * its rows into one part file through a chunk-size buffer, and each
-  * micro-batch of a streaming query appends `part-e<epoch>-<pid>.nc`
-  * files. File names are deterministic per (epoch, partition) and land
-  * via temp-name rename, so Spark's task/epoch retries replace rather
-  * than duplicate — append-only exactly-once without a commit log.
-  *
-  * Options: `chunkBytes`, `stringWidth`, `compress` (gzip part files),
-  * `arrayLens` (`col=len,col=len` — fixed lengths for array columns;
-  * omitted columns infer the length from each task's first row).
-  */
-class NcWriteBuilder(schema: StructType, dir: String, options: Map[String, String])
-    extends WriteBuilder with SupportsTruncate {
-
-  require(dir != null, "netcdf3 write requires a path")
-  require(!schema.fieldNames.contains("record"),
-    "column name `record` is reserved for the netcdf3 record index")
-  require(!(options.get("compress").exists(_.toBoolean) &&
-      options.get("compresschunks").exists(_.toBoolean)),
-    "choose one of compress (.nc.gz) or compressChunks (.ncz)")
-  private var truncateFirst = false
-
-  override def truncate(): WriteBuilder = { truncateFirst = true; this }
-
-  override def build(): Write = new NcWrite(schema, dir, options, truncateFirst)
-}
-
-class NcWrite(schema: StructType, dir: String, options: Map[String, String],
-    truncateFirst: Boolean) extends Write {
-
-  override def toBatch: BatchWrite = new NcBatchWrite(schema, dir, options, truncateFirst)
-
-  override def toStreaming: StreamingWrite =
-    new NcStreamingWrite(schema, dir, options, truncateFirst)
-
-  override def description(): String = s"netcdf3 write $dir"
-}
 
 private[netcdf] object NcWriteConf {
   /** Parse `arrayLens` option: `col=len,col=len`. */
@@ -59,80 +11,19 @@ private[netcdf] object NcWriteConf {
       val Array(c, n) = kv.split("=", 2)
       c.trim -> n.trim.toInt
     }.toMap).getOrElse(Map.empty)
-
-  /** Driver-side target-dir preparation: truncate deletes any previous
-    * contents (overwrite semantics); both modes ensure the dir exists
-    * before tasks start renaming into it. */
-  def prepareDir(dir: String, truncateFirst: Boolean): SerializableHadoopConf = {
-    val hconf = SparkContext.getOrCreate().hadoopConfiguration
-    val p = new Path(dir)
-    val fs = p.getFileSystem(hconf)
-    if (truncateFirst && fs.exists(p)) fs.delete(p, true)
-    fs.mkdirs(p)
-    new SerializableHadoopConf(hconf)
-  }
-}
-
-class NcBatchWrite(schema: StructType, dir: String, options: Map[String, String],
-    truncateFirst: Boolean) extends BatchWrite {
-
-  private val serConf = NcWriteConf.prepareDir(dir, truncateFirst)
-
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    NcWriterFactory(schema, dir, options, serConf)
-
-  // per-task rename-into-place (guarded by Spark's output commit
-  // coordinator — useCommitCoordinator defaults to true) is the whole
-  // commit; nothing left to do at job level
-  override def commit(messages: Array[WriterCommitMessage]): Unit = ()
-  override def abort(messages: Array[WriterCommitMessage]): Unit = ()
-}
-
-/** Streaming sink: epoch `e`, partition `p` writes `part-e<e>-<p>.nc`.
-  * A replayed epoch regenerates the same file names and replaces them
-  * atomically, so the directory converges to exactly-once content as
-  * long as the upstream replay is deterministic (the same contract as
-  * Spark's file sinks, without their commit-log dependency — the
-  * netcdf3 *reader*'s offset is the sorted file list, and a replaced
-  * file keeps its name and sort position). */
-class NcStreamingWrite(schema: StructType, dir: String, options: Map[String, String],
-    truncateFirst: Boolean) extends StreamingWrite {
-
-  private val serConf = NcWriteConf.prepareDir(dir, truncateFirst)
-
-  override def createStreamingWriterFactory(info: PhysicalWriteInfo): StreamingDataWriterFactory =
-    NcWriterFactory(schema, dir, options, serConf)
-
-  override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = ()
-  override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = ()
 }
 
 private[netcdf] case class NcFileCommitted(name: String, records: Long)
   extends WriterCommitMessage
 
-private[netcdf] case class NcWriterFactory(schema: StructType, dir: String,
-    options: Map[String, String], serConf: SerializableHadoopConf)
-    extends DataWriterFactory with StreamingDataWriterFactory {
-
-  /** Optional `partPrefix` option: distinguishes part names across
-    * separate append jobs into the same dir (same-name parts REPLACE
-    * by design — that is what makes task/epoch retries idempotent — so
-    * independent appends must not share names). */
-  private def prefix: String = options.get("partprefix").map(p => s"$p-").getOrElse("")
-
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new NcDataWriter(schema, dir, s"part-$prefix" + f"$partitionId%05d", options, serConf)
-
-  override def createWriter(partitionId: Int, taskId: Long,
-      epochId: Long): DataWriter[InternalRow] =
-    new NcDataWriter(schema, dir, s"part-$prefix" + f"e$epochId%05d-$partitionId%05d",
-      options, serConf)
-}
-
-/** One part file per non-empty task. The underlying [[NcPartFile]] is
-  * created lazily on the first row so fixed array lengths absent from
-  * the `arrayLens` option can be inferred from live data (the classic
-  * format needs dimension sizes in the header, before any record). */
+/** The classic container's per-task writer ([[NetCDF3]]): one part
+  * file per non-empty task. The underlying [[NcPartFile]] is created
+  * lazily on the first row so fixed array lengths absent from the
+  * `arrayLens` option can be inferred from live data (the classic
+  * format needs dimension sizes in the header, before any record).
+  *
+  * Options: `chunkBytes`, `stringWidth`, `compress` (gzip part files),
+  * `compressChunks` (per-chunk deflate, `.ncz`), `arrayLens`. */
 private[netcdf] class NcDataWriter(schema: StructType, dir: String, baseName: String,
     options: Map[String, String], serConf: SerializableHadoopConf)
     extends DataWriter[InternalRow] {

@@ -1,381 +1,66 @@
 package graft.sources.netcdf
 
-import java.util
-
-import scala.jdk.CollectionConverters._
-
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxFiles, SupportsAdmissionControl}
-import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
-import org.apache.spark.sql.sources
+import org.apache.spark.sql.connector.write.DataWriter
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.SparkContext
 
-/** DataSourceV2 for directories of classic NetCDF files:
-  * `spark.read.format("netcdf3").load(dir)`.
-  *
-  * One InputPartition per chunk-aligned record range of each part file
-  * — the distributed generalization of the reference's chunked
-  * `yieldNumpyData` iteration. Supports
-  *  - variable pruning (SupportsPushDownRequiredColumns): only the
-  *    requested variables are decoded from each record;
-  *  - record-range predicate pushdown (SupportsPushDownFilters) on the
-  *    virtual `record` column (the global record index): >,>=,<,<=,=
-  *    bounds prune whole chunks/files at planning time, so a slice of
-  *    a 100 TB variable touches only the covering byte ranges.
-  *
-  * The write side lives in [[NcIO]] (a distributed job that streams
-  * each partition into its own part file through a chunk buffer).
-  *
-  * Options: `chunkBytes` (read buffer, default 4 MiB),
-  * `recordsPerPartition` (override split granularity).
-  */
-class NetCDF3Source extends TableProvider with sources.DataSourceRegister {
+/** `spark.read.format("netcdf3")`: the [[ChunkedSource]] over classic
+  * netCDF part files. */
+class NetCDF3Source extends ChunkedSource(NetCDF3)
 
-  override def shortName(): String = "netcdf3"
+/** Classic netCDF part files (`.nc`, gzipped `.nc.gz`, per-chunk
+  * deflated `.ncz`) as a [[ChunkedContainer]]. Reads split at the
+  * `chunkBytes` read-buffer size (default 4 MiB); `.nc.gz` files
+  * decompress sequentially and are read whole. Writes go through
+  * [[NcDataWriter]] (or the RDD job in [[NcIO.write]]). */
+object NetCDF3 extends ChunkedContainer {
+  type Meta = NcFormat.NcMeta
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val dir = options.get("path")
-    require(dir != null, "netcdf3 requires a path")
-    val p = new Path(dir)
-    val fs = p.getFileSystem(SparkContext.getOrCreate().hadoopConfiguration)
-    val files = NetCDF3Util.listNcFiles(fs, p)
-    // A write target may not exist yet (Spark resolves the sink table
-    // before the first commit): an empty schema here is never used —
-    // the WriteBuilder takes the query's schema from LogicalWriteInfo.
-    if (files.isEmpty) return new StructType()
-    val meta = NcFormat.readMeta(fs, files.head)
-    val full = StructType(StructField("record", LongType, nullable = false) +:
-      meta.sparkSchema.fields.toSeq)
-    // netCDF4 GROUP hierarchy over the flat classic namespace:
-    // variables are path-named ("fc/t2m"), and `.option("group","fc")`
-    // scopes the table to one group — a pure header-level schema
-    // filter, so Catalyst's column pruning (and, under the .ncz v2
-    // var-major layout, block-level I/O skipping) does the rest.
-    Option(options.get("group")) match {
-      case None => full
-      case Some(g) =>
-        val pfx = g.stripSuffix("/") + "/"
-        StructType(full.fields.filter(f =>
-          f.name == "record" || f.name.startsWith(pfx)))
-    }
+  val name = "netcdf3"
+  def provider: String = classOf[NetCDF3Source].getName
+
+  protected def isPartFile(f: Path): Boolean = {
+    val n = f.getName
+    n.endsWith(".nc") || n.endsWith(".nc.gz") || n.endsWith(".ncz")
   }
 
-  /** Writes hand the query's schema straight to [[getTable]] (no
-    * directory to infer from when creating a dataset), reads without a
-    * user schema still go through [[inferSchema]]. */
-  override def supportsExternalMetadata(): Boolean = true
+  def readMeta(fs: FileSystem, f: Path): Meta = NcFormat.readMeta(fs, f)
+  def numRecs(m: Meta): Long = m.numRecs
+  def sparkSchema(m: Meta): StructType = m.sparkSchema
+  def actualRange(m: Meta, variable: String): Option[(Double, Double)] =
+    m.recordVars.find(_.name == variable).flatMap(_.range)
 
-  override def getTable(
-      schema: StructType,
-      partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table =
-    new NetCDF3Table(schema, properties.get("path"))
+  private def chunkBytes(options: Map[String, String]): Int =
+    options.getOrElse("chunkbytes", (4 << 20).toString).toInt
+
+  def splitGeometry(first: Option[Meta], required: StructType,
+      options: Map[String, String]): (Long, Int) =
+    (first.map(_.recSize).getOrElse(1L), chunkBytes(options))
+
+  // gzip part files decompress sequentially — not splittable
+  override def splittable(f: Path): Boolean = !NcFormat.isGzip(f)
+
+  def readerFactory(required: StructType, options: Map[String, String],
+      serConf: SerializableHadoopConf): PartitionReaderFactory =
+    new NcReaderFactory(required, chunkBytes(options), serConf)
+
+  override def checkWriteOptions(options: Map[String, String]): Unit =
+    require(!(options.get("compress").exists(_.toBoolean) &&
+        options.get("compresschunks").exists(_.toBoolean)),
+      "choose one of compress (.nc.gz) or compressChunks (.ncz)")
+
+  def dataWriter(schema: StructType, dir: String, baseName: String,
+      options: Map[String, String], serConf: SerializableHadoopConf): DataWriter[InternalRow] =
+    new NcDataWriter(schema, dir, baseName, options, serConf)
 }
 
-object NetCDF3Util {
-  def listNcFiles(fs: FileSystem, dir: Path): Seq[Path] = {
-    if (!fs.exists(dir)) return Seq.empty
-    val st = fs.getFileStatus(dir)
-    if (st.isFile) Seq(dir)
-    else fs.listStatus(dir).toSeq
-      .filter(s => s.isFile && {
-        val n = s.getPath.getName
-        n.endsWith(".nc") || n.endsWith(".nc.gz") || n.endsWith(".ncz")
-      })
-      .map(_.getPath)
-      .sortBy(_.getName)
-  }
-
-  /** Autotuned records-per-partition when the `recordsPerPartition`
-    * option is absent: split the corpus into ≈3× `parallelism` scan
-    * partitions (enough slots that stragglers rebalance, few enough
-    * that per-task overhead stays negligible), clamped to
-    *  - at least one chunk (the IO unit — smaller splits would re-read
-    *    the same chunk from two tasks), rounded up to whole chunks;
-    *  - at most `spark.sql.files.maxPartitionBytes` worth of records,
-    *    matching the parquet scan's split ceiling, so one task never
-    *    owns an unbounded record range on a huge corpus.
-    * Sizing from file *metadata* (total records × record size) keeps
-    * this O(#files) at plan time — no data is read. */
-  def autotunePerPart(totalRecs: Long, recSize: Long, chunkBytes: Int,
-      maxPartBytes: Long, parallelism: Int): Long = {
-    val rs = math.max(recSize, 1L)
-    val chunkRecs = math.max(1L, chunkBytes / rs)
-    val maxRecs = math.max(chunkRecs, maxPartBytes / rs)
-    val target = math.max(1L, totalRecs / math.max(1L, 3L * parallelism))
-    val chunks = math.max(1L, (target + chunkRecs - 1) / chunkRecs)
-    math.min(chunks * chunkRecs, maxRecs)
-  }
-
-  def maxPartitionBytes: Long =
-    org.apache.spark.sql.internal.SQLConf.get.filesMaxPartitionBytes
-}
-
-class NetCDF3Table(tableSchema: StructType, dir: String)
-    extends Table with SupportsRead with SupportsWrite {
-
-  override def name(): String = s"netcdf3:$dir"
-  override def schema(): StructType = tableSchema
-  override def capabilities(): util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ,
-      TableCapability.BATCH_WRITE, TableCapability.TRUNCATE,
-      TableCapability.STREAMING_WRITE).asJava
-
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new NcScanBuilder(tableSchema, dir, options.asScala.toMap)
-
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new NcWriteBuilder(info.schema(), dir, info.options().asScala.toMap)
-}
-
-class NcScanBuilder(fullSchema: StructType, dir: String, options: Map[String, String])
-    extends ScanBuilder with SupportsPushDownRequiredColumns with SupportsPushDownFilters {
-
-  private var required: StructType = fullSchema
-  private var lower: Long = 0L
-  private var upper: Long = Long.MaxValue
-  private var pushed: Array[sources.Filter] = Array.empty
-  /** per-variable closed value bounds for zone-map file pruning */
-  private var valueBounds: Map[String, (Double, Double)] = Map.empty
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-
-  /** Accept exact record-index bounds. Value comparisons on data
-    * columns are *observed* for zone-map file pruning (actual_range
-    * attributes) but returned to Spark for re-evaluation, so pruning
-    * only has to be conservative, never exact. */
-  override def pushFilters(filters: Array[sources.Filter]): Array[sources.Filter] = {
-    def bound(v: Any): Option[Long] = v match {
-      case n: Number => Some(n.longValue())
-      case _ => None
-    }
-    def dbl(v: Any): Option[Double] = v match {
-      case n: Number => Some(n.doubleValue())
-      case _ => None
-    }
-    def tighten(colName: String, lo: Double, hi: Double): Unit = {
-      val (clo, chi) = valueBounds.getOrElse(colName,
-        (Double.NegativeInfinity, Double.PositiveInfinity))
-      valueBounds += colName -> (math.max(clo, lo), math.min(chi, hi))
-    }
-    val (accepted, rest) = filters.partition {
-      case sources.GreaterThan("record", v) => bound(v).isDefined
-      case sources.GreaterThanOrEqual("record", v) => bound(v).isDefined
-      case sources.LessThan("record", v) => bound(v).isDefined
-      case sources.LessThanOrEqual("record", v) => bound(v).isDefined
-      case sources.EqualTo("record", v) => bound(v).isDefined
-      case _ => false
-    }
-    accepted.foreach {
-      case sources.GreaterThan("record", v) => lower = math.max(lower, bound(v).get + 1)
-      case sources.GreaterThanOrEqual("record", v) => lower = math.max(lower, bound(v).get)
-      case sources.LessThan("record", v) => upper = math.min(upper, bound(v).get)
-      case sources.LessThanOrEqual("record", v) => upper = math.min(upper, bound(v).get + 1)
-      case sources.EqualTo("record", v) =>
-        lower = math.max(lower, bound(v).get); upper = math.min(upper, bound(v).get + 1)
-      case _ =>
-    }
-    rest.foreach {
-      case sources.GreaterThan(c, v) => dbl(v).foreach(x => tighten(c, x, Double.PositiveInfinity))
-      case sources.GreaterThanOrEqual(c, v) => dbl(v).foreach(x => tighten(c, x, Double.PositiveInfinity))
-      case sources.LessThan(c, v) => dbl(v).foreach(x => tighten(c, Double.NegativeInfinity, x))
-      case sources.LessThanOrEqual(c, v) => dbl(v).foreach(x => tighten(c, Double.NegativeInfinity, x))
-      case sources.EqualTo(c, v) => dbl(v).foreach(x => tighten(c, x, x))
-      case _ =>
-    }
-    pushed = accepted
-    rest
-  }
-
-  override def pushedFilters(): Array[sources.Filter] = pushed
-
-  override def build(): Scan =
-    new NcScan(required, dir, lower, upper, valueBounds, options)
-}
-
-case class NcInputPartition(
-    file: String,
-    localStart: Long, // record range within the file
-    localEnd: Long,
-    fileOffset: Long, // global index of the file's record 0
-    chunkBytes: Int) extends InputPartition
-
-class NcScan(required: StructType, dir: String, lower: Long, upper: Long,
-    valueBounds: Map[String, (Double, Double)],
-    options: Map[String, String]) extends Scan with Batch {
-
-  // captured on the driver at scan build time, shipped to executors
-  private val serConf =
-    new SerializableHadoopConf(SparkContext.getOrCreate().hadoopConfiguration)
-
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def description(): String = {
-    val hi = if (upper == Long.MaxValue) "inf" else upper.toString
-    s"netcdf3 $dir records=[$lower,$hi) vars=[${required.fieldNames.mkString(",")}]"
-  }
-
-  override def planInputPartitions(): Array[InputPartition] = {
-    val chunkBytes = options.getOrElse("chunkbytes", (4 << 20).toString).toInt
-    val p = new Path(dir)
-    val fs = p.getFileSystem(SparkContext.getOrCreate().hadoopConfiguration)
-    val files = NetCDF3Util.listNcFiles(fs, p)
-    val metas = files.map(f => f -> NcFormat.readMeta(fs, f))
-    val perPart = options.get("recordsperpartition").map(_.toLong).getOrElse {
-      NetCDF3Util.autotunePerPart(
-        metas.map(_._2.numRecs).sum,
-        metas.headOption.map(_._2.recSize).getOrElse(1L),
-        chunkBytes,
-        NetCDF3Util.maxPartitionBytes,
-        SparkContext.getOrCreate().defaultParallelism)
-    }
-    var offset = 0L
-    val parts = Array.newBuilder[InputPartition]
-    metas.foreach { case (f, meta) =>
-      // zone-map skip: the whole file is prunable when any filtered
-      // variable's actual_range is disjoint from the filter bounds
-      val zonePruned = valueBounds.exists { case (colName, (lo, hi)) =>
-        meta.recordVars.find(_.name == colName).flatMap(_.range)
-          .exists { case (fMin, fMax) => fMin > hi || fMax < lo }
-      }
-      val lo = math.max(lower, offset)
-      val hi = math.min(upper, offset + meta.numRecs)
-      if (!zonePruned && lo < hi) {
-        if (NcFormat.isGzip(f)) {
-          // gzip part files decompress sequentially — not splittable;
-          // one partition per file (zone maps + record bounds still
-          // prune whole files / trailing records)
-          parts += NcInputPartition(f.toString, lo - offset, hi - offset, offset, chunkBytes)
-        } else {
-          var s = lo
-          while (s < hi) {
-            val e = math.min(s + perPart, hi)
-            parts += NcInputPartition(f.toString, s - offset, e - offset, offset, chunkBytes)
-            s = e
-          }
-        }
-      }
-      offset += meta.numRecs
-    }
-    parts.result()
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new NcReaderFactory(required, serConf)
-
-  override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    new NcMicroBatchStream(dir, required, options, serConf)
-}
-
-/** Offset = number of part files ingested. Part files are immutable
-  * (NcIO lands them with a temp rename) and the streaming contract is
-  * that new files sort after already-seen ones (e.g. timestamped
-  * names), mirroring the reference's append-only streamed variable. */
-case class NcOffset(fileCount: Int) extends Offset {
-  override def json(): String = "{\"fileCount\":" + fileCount + "}"
-}
-
-/** Micro-batch stream over a growing directory of .nc part files: each
-  * batch covers the files that appeared since the last offset, split
-  * into chunk-aligned record-range partitions exactly like the batch
-  * scan. The virtual `record` column stays globally consistent: each
-  * file's base index is the cumulative record count of all files
-  * before it in sorted order. */
-class NcMicroBatchStream(dir: String, required: StructType, options: Map[String, String],
-    serConf: SerializableHadoopConf) extends MicroBatchStream with SupportsAdmissionControl {
-
-  private def fs =
-    new Path(dir).getFileSystem(SparkContext.getOrCreate().hadoopConfiguration)
-  private def files: Seq[Path] = NetCDF3Util.listNcFiles(fs, new Path(dir))
-  // part files are immutable: header metadata is read once per file,
-  // so per-batch planning is O(new files), not O(all files)
-  private val metaCache = scala.collection.mutable.HashMap.empty[String, NcFormat.NcMeta]
-  private def metaOf(f: Path): NcFormat.NcMeta =
-    metaCache.getOrElseUpdate(f.toString, NcFormat.readMeta(fs, f))
-
-  override def initialOffset(): Offset = NcOffset(0)
-  override def latestOffset(): Offset = NcOffset(files.size)
-
-  /** Rate limiting (`maxFilesPerTrigger` option): cap how many new
-    * part files each micro-batch admits — the standard back-pressure
-    * lever when a burst of files lands on a continuously-ingesting
-    * stream (without it, one giant catch-up batch monopolizes the
-    * cluster and checkpoint progress becomes all-or-nothing). */
-  override def getDefaultReadLimit: ReadLimit =
-    options.get("maxfilespertrigger")
-      .map(n => ReadLimit.maxFiles(n.toInt))
-      .getOrElse(ReadLimit.allAvailable())
-
-  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val s = start.asInstanceOf[NcOffset].fileCount
-    limit match {
-      case mf: ReadMaxFiles => NcOffset(math.min(files.size, s + mf.maxFiles()))
-      case _ => NcOffset(files.size)
-    }
-  }
-
-  override def reportLatestOffset(): Offset = NcOffset(files.size)
-
-  override def deserializeOffset(json: String): Offset =
-    NcOffset("\\d+".r.findFirstIn(json).map(_.toInt).getOrElse(0))
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
-
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[NcOffset].fileCount
-    val e = end.asInstanceOf[NcOffset].fileCount
-    val chunkBytes = options.getOrElse("chunkbytes", (4 << 20).toString).toInt
-    val all = files
-    // autotune over this batch's files only: each micro-batch targets
-    // ≈3× cores partitions for the records it actually ingests
-    val batchMetas = all.zipWithIndex.collect {
-      case (f, idx) if idx >= s && idx < e => metaOf(f)
-    }
-    val perPart = options.get("recordsperpartition").map(_.toLong).getOrElse {
-      NetCDF3Util.autotunePerPart(
-        batchMetas.map(_.numRecs).sum,
-        batchMetas.headOption.map(_.recSize).getOrElse(1L),
-        chunkBytes,
-        NetCDF3Util.maxPartitionBytes,
-        SparkContext.getOrCreate().defaultParallelism)
-    }
-    var offset = 0L
-    val parts = Array.newBuilder[InputPartition]
-    all.zipWithIndex.foreach { case (f, idx) =>
-      val meta = metaOf(f)
-      if (idx >= s && idx < e && meta.numRecs > 0) {
-        if (NcFormat.isGzip(f)) {
-          parts += NcInputPartition(f.toString, 0L, meta.numRecs, offset, chunkBytes)
-        } else {
-          var r = 0L
-          while (r < meta.numRecs) {
-            val rEnd = math.min(r + perPart, meta.numRecs)
-            parts += NcInputPartition(f.toString, r, rEnd, offset, chunkBytes)
-            r = rEnd
-          }
-        }
-      }
-      offset += meta.numRecs
-    }
-    parts.result()
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new NcReaderFactory(required, serConf)
-}
-
-class NcReaderFactory(required: StructType, serConf: SerializableHadoopConf)
+class NcReaderFactory(required: StructType, chunkBytes: Int, serConf: SerializableHadoopConf)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new NcPartitionReader(partition.asInstanceOf[NcInputPartition], required, serConf)
+    new NcPartitionReader(partition.asInstanceOf[RecordRangePartition], required, chunkBytes,
+      serConf)
 
   /** All variable shapes decode straight into column vectors — one
     * typed fill loop per variable per chunk, no per-row branching:
@@ -393,11 +78,12 @@ class NcReaderFactory(required: StructType, serConf: SerializableHadoopConf)
 
   override def createColumnarReader(
       partition: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
-    new NcColumnarReader(partition.asInstanceOf[NcInputPartition], required, serConf)
+    new NcColumnarReader(partition.asInstanceOf[RecordRangePartition], required, chunkBytes,
+      serConf)
 }
 
 /** Vectorized reader: each loaded chunk becomes one ColumnarBatch. */
-class NcColumnarReader(part: NcInputPartition, required: StructType,
+class NcColumnarReader(part: RecordRangePartition, required: StructType, chunkBytes: Int,
     serConf: SerializableHadoopConf)
     extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
 
@@ -409,7 +95,7 @@ class NcColumnarReader(part: NcInputPartition, required: StructType,
   private val meta = NcFormat.readMeta(fs, path)
   private val varNames = required.fieldNames.filterNot(_ == "record").toSeq
   private val reader = new NcFormat.RangeReader(
-    fs, path, meta, part.localStart, part.localEnd, varNames, part.chunkBytes)
+    fs, path, meta, part.localStart, part.localEnd, varNames, chunkBytes)
 
   private val vectors: Array[OnHeapColumnVector] =
     required.fields.map(f => new OnHeapColumnVector(reader.recordsPerChunk, f.dataType))
@@ -502,7 +188,7 @@ class NcColumnarReader(part: NcInputPartition, required: StructType,
   override def close(): Unit = { batch.close(); reader.close() }
 }
 
-class NcPartitionReader(part: NcInputPartition, required: StructType,
+class NcPartitionReader(part: RecordRangePartition, required: StructType, chunkBytes: Int,
     serConf: SerializableHadoopConf)
     extends PartitionReader[InternalRow] {
 
@@ -511,7 +197,7 @@ class NcPartitionReader(part: NcInputPartition, required: StructType,
   private val meta = NcFormat.readMeta(fs, path)
   private val varNames = required.fieldNames.filterNot(_ == "record").toSeq
   private val reader = new NcFormat.RangeReader(
-    fs, path, meta, part.localStart, part.localEnd, varNames, part.chunkBytes)
+    fs, path, meta, part.localStart, part.localEnd, varNames, chunkBytes)
 
   private var inChunk = 0
   private var chunkSize = 0

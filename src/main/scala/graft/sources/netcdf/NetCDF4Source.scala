@@ -1,300 +1,69 @@
 package graft.sources.netcdf
 
-import java.util
-
-import scala.jdk.CollectionConverters._
-
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.SparkContext
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
-import org.apache.spark.sql.sources
+import org.apache.spark.sql.connector.write.DataWriter
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-/** DataSourceV2 over netCDF-4/HDF5 files:
-  * `spark.read.format("netcdf4").load(dirOrFile)` and
-  * `df.write.format("netcdf4").save(dir)` (see [[Nc4WriteBuilder]]).
+/** `spark.read.format("netcdf4")` and `df.write.format("netcdf4")`: the
+  * [[ChunkedSource]] over netCDF-4/HDF5 part files.
   *
   * This is the engine's window onto the reference's actual on-disk
   * world: `netCDF4.Dataset` files ARE HDF5 containers, so a user
   * switching from the reference brings directories of .nc4/.h5 files,
-  * not classic CDF. The scan surface mirrors [[NetCDF3Source]]:
-  *
-  *  - variable (column) pruning: unselected datasets' chunks are
-  *    never read, never inflated — HDF5 stores each variable's chunks
-  *    separately, so projection is physical I/O skipping;
-  *  - record-range pushdown on the virtual `record` column: bounds
-  *    prune scan partitions at plan time and, inside a partition, the
-  *    chunk B-tree keys bound which stored byte ranges are fetched;
-  *  - multiple files in one directory union along the record axis in
-  *    name order (MFDataset semantics), offsets from header metadata.
-  *
-  * The write direction ([[Nc4WriteBuilder]]) streams rows through the
-  * same from-spec [[Hdf5Format.Hdf5Writer]] that [[Hdf5IO.write]] uses
-  * for fixtures: chunked, optionally deflate+shuffle+fletcher-filtered
-  * netCDF-4 part files, one per task — the reference's
-  * `createStreamerVariable`/`streamNumpyData` chunk-streaming write as
-  * a Spark sink.
+  * not classic CDF. HDF5 stores each variable's chunks separately, so
+  * column pruning is physical I/O skipping (unselected datasets' chunks
+  * are never read, never inflated), and inside a partition the chunk
+  * B-tree keys bound which stored byte ranges a record range fetches.
   */
-class NetCDF4Source extends TableProvider with sources.DataSourceRegister {
+class NetCDF4Source extends ChunkedSource(NetCDF4)
 
-  override def shortName(): String = "netcdf4"
+/** netCDF-4/HDF5 part files (`.nc4`, `.h5`, `.hdf5`) as a
+  * [[ChunkedContainer]]: read by [[Nc4PartitionReader]], written by
+  * [[Nc4DataWriter]]. */
+object NetCDF4 extends ChunkedContainer {
+  type Meta = Hdf5Format.H5Meta
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val dir = options.get("path")
-    require(dir != null, "netcdf4 requires a path")
-    val p = new Path(dir)
-    val fs = p.getFileSystem(SparkContext.getOrCreate().hadoopConfiguration)
-    val files = NetCDF4Util.listFiles(fs, p)
-    require(files.nonEmpty, s"no .nc4/.h5 files under $dir")
-    val meta = Hdf5Format.readMeta(fs, files.head)
-    val full = StructType(StructField("record", LongType, nullable = false) +:
-      meta.sparkSchema.fields.toSeq)
-    // netCDF-4 GROUP scoping: datasets surface under "group/name" path
-    // names from the real HDF5 group walk, and `.option("group", g)`
-    // restricts the table at header level — the other groups'
-    // variables never enter the schema, so group selection is
-    // structural column pruning (their chunks are never read)
-    Option(options.get("group")) match {
-      case None => full
-      case Some(g) =>
-        val pfx = g.stripSuffix("/") + "/"
-        StructType(full.fields.filter(f =>
-          f.name == "record" || f.name.startsWith(pfx)))
-    }
-  }
+  val name = "netcdf4"
+  def provider: String = classOf[NetCDF4Source].getName
 
-  override def supportsExternalMetadata(): Boolean = true
+  protected def isPartFile(f: Path): Boolean = Hdf5Format.isHdf5(f)
 
-  override def getTable(
-      schema: StructType,
-      partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table =
-    new NetCDF4Table(schema, properties.get("path"))
-}
+  def readMeta(fs: FileSystem, f: Path): Meta = Hdf5Format.readMeta(fs, f)
+  def numRecs(m: Meta): Long = m.numRecs
+  def sparkSchema(m: Meta): StructType = m.sparkSchema
+  def actualRange(m: Meta, variable: String): Option[(Double, Double)] =
+    m.vars.find(_.name == variable).flatMap(_.range)
 
-object NetCDF4Util {
-  def listFiles(fs: FileSystem, dir: Path): Seq[Path] = {
-    if (!fs.exists(dir)) return Seq.empty
-    val st = fs.getFileStatus(dir)
-    if (st.isFile) Seq(dir)
-    else fs.listStatus(dir).toSeq
-      .filter(s => s.isFile && Hdf5Format.isHdf5(s.getPath))
-      .map(_.getPath)
-      .sortBy(_.getName)
-  }
-}
-
-class NetCDF4Table(tableSchema: StructType, dir: String)
-    extends Table with SupportsRead with SupportsWrite {
-
-  override def name(): String = s"netcdf4:$dir"
-  override def schema(): StructType = tableSchema
-  override def capabilities(): util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ,
-      TableCapability.BATCH_WRITE, TableCapability.TRUNCATE,
-      TableCapability.STREAMING_WRITE).asJava
-
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new Nc4ScanBuilder(tableSchema, dir, options.asScala.toMap)
-
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new Nc4WriteBuilder(info.schema(), dir, info.options().asScala.toMap)
-}
-
-class Nc4ScanBuilder(fullSchema: StructType, dir: String, options: Map[String, String])
-    extends ScanBuilder with SupportsPushDownRequiredColumns with SupportsPushDownFilters {
-
-  private var required: StructType = fullSchema
-  private var lower: Long = 0L
-  private var upper: Long = Long.MaxValue
-  private var pushed: Array[sources.Filter] = Array.empty
-  /** per-variable closed value bounds for actual_range file pruning */
-  private var valueBounds: Map[String, (Double, Double)] = Map.empty
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-
-  /** Accept exact record-index bounds; OBSERVE value comparisons on
-    * data columns for zone-map file pruning (the writer's automatic
-    * `actual_range` attributes) while returning them to Spark for
-    * re-evaluation — pruning only has to be conservative. */
-  override def pushFilters(filters: Array[sources.Filter]): Array[sources.Filter] = {
-    def bound(v: Any): Option[Long] = v match {
-      case n: Number => Some(n.longValue())
-      case _ => None
-    }
-    def dbl(v: Any): Option[Double] = v match {
-      case n: Number => Some(n.doubleValue())
-      case _ => None
-    }
-    def tighten(colName: String, lo: Double, hi: Double): Unit = {
-      val (clo, chi) = valueBounds.getOrElse(colName,
-        (Double.NegativeInfinity, Double.PositiveInfinity))
-      valueBounds += colName -> (math.max(clo, lo), math.min(chi, hi))
-    }
-    val (accepted, rest) = filters.partition {
-      case sources.GreaterThan("record", v) => bound(v).isDefined
-      case sources.GreaterThanOrEqual("record", v) => bound(v).isDefined
-      case sources.LessThan("record", v) => bound(v).isDefined
-      case sources.LessThanOrEqual("record", v) => bound(v).isDefined
-      case sources.EqualTo("record", v) => bound(v).isDefined
-      case _ => false
-    }
-    accepted.foreach {
-      case sources.GreaterThan("record", v) => lower = math.max(lower, bound(v).get + 1)
-      case sources.GreaterThanOrEqual("record", v) => lower = math.max(lower, bound(v).get)
-      case sources.LessThan("record", v) => upper = math.min(upper, bound(v).get)
-      case sources.LessThanOrEqual("record", v) => upper = math.min(upper, bound(v).get + 1)
-      case sources.EqualTo("record", v) =>
-        lower = math.max(lower, bound(v).get); upper = math.min(upper, bound(v).get + 1)
-      case _ =>
-    }
-    rest.foreach {
-      case sources.GreaterThan(c, v) => dbl(v).foreach(x => tighten(c, x, Double.PositiveInfinity))
-      case sources.GreaterThanOrEqual(c, v) => dbl(v).foreach(x => tighten(c, x, Double.PositiveInfinity))
-      case sources.LessThan(c, v) => dbl(v).foreach(x => tighten(c, Double.NegativeInfinity, x))
-      case sources.LessThanOrEqual(c, v) => dbl(v).foreach(x => tighten(c, Double.NegativeInfinity, x))
-      case sources.EqualTo(c, v) => dbl(v).foreach(x => tighten(c, x, x))
-      case _ =>
-    }
-    pushed = accepted
-    rest
-  }
-
-  override def pushedFilters(): Array[sources.Filter] = pushed
-
-  override def build(): Scan = new Nc4Scan(required, dir, lower, upper, valueBounds, options)
-}
-
-case class Nc4InputPartition(
-    file: String,
-    localStart: Long,
-    localEnd: Long,
-    fileOffset: Long) extends InputPartition
-
-class Nc4Scan(required: StructType, dir: String, lower: Long, upper: Long,
-    valueBounds: Map[String, (Double, Double)],
-    options: Map[String, String]) extends Scan with Batch {
-
-  private val serConf =
-    new SerializableHadoopConf(SparkContext.getOrCreate().hadoopConfiguration)
-
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def description(): String = {
-    val hi = if (upper == Long.MaxValue) "inf" else upper.toString
-    s"netcdf4 $dir records=[$lower,$hi) vars=[${required.fieldNames.mkString(",")}]"
-  }
-
-  override def planInputPartitions(): Array[InputPartition] = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(SparkContext.getOrCreate().hadoopConfiguration)
-    val files = NetCDF4Util.listFiles(fs, p)
-    val metas = files.map(f => f -> Hdf5Format.readMeta(fs, f))
-    // split granularity: reuse the netcdf3 autotuner (≈3× cores
-    // partitions, chunk-floor, maxPartitionBytes ceiling), aligning
-    // to the largest selected chunk so boundary chunks are re-read by
-    // at most one neighbor task
+  /** Splits align to the largest selected variable's chunk, so boundary
+    * chunks are re-read by at most one neighbor task. */
+  def splitGeometry(first: Option[Meta], required: StructType,
+      options: Map[String, String]): (Long, Int) = {
     val varNames = required.fieldNames.filterNot(_ == "record").toSet
-    val perPart = options.get("recordsperpartition").map(_.toLong).getOrElse {
-      val selected = metas.headOption.map(_._2.vars.filter(v =>
-        varNames.isEmpty || varNames.contains(v.name))).getOrElse(Nil)
-      val chunkRecs = if (selected.isEmpty) 1 else selected.map(_.chunkRecs).max
-      val recSize = math.max(1L, selected.map(_.kind.rowBytes).sum)
-      NetCDF3Util.autotunePerPart(
-        metas.map(_._2.numRecs).sum,
-        recSize,
-        (chunkRecs * recSize).min(Int.MaxValue.toLong).toInt,
-        NetCDF3Util.maxPartitionBytes,
-        SparkContext.getOrCreate().defaultParallelism)
-    }
-    var offset = 0L
-    val parts = Array.newBuilder[InputPartition]
-    metas.foreach { case (f, meta) =>
-      // zone-map skip: the whole file is prunable when any filtered
-      // variable's actual_range attribute is disjoint from the bounds
-      val zonePruned = valueBounds.exists { case (colName, (lo, hi)) =>
-        meta.vars.find(_.name == colName).flatMap(_.range)
-          .exists { case (fMin, fMax) => fMin > hi || fMax < lo }
-      }
-      val lo = math.max(lower, offset)
-      val hi = math.min(upper, offset + meta.numRecs)
-      if (!zonePruned) {
-        var s = lo
-        while (s < hi) {
-          val e = math.min(s + perPart, hi)
-          parts += Nc4InputPartition(f.toString, s - offset, e - offset, offset)
-          s = e
-        }
-      }
-      offset += meta.numRecs
-    }
-    parts.result()
+    val selected = first.map(_.vars.filter(v =>
+      varNames.isEmpty || varNames.contains(v.name))).getOrElse(Nil)
+    val chunkRecs = if (selected.isEmpty) 1 else selected.map(_.chunkRecs).max
+    val recSize = math.max(1L, selected.map(_.kind.rowBytes).sum)
+    (recSize, (chunkRecs * recSize).min(Int.MaxValue.toLong).toInt)
   }
 
-  override def createReaderFactory(): PartitionReaderFactory =
+  def readerFactory(required: StructType, options: Map[String, String],
+      serConf: SerializableHadoopConf): PartitionReaderFactory =
     new Nc4ReaderFactory(required, serConf)
 
-  override def toMicroBatchStream(checkpointLocation: String):
-      org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new Nc4MicroBatchStream(dir, required, options, serConf)
-}
-
-/** Micro-batch stream over a growing directory of .nc4/.h5 files —
-  * the netCDF-4 twin of [[NcMicroBatchStream]]: offset = file count,
-  * files immutable, new files sort after seen ones; each batch covers
-  * the files that appeared since the last offset, with the global
-  * `record` index rebased from header metadata only. */
-class Nc4MicroBatchStream(dir: String, required: StructType,
-    options: Map[String, String], serConf: SerializableHadoopConf)
-    extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream {
-
-  import org.apache.spark.sql.connector.read.streaming.Offset
-
-  private def fs =
-    new Path(dir).getFileSystem(SparkContext.getOrCreate().hadoopConfiguration)
-  private def files: Seq[Path] = NetCDF4Util.listFiles(fs, new Path(dir))
-  private val metaCache = scala.collection.mutable.HashMap.empty[String, Hdf5Format.H5Meta]
-  private def metaOf(f: Path): Hdf5Format.H5Meta =
-    metaCache.getOrElseUpdate(f.toString, Hdf5Format.readMeta(fs, f))
-
-  override def initialOffset(): Offset = NcOffset(0)
-  override def latestOffset(): Offset = NcOffset(files.size)
-  override def deserializeOffset(json: String): Offset =
-    NcOffset("\\d+".r.findFirstIn(json).map(_.toInt).getOrElse(0))
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
-
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[NcOffset].fileCount
-    val e = end.asInstanceOf[NcOffset].fileCount
-    var offset = 0L
-    val parts = Array.newBuilder[InputPartition]
-    files.zipWithIndex.foreach { case (f, idx) =>
-      val meta = metaOf(f)
-      if (idx >= s && idx < e && meta.numRecs > 0)
-        parts += Nc4InputPartition(f.toString, 0L, meta.numRecs, offset)
-      offset += meta.numRecs
-    }
-    parts.result()
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new Nc4ReaderFactory(required, serConf)
+  def dataWriter(schema: StructType, dir: String, baseName: String,
+      options: Map[String, String], serConf: SerializableHadoopConf): DataWriter[InternalRow] =
+    new Nc4DataWriter(schema, dir, baseName, options, serConf)
 }
 
 class Nc4ReaderFactory(required: StructType, serConf: SerializableHadoopConf)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new Nc4PartitionReader(partition.asInstanceOf[Nc4InputPartition], required, serConf)
+    new Nc4PartitionReader(partition.asInstanceOf[RecordRangePartition], required, serConf)
 }
 
-class Nc4PartitionReader(part: Nc4InputPartition, required: StructType,
+class Nc4PartitionReader(part: RecordRangePartition, required: StructType,
     serConf: SerializableHadoopConf)
     extends PartitionReader[InternalRow] {
 

@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.netcdf.{Hdf5Format, Hdf5IO, NetCDF4Util}
+import graft.sources.netcdf.{Hdf5Format, Hdf5IO, NetCDF4}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.Row
@@ -68,7 +68,7 @@ class Hdf5Spec extends AnyFunSuite {
       spark.range(500).select(col("id").cast(DoubleType).as("x")).coalesce(1),
       dir, chunkRecs = 64, deflate = true)
     val fsl = fs
-    val file = NetCDF4Util.listFiles(fsl, new Path(dir)).head
+    val file = NetCDF4.listFiles(fsl, new Path(dir)).head
     val back = spark.read.format("netcdf4").load(file.toString)
     assert(back.count() == 500)
     assert(back.agg(sum("x")).head().getDouble(0) == (0 until 500).map(_.toDouble).sum)
@@ -106,7 +106,7 @@ class Hdf5Spec extends AnyFunSuite {
       spark.range(10000).select(col("id").cast(DoubleType).as("a"),
         (col("id") + 1).cast(DoubleType).as("b")).coalesce(1),
       dir, chunkRecs = 500, deflate = true)
-    val f = NetCDF4Util.listFiles(fs, new Path(dir)).head
+    val f = NetCDF4.listFiles(fs, new Path(dir)).head
     val meta = Hdf5Format.readMeta(fs, f)
     val va = meta.vars.find(_.name == "a").get
     val vb = meta.vars.find(_.name == "b").get
@@ -130,7 +130,7 @@ class Hdf5Spec extends AnyFunSuite {
     Hdf5IO.write(
       spark.range(4000).select(xxhash64(col("id")).as("noise")).coalesce(1),
       dir, chunkRecs = 512, deflate = true)
-    val f = NetCDF4Util.listFiles(fs, new Path(dir)).head
+    val f = NetCDF4.listFiles(fs, new Path(dir)).head
     val meta = Hdf5Format.readMeta(fs, f)
     val v = meta.vars.head
     assert(v.deflate)
@@ -147,7 +147,7 @@ class Hdf5Spec extends AnyFunSuite {
       val df = mixedDf(3000)
       Hdf5IO.write(df, dir, chunkRecs = 256, deflate = true, h5ver = ver,
         arrayLens = Map("emb" -> 8), shuffle = true)
-      val f = NetCDF4Util.listFiles(fs, new Path(dir)).head
+      val f = NetCDF4.listFiles(fs, new Path(dir)).head
       val meta = Hdf5Format.readMeta(fs, f)
       assert(meta.vars.forall(v => v.shuffle && v.deflate))
       val back = spark.read.format(SRC).load(dir)
@@ -175,7 +175,7 @@ class Hdf5Spec extends AnyFunSuite {
     Hdf5IO.write(df, dir, chunkRecs = 2048, deflate = true, shuffle = true)
     Hdf5IO.write(df, dirPlain, chunkRecs = 2048, deflate = true)
     def storedBytes(d: String): Long = {
-      val f = NetCDF4Util.listFiles(fs, new Path(d)).head
+      val f = NetCDF4.listFiles(fs, new Path(d)).head
       Hdf5Format.readMeta(fs, f).vars.flatMap(_.chunks).map(_.storedSize.toLong).sum
     }
     assert(storedBytes(dir) < storedBytes(dirPlain),
@@ -216,7 +216,7 @@ class Hdf5Spec extends AnyFunSuite {
     assert(none.rdd.getNumPartitions == 0 || none.count() == 0)
     assert(none.count() == 0)
     // long variables widen endpoints outward (conservative above 2^53)
-    val meta = Hdf5Format.readMeta(fs, NetCDF4Util.listFiles(fs, new Path(dir)).head)
+    val meta = Hdf5Format.readMeta(fs, NetCDF4.listFiles(fs, new Path(dir)).head)
     assert(meta.vars.forall(_.range.isDefined))
   }
 
@@ -229,7 +229,7 @@ class Hdf5Spec extends AnyFunSuite {
         (col("id") + 7).cast(DoubleType).as("b/z"),
         col("id").cast(DoubleType).as("plain")).coalesce(1),
       dir, chunkRecs = 500)
-    val f = NetCDF4Util.listFiles(fs, new Path(dir)).head
+    val f = NetCDF4.listFiles(fs, new Path(dir)).head
     val meta = Hdf5Format.readMeta(fs, f)
     assert(meta.vars.map(_.name).sorted == Seq("a/x", "a/y", "b/z", "plain"))
     // group scoping: only group a's variables (+ record) in the schema
@@ -280,7 +280,7 @@ class Hdf5Spec extends AnyFunSuite {
   test("root attributes carry netCDF-4 properties; var attrs roundtrip") {
     val dir = "/tmp/graft_h5/attrs"
     Hdf5IO.write(spark.range(100).select(col("id").cast(DoubleType).as("x")).coalesce(1), dir)
-    val f = NetCDF4Util.listFiles(fs, new Path(dir)).head
+    val f = NetCDF4.listFiles(fs, new Path(dir)).head
     val meta = Hdf5Format.readMeta(fs, f)
     val nc = meta.rootAttrs.find(_.name == "_NCProperties")
     assert(nc.exists(_.text.exists(_.startsWith("version=2,netcdf="))))
@@ -295,7 +295,7 @@ class Hdf5Spec extends AnyFunSuite {
       .option("arraylens", "emb=8")
       .save(dir)
     // 2 input partitions → 2 part files, each a real filtered HDF5 file
-    val files = NetCDF4Util.listFiles(fs, new Path(dir))
+    val files = NetCDF4.listFiles(fs, new Path(dir))
     assert(files.size == 2, files.map(_.getName).toString)
     val meta = Hdf5Format.readMeta(fs, files.head)
     assert(meta.vars.forall(v => v.deflate && v.shuffle))
@@ -411,7 +411,7 @@ class Hdf5Spec extends AnyFunSuite {
     df.coalesce(2).write.format(SRC).mode("overwrite")
       .option("densegroups", "true").option("h5ver", "2")
       .option("chunkrecs", "512").save(dir)
-    val f = NetCDF4Util.listFiles(fs, new Path(dir)).head
+    val f = NetCDF4.listFiles(fs, new Path(dir)).head
     val meta = Hdf5Format.readMeta(fs, f)
     assert(meta.vars.map(_.name).toSet == (0 until 12).map(k => s"v$k").toSet)
     val back = spark.read.format(SRC).load(dir)
@@ -430,7 +430,7 @@ class Hdf5Spec extends AnyFunSuite {
     df.coalesce(1).write.format(SRC).mode("overwrite")
       .option("h5ver", "2").option("chunkindex", "fixedarray")
       .option("chunkrecs", "1000").option("shuffle", "true").save(dir)
-    val f = NetCDF4Util.listFiles(fs, new Path(dir)).head
+    val f = NetCDF4.listFiles(fs, new Path(dir)).head
     val meta = Hdf5Format.readMeta(fs, f)
     assert(meta.vars.forall(_.chunks.length == 10), meta.vars.map(_.chunks.length).toString)
     val back = spark.read.format(SRC).load(dir)
@@ -469,7 +469,7 @@ class Hdf5Spec extends AnyFunSuite {
     df.coalesce(1).write.format(SRC).mode("overwrite")
       .option("h5ver", "2").option("chunkindex", "btree2")
       .option("chunkrecs", "20").save(d1)
-    val m1 = Hdf5Format.readMeta(fs, NetCDF4Util.listFiles(fs, new Path(d1)).head)
+    val m1 = Hdf5Format.readMeta(fs, NetCDF4.listFiles(fs, new Path(d1)).head)
     assert(m1.vars.forall(_.chunks.length == 250), m1.vars.map(_.chunks.length).toString)
     assert(m1.vars.forall(v => v.chunks.map(_.startRec).toSeq ==
       (0 until 250).map(_ * 20L)), "depth-1 record order")
@@ -484,7 +484,7 @@ class Hdf5Spec extends AnyFunSuite {
     df2.coalesce(1).write.format(SRC).mode("overwrite")
       .option("h5ver", "2").option("chunkindex", "fixedarray")
       .option("chunkrecs", "2").option("shuffle", "true").save(d2)
-    val m2 = Hdf5Format.readMeta(fs, NetCDF4Util.listFiles(fs, new Path(d2)).head)
+    val m2 = Hdf5Format.readMeta(fs, NetCDF4.listFiles(fs, new Path(d2)).head)
     assert(m2.vars.forall(_.chunks.length == 5000), m2.vars.map(_.chunks.length).toString)
     val b2 = spark.read.format(SRC).load(d2)
     assert(b2.count() == 10000)
@@ -505,7 +505,7 @@ class Hdf5Spec extends AnyFunSuite {
         .option("h5ver", "2").option("chunkindex", "extarray")
         .option("chunkrecs", "20").option("deflate", deflate.toString)
         .option("shuffle", deflate.toString).save(dir)
-      val f = NetCDF4Util.listFiles(fs, new Path(dir)).head
+      val f = NetCDF4.listFiles(fs, new Path(dir)).head
       val meta = Hdf5Format.readMeta(fs, f)
       assert(meta.vars.forall(_.chunks.length == 300),
         meta.vars.map(_.chunks.length).toString)
@@ -538,7 +538,7 @@ class Hdf5Spec extends AnyFunSuite {
       .option("h5ver", "2").option("chunkindex", "extarray")
       .option("chunkrecs", "4").option("eapagebits", "6")
       .option("shuffle", "true").save(d3)
-    val m3 = Hdf5Format.readMeta(fs, NetCDF4Util.listFiles(fs, new Path(d3)).head)
+    val m3 = Hdf5Format.readMeta(fs, NetCDF4.listFiles(fs, new Path(d3)).head)
     assert(m3.vars.forall(_.chunks.length == 1500), m3.vars.map(_.chunks.length).toString)
     assert(m3.vars.forall(v => v.chunks.map(_.startRec).toSeq ==
       (0 until 1500).map(_ * 4L)), "paged walk must be gapless and ordered")
@@ -560,7 +560,7 @@ class Hdf5Spec extends AnyFunSuite {
       df.coalesce(2).write.format(SRC).mode("overwrite")
         .option("vlenseqs", "true").option("h5ver", h5ver.toString)
         .option("chunkrecs", "64").option("shuffle", "true").save(dir)
-      val f = NetCDF4Util.listFiles(fs, new Path(dir)).head
+      val f = NetCDF4.listFiles(fs, new Path(dir)).head
       val meta = Hdf5Format.readMeta(fs, f)
       assert(meta.vars.find(_.name == "xs").get.kind ==
         Hdf5Format.KVlenSeq(Hdf5Format.KDouble), "xs kind")
@@ -592,7 +592,7 @@ class Hdf5Spec extends AnyFunSuite {
       .option("committypes", "true")
       .option("enum.cat", "A=1,B=2,C=3")
       .save(dir)
-    val f = NetCDF4Util.listFiles(fs, new Path(dir)).head
+    val f = NetCDF4.listFiles(fs, new Path(dir)).head
     val meta = Hdf5Format.readMeta(fs, f)
     // the shared stubs resolved into the real kinds
     assert(meta.vars.find(_.name == "cat").get.kind ==
@@ -727,7 +727,7 @@ class Hdf5Spec extends AnyFunSuite {
       .option("dimnames.k", "time")
       .option("dimnames.grid", "time,lat,lon")
       .save(dir)
-    val f = NetCDF4Util.listFiles(fs, new Path(dir)).head
+    val f = NetCDF4.listFiles(fs, new Path(dir)).head
     val meta = Hdf5Format.readMeta(fs, f)
     // phony dims (lat, lon) are hidden; time/k/grid surface
     assert(meta.vars.map(_.name).toSet == Set("time", "k", "grid"))
@@ -764,7 +764,7 @@ class Hdf5Spec extends AnyFunSuite {
         .option("sparse", "true")
         .option("fillvalue.v", "-5")
         .save(dir)
-      val f = NetCDF4Util.listFiles(fs, new Path(dir)).head
+      val f = NetCDF4.listFiles(fs, new Path(dir)).head
       val meta = Hdf5Format.readMeta(fs, f)
       val (mv, mw) = (meta.vars.find(_.name == "v").get, meta.vars.find(_.name == "w").get)
       assert(mv.chunks.length == 4, s"$idx: v has ${mv.chunks.length} chunks")
@@ -798,7 +798,7 @@ class Hdf5Spec extends AnyFunSuite {
       .option("shuffle", "true").option("fletcher", "true")
       .option("traildims.v", "6,8").option("trailchunks.v", "3,5")
       .save(dir)
-    val f = NetCDF4Util.listFiles(fs, new Path(dir)).head
+    val f = NetCDF4.listFiles(fs, new Path(dir)).head
     val meta = Hdf5Format.readMeta(fs, f)
     val mv = meta.vars.find(_.name == "v").get
     assert(mv.kind == Hdf5Format.KDoubleArr(48))
@@ -845,7 +845,7 @@ class Hdf5Spec extends AnyFunSuite {
       .option("h5ver", "2").option("fletcher", "true")
       .option("shuffle", "true").option("chunkrecs", "1024")
       .save(dir)
-    val f = NetCDF4Util.listFiles(fs, new Path(dir)).head
+    val f = NetCDF4.listFiles(fs, new Path(dir)).head
     val good = spark.read.format(SRC).load(dir).agg(sum("v")).head().getDouble(0)
     val bytes = {
       val in = fs.open(f)
@@ -890,7 +890,7 @@ class Hdf5Spec extends AnyFunSuite {
       .option("shuffle", "true").option("fletcher", "true")
       .option("chunkrecs", "512")
       .save(dir)
-    val f = NetCDF4Util.listFiles(fs, new Path(dir)).head
+    val f = NetCDF4.listFiles(fs, new Path(dir)).head
     val meta = Hdf5Format.readMeta(fs, f)
     // compression genuinely happened: stored bytes < raw bytes
     val mv = meta.vars.find(_.name == "v").get
@@ -948,7 +948,7 @@ class Hdf5Spec extends AnyFunSuite {
         s"bitround mismatch at row $k")
     }
     // the standard marker attributes ride on the variables
-    val f = NetCDF4Util.listFiles(fs, new Path(dir)).head
+    val f = NetCDF4.listFiles(fs, new Path(dir)).head
     val meta = Hdf5Format.readMeta(fs, f)
     def attr(v: String, a: String): Option[Double] =
       meta.vars.find(_.name == v).get.attrs.find(_.name == a).map(_.nums.head)
@@ -964,7 +964,7 @@ class Hdf5Spec extends AnyFunSuite {
     df.coalesce(1).write.format(SRC).mode("overwrite")
       .option("bigendian", "true").option("deflate", "false")
       .option("chunkrecs", "512").save(dir)
-    val f = NetCDF4Util.listFiles(fs, new Path(dir)).head
+    val f = NetCDF4.listFiles(fs, new Path(dir)).head
     val meta = Hdf5Format.readMeta(fs, f)
     val vk = meta.vars.find(_.name == "k").get
     assert(vk.bigEndian, "order bit must parse")
@@ -998,7 +998,7 @@ class Hdf5Spec extends AnyFunSuite {
         .option("h5ver", h5ver.toString)
         .option("enum.status", "NEW=1,OPEN=2,HELD=3,DONE=4")
         .save(dir)
-      val meta = Hdf5Format.readMeta(fs, NetCDF4Util.listFiles(fs, new Path(dir)).head)
+      val meta = Hdf5Format.readMeta(fs, NetCDF4.listFiles(fs, new Path(dir)).head)
       val v = meta.vars.find(_.name == "status").get
       assert(v.kind == Hdf5Format.KEnum(Hdf5Format.KInt,
         Seq("NEW" -> 1L, "OPEN" -> 2L, "HELD" -> 3L, "DONE" -> 4L)), v.kind.toString)
@@ -1020,7 +1020,7 @@ class Hdf5Spec extends AnyFunSuite {
       df.coalesce(1).write.format(SRC).mode("overwrite")
         .option("layout", "compact").option("h5ver", h5ver.toString)
         .option("stringwidth", "16").save(dir)
-      val f = NetCDF4Util.listFiles(fs, new Path(dir)).head
+      val f = NetCDF4.listFiles(fs, new Path(dir)).head
       val meta = Hdf5Format.readMeta(fs, f)
       assert(meta.vars.forall(_.compactData.nonEmpty), s"h5ver=$h5ver: inline data missing")
       assert(meta.vars.forall(_.chunks.isEmpty))
@@ -1049,7 +1049,7 @@ class Hdf5Spec extends AnyFunSuite {
       df.coalesce(1).write.format(SRC).mode("overwrite")
         .option("layout", "contiguous").option("h5ver", h5ver.toString)
         .option("chunkrecs", "1024").save(dir)
-      val f = NetCDF4Util.listFiles(fs, new Path(dir)).head
+      val f = NetCDF4.listFiles(fs, new Path(dir)).head
       val meta = Hdf5Format.readMeta(fs, f)
       assert(meta.vars.forall(v => v.contiguousAddr != Hdf5Format.UNDEF),
         s"h5ver=$h5ver: contiguous address missing")
@@ -1080,7 +1080,7 @@ class Hdf5Spec extends AnyFunSuite {
         .option("deflate", deflate.toString).option("shuffle", deflate.toString)
       (if (idx == "btree1") w0 else w0.option("h5ver", "2").option("chunkindex", idx))
         .save(dir)
-      val f = NetCDF4Util.listFiles(fs, new Path(dir)).head
+      val f = NetCDF4.listFiles(fs, new Path(dir)).head
       val meta = Hdf5Format.readMeta(fs, f)
       val v = meta.vars.find(_.name == "vec").get
       assert(v.chunkCols == 4, s"$idx: chunkCols ${v.chunkCols}")
@@ -1138,7 +1138,7 @@ class Hdf5Spec extends AnyFunSuite {
     spark.range(1000).select(col("id").cast(DoubleType).as("x"))
       .coalesce(4).write.format(SRC).mode("overwrite")
       .option("h5ver", "2").option("denseattrs", "true").save(dir)
-    val f = NetCDF4Util.listFiles(fs, new Path(dir)).head
+    val f = NetCDF4.listFiles(fs, new Path(dir)).head
     val meta = Hdf5Format.readMeta(fs, f)
     // actual_range rode through the dense-attribute path
     assert(meta.vars.head.range.isDefined, meta.vars.head.attrs.toString)
@@ -1155,7 +1155,7 @@ class Hdf5Spec extends AnyFunSuite {
       .write.format(SRC).mode("overwrite").save(dir)
     spark.range(100, 150).select(col("id").cast(DoubleType).as("x")).coalesce(1)
       .write.format(SRC).mode("append").option("partprefix", "b").save(dir)
-    assert(graft.sources.netcdf.NcIO.compactIfNeeded4(spark, dir, maxFiles = 1, parts = 1))
+    assert(graft.sources.netcdf.NcIO.compactIfNeeded(spark, NetCDF4, dir, maxFiles = 1, parts = 1))
     val files = fs.listStatus(new Path(dir)).map(_.getPath.getName)
       .filter(_.endsWith(".nc4"))
     assert(files.length == 1, files.mkString(","))
@@ -1164,7 +1164,7 @@ class Hdf5Spec extends AnyFunSuite {
       .select("x").collect().map(_.getDouble(0))
     assert(back.toSeq == (0 until 150).map(_.toDouble))
     // idempotent: under the threshold, the hook is a no-op
-    assert(!graft.sources.netcdf.NcIO.compactIfNeeded4(spark, dir, maxFiles = 1, parts = 1))
+    assert(!graft.sources.netcdf.NcIO.compactIfNeeded(spark, NetCDF4, dir, maxFiles = 1, parts = 1))
   }
 
   test("multifile4 re-bases records across dirs from header counts only") {
@@ -1174,7 +1174,7 @@ class Hdf5Spec extends AnyFunSuite {
       .write.format(SRC).mode("overwrite").save(dirA)
     spark.range(100, 160).select(col("id").cast(DoubleType).as("x")).coalesce(1)
       .write.format(SRC).mode("overwrite").option("h5ver", "2").save(dirB)
-    val u = graft.sources.netcdf.NcIO.multifile4(spark, Seq(dirA, dirB))
+    val u = graft.sources.netcdf.NcIO.multifile(spark, NetCDF4, Seq(dirA, dirB))
     assert(u.count() == 160)
     // dirB's records re-base to 100..159; every (record, x) pair lines up
     val rows = u.orderBy("record").select("record", "x").collect()

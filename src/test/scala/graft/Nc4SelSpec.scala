@@ -133,4 +133,33 @@ class Nc4SelSpec extends AnyFunSuite {
       .collect().map(_.toSeq)
     assert(na.toSeq == nb.toSeq)
   }
+
+  test("maxFilesPerTrigger admission control yields one epoch per source file") {
+    val src = "/tmp/graft_nc4sel/adm_src"
+    val out = "/tmp/graft_nc4sel/adm_out"
+    val ckpt = "/tmp/graft_nc4sel/adm_ckpt"
+    Seq(src, out, ckpt).foreach { d =>
+      val p = new org.apache.hadoop.fs.Path(d)
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      fs.delete(p, true)
+    }
+    writeSorted(src, 3)
+    val q = spark.readStream.format(SRC)
+      .option("maxfilespertrigger", "1").load(src)
+      .drop("record")
+      .writeStream.format(SRC)
+      .option("path", out).option("checkpointLocation", ckpt)
+      .start()
+    try q.processAllAvailable() finally q.stop()
+    val fs = new org.apache.hadoop.fs.Path(out)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val epochs = fs.listStatus(new org.apache.hadoop.fs.Path(out))
+      .map(_.getPath.getName).filter(_.endsWith(".nc4"))
+      .flatMap(n => "part-e(\\d+)".r.findFirstMatchIn(n).map(_.group(1).toInt))
+      .distinct.sorted
+    assert(epochs.length == 3, s"expected 3 rate-limited epochs, got ${epochs.toSeq}")
+    val back = spark.read.format(SRC).load(out)
+    assert(back.count() == 100L)
+    assert(back.agg(sum("coord")).head().getLong(0) == (0L until 1000L by 10L).sum)
+  }
 }

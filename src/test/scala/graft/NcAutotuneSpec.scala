@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.netcdf.{NcIO, NetCDF3Util}
+import graft.sources.netcdf.{ChunkedScan, NcIO}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -17,15 +17,15 @@ class NcAutotuneSpec extends AnyFunSuite {
 
   test("pure sizing math") {
     // big corpus, roomy ceiling: lands on ≈ total/(3*par), chunk-rounded
-    val p = NetCDF3Util.autotunePerPart(
+    val p = ChunkedScan.autotunePerPart(
       totalRecs = 6000, recSize = 24, chunkBytes = 2048,
       maxPartBytes = 128L << 20, parallelism = 4)
     assert(p % (2048 / 24) == 0, s"perPart $p not chunk-aligned")
     assert(p >= 6000 / 12 && p < 6000 / 12 + 2048 / 24)
     // tiny corpus: floor at one chunk
-    assert(NetCDF3Util.autotunePerPart(100, 24, 2048, 128L << 20, 4) == 2048 / 24)
+    assert(ChunkedScan.autotunePerPart(100, 24, 2048, 128L << 20, 4) == 2048 / 24)
     // ceiling binds on a huge corpus
-    assert(NetCDF3Util.autotunePerPart(Long.MaxValue / 32, 24, 2048,
+    assert(ChunkedScan.autotunePerPart(Long.MaxValue / 32, 24, 2048,
       4096, 4) == 4096 / 24)
   }
 
@@ -60,5 +60,80 @@ class NcAutotuneSpec extends AnyFunSuite {
       // recSize = 24B → ≤170 records/partition → ≥35 partitions at sf0.001
       assert(n >= 30, s"cap should force many partitions, got $n")
     } finally spark.conf.set("spark.sql.files.maxPartitionBytes", before)
+  }
+
+  /** The scan's planned partitions as (file name, localStart, localEnd,
+    * fileOffset), read off the physical plan through the public DSv2
+    * API so the pin holds whatever the partition class is called. */
+  private def planned(df: org.apache.spark.sql.DataFrame): Seq[(String, Long, Long, Long)] =
+    df.queryExecution.sparkPlan.collect {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+        b.scan.toBatch.planInputPartitions().toSeq
+    }.flatten.map { ip =>
+      val p = ip.asInstanceOf[Product]
+      (new org.apache.hadoop.fs.Path(p.productElement(0).toString).getName,
+        p.productElement(1).asInstanceOf[Long], p.productElement(2).asInstanceOf[Long],
+        p.productElement(3).asInstanceOf[Long])
+    }
+
+  /** 300 records in three 100-record part files; coord == record. */
+  private def threeParts = spark.range(0, 300, 1, 3)
+    .select(col("id").as("coord"), (col("id") * 0.5).as("payload"))
+
+  private val byRecord = col("record") >= 30 && col("record") < 250
+  private val byValue = col("coord") >= 150 // file 0's actual_range is [0, 99]
+
+  /** Planned partitions of `src` over `dir` for `filter`, with and
+    * without the `recordsPerPartition` option. */
+  private def plan(src: String, dir: String, filter: org.apache.spark.sql.Column,
+      rpp: Option[String]) = {
+    val r = spark.read.format(src).option("chunkBytes", "2048")
+    planned(rpp.fold(r)(n => r.option("recordsPerPartition", n)).load(dir).filter(filter))
+  }
+
+  /** Expected partitions: (file index, localStart, localEnd) per entry,
+    * 100 records per file. */
+  private def expect(ext: String, parts: (Int, Long, Long)*) =
+    parts.map { case (i, s, e) => (s"part-0000$i.$ext", s, e, i * 100L) }
+
+  /** recordsPerPartition = 40 is geometry-free, so both formats plan the
+    * same ranges: the record bound clips the first and last file, the
+    * value filter prunes file 0 by its zone map. */
+  private def pinManual(src: String, dir: String, ext: String): Unit = {
+    assert(plan(src, dir, byRecord, Some("40")) == expect(ext,
+      (0, 30, 70), (0, 70, 100), (1, 0, 40), (1, 40, 80), (1, 80, 100),
+      (2, 0, 40), (2, 40, 50)))
+    assert(plan(src, dir, byValue, Some("40")) == expect(ext,
+      (1, 0, 40), (1, 40, 80), (1, 80, 100), (2, 0, 40), (2, 40, 80), (2, 80, 100)))
+  }
+
+  test("netcdf3 plans exact partitions under record bounds and zone maps") {
+    val dir = "/tmp/graft_nc_spec/autotune_pin3"
+    NcIO.write(threeParts, dir)
+    pinManual("netcdf3", dir, "nc")
+    // autotuned: 16-byte records in 2048-byte chunks = 128 records per
+    // chunk; 300 / (3 x 4 cores) = 25 records round up to one chunk,
+    // more than a whole file
+    assert(plan("netcdf3", dir, byRecord, None) ==
+      expect("nc", (0, 30, 100), (1, 0, 100), (2, 0, 50)))
+    assert(plan("netcdf3", dir, byValue, None) ==
+      expect("nc", (1, 0, 100), (2, 0, 100)))
+  }
+
+  test("netcdf4 plans exact partitions under record bounds and zone maps") {
+    val dir = "/tmp/graft_nc_spec/autotune_pin4"
+    threeParts.write.format("netcdf4").mode("overwrite")
+      .option("chunkrecs", "16").save(dir)
+    pinManual("netcdf4", dir, "nc4")
+    // autotuned: 16 records per HDF5 chunk (the chunkBytes option does
+    // not apply); 25 records round up to two chunks = 32 records,
+    // stepped from each file's clipped start
+    assert(plan("netcdf4", dir, byRecord, None) == expect("nc4",
+      (0, 30, 62), (0, 62, 94), (0, 94, 100),
+      (1, 0, 32), (1, 32, 64), (1, 64, 96), (1, 96, 100),
+      (2, 0, 32), (2, 32, 50)))
+    assert(plan("netcdf4", dir, byValue, None) == expect("nc4",
+      (1, 0, 32), (1, 32, 64), (1, 64, 96), (1, 96, 100),
+      (2, 0, 32), (2, 32, 64), (2, 64, 96), (2, 96, 100)))
   }
 }

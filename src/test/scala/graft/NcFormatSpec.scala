@@ -29,7 +29,7 @@ class NcFormatSpec extends AnyFunSuite {
     NcIO.write(df, dir)
     // CDF-5 expected (long column present)
     val meta = NcFormat.readMeta(fs,
-      graft.sources.netcdf.NetCDF3Util.listNcFiles(fs, new Path(dir)).head)
+      graft.sources.netcdf.NetCDF3.listFiles(fs, new Path(dir)).head)
     assert(meta.version == 5)
     val back = spark.read.format(SRC).load(dir)
     assert(back.count() == 1000)
@@ -44,7 +44,7 @@ class NcFormatSpec extends AnyFunSuite {
   test("no-long schema writes CDF-2") {
     val dir = "/tmp/graft_nc_fmt/cdf2"
     NcIO.write(spark.range(10).select(col("id").cast("double").as("x")), dir)
-    val files = graft.sources.netcdf.NetCDF3Util.listNcFiles(fs, new Path(dir))
+    val files = graft.sources.netcdf.NetCDF3.listFiles(fs, new Path(dir))
     val metas = files.map(NcFormat.readMeta(fs, _))
     assert(metas.forall(_.version == 2))
     assert(metas.map(_.numRecs).sum == 10)
@@ -63,7 +63,7 @@ class NcFormatSpec extends AnyFunSuite {
     val schema = StructType(Seq(StructField("s", ShortType)))
     val rows = (0 until 101).map(k => Row(k.toShort))
     NcIO.write(spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema), dir)
-    val p = graft.sources.netcdf.NetCDF3Util.listNcFiles(fs, new Path(dir)).head
+    val p = graft.sources.netcdf.NetCDF3.listFiles(fs, new Path(dir)).head
     val meta = NcFormat.readMeta(fs, p)
     assert(meta.recSize == 2) // no inter-record padding with 1 record var
     val back = spark.read.format(SRC).load(dir)
@@ -111,7 +111,7 @@ class NcFormatSpec extends AnyFunSuite {
     NcIO.write(
       spark.range(10, 110).select(col("id").cast("double").as("x"), col("id").as("l")),
       dir)
-    val files = graft.sources.netcdf.NetCDF3Util.listNcFiles(fs, new Path(dir))
+    val files = graft.sources.netcdf.NetCDF3.listFiles(fs, new Path(dir))
     val ranges = files.map(NcFormat.readMeta(fs, _))
       .flatMap(_.recordVars.filter(_.name == "x").flatMap(_.range))
     assert(ranges.nonEmpty)
@@ -126,7 +126,7 @@ class NcFormatSpec extends AnyFunSuite {
       dir,
       gatts = Seq("title" -> "unit test", "history" -> "written by NcFormatSpec"),
       vatts = Map("x" -> Seq("units" -> "m/s", "long_name" -> "speed")))
-    val files = graft.sources.netcdf.NetCDF3Util.listNcFiles(fs, new Path(dir))
+    val files = graft.sources.netcdf.NetCDF3.listFiles(fs, new Path(dir))
     val metas = files.map(NcFormat.readMeta(fs, _))
     metas.foreach { m =>
       assert(m.gatts.map(a => a.name -> a.text) ==
@@ -149,7 +149,7 @@ class NcFormatSpec extends AnyFunSuite {
       spark.range(100).select(col("id").cast("double").as("x"), col("id").as("l"))
         .repartition(2),
       dir, fixedVars = Seq("levels" -> levels))
-    val files = graft.sources.netcdf.NetCDF3Util.listNcFiles(fs, new Path(dir))
+    val files = graft.sources.netcdf.NetCDF3.listFiles(fs, new Path(dir))
     files.map(NcFormat.readMeta(fs, _)).foreach { m =>
       val fv = m.fixedVars.find(_.name == "levels").get
       assert(!fv.isRecord)
@@ -169,7 +169,7 @@ class NcFormatSpec extends AnyFunSuite {
     val li = spark.read.parquet(s"$sf/lineitem.parquet")
       .select(col("l_orderkey"), col("l_quantity"))
     NcIO.write(li.repartition(3), dir, compress = true)
-    val files = graft.sources.netcdf.NetCDF3Util.listNcFiles(fs, new Path(dir))
+    val files = graft.sources.netcdf.NetCDF3.listFiles(fs, new Path(dir))
     assert(files.nonEmpty && files.forall(_.getName.endsWith(".nc.gz")))
     val back = spark.read.format(SRC).load(dir)
     assert(back.rdd.getNumPartitions == 3, "gz files must not be split")

@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.netcdf.{NcIO, NcSel}
+import graft.sources.netcdf.{NcIO, NcSel, NetCDF3}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -98,8 +98,8 @@ class NcSelSpec extends AnyFunSuite {
   test("compactIfNeeded fires only above the file threshold and keeps content") {
     val dir = "/tmp/graft_nc_spec/compact_hook"
     writeSorted(dir, 6) // 6 part files
-    assert(!NcIO.compactIfNeeded(spark, dir, maxFiles = 8, parts = 2))
-    assert(NcIO.compactIfNeeded(spark, dir, maxFiles = 4, parts = 2))
+    assert(!NcIO.compactIfNeeded(spark, NetCDF3, dir, maxFiles = 8, parts = 2))
+    assert(NcIO.compactIfNeeded(spark, NetCDF3, dir, maxFiles = 4, parts = 2))
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val n = fs.listStatus(new org.apache.hadoop.fs.Path(dir))

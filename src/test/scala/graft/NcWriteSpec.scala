@@ -93,7 +93,7 @@ class NcWriteSpec extends AnyFunSuite {
   }
 
   test("typed NC_DOUBLE attributes roundtrip through the header") {
-    import graft.sources.netcdf.NcIO
+    import graft.sources.netcdf.{NcIO, NetCDF3}
     val dir = "/tmp/graft_nc_spec/dvatts"
     NcIO.write(
       spark.range(0, 10).select(col("id").cast("double").as("x")).repartition(1),
@@ -115,14 +115,14 @@ class NcWriteSpec extends AnyFunSuite {
   }
 
   test("compact preserves the record sequence in fewer files") {
-    import graft.sources.netcdf.NcIO
+    import graft.sources.netcdf.{NcIO, NetCDF3}
     val small = "/tmp/graft_nc_spec/compact_small"
     val big = "/tmp/graft_nc_spec/compact_big"
     NcIO.write(spark.range(0, 1000).select(col("id").cast("double").as("x"))
       .repartitionByRange(8, col("id")).sortWithinPartitions("id")
       .select("x"), small)
     assert(new java.io.File(small).listFiles().count(_.getName.endsWith(".nc")) == 8)
-    NcIO.compact(spark, small, big, parts = 2)
+    NcIO.compact(spark, NetCDF3, small, big, parts = 2)
     assert(new java.io.File(big).listFiles().count(_.getName.endsWith(".nc")) == 2)
     val back = spark.read.format(SRC).load(big)
     assert(back.count() == 1000)
@@ -131,15 +131,15 @@ class NcWriteSpec extends AnyFunSuite {
   }
 
   test("multifile rebases records contiguously across dirs") {
-    import graft.sources.netcdf.NcIO
+    import graft.sources.netcdf.{NcIO, NetCDF3}
     val dirA = "/tmp/graft_nc_spec/mf_a"
     val dirB = "/tmp/graft_nc_spec/mf_b"
     NcIO.write(spark.range(0, 7).select(col("id").cast("double").as("x"))
       .repartition(1).sortWithinPartitions("x"), dirA)
     NcIO.write(spark.range(7, 12).select(col("id").cast("double").as("x"))
       .repartition(1).sortWithinPartitions("x"), dirB)
-    assert(NcIO.recordCount(spark, dirA) == 7L)
-    val mf = NcIO.multifile(spark, Seq(dirA, dirB))
+    assert(NcIO.recordCount(spark, NetCDF3, dirA) == 7L)
+    val mf = NcIO.multifile(spark, NetCDF3, Seq(dirA, dirB))
     assert(mf.count() == 12)
     // record ids are 0..11 with each value at its own index
     assert(mf.filter(col("record").cast("double") === col("x")).count() == 12)
