@@ -70,9 +70,8 @@ object Staged {
     // expensive builder first, then overlap; guide §2.6 with its own
     // warning applied.) Env override for deployments whose builders
     // saturate the cluster differently.
-    val threads = sys.env.get("SPARK_GRAFT_STAGE_THREADS").map(_.toInt)
-      .getOrElse(math.max(2, math.min(8,
-        Runtime.getRuntime.availableProcessors() / 4)))
+    val threads = stageThreads(sys.env.get("SPARK_GRAFT_STAGE_THREADS"),
+      Runtime.getRuntime.availableProcessors())
     val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
     try {
       val futures = tags.map { case (tag, touch) =>
@@ -86,6 +85,20 @@ object Staged {
       }
       futures.map { case (tag, f) => tag -> f.get() }
     } finally pool.shutdown()
+  }
+
+  /** Prestage pool size: `min(8, cores / 4)`, at least 2, unless the
+    * `SPARK_GRAFT_STAGE_THREADS` override is a whole number >= 1. A bad
+    * override falls back to the default with a warning on stderr. */
+  private[graft] def stageThreads(env: Option[String], cores: Int): Int = {
+    val default = math.max(2, math.min(8, cores / 4))
+    env.fold(default) { v =>
+      v.trim.toIntOption.filter(_ >= 1).getOrElse {
+        System.err.println(s"[staged] ignoring SPARK_GRAFT_STAGE_THREADS='$v' " +
+          s"(not a whole number >= 1); using $default threads")
+        default
+      }
+    }
   }
 
   /** `coalesce=true` for metadata-sized artifacts (centroid tables,

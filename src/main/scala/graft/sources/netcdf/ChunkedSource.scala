@@ -98,7 +98,9 @@ trait ChunkedContainer extends Serializable {
   *
   * Options: `recordsPerPartition` (override split granularity),
   * `maxFilesPerTrigger` (streaming admission control), `group` (scope
-  * the table to one variable group), plus the container's own.
+  * the table to one variable group), plus the container's own. The
+  * first two must be positive whole numbers; anything else fails
+  * `load()` with an IllegalArgumentException naming the option.
   */
 abstract class ChunkedSource(container: ChunkedContainer)
     extends TableProvider with sources.DataSourceRegister {
@@ -139,8 +141,11 @@ abstract class ChunkedSource(container: ChunkedContainer)
   override def getTable(
       schema: StructType,
       partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table =
+      properties: util.Map[String, String]): Table = {
+    ChunkedScan.checkReadOptions(
+      properties.asScala.map { case (k, v) => k.toLowerCase(java.util.Locale.ROOT) -> v }.toMap)
     new ChunkedTable(container, schema, properties.get("path"))
+  }
 }
 
 class ChunkedTable(container: ChunkedContainer, tableSchema: StructType, dir: String)
@@ -241,8 +246,9 @@ class ChunkedScan(container: ChunkedContainer, required: StructType, dir: String
 
   import ChunkedScan._
 
-  // captured on the driver at scan build time, shipped to executors
-  private val serConf =
+  // captured on the driver when the scan first hands out a reader
+  // factory or a stream, not when the optimizer builds it
+  private lazy val serConf =
     new SerializableHadoopConf(SparkContext.getOrCreate().hadoopConfiguration)
 
   override def readSchema(): StructType = required
@@ -256,7 +262,6 @@ class ChunkedScan(container: ChunkedContainer, required: StructType, dir: String
     val p = new Path(dir)
     val fs = p.getFileSystem(SparkContext.getOrCreate().hadoopConfiguration)
     val metas = container.listFiles(fs, p).map(f => f -> container.readMeta(fs, f))
-    val perPart = recordsPerPartition(container)(metas.map(_._2), required, options)
     val offsets = metas.map(m => container.numRecs(m._2)).scanLeft(0L)(_ + _)
     // zone-map skip: the whole file is prunable when any filtered
     // variable's actual_range is disjoint from the filter bounds
@@ -266,9 +271,10 @@ class ChunkedScan(container: ChunkedContainer, required: StructType, dir: String
           .exists { case (fMin, fMax) => fMin > hi || fMax < lo }
       }
     val spans = metas.indices.collect { case i if !zonePruned(metas(i)._2) =>
-      Span(metas(i)._1, offsets(i), math.max(lower, offsets(i)), math.min(upper, offsets(i + 1)))
+      Span(metas(i)._1, metas(i)._2, offsets(i),
+        math.max(lower, offsets(i)), math.min(upper, offsets(i + 1)))
     }
-    partitions(container, spans, perPart)
+    partitions(container)(spans, required, options)
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -280,17 +286,47 @@ class ChunkedScan(container: ChunkedContainer, required: StructType, dir: String
 
 object ChunkedScan {
 
+  private val RecordsPerPartition = "recordsPerPartition"
+  private val MaxFilesPerTrigger = "maxFilesPerTrigger"
+
+  /** The value of a whole-number option that must lie in [1, max], or
+    * None when the option is absent. Options arrive with lower-cased
+    * keys (CaseInsensitiveStringMap). */
+  private def positiveOption(options: Map[String, String], name: String,
+      max: Long = Long.MaxValue): Option[Long] =
+    options.get(name.toLowerCase(java.util.Locale.ROOT)).map { v =>
+      v.trim.toLongOption.filter(n => n >= 1 && n <= max).getOrElse {
+        val want = if (max == Long.MaxValue) "a positive whole number"
+          else s"a whole number in [1, $max]"
+        throw new IllegalArgumentException(s"option $name must be $want, got '$v'")
+      }
+    }
+
+  /** Rejects a bad `recordsPerPartition` (which would make [[partitions]]
+    * loop forever) or `maxFilesPerTrigger` (which would stall a stream:
+    * its offset never advances) before any planning starts. */
+  private[netcdf] def checkReadOptions(options: Map[String, String]): Unit = {
+    positiveOption(options, RecordsPerPartition)
+    positiveOption(options, MaxFilesPerTrigger, Int.MaxValue)
+  }
+
+  private[netcdf] def maxFilesPerTrigger(options: Map[String, String]): Option[Int] =
+    positiveOption(options, MaxFilesPerTrigger, Int.MaxValue).map(_.toInt)
+
   /** Autotuned records-per-partition when the `recordsPerPartition`
-    * option is absent: split the corpus into ≈3× `parallelism` scan
-    * partitions (enough slots that stragglers rebalance, few enough
-    * that per-task overhead stays negligible), clamped to
+    * option is absent: split the records a scan will read into ≈3×
+    * `parallelism` scan partitions (enough slots that stragglers
+    * rebalance, few enough that per-task overhead stays negligible),
+    * clamped to
     *  - at least one chunk (the IO unit — smaller splits would re-read
     *    the same chunk from two tasks), rounded up to whole chunks;
     *  - at most `spark.sql.files.maxPartitionBytes` worth of records,
     *    matching the parquet scan's split ceiling, so one task never
     *    owns an unbounded record range on a huge corpus.
-    * Sizing from file *metadata* (total records × record size) keeps
-    * this O(#files) at plan time — no data is read. */
+    * `totalRecs` counts the records that survive record-bound and
+    * zone-map pruning (a micro-batch: its own files), so a narrow slice
+    * of a big corpus still spreads over its chunks. Sizing from file
+    * *metadata* keeps this O(#files) at plan time — no data is read. */
   def autotunePerPart(totalRecs: Long, recSize: Long, chunkBytes: Int,
       maxPartBytes: Long, parallelism: Int): Long = {
     val rs = math.max(recSize, 1L)
@@ -301,36 +337,53 @@ object ChunkedScan {
     math.min(chunks * chunkRecs, maxRecs)
   }
 
-  /** Split granularity for the files `metas` of one scan or one
-    * micro-batch: the `recordsPerPartition` option, else autotuned from
-    * the container's split geometry. */
-  private[netcdf] def recordsPerPartition(c: ChunkedContainer)(metas: Seq[c.Meta],
-      required: StructType, options: Map[String, String]): Long =
-    options.get("recordsperpartition").map(_.toLong).getOrElse {
-      val (recSize, chunkBytes) = c.splitGeometry(metas.headOption, required, options)
-      autotunePerPart(metas.map(c.numRecs).sum, recSize, chunkBytes,
-        SQLConf.get.filesMaxPartitionBytes, SparkContext.getOrCreate().defaultParallelism)
+  /** Global records [lo, hi) of part file `file` (header `meta`), whose
+    * record 0 is global record `offset`. */
+  private[netcdf] case class Span[M](file: Path, meta: M, offset: Long, lo: Long, hi: Long)
+
+  /** The one split rule batch scans and micro-batches share. Each
+    * non-empty span becomes partitions of at most `perPart` records:
+    *  - with the `recordsPerPartition` option, `perPart` is that value
+    *    and partitions step from the span's start (no geometry);
+    *  - autotuned, `perPart` comes from [[autotunePerPart]] over the
+    *    spans' records, and each partition ends at the last boundary of
+    *    its file's chunk grid at or before `start + perPart` (at least
+    *    the next boundary), or at the span's end. The grid is the
+    *    container's `splitGeometry` chunk bytes over its record bytes,
+    *    from the file's own header. So no stored chunk is decoded by
+    *    two tasks, and a slice over k chunks runs as about k tasks.
+    * A file the container cannot split is read whole (bounds and zone
+    * maps still prune whole files and trailing records). */
+  private[netcdf] def partitions(c: ChunkedContainer)(spans: Seq[Span[c.Meta]],
+      required: StructType, options: Map[String, String]): Array[InputPartition] = {
+    val live = spans.filter(s => s.lo < s.hi)
+    def geometry(m: Option[c.Meta]) = c.splitGeometry(m, required, options)
+    // (records per partition, a file's chunk grid in records)
+    val (perPart, grid) = positiveOption(options, RecordsPerPartition) match {
+      case Some(n) => (n, (_: c.Meta) => 1L)
+      case None =>
+        val (recSize, chunkBytes) = geometry(live.headOption.map(_.meta))
+        (autotunePerPart(live.map(s => s.hi - s.lo).sum, recSize, chunkBytes,
+          SQLConf.get.filesMaxPartitionBytes, SparkContext.getOrCreate().defaultParallelism),
+          (m: c.Meta) => {
+            val (rs, cb) = geometry(Some(m))
+            math.max(1L, cb / math.max(rs, 1L))
+          })
     }
-
-  /** Global records [lo, hi) of part file `file`, whose record 0 is
-    * global record `offset`. */
-  private[netcdf] case class Span(file: Path, offset: Long, lo: Long, hi: Long)
-
-  /** The one split rule batch scans and micro-batches share: each span
-    * becomes `perPart`-record partitions stepped from its start, except
-    * that a file the container cannot split is read whole (bounds and
-    * zone maps still prune whole files and trailing records). */
-  private[netcdf] def partitions(c: ChunkedContainer, spans: Seq[Span],
-      perPart: Long): Array[InputPartition] = {
     val parts = Array.newBuilder[InputPartition]
-    spans.foreach { case Span(f, offset, lo, hi) =>
-      if (lo < hi && !c.splittable(f)) {
-        parts += RecordRangePartition(f.toString, lo - offset, hi - offset, offset)
+    live.foreach { case Span(f, meta, offset, lo, hi) =>
+      val (localLo, localHi) = (lo - offset, hi - offset)
+      if (!c.splittable(f)) {
+        parts += RecordRangePartition(f.toString, localLo, localHi, offset)
       } else {
-        var s = lo
-        while (s < hi) {
-          val e = math.min(s + perPart, hi)
-          parts += RecordRangePartition(f.toString, s - offset, e - offset, offset)
+        val g = grid(meta)
+        var s = localLo
+        while (s < localHi) {
+          // capped so a huge manual value cannot overflow; past the
+          // span's end by a chunk, the cap still ends the partition there
+          val reach = s + math.min(perPart, localHi - s + g)
+          val e = math.min(localHi, math.max(reach / g, s / g + 1) * g)
+          parts += RecordRangePartition(f.toString, s, e, offset)
           s = e
         }
       }
@@ -378,9 +431,7 @@ class ChunkedMicroBatchStream(container: ChunkedContainer, dir: String,
     * stream (without it, one giant catch-up batch monopolizes the
     * cluster and checkpoint progress becomes all-or-nothing). */
   override def getDefaultReadLimit: ReadLimit =
-    options.get("maxfilespertrigger")
-      .map(n => ReadLimit.maxFiles(n.toInt))
-      .getOrElse(ReadLimit.allAvailable())
+    maxFilesPerTrigger(options).map(ReadLimit.maxFiles).getOrElse(ReadLimit.allAvailable())
 
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val s = start.asInstanceOf[FileCountOffset].fileCount
@@ -401,14 +452,13 @@ class ChunkedMicroBatchStream(container: ChunkedContainer, dir: String,
     val s = start.asInstanceOf[FileCountOffset].fileCount
     val e = end.asInstanceOf[FileCountOffset].fileCount
     val metas = files.map(f => f -> metaOf(f))
-    // autotune over this batch's files only: each micro-batch targets
-    // ≈3× cores partitions for the records it actually ingests
-    val perPart = recordsPerPartition(container)(metas.slice(s, e).map(_._2), required, options)
     val offsets = metas.map(m => container.numRecs(m._2)).scanLeft(0L)(_ + _)
+    // only this batch's files: each micro-batch targets ≈3× cores
+    // partitions for the records it actually ingests
     val spans = (s until math.min(e, metas.size)).map { i =>
-      Span(metas(i)._1, offsets(i), offsets(i), offsets(i + 1))
+      Span(metas(i)._1, metas(i)._2, offsets(i), offsets(i), offsets(i + 1))
     }
-    partitions(container, spans, perPart)
+    partitions(container)(spans, required, options)
   }
 
   override def createReaderFactory(): PartitionReaderFactory =

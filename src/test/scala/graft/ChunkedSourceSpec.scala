@@ -2,12 +2,14 @@ package graft
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.TimeLimits
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.SpanSugar._
 
 /** Provider-level behavior both chunked containers share: the same
   * rule for a directory that holds no part files yet, for reads and
-  * for streaming writes. */
-class ChunkedSourceSpec extends AnyFunSuite {
+  * for streaming writes, and the same checks of the read options. */
+class ChunkedSourceSpec extends AnyFunSuite with TimeLimits {
   import TestSession._
 
   private def reset(dirs: String*): Unit = dirs.foreach { d =>
@@ -49,6 +51,35 @@ class ChunkedSourceSpec extends AnyFunSuite {
       assert(back.count() == 300L)
       assert(back.agg(sum("l_orderkey"), sum("l_quantity")).head() ==
         spark.read.format(fmt).load(src).agg(sum("l_orderkey"), sum("l_quantity")).head())
+    }
+
+    test(s"$fmt: recordsPerPartition must be a positive whole number") {
+      val dir = s"/tmp/graft_chunked_spec/$fmt/opts"
+      li.limit(100).repartition(1).write.format(fmt).mode("overwrite").save(dir)
+      // zero used to step partitions by nothing, forever, on the driver
+      for (bad <- Seq("0", "-3", "ten", "1e3")) failAfter(30.seconds) {
+        val e = intercept[IllegalArgumentException] {
+          spark.read.format(fmt).option("recordsPerPartition", bad).load(dir)
+            .rdd.getNumPartitions
+        }
+        assert(e.getMessage.contains("recordsPerPartition") &&
+          e.getMessage.contains(s"'$bad'"), e.getMessage)
+      }
+      assert(spark.read.format(fmt).option("recordsPerPartition", "40").load(dir)
+        .rdd.getNumPartitions == 3)
+    }
+
+    test(s"$fmt: maxFilesPerTrigger must be a positive whole number") {
+      val dir = s"/tmp/graft_chunked_spec/$fmt/opts"
+      li.limit(100).repartition(1).write.format(fmt).mode("overwrite").save(dir)
+      // zero admitted no file per batch: the stream never advanced
+      for (bad <- Seq("0", "-1", "many", "3000000000")) {
+        val e = intercept[IllegalArgumentException] {
+          spark.readStream.format(fmt).option("maxFilesPerTrigger", bad).load(dir)
+        }
+        assert(e.getMessage.contains("maxFilesPerTrigger") &&
+          e.getMessage.contains(s"'$bad'"), e.getMessage)
+      }
     }
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.netcdf.{ChunkedScan, NcIO}
+import graft.sources.netcdf.{ChunkedScan, Hdf5Format, NcFormat, NcIO}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -126,14 +126,77 @@ class NcAutotuneSpec extends AnyFunSuite {
       .option("chunkrecs", "16").save(dir)
     pinManual("netcdf4", dir, "nc4")
     // autotuned: 16 records per HDF5 chunk (the chunkBytes option does
-    // not apply); 25 records round up to two chunks = 32 records,
-    // stepped from each file's clipped start
+    // not apply). The record bound leaves 70 + 100 + 50 = 220 records;
+    // 220 / (3 x 4 cores) = 18 records round up to two chunks = 32, and
+    // each partition ends on the chunk grid: file 0's clipped start at
+    // record 30 ends its first partition at the chunk boundary 48
     assert(plan("netcdf4", dir, byRecord, None) == expect("nc4",
-      (0, 30, 62), (0, 62, 94), (0, 94, 100),
+      (0, 30, 48), (0, 48, 80), (0, 80, 100),
       (1, 0, 32), (1, 32, 64), (1, 64, 96), (1, 96, 100),
       (2, 0, 32), (2, 32, 50)))
+    // the zone map leaves files 1 and 2: 200 / 12 = 16 records, one chunk
     assert(plan("netcdf4", dir, byValue, None) == expect("nc4",
-      (1, 0, 32), (1, 32, 64), (1, 64, 96), (1, 96, 100),
-      (2, 0, 32), (2, 32, 64), (2, 64, 96), (2, 96, 100)))
+      (1, 0, 16), (1, 16, 32), (1, 32, 48), (1, 48, 64), (1, 64, 80), (1, 80, 96),
+      (1, 96, 100),
+      (2, 0, 16), (2, 16, 32), (2, 32, 48), (2, 48, 64), (2, 64, 80), (2, 80, 96),
+      (2, 96, 100)))
+  }
+
+  /** `threeParts` stored in 16-record chunks: HDF5 chunks for netcdf4,
+    * deflated `.ncz` blocks of 256 bytes (16-byte records) for netcdf3. */
+  private def writeGrid(fmt: String, dir: String): Unit = {
+    val w = threeParts.write.format(fmt).mode("overwrite")
+    (if (fmt == "netcdf4") w.option("chunkrecs", "16")
+      else w.option("compressChunks", "true").option("chunkBytes", "256")).save(dir)
+  }
+
+  /** Records per stored chunk of the first part file, from its header. */
+  private def storedChunkRecs(fmt: String, dir: String): Long = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val first = fs.listStatus(p).map(_.getPath).filter(_.getName.startsWith("part-"))
+      .minBy(_.getName)
+    if (fmt == "netcdf4") Hdf5Format.readMeta(fs, first).vars.map(_.chunkRecs.toLong).max
+    else NcFormat.readNczAny(fs, first).left.toOption.get.recordsPerBlock
+  }
+
+  private def grid(fmt: String, dir: String) =
+    spark.read.format(fmt).option("chunkBytes", "256").load(dir)
+
+  for (fmt <- Seq("netcdf3", "netcdf4")) {
+    test(s"$fmt: autotuned partitions never decode one stored chunk twice") {
+      val dir = s"/tmp/graft_nc_spec/grid_$fmt"
+      writeGrid(fmt, dir)
+      val chunk = storedChunkRecs(fmt, dir)
+      assert(chunk == 16L)
+      for ((lo, hi) <- Seq((30L, 250L), (37L, 283L), (5L, 299L), (120L, 170L), (90L, 118L))) {
+        val parts = planned(grid(fmt, dir).filter(col("record") >= lo && col("record") < hi))
+        val shared = parts
+          .flatMap { case (f, s, e, _) => (s / chunk to (e - 1) / chunk).map(f -> _) }
+          .groupBy(identity).collect { case (c, n) if n.size > 1 => c }
+        assert(shared.isEmpty, s"[$lo, $hi): chunks $shared in two of $parts")
+        assert(parts.map { case (_, s, e, _) => e - s }.sum == hi - lo, parts.toString)
+      }
+    }
+
+    test(s"$fmt: a slice across a chunk and a file boundary equals a filtered full read") {
+      val dir = s"/tmp/graft_nc_spec/grid_$fmt"
+      writeGrid(fmt, dir)
+      // chunk boundary at record 96, file boundary at 100, chunk
+      // boundary at 116 (file 1's record 16)
+      val (lo, hi) = (90L, 118L)
+      val sliced = grid(fmt, dir).filter(col("record") >= lo && col("record") < hi)
+      assert(planned(sliced).map { case (f, s, e, _) => (f.take(10), s, e) } ==
+        Seq(("part-00000", 90L, 96L), ("part-00000", 96L, 100L),
+          ("part-00001", 0L, 16L), ("part-00001", 16L, 18L)))
+      def bits(r: org.apache.spark.sql.Row) = (r.getLong(0), r.getLong(1),
+        java.lang.Double.doubleToRawLongBits(r.getDouble(2)))
+      val got = sliced.select("record", "coord", "payload").collect().map(bits)
+      val want = grid(fmt, dir).select("record", "coord", "payload").collect().map(bits)
+        .filter { case (rec, _, _) => rec >= lo && rec < hi }
+      assert(got.map(_._1).distinct.length == got.length, "a record came back twice")
+      assert(got.sortBy(_._1).toSeq == want.sortBy(_._1).toSeq)
+      assert(got.length == hi - lo)
+    }
   }
 }
