@@ -12,15 +12,12 @@ import org.apache.spark.sql.SparkSession
   *
   * Stall defenses (the r4 driver bench session recorded an RpcTimeout
   * mid-run and 44x slowdowns on queries with unchanged trivial plans):
-  *  - heartbeat/network timeout headroom so a full-GC pause cannot
-  *    kill the driver<->executor RPC in local mode;
-  *  - periodic GC at 60s (30s in r4 kept cleanup continuous but taxed
-  *    every query; 60s still bounds ContextCleaner backlog well below
-  *    full-GC-cliff territory);
+  *  - the RPC timeout headroom and periodic GC of [[Session]];
   *  - a watchdog: any query measuring >3x its previously recorded
-  *    warm time (from the last bench_full.json) gets ONE extra timing
-  *    sample after the main loop, when whatever transient stalled the
-  *    session has passed; the min is emitted.
+  *    warm time (from the last bench_full.json, at the same scale
+  *    factor and core count) gets ONE extra timing sample after the
+  *    main loop, when whatever transient stalled the session has
+  *    passed; the min is emitted.
   */
 object Bench {
   private val fullPath = java.nio.file.Paths.get(
@@ -32,22 +29,24 @@ object Bench {
   private def fmt(v: Double): String =
     String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
 
-  /** Per-query warm times from the previous run's bench_full.json, if
-    * present and recorded at the SAME scale factor — the watchdog
-    * baseline. Parsing is an exact-shape reader (keys and %.3f numbers
+  /** Per-query warm times from a previous run's full line, if it was
+    * recorded at the SAME scale factor and core count — the watchdog
+    * baseline (a line without `cpus` predates the field and matches
+    * nothing). Parsing is an exact-shape reader (keys and %.3f numbers
     * only), not a JSON library. */
-  private def readBaseline(sfDir: String): Map[String, Double] = {
-    try {
-      val s = new String(java.nio.file.Files.readAllBytes(fullPath), "UTF-8")
-      if (!s.contains("\"sf\":\"" + sfDir + "\"")) Map.empty
-      else {
-        val q = """"([a-z0-9_]+)":([0-9]+\.[0-9]+)""".r
-        val inQueries = s.indexOf("\"queries\":")
-        if (inQueries < 0) Map.empty
-        else q.findAllMatchIn(s.substring(inQueries)).map(m => m.group(1) -> m.group(2).toDouble).toMap
-      }
-    } catch { case _: Throwable => Map.empty }
+  private[graft] def baselineOf(full: String, sfDir: String, cpus: Int): Map[String, Double] = {
+    val inQueries = full.indexOf("\"queries\":")
+    if (!full.contains("\"sf\":\"" + sfDir + "\"") ||
+        !full.contains("\"cpus\":" + cpus + ",") || inQueries < 0) Map.empty
+    else {
+      val q = """"([a-z0-9_]+)":([0-9]+\.[0-9]+)""".r
+      q.findAllMatchIn(full.substring(inQueries)).map(m => m.group(1) -> m.group(2).toDouble).toMap
+    }
   }
+
+  private def readBaseline(sfDir: String, cpus: Int): Map[String, Double] =
+    try baselineOf(new String(java.nio.file.Files.readAllBytes(fullPath), "UTF-8"), sfDir, cpus)
+    catch { case _: Throwable => Map.empty }
 
   /** The driver keeps only the last ~2000 chars of stdout, so the
     * emitted JSON line must fit there or it is unparseable (rounds
@@ -104,7 +103,7 @@ object Bench {
     }.keys.toSeq.sorted
   }
 
-  private def header(results: Map[String, Double], sfDir: String): String = {
+  private def header(results: Map[String, Double], sfDir: String, cpus: Int): String = {
     val good = results.values.filter(_ >= 0)
     val total = if (good.nonEmpty) good.sum else 0.0
     val errs = results.filter(_._2 < 0).keys.toSeq.sorted
@@ -115,13 +114,14 @@ object Bench {
       else "\"n_err\":" + errs.size + ",\"errors\":" +
         errs.take(12).map("\"" + _ + "\"").mkString("[", ",", "]") + ","
     s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${results.size},""" +
-      s""""staging_sec":${fmt(stagingSec)},"sf":"$sfDir",""" +
+      s""""staging_sec":${fmt(stagingSec)},"sf":"$sfDir","cpus":$cpus,""" +
       s""""load_avg_start":$loadAvgStart,"load_avg_end":${loadAvg()},""" +
       s"$errPart\"queries\":{"
   }
 
-  private[graft] def emitLine(results: Map[String, Double], sfDir: String): String = {
-    val h = header(results, sfDir)
+  private[graft] def emitLine(results: Map[String, Double], sfDir: String,
+      cpus: Int = Session.cpus): String = {
+    val h = header(results, sfDir, cpus)
     val bySlowest = results.toSeq.sortBy(-_._2)
     val entries = scala.collection.mutable.ArrayBuffer.empty[String]
     var used = h.length + 2
@@ -133,41 +133,19 @@ object Bench {
   }
 
   /** Complete per-query map for bench_full.json / SURVEY §6. */
-  private[graft] def emitFullLine(results: Map[String, Double], sfDir: String): String = {
+  private[graft] def emitFullLine(results: Map[String, Double], sfDir: String,
+      cpus: Int = Session.cpus): String = {
     val fullQs = results.toSeq.sortBy(_._1)
       .map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
-    header(results, sfDir).dropRight("\"queries\":{".length) +
+    header(results, sfDir, cpus).dropRight("\"queries\":{".length) +
       "\"queries\":" + fullQs + "}"
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val warmDir = "/root/testdata/sf0.001"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val baseline = readBaseline(sfDir)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // a 135-query single-JVM session accumulates broadcast blocks
-      // and shuffle state that ContextCleaner only drops after a
-      // driver GC; with a large heap GC is rare, so state piles up
-      // until multi-second full-GC cliffs stall whatever query is
-      // running. Spark's own periodic-GC lever (default 30min —
-      // longer than the whole bench) keeps cleanup continuous.
-      .config("spark.cleaner.periodicGC.interval", "60s")
-      // Full-GC pauses plus heartbeat defaults (10s interval, 120s
-      // network timeout) produced an RpcTimeout mid-bench in the r4
-      // driver session. Local-mode RPCs are in-process; give them
-      // headroom so a pause is a pause, not a session-killer.
-      .config("spark.network.timeout", "600s")
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.rpc.askTimeout", "600s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val baseline = readBaseline(sfDir, Session.cpus)
+    val spark = Session.build()
     SparkEntry.queries.foreach { case (_, fn) =>
       try fn(spark, warmDir).count() catch { case _: Throwable => }
       // cached plans are per-query working state, not cross-query

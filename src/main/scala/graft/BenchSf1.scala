@@ -260,16 +260,7 @@ object BenchSf1 {
   private def retimeMain(a: Array[String]): Unit = {
     val key = a(0)
     val dirs = a.drop(1).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build()
     val secs = dirs.map { d =>
       try SparkEntry.queries(key)(spark, d).count() // warm: staging + JIT
       catch { case _: Throwable => }
@@ -321,19 +312,7 @@ object BenchSf1 {
     if (args.nonEmpty && args(0) == "retime") { retimeMain(args.drop(1)); return }
     val srcDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val dstDir = "/tmp/graft_sf1_synth"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.cleaner.periodicGC.interval", "60s")
-      .config("spark.network.timeout", "600s")
-      .config("spark.executor.heartbeatInterval", "60s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build()
     // `x100` mode: the same scaling-shape probe two decades up —
     // 100 replicas (~1.7 GB parquet from sf0.1) through the headline
     // key list. On fixed cores a linear operator should cost ≤ ~100×
@@ -343,7 +322,7 @@ object BenchSf1 {
     val x100 = args.contains("x100")
     val copies = if (x100) 100 else 10
     val stageDir = if (x100) "/tmp/graft_x100_synth" else dstDir
-    if (x100) replicateWide(spark, srcDir, stageDir, copies, cpus.toInt * 2)
+    if (x100) replicateWide(spark, srcDir, stageDir, copies, Session.cpus * 2)
     else replicate(spark, srcDir, stageDir, copies)
 
     // bench-only probes (not SparkEntry inventory keys): variants that

@@ -2,7 +2,6 @@ package graft
 
 import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Audit-fidelity probe (r15, r14 verdict #6 root-cause): does
   * `inputMetrics.bytesRead` actually see the bytes a parquet scan
@@ -23,14 +22,7 @@ import org.apache.spark.sql.SparkSession
 object ScanBytesProbe {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: ScanBytesProbe <parquetDir> [more...]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build()
 
     val inB = new AtomicLong(0)
     spark.sparkContext.addSparkListener(new SparkListener {

@@ -2,7 +2,6 @@ package graft
 
 import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Shuffle-volume audit (SURVEY.md §4): the quantitative form of the
   * bounded-shuffle claims. For each headline key, runs the query once
@@ -107,14 +106,7 @@ object ShuffleAudit {
       if (x100) "/tmp/graft_x100_synth"
       else if (organic) "/tmp/graft_organic_synth"
       else "/tmp/graft_sf1_synth"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = Session.build(
       // r14 (r13 verdict #1): pin BOTH audit legs to the same join
       // strategy family. Size-triggered auto-broadcast flips made the
       // small-leg denominator incomparable (r13's dedup_incremental
@@ -122,8 +114,8 @@ object ShuffleAudit {
       // side at sf0.1 — legal there, impossible at corpus scale).
       // Explicit broadcast() hints — the engine's DELIBERATE bounded-
       // dict broadcasts — are unaffected by these thresholds.
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
       // r15 (r14 verdict #6 root-cause): parquet-hadoop 1.16 defaults
       // vectored IO ON, and its range reads are served off the task
       // thread — the per-thread FS statistics behind bytesRead then
@@ -133,11 +125,9 @@ object ShuffleAudit {
       // bytes, so the audit session scans without vectored IO. This
       // is measurement fidelity only — the engine under bench/verify
       // keeps the (faster) default.
-      .config("spark.hadoop.parquet.hadoop.vectored.io.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.hadoop.parquet.hadoop.vectored.io.enabled" -> "false")
     if (!new java.io.File(s"$bigDir/documents.parquet").exists()) {
-      if (x100) BenchSf1.replicateWide(spark, srcDir, bigDir, 100, cpus.toInt * 2)
+      if (x100) BenchSf1.replicateWide(spark, srcDir, bigDir, 100, Session.cpus * 2)
       else if (organic) BenchSf1.organicGrow(spark, srcDir, bigDir, 10)
       else BenchSf1.replicate(spark, srcDir, bigDir, 10)
     }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Times ONE cold prestage pass at the given data dir — the bench's
   * staging_sec line item in isolation, for iterating on builder cost
   * and pool shape without paying a full 345-key bench per experiment.
@@ -10,17 +8,7 @@ import org.apache.spark.sql.SparkSession
 object StageProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-stage-probe")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build()
     // force operator object init (fills the Staged registry) exactly
     // like the bench's warmup does
     SparkEntry.queries

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -35,25 +35,13 @@ object StreamBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.cleaner.periodicGC.interval", "60s")
-      .config("spark.network.timeout", "600s")
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.sql.streaming.numRecentProgressUpdates", "200")
+    val spark = Session.build(
+      "spark.sql.streaming.numRecentProgressUpdates" -> "200",
       // push background state snapshots past the run's lifetime: the
       // per-batch deltas are the telemetry we time; the maintenance
       // pool otherwise races end-of-run checkpoint cleanup into log
       // noise (and StateStore.stop() blocks minutes joining it)
-      .config("spark.sql.streaming.stateStore.maintenanceInterval", "1h")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.sql.streaming.stateStore.maintenanceInterval" -> "1h")
     import spark.implicits._
 
     // ---- stage: events sorted into NB time slices, one file each,

@@ -60,7 +60,15 @@ object Staged {
     * around this call. */
   def prestage(s: SparkSession, dir: String): Seq[(String, Double)] = {
     import scala.jdk.CollectionConverters._
-    val tags = registry.asScala.toSeq.sortBy(_._1)
+    build(s, dir, registry.asScala.toSeq.sortBy(_._1))
+  }
+
+  /** Run `builders` on the prestage pool. A builder that throws is
+    * reported on stderr against its own tag and left out of the
+    * result; every other tag still finishes (its artifact is built on
+    * first touch instead, by the query that needs it). */
+  private[graft] def build(s: SparkSession, dir: String,
+      builders: Seq[(String, (SparkSession, String) => Unit)]): Seq[(String, Double)] = {
     // r17 StageProbe sweep at sf0.1/local[32] AFTER the builder
     // kernels landed: 2 threads → 32.5 s, 4 → 20.5, 6 → 18.2,
     // 8 → 17.4 — overlap pays once no single builder is CPU-dense
@@ -74,7 +82,7 @@ object Staged {
       Runtime.getRuntime.availableProcessors())
     val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
     try {
-      val futures = tags.map { case (tag, touch) =>
+      val futures = builders.map { case (tag, touch) =>
         tag -> pool.submit(new java.util.concurrent.Callable[Double] {
           override def call(): Double = {
             val t0 = System.nanoTime()
@@ -83,7 +91,14 @@ object Staged {
           }
         })
       }
-      futures.map { case (tag, f) => tag -> f.get() }
+      futures.flatMap { case (tag, f) =>
+        try Some(tag -> f.get())
+        catch { case e: java.util.concurrent.ExecutionException =>
+          val c = e.getCause
+          System.err.println(s"[staged] prestage $tag FAILED: ${c.getClass.getName}: ${c.getMessage}")
+          None
+        }
+      }
     } finally pool.shutdown()
   }
 

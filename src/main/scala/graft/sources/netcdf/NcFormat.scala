@@ -1086,6 +1086,9 @@ object NcFormat {
       ByteBuffer.wrap(buf, slotBase(slot, i) + 4 * k, 4).getInt
     def getLongElem(slot: Int, i: Int, k: Int): Long =
       ByteBuffer.wrap(buf, slotBase(slot, i) + 8 * k, 8).getLong
+    def getShortElem(slot: Int, i: Int, k: Int): Short =
+      ByteBuffer.wrap(buf, slotBase(slot, i) + 2 * k, 2).getShort
+    def getByteElem(slot: Int, i: Int, k: Int): Byte = buf(slotBase(slot, i) + k)
 
     def getDoubleAt(slot: Int, i: Int): Double = ByteBuffer.wrap(buf, slotBase(slot, i), 8).getDouble
     def getFloatAt(slot: Int, i: Int): Float = ByteBuffer.wrap(buf, slotBase(slot, i), 4).getFloat

@@ -56,25 +56,17 @@ object NetCDF3 extends ChunkedContainer {
     new NcDataWriter(schema, dir, baseName, options, serConf)
 }
 
+/** Every netcdf3 schema type decodes straight into column vectors —
+  * one typed fill loop per variable per chunk, no per-row branching:
+  * scalars via direct puts, NC_CHAR strings via zero-copy
+  * putByteArray from the chunk buffer, rank-2 numeric arrays via
+  * child-vector appends — so reads are columnar only. */
 class NcReaderFactory(required: StructType, chunkBytes: Int, serConf: SerializableHadoopConf)
     extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new NcPartitionReader(partition.asInstanceOf[RecordRangePartition], required, chunkBytes,
-      serConf)
+  override def supportColumnarReads(partition: InputPartition): Boolean = true
 
-  /** All variable shapes decode straight into column vectors — one
-    * typed fill loop per variable per chunk, no per-row branching:
-    * scalars via direct puts, NC_CHAR strings via zero-copy
-    * putByteArray from the chunk buffer, rank-2 numeric arrays via
-    * child-vector appends. The row reader remains only as a fallback
-    * for types the fill loops don't cover. */
-  override def supportColumnarReads(partition: InputPartition): Boolean =
-    required.fields.forall(f => f.name == "record" || (f.dataType match {
-      case DoubleType | FloatType | IntegerType | LongType | ShortType | ByteType => true
-      case StringType => true
-      case ArrayType(DoubleType | FloatType | IntegerType | LongType, _) => true
-      case _ => false
-    }))
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    throw new UnsupportedOperationException("netcdf3 reads are columnar")
 
   override def createColumnarReader(
       partition: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
@@ -161,6 +153,20 @@ class NcColumnarReader(part: RecordRangePartition, required: StructType, chunkBy
                 while (k < m) { child.appendLong(reader.getLongElem(slot, i, k)); k += 1 }
                 v.putArray(i, i * m, m); i += 1
               }
+            case NC_SHORT =>
+              var i = 0
+              while (i < n) {
+                var k = 0
+                while (k < m) { child.appendShort(reader.getShortElem(slot, i, k)); k += 1 }
+                v.putArray(i, i * m, m); i += 1
+              }
+            case NC_BYTE =>
+              var i = 0
+              while (i < n) {
+                var k = 0
+                while (k < m) { child.appendByte(reader.getByteElem(slot, i, k)); k += 1 }
+                v.putArray(i, i * m, m); i += 1
+              }
           }
         } else reader.slotType(slot) match {
           case NC_DOUBLE =>
@@ -186,55 +192,4 @@ class NcColumnarReader(part: RecordRangePartition, required: StructType, chunkBy
 
   override def get(): ColumnarBatch = batch
   override def close(): Unit = { batch.close(); reader.close() }
-}
-
-class NcPartitionReader(part: RecordRangePartition, required: StructType, chunkBytes: Int,
-    serConf: SerializableHadoopConf)
-    extends PartitionReader[InternalRow] {
-
-  private val path = new Path(part.file)
-  private val fs = path.getFileSystem(serConf.value)
-  private val meta = NcFormat.readMeta(fs, path)
-  private val varNames = required.fieldNames.filterNot(_ == "record").toSeq
-  private val reader = new NcFormat.RangeReader(
-    fs, path, meta, part.localStart, part.localEnd, varNames, chunkBytes)
-
-  private var inChunk = 0
-  private var chunkSize = 0
-  private val row =
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(required.size)
-
-  override def next(): Boolean = {
-    if (inChunk >= chunkSize) {
-      if (!reader.hasNext) return false
-      chunkSize = reader.loadChunk()
-      inChunk = 0
-    }
-    var out = 0
-    var slot = 0
-    required.fields.foreach { f =>
-      if (f.name == "record") {
-        row.update(out, part.fileOffset + reader.chunkStartRecord + inChunk)
-      } else {
-        val v = reader.getValue(slot, inChunk) match {
-          case b: Array[Byte] if f.dataType == StringType =>
-            // NC_CHAR slab: trim trailing NULs
-            var n = b.length
-            while (n > 0 && b(n - 1) == 0) n -= 1
-            org.apache.spark.unsafe.types.UTF8String.fromBytes(b, 0, n)
-          case a: Array[Any] =>
-            new org.apache.spark.sql.catalyst.util.GenericArrayData(a)
-          case other => other
-        }
-        row.update(out, v)
-        slot += 1
-      }
-      out += 1
-    }
-    inChunk += 1
-    true
-  }
-
-  override def get(): InternalRow = row
-  override def close(): Unit = reader.close()
 }

@@ -79,6 +79,8 @@ private[graft] object StreamStage {
     *     independent (complete-mode aggregates; the oracle gates all
     *     48 stream keys either way).
     *
+    * OPTIMIZATION_r17.md records the interleaved runs behind both.
+    *
     * Measured and rejected (same interleaved harness):
     * noDataMicroBatches=false + stateStore.maintenanceInterval=1h —
     * median WORSE than base (1.42 vs 1.28); the trailing no-data
@@ -98,10 +100,7 @@ private[graft] object StreamStage {
     val conf = s.conf
     val sp = "spark.sql.shuffle.partitions"
     val oldSp = conf.get(sp)
-    // escape hatch for A/B measurement (graft.StreamProfile flips it
-    // per repetition inside one warm session)
-    val adapt = System.getProperty("graft.stream.adapt", "on") != "off"
-    val derived = if (!adapt) None else Option(stagedBytes.get()).map { bytes =>
+    val derived = Option(stagedBytes.get()).map { bytes =>
       math.max(1L, math.min(oldSp.toLong,
         (bytes + BYTES_PER_PARTITION - 1) / BYTES_PER_PARTITION)).toString
     }

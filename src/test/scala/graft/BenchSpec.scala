@@ -53,6 +53,19 @@ class BenchSpec extends AnyFunSuite {
     assert(Bench.suspects(results, baseline, load1 = -1.0) == Seq("b"))
   }
 
+  test("watchdog baseline: only a line recorded at the same sf and core count") {
+    val full = Bench.emitFullLine(Map("a" -> 1.5, "b" -> 0.25), "sfX", cpus = 8)
+    assert(full.contains("\"sf\":\"sfX\",\"cpus\":8,"), full)
+    assert(Bench.emitLine(Map("a" -> 1.5), "sfX", cpus = 8).contains("\"cpus\":8,"))
+    assert(Bench.baselineOf(full, "sfX", 8) == Map("a" -> 1.5, "b" -> 0.25))
+    // an 8-core baseline must not watchdog a 32-core (or 80-core) run
+    assert(Bench.baselineOf(full, "sfX", 32).isEmpty)
+    assert(Bench.baselineOf(full.replace("\"cpus\":8,", "\"cpus\":80,"), "sfX", 8).isEmpty)
+    assert(Bench.baselineOf(full, "sfY", 8).isEmpty)
+    // a line written before the cpus field existed matches no core count
+    assert(Bench.baselineOf(full.replace("\"cpus\":8,", ""), "sfX", 8).isEmpty)
+  }
+
   test("loadAvg1 parses the 1-minute element and tolerates garbage") {
     assert(Bench.loadAvg1("[2.15,3.09,3.08]") == 2.15)
     assert(Bench.loadAvg1("[-1,-1,-1]") == -1.0)

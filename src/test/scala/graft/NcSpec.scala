@@ -81,7 +81,7 @@ class NcSpec extends AnyFunSuite {
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("ColumnarToRow"), plan.take(600))
     assert(df.count() == li.count())
-    // row path (string/array fallback) and columnar path agree
+    // the columnar read equals the source
     val sum1 = df.agg(sum("l_quantity")).head().getDouble(0)
     assert(sum1 == li.agg(sum("l_quantity")).head().getDouble(0))
   }
@@ -115,6 +115,52 @@ class NcSpec extends AnyFunSuite {
     val got = backE.agg(sum(sumExpr)).head().getDecimal(0)
     val exp = emb.agg(sum(sumExpr)).head().getDecimal(0)
     assert(got == exp)
+  }
+
+  test("rank-2 short and byte record variables read through the columnar path") {
+    import graft.sources.netcdf.NcFormat
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.types._
+    val fs = new Path("/tmp").getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val schema = StructType(Seq(
+      StructField("s", ArrayType(ShortType, containsNull = false)),
+      StructField("b", ArrayType(ByteType, containsNull = false))))
+    val n = 300
+    for (flavor <- Seq("nc", "ncz")) {
+      val dir = s"/tmp/graft_nc_spec/short_byte_$flavor"
+      fs.delete(new Path(dir), true)
+      fs.mkdirs(new Path(dir))
+      val file = new Path(s"$dir/part-00000.$flavor")
+      val w = new NcFormat.Writer(file.toString, schema, chunkBytes = 256,
+        arrayLens = Map("s" -> 3, "b" -> 5), compressChunks = flavor == "ncz")
+      (0 until n).foreach { r =>
+        w.writeRow {
+          case 0 => Array.tabulate[Short](3)(k => (r * 131 - k * 11000).toShort)
+          case _ => Array.tabulate[Byte](5)(k => (r * 3 + k * 50).toByte)
+        }
+      }
+      w.close()
+      // reference: the codec's boxed per-record accessor
+      val r = new NcFormat.RangeReader(fs, file, NcFormat.readMeta(fs, file), 0L, n.toLong,
+        Seq("s", "b"))
+      val want = scala.collection.mutable.ArrayBuffer.empty[(Seq[Any], Seq[Any])]
+      try while (r.hasNext) {
+        val k = r.loadChunk()
+        (0 until k).foreach { i =>
+          want += ((r.getValue(0, i).asInstanceOf[Array[Any]].toSeq,
+            r.getValue(1, i).asInstanceOf[Array[Any]].toSeq))
+        }
+      } finally r.close()
+      val back = spark.read.format("netcdf3").option("chunkBytes", "64").load(dir)
+      assert(back.schema("s").dataType == schema("s").dataType, flavor)
+      assert(back.schema("b").dataType == schema("b").dataType, flavor)
+      val plan = back.queryExecution.executedPlan.toString
+      assert(plan.contains("ColumnarToRow"), plan.take(600))
+      val got = back.orderBy("record").collect().toSeq
+        .map(row => (row.getSeq[Short](row.fieldIndex("s")), row.getSeq[Byte](row.fieldIndex("b"))))
+      assert(want.size == n, flavor)
+      assert(got == want.toSeq, flavor)
+    }
   }
 
   test("chunked multi-partition read covers all records exactly once") {
