@@ -103,6 +103,18 @@ object Bench {
     }.keys.toSeq.sorted
   }
 
+  /** The commit the bench ran, as `git rev-parse HEAD` prints it in
+    * the working directory; "unknown" when that fails (no git, not a
+    * checkout). */
+  private[graft] def commitOf(cmd: Seq[String]): String =
+    try {
+      val out = scala.sys.process.Process(cmd)
+        .!!(scala.sys.process.ProcessLogger(_ => ())).trim
+      if (out.matches("[0-9a-f]{40}")) out else "unknown"
+    } catch { case _: Throwable => "unknown" }
+
+  private[graft] lazy val commit: String = commitOf(Seq("git", "rev-parse", "HEAD"))
+
   private def header(results: Map[String, Double], sfDir: String, cpus: Int): String = {
     val good = results.values.filter(_ >= 0)
     val total = if (good.nonEmpty) good.sum else 0.0
@@ -114,7 +126,7 @@ object Bench {
       else "\"n_err\":" + errs.size + ",\"errors\":" +
         errs.take(12).map("\"" + _ + "\"").mkString("[", ",", "]") + ","
     s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${results.size},""" +
-      s""""staging_sec":${fmt(stagingSec)},"sf":"$sfDir","cpus":$cpus,""" +
+      s""""staging_sec":${fmt(stagingSec)},"sf":"$sfDir","cpus":$cpus,"commit":"$commit",""" +
       s""""load_avg_start":$loadAvgStart,"load_avg_end":${loadAvg()},""" +
       s"$errPart\"queries\":{"
   }

@@ -342,8 +342,4 @@ object VectorExpressions {
     import org.apache.spark.sql.functions.sqrt
     sqrt(vec_dot(a, a))
   }
-
-  /** cosine(a, b) given precomputed norms. */
-  def vec_cos(a: Column, b: Column, na: Column, nb: Column): Column =
-    vec_dot(a, b) / (na * nb)
 }

@@ -85,21 +85,6 @@ object Winnowing {
     * two independent shared runs (or one long one). */
   private val MIN_SHARED = 2
 
-  /** Winnowing candidate pairs — the USE of the fingerprints: docs
-    * sharing ≥ MIN_SHARED df-capped fingerprints are substring-level
-    * near-dup candidates (each shared fingerprint certifies a shared
-    * word run, positionally — the thing Jaccard-over-shingles cannot
-    * certify). Pipeline: per-doc fingerprint arrays stay map-side,
-    * explode only the selected ~2/(W+1) density, df-cap with a
-    * broadcast anti-join, then ONE keyed self-join on fingerprint with
-    * per-bucket membership ≤ MAX_DF — never all-pairs. */
-  /** The pair pipeline over an arbitrary docs relation and token
-    * array (r15 — shared with the unicode twin; df cap and the keyed
-    * fingerprint self-join are identical). */
-  private[operators] def winnowPairsOf(docs: DataFrame,
-      ws: Column = split(col("text"), " ")): DataFrame =
-    winnowPairsFrom(winnowFpsOf(docs, ws))
-
   /** The (doc_id, fp) selected-fingerprint table — the MOSS-style
     * fingerprint INDEX the pair join probes (split out in r16 so the
     * gated keys can stage it per session, the `sh3`/`sh4` posture). */
@@ -111,7 +96,14 @@ object Winnowing {
       .select(col("doc_id"), explode(array_distinct(
         graft.functions.NgramExpressions.winnow_mins(col("hs"), W))).as("fp"))
 
-  /** df-cap + keyed self-join over a fingerprint table. */
+  /** Winnowing candidate pairs — the USE of the fingerprints: docs
+    * sharing ≥ MIN_SHARED df-capped fingerprints are substring-level
+    * near-dup candidates (each shared fingerprint certifies a shared
+    * word run, positionally — the thing Jaccard-over-shingles cannot
+    * certify). Pipeline: per-doc fingerprint arrays stay map-side,
+    * explode only the selected ~2/(W+1) density, df-cap with a
+    * broadcast anti-join, then ONE keyed self-join on fingerprint with
+    * per-bucket membership ≤ MAX_DF — never all-pairs. */
   private def winnowPairsFrom(fps: DataFrame): DataFrame = {
     val hot = fps.groupBy("fp").agg(count(lit(1)).as("df"))
       .filter(col("df") > MAX_DF).select("fp")

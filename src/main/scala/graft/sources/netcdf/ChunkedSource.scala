@@ -47,6 +47,10 @@ trait ChunkedContainer extends Serializable {
   def sparkSchema(m: Meta): StructType
   /** The `actual_range` zone map of a record variable, if recorded. */
   def actualRange(m: Meta, variable: String): Option[(Double, Double)]
+  /** Every attribute of one header as (var, attr, element idx, sval,
+    * dval) rows: global attributes under var `GLOBAL`, a text value as
+    * one row with idx 0, a numeric value as one row per element. */
+  def attrRows(m: Meta): Seq[(String, String, Long, Option[String], Option[Double])]
 
   /** (record bytes, chunk bytes) the split autotuner sizes partitions
     * from, given the first file's header (None for an empty batch). */

@@ -1,7 +1,8 @@
 package graft.sources.netcdf
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.SparkContext
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.{SparkContext, TaskContext}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
@@ -13,6 +14,11 @@ import org.apache.spark.sql.types._
   *
   *   - batch:  `df.write.format("netcdf3" | "netcdf4").mode("append"|"overwrite").save(dir)`
   *   - stream: `df.writeStream.format("netcdf3" | "netcdf4").option("path", dir).start()`
+  *
+  * The typed Scala entry points [[NcIO.write]] and [[Hdf5IO.write]]
+  * (attributes, fixed variables and per-variable chunking that cannot
+  * travel as string options) run the same per-task writers through
+  * [[ChunkedWrite.write]].
   *
   * Each task streams its rows through the container's chunked part-file
   * writer ([[NcDataWriter]], [[Nc4DataWriter]]) and lands one
@@ -36,9 +42,7 @@ class ChunkedWriteBuilder(container: ChunkedContainer, schema: StructType, dir: 
     options: Map[String, String]) extends WriteBuilder with SupportsTruncate {
 
   require(dir != null, s"${container.name} write requires a path")
-  require(!schema.fieldNames.contains("record"),
-    s"column name `record` is reserved for the ${container.name} record index")
-  container.checkWriteOptions(options)
+  ChunkedWrite.check(container, schema, options)
   private var truncateFirst = false
 
   override def truncate(): WriteBuilder = { truncateFirst = true; this }
@@ -70,14 +74,7 @@ private[netcdf] class PartFileWrite(container: ChunkedContainer, schema: StructT
     dir: String, options: Map[String, String], truncateFirst: Boolean)
     extends BatchWrite with StreamingWrite {
 
-  private val serConf = {
-    val hconf = SparkContext.getOrCreate().hadoopConfiguration
-    val p = new Path(dir)
-    val fs = p.getFileSystem(hconf)
-    if (truncateFirst && fs.exists(p)) fs.delete(p, true)
-    fs.mkdirs(p)
-    new SerializableHadoopConf(hconf)
-  }
+  private val serConf = ChunkedWrite.prepareDir(dir, truncateFirst)
 
   private def factory = ChunkedWriterFactory(container, schema, dir, options, serConf)
 
@@ -105,10 +102,72 @@ private[netcdf] case class ChunkedWriterFactory(container: ChunkedContainer,
   private def prefix: String = options.get("partprefix").map(p => s"$p-").getOrElse("")
 
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    container.dataWriter(schema, dir, s"part-$prefix" + f"$partitionId%05d", options, serConf)
+    container.dataWriter(schema, dir, ChunkedWrite.partName(prefix, partitionId), options,
+      serConf)
 
   override def createWriter(partitionId: Int, taskId: Long,
       epochId: Long): DataWriter[InternalRow] =
     container.dataWriter(schema, dir, s"part-$prefix" + f"e$epochId%05d-$partitionId%05d",
       options, serConf)
+}
+
+/** The steps every write of a part-file dataset shares, whether it
+  * comes through the DSv2 sink above or a typed entry point. */
+private[netcdf] object ChunkedWrite {
+
+  /** Driver-side checks before any task runs. */
+  def check(container: ChunkedContainer, schema: StructType,
+      options: Map[String, String]): Unit = {
+    require(!schema.fieldNames.contains("record"),
+      s"column name `record` is reserved for the ${container.name} record index")
+    container.checkWriteOptions(options)
+  }
+
+  /** Prepare the target dir on the driver: `truncate` deletes any
+    * previous contents (overwrite semantics), and the dir exists before
+    * tasks start renaming into it. Returns the conf the tasks land with. */
+  def prepareDir(dir: String, truncate: Boolean): SerializableHadoopConf = {
+    val hconf = SparkContext.getOrCreate().hadoopConfiguration
+    val p = new Path(dir)
+    val fs = p.getFileSystem(hconf)
+    if (truncate && fs.exists(p)) fs.delete(p, true)
+    fs.mkdirs(p)
+    new SerializableHadoopConf(hconf)
+  }
+
+  /** Base name of a batch task's part file. */
+  def partName(prefix: String, partitionId: Int): String = s"part-$prefix" + f"$partitionId%05d"
+
+  /** The typed entry points' batch job: overwrite `dir` with one part
+    * file per non-empty partition of `df`, each written by the per-task
+    * writer `newWriter(baseName, conf)` creates — committed when its
+    * rows run out, aborted when the task fails. */
+  def write(df: DataFrame, container: ChunkedContainer, dir: String,
+      options: Map[String, String])(
+      newWriter: (String, SerializableHadoopConf) => DataWriter[InternalRow]): Unit = {
+    check(container, df.schema, options)
+    val serConf = prepareDir(dir, truncate = true)
+    df.queryExecution.toRdd.foreachPartition { rows =>
+      val w = newWriter(partName("", TaskContext.getPartitionId()), serConf)
+      try {
+        rows.foreach(w.write)
+        w.commit()
+      } catch { case t: Throwable => w.abort(); throw t }
+      finally w.close()
+    }
+  }
+
+  /** Land one part file as `dir/name`: `upload` writes it under a
+    * temp name, which then replaces any file of that name. A retried
+    * task or a replayed epoch lands the same name again, so retries
+    * replace rather than duplicate and readers never see a torn file. */
+  def land(dir: String, name: String, serConf: SerializableHadoopConf)(
+      upload: (FileSystem, Path) => Unit): Unit = {
+    val dest = new Path(dir, name)
+    val tmp = new Path(dir, s".$name-${java.util.UUID.randomUUID()}.tmp")
+    val fs = dest.getFileSystem(serConf.value)
+    upload(fs, tmp)
+    if (fs.exists(dest)) fs.delete(dest, false)
+    if (!fs.rename(tmp, dest)) throw new java.io.IOException(s"rename to $dest failed")
+  }
 }

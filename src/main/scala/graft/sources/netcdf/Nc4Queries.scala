@@ -3,124 +3,8 @@ package graft.sources.netcdf
 import graft.Tables._
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-
-/** Distributed fixture writer for the HDF5 subset: one .nc4 part file
-  * per partition (local spool → temp-name rename, like [[NcIO]]), so
-  * fixture staging never collects to the driver. The READ direction
-  * ([[NetCDF4Source]]) is the graded capability; this writer exists
-  * so the gate exercises real HDF5 bytes produced and parsed entirely
-  * by this repo's from-spec codec. */
-object Hdf5IO {
-
-  def write(df: DataFrame, dir: String, chunkRecs: Int = 4096,
-      deflate: Boolean = true, h5ver: Int = 0, stringWidth: Int = 32,
-      arrayLens: Map[String, Int] = Map.empty,
-      varAttrs: Map[String, Seq[Hdf5Format.H5Attr]] = Map.empty,
-      shuffle: Boolean = false, fletcher: Boolean = false,
-      vlenStrings: Boolean = false, denseRoot: Boolean = false,
-      chunkIndex: String = "btree1", denseAttrs: Boolean = false): Unit = {
-    val schema = df.schema
-    require(!schema.fieldNames.contains("record"),
-      "column name `record` is reserved for the netcdf4 record index")
-    val spark = df.sparkSession
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val p = new Path(dir)
-    val fs = p.getFileSystem(hconf)
-    if (fs.exists(p)) fs.delete(p, true)
-    fs.mkdirs(p)
-    val serConf = new SerializableHadoopConf(hconf)
-    val getters: Array[InternalRow => Any] =
-      schema.fields.zipWithIndex.map { case (f, i) =>
-        f.dataType match {
-          case DoubleType => (r: InternalRow) => r.getDouble(i)
-          case FloatType => (r: InternalRow) => r.getFloat(i)
-          case IntegerType => (r: InternalRow) => r.getInt(i)
-          case ShortType => (r: InternalRow) => r.getShort(i)
-          case LongType => (r: InternalRow) => r.getLong(i)
-          case StringType => (r: InternalRow) => r.getUTF8String(i).getBytes
-          case ArrayType(FloatType, _) => (r: InternalRow) => r.getArray(i).toFloatArray
-          case ArrayType(DoubleType, _) => (r: InternalRow) => r.getArray(i).toDoubleArray
-          case ArrayType(LongType, _) => (r: InternalRow) => r.getArray(i).toLongArray
-          case st: StructType => (r: InternalRow) => {
-            val row = r.getStruct(i, st.size)
-            val a = new Array[Any](st.size)
-            var j = 0
-            while (j < st.size) {
-              if (row.isNullAt(j)) throw new IllegalArgumentException(
-                s"null in compound member ${schema.fields(i).name}.${st.fields(j).name}")
-              a(j) = st.fields(j).dataType match {
-                case LongType => row.getLong(j)
-                case IntegerType => row.getInt(j)
-                case ShortType => row.getShort(j)
-                case DoubleType => row.getDouble(j)
-                case FloatType => row.getFloat(j)
-                case StringType => row.getUTF8String(j).getBytes
-                case o => throw new IllegalArgumentException(
-                  s"unsupported compound member type $o")
-              }
-              j += 1
-            }
-            a
-          }
-          case other => throw new IllegalArgumentException(s"unsupported HDF5 type $other")
-        }
-      }
-    df.queryExecution.toRdd.mapPartitionsWithIndex { (pid, rows) =>
-      val w = new Hdf5Format.Hdf5Writer(schema, chunkRecs, deflate,
-        stringWidth, arrayLens, h5ver, varAttrs = varAttrs, shuffle = shuffle,
-        fletcher = fletcher, vlenStrings = vlenStrings, denseRoot = denseRoot,
-        chunkIndex = chunkIndex, denseAttrs = denseAttrs)
-      rows.foreach { r =>
-        var i = 0
-        while (i < schema.size) {
-          if (r.isNullAt(i)) throw new IllegalArgumentException(
-            s"null in column ${schema.fields(i).name}: fill or filter nulls before writing")
-          i += 1
-        }
-        w.writeRow(i => getters(i)(r))
-      }
-      val bytes = w.finish()
-      val fsx = new Path(dir).getFileSystem(serConf.value)
-      val dest = new Path(dir, f"part-$pid%05d.nc4")
-      val tmp = new Path(dir, f".part-$pid%05d-${java.util.UUID.randomUUID()}.tmp")
-      val out = fsx.create(tmp, true)
-      try out.write(bytes) finally out.close()
-      if (fsx.exists(dest)) fsx.delete(dest, false)
-      if (!fsx.rename(tmp, dest)) throw new java.io.IOException(s"rename to $dest failed")
-      Iterator.single(pid)
-    }.count()
-    ()
-  }
-
-  /** Every attribute of every file in the dir as rows (var_name,
-    * attr_name, idx, sval, dval) — the netCDF-4 metadata surface
-    * (`Dataset.ncattrs` / `Variable.ncattrs` parity). Root-group
-    * attributes report under var_name 'GLOBAL'. A header-only
-    * metadata pass; mirrors [[NcIO.readAttrs]] for the classic
-    * format. */
-  def readAttrs(spark: SparkSession, dir: String): DataFrame = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val rows = NetCDF4.listFiles(fs, p).flatMap { f =>
-      val meta = Hdf5Format.readMeta(fs, f)
-      def attRows(varName: String, atts: Seq[Hdf5Format.H5Attr]) = atts.flatMap { a =>
-        a.text match {
-          case Some(s) => Seq((varName, a.name, 0L, Option(s), Option.empty[Double]))
-          case None => a.nums.zipWithIndex.map { case (d, i) =>
-            (varName, a.name, i.toLong, Option.empty[String], Some(d))
-          }.toSeq
-        }
-      }
-      attRows("GLOBAL", meta.rootAttrs) ++
-        meta.vars.flatMap(v => attRows(v.name, v.attrs))
-    }
-    import spark.implicits._
-    rows.toDF("var_name", "attr_name", "idx", "sval", "dval")
-  }
-}
 
 /** Driver-contract queries for the netCDF-4/HDF5 READ path (SURVEY.md
   * §2A): fixtures are written in genuine HDF5 layout by [[Hdf5IO]]
@@ -301,7 +185,7 @@ object Nc4Queries {
     * axes in HDF5 files just as often): three day-count variables
     * written with units/calendar attributes through the HDF5 attr
     * path, decode dispatch driven by a header-only
-    * [[Hdf5IO.readAttrs]] read, per-calendar arithmetic the SHARED
+    * [[NcIO.readAttrs]] read, per-calendar arithmetic the SHARED
     * [[NcQueries.cfYmdExpr]] integer construction — both containers
     * must decode pre-epoch offsets identically or the hash splits.
     * Oracle: the nc3 gate's SQL verbatim. */
@@ -318,7 +202,7 @@ object Nc4Queries {
         "time_std" -> Seq(sa("units", "days since 1970-01-01"), sa("calendar", "standard")),
         "time_noleap" -> Seq(sa("units", "days since 1970-01-01"), sa("calendar", "noleap")),
         "time_360" -> Seq(sa("units", "days since 1970-01-01"), sa("calendar", "360_day"))))
-    val attrs = Hdf5IO.readAttrs(s, out)
+    val attrs = NcIO.readAttrs(s, NetCDF4, out).drop("file")
       .filter(col("attr_name").isin("units", "calendar"))
       .select("var_name", "attr_name", "sval").distinct().collect()
       .groupBy(_.getString(0))
@@ -678,7 +562,7 @@ object Nc4Queries {
           "aggregate(qtys, CAST(0 AS DECIMAL(20,2)), (acc, x) -> CAST(acc + CAST(x AS DECIMAL(9,2)) AS DECIMAL(20,2)))"))
           .cast(DoubleType).as("sum_q"),
         sum(col("max_line").cast(LongType)).as("sum_maxline"))
-    val memRow = Hdf5IO.readAttrs(s, out)
+    val memRow = NcIO.readAttrs(s, NetCDF4, out).drop("file")
       .filter(col("attr_name") === "_enum_members")
       .select(col("sval").as("members")).distinct()
     agg.crossJoin(broadcast(memRow))
@@ -757,7 +641,7 @@ object Nc4Queries {
       .option("dimnames.label", "row")
       .option("dimnames.embedding", "row,lat,lon")
       .save(out)
-    val dims = Hdf5IO.readAttrs(s, out)
+    val dims = NcIO.readAttrs(s, NetCDF4, out).drop("file")
       .filter(col("attr_name").isin("_dims", "CLASS"))
       .groupBy()
       .agg(
@@ -811,7 +695,7 @@ object Nc4Queries {
     }
     // discover the coordinate variable from the file's own scale
     // metadata (driver-side, header-sized — like the classic sel path)
-    val coord = Hdf5IO.readAttrs(s, out)
+    val coord = NcIO.readAttrs(s, NetCDF4, out).drop("file")
       .filter(col("attr_name") === "CLASS" && col("sval") === "DIMENSION_SCALE")
       .select(col("var_name")).distinct().collect()
     require(coord.length == 1, s"expected one coordinate, got ${coord.length}")
@@ -995,7 +879,7 @@ object Nc4Queries {
         countDistinct(lower(hex(col("digest")))).as("n_distinct"),
         min(lower(hex(col("digest")))).as("min_d"),
         max(lower(hex(col("digest")))).as("max_d"))
-    val tagRow = Hdf5IO.readAttrs(s, out)
+    val tagRow = NcIO.readAttrs(s, NetCDF4, out).drop("file")
       .filter(col("attr_name") === "_opaque_tag")
       .select(col("sval").as("tag")).distinct()
     agg.crossJoin(broadcast(tagRow))
@@ -1035,7 +919,7 @@ object Nc4Queries {
         count(lit(1)).as("n"),
         sum(col("l_orderkey")).as("sum_key"),
         dsum(col("l_quantity")).as("sum_qty"))
-    val refRow = Hdf5IO.readAttrs(s, out)
+    val refRow = NcIO.readAttrs(s, NetCDF4, out).drop("file")
       .filter(col("var_name") === "l_quantity" && col("attr_name") === "coordinates")
       .select(col("sval").as("coordinates")).distinct()
     agg.crossJoin(broadcast(refRow))
@@ -1249,7 +1133,7 @@ object Nc4Queries {
       bool_and(roundOk).as("round_exact"),
       bool_and(groomForm =!= 0).as("groom_two_valued"),
       (abs(sum(groomForm)) <= 2).as("groom_balanced"))
-    val marks = Hdf5IO.readAttrs(s, out)
+    val marks = NcIO.readAttrs(s, NetCDF4, out).drop("file")
       .filter(col("attr_name").startsWith("_Quantize"))
       .groupBy()
       .agg(
@@ -1292,7 +1176,7 @@ object Nc4Queries {
     val agg = s.read.format(SRC).load(out)
       .agg(count(lit(1)).as("n"), sum(col("l_orderkey")).as("sum_key"),
         sum(col("l_linenumber").cast(LongType)).as("sum_line"))
-    val memRow = Hdf5IO.readAttrs(s, out)
+    val memRow = NcIO.readAttrs(s, NetCDF4, out).drop("file")
       .filter(col("attr_name") === "_enum_members")
       .select(col("sval").as("members")).distinct()
     agg.crossJoin(broadcast(memRow))
@@ -1440,7 +1324,7 @@ object Nc4Queries {
       varAttrs = Map("l_quantity" ->
         ((0 until 10).map(i => Hdf5Format.H5Attr(s"a$i", None, Array(i * 1.5))) :+
           Hdf5Format.H5Attr("units", Some("count"), Array.empty))))
-    Hdf5IO.readAttrs(s, out)
+    NcIO.readAttrs(s, NetCDF4, out).drop("file")
   }
 
   val nc4DenseAttrsSql: String = {
@@ -1568,7 +1452,7 @@ object Nc4Queries {
         "l_extendedprice" -> Seq(
           Hdf5Format.H5Attr("units", Some("USD"), Array.empty),
           Hdf5Format.H5Attr("valid_range", None, Array(0.0, 200000.0)))))
-    Hdf5IO.readAttrs(s, out)
+    NcIO.readAttrs(s, NetCDF4, out).drop("file")
       .groupBy("var_name", "attr_name", "idx")
       .agg(min(col("sval")).as("sval"),
         min(col("dval")).as("mn"), max(col("dval")).as("mx"))
@@ -1702,7 +1586,7 @@ object Nc4Queries {
       out,
       varAttrs = Map("time" -> Seq(
         Hdf5Format.H5Attr("units", Some("hours since 1970-01-01 00:00:00"), Array.empty))))
-    val units = Hdf5IO.readAttrs(s, out)
+    val units = NcIO.readAttrs(s, NetCDF4, out).drop("file")
       .filter(col("var_name") === "time" && col("attr_name") === "units")
       .select("sval").distinct().collect().head.getString(0)
     val multMicros: Long = units.split(" ")(0) match {
@@ -1747,7 +1631,7 @@ object Nc4Queries {
       varAttrs = Map("l_quantity_packed" -> Seq(
         Hdf5Format.H5Attr("scale_factor", None, Array(0.25)),
         Hdf5Format.H5Attr("add_offset", None, Array(0.0)))))
-    val attrs = Hdf5IO.readAttrs(s, out)
+    val attrs = NcIO.readAttrs(s, NetCDF4, out).drop("file")
       .filter(col("var_name") === "l_quantity_packed" &&
         col("attr_name").isin("scale_factor", "add_offset"))
       .select("attr_name", "dval").distinct().collect()
@@ -1787,7 +1671,7 @@ object Nc4Queries {
       out,
       varAttrs = Map("l_quantity" -> Seq(
         Hdf5Format.H5Attr("_FillValue", None, Array(FILL)))))
-    val fill = Hdf5IO.readAttrs(s, out)
+    val fill = NcIO.readAttrs(s, NetCDF4, out).drop("file")
       .filter(col("var_name") === "l_quantity" && col("attr_name") === "_FillValue")
       .select("dval").distinct().collect().head.getDouble(0)
     s.read.format(SRC).load(out)

@@ -1,8 +1,6 @@
 package graft.sources.netcdf
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
 
 /** [[ValueSel]] bound to the netCDF-4/HDF5 source — the same
   * value-space selection semantics (`sel()`, `sel(method='nearest')`,
@@ -22,30 +20,6 @@ import org.apache.spark.sql.types.LongType
   * generations, zero drift between them. */
 object Nc4Sel extends ValueSel(NetCDF4) {
 
-  private val SRC = NetCDF4.provider
-
-  /** The range-bucketed sorted lineitem fixture every sel gate scans:
-    * 8 part files with disjoint `l_orderkey` zone maps, written in
-    * genuine HDF5 layout (deflate-chunked v1 B-tree — the library's
-    * default geometry), so the guaranteed-distance windows prune real
-    * part files. */
-  private def sortedFixture(s: SparkSession, dir: String, name: String): String = {
-    import graft.Tables.t
-    val out = NcQueries.scratch(s, dir, name)
-    // r16 optimization: read-side gate — the sorted layout is paid
-    // once per (session, sf dir) per the stageOnce convention
-    NcQueries.stageOnce(out) {
-      Hdf5IO.write(
-        t(s, dir, "lineitem")
-          .select(col("l_orderkey"), col("l_linenumber").cast(LongType)
-            .as("l_linenumber"), col("l_quantity"))
-          .repartitionByRange(8, col("l_orderkey"), col("l_linenumber"))
-          .sortWithinPartitions("l_orderkey", "l_linenumber"),
-        out)
-    }
-    out
-  }
-
   /** Interpolating selection (`sel(method='linear')`) on the HDF5
     * container: four targets — below the corpus minimum (clamps to
     * the first bracket), an exact coordinate hit (interpolation
@@ -55,7 +29,7 @@ object Nc4Sel extends ValueSel(NetCDF4) {
     * `nc_sel_interp` key; only the container binding differs, which
     * is exactly the claim under test. */
   def nc4SelInterp: (SparkSession, String) => DataFrame = (s, dir) => {
-    val out = sortedFixture(s, dir, "h5sel_sorted")
+    val out = sortedFixture(s, dir)
     interpAll(s, out, "l_orderkey", "l_quantity", Seq(-7.0, 1234.0, 2500.25, 3.0e9))
   }
 
@@ -83,7 +57,7 @@ object Nc4Sel extends ValueSel(NetCDF4) {
     * union of the per-target bracket windows. N lookups cost one
     * corpus pass, not N, on netCDF-4 exactly as on classic. */
   def nc4SelInterpMulti: (SparkSession, String) => DataFrame = (s, dir) => {
-    val out = sortedFixture(s, dir, "h5sel_sorted")
+    val out = sortedFixture(s, dir)
     interpAll(s, out, "l_orderkey", "l_quantity",
       Seq(-42.0, 7.0, 55.5, 388.75, 1040.0, 1776.25, 3500.0, 9.0e8))
   }
@@ -115,26 +89,8 @@ object Nc4Sel extends ValueSel(NetCDF4) {
     * [[ValueSel.nearest2d]] witness bound prunes real files. Three
     * targets: mid-grid, the (0,0) corner, and one absurdly far away
     * (the whole corpus becomes the window — the clamp case). */
-  def nc4SelCoord2d: (SparkSession, String) => DataFrame = (s, dir) => {
-    val sortedOut = sortedFixture(s, dir, "h5sel_sorted")
-    val cells = s.read.format(SRC).load(sortedOut).select(
-      col("record").as("cell"),
-      expr("record div 300").as("y"),
-      expr("record % 300").as("x"),
-      expr("cast(record div 300 as double) + cast(((record % 300) * 7) % 13 as double) / 100.0")
-        .as("lat"),
-      expr("cast(record % 300 as double) + cast(((record div 300) * 11) % 17 as double) / 100.0")
-        .as("lon"),
-      col("l_quantity").as("val"))
-    val gridOut = NcQueries.scratch(s, dir, "h5coord2d_grid")
-    NcQueries.stageOnce(gridOut) {
-      Hdf5IO.write(
-        cells.repartitionByRange(8, col("cell")).sortWithinPartitions("cell").drop("cell"),
-        gridOut)
-    }
-    nearest2d(s, gridOut, "lat", "lon",
-      Seq((42.7, 88.15), (0.0, 0.0), (2.0e9, -3.0)))
-  }
+  def nc4SelCoord2d: (SparkSession, String) => DataFrame = (s, dir) =>
+    gridNearest2d(s, dir, Seq((42.7, 88.15), (0.0, 0.0), (2.0e9, -3.0)))
 
   val nc4SelCoord2dSql: String =
     """WITH o AS (SELECT l_quantity AS v,

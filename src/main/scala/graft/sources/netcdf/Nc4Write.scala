@@ -1,6 +1,6 @@
 package graft.sources.netcdf
 
-import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write.{DataWriter, WriterCommitMessage}
 import org.apache.spark.sql.types._
@@ -32,7 +32,8 @@ import org.apache.spark.sql.types._
   * `chunkindex` (`btree1` | `fixedarray` | `btree2` | `single` |
   * `implicit` — the on-disk chunk index generation). */
 private[netcdf] class Nc4DataWriter(schema: StructType, dir: String, baseName: String,
-    options: Map[String, String], serConf: SerializableHadoopConf)
+    options: Map[String, String], serConf: SerializableHadoopConf,
+    varAttrs: Map[String, Seq[Hdf5Format.H5Attr]] = Map.empty)
     extends DataWriter[InternalRow] {
 
   private val chunkRecs = options.getOrElse("chunkrecs", "4096").toInt
@@ -216,7 +217,7 @@ private[netcdf] class Nc4DataWriter(schema: StructType, dir: String, baseName: S
           f.name -> record.getArray(i).numElements()
       }
       w = new Hdf5Format.Hdf5Writer(schema, chunkRecs, deflate, stringWidth,
-        lens, h5ver, shuffle = shuffle, fletcher = fletcher,
+        lens, h5ver, varAttrs = varAttrs, shuffle = shuffle, fletcher = fletcher,
         vlenStrings = vlenStrings, denseRoot = denseGroups,
         chunkIndex = chunkIndex, denseAttrs = denseAttrs, chunkCols = chunkCols,
         layout = layout, eaPageBits = eaPageBits, vlenSeqs = vlenSeqs,
@@ -241,17 +242,42 @@ private[netcdf] class Nc4DataWriter(schema: StructType, dir: String, baseName: S
   override def commit(): WriterCommitMessage = {
     if (w != null) { // empty tasks emit no file
       val bytes = w.finish()
-      val fs = new Path(dir).getFileSystem(serConf.value)
-      val dest = new Path(dir, s"$baseName.nc4")
-      val tmp = new Path(dir, s".$baseName-${java.util.UUID.randomUUID()}.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(bytes) finally out.close()
-      if (fs.exists(dest)) fs.delete(dest, false)
-      if (!fs.rename(tmp, dest)) throw new java.io.IOException(s"rename to $dest failed")
+      ChunkedWrite.land(dir, s"$baseName.nc4", serConf) { (fs, tmp) =>
+        val out = fs.create(tmp, true)
+        try out.write(bytes) finally out.close()
+      }
     }
     NcFileCommitted(baseName, nRecs)
   }
 
   override def abort(): Unit = ()
   override def close(): Unit = ()
+}
+
+/** The typed Scala entry point of the netCDF-4 write, beside
+  * `df.write.format("netcdf4")`: overwrite `dir` with one `.nc4` part
+  * file per non-empty partition of `df` (an empty partition lands no
+  * file), each written by [[Nc4DataWriter]]. The named parameters
+  * become that writer's option keys, so defaults and parsing live in
+  * one place; only `varAttrs` (per-variable HDF5 attributes, whose
+  * names a string option cannot carry) goes to the writer directly. */
+object Hdf5IO {
+
+  def write(df: DataFrame, dir: String, chunkRecs: Int = 4096,
+      deflate: Boolean = true, h5ver: Int = 0, stringWidth: Int = 32,
+      arrayLens: Map[String, Int] = Map.empty,
+      varAttrs: Map[String, Seq[Hdf5Format.H5Attr]] = Map.empty,
+      shuffle: Boolean = false, fletcher: Boolean = false,
+      vlenStrings: Boolean = false, denseRoot: Boolean = false,
+      chunkIndex: String = "btree1", denseAttrs: Boolean = false): Unit = {
+    val options = Map("chunkrecs" -> chunkRecs.toString, "deflate" -> deflate.toString,
+      "h5ver" -> h5ver.toString, "stringwidth" -> stringWidth.toString,
+      "arraylens" -> arrayLens.map { case (c, n) => s"$c=$n" }.mkString(","),
+      "shuffle" -> shuffle.toString, "fletcher" -> fletcher.toString,
+      "vlenstrings" -> vlenStrings.toString, "densegroups" -> denseRoot.toString,
+      "chunkindex" -> chunkIndex, "denseattrs" -> denseAttrs.toString)
+    val schema = df.schema
+    ChunkedWrite.write(df, NetCDF4, dir, options)((name, serConf) =>
+      new Nc4DataWriter(schema, dir, name, options, serConf, varAttrs))
+  }
 }

@@ -1058,12 +1058,6 @@ object NcFormat {
     /** nc_type of slot `slot` (for typed columnar fills). */
     def slotType(slot: Int): Int = slots(slot)._1.ncType
 
-    /** Whether slot `slot` is a scalar (single-element slab). */
-    def slotIsScalar(slot: Int): Boolean = {
-      val (v, _) = slots(slot)
-      v.ncType != NC_CHAR && v.slabSize(meta.dims) == typeSize(v.ncType)
-    }
-
     private def slotBase(slot: Int, i: Int): Int = (i * recSize + slots(slot)._2).toInt
 
     /** Element count of slot `slot`'s per-record slab. */

@@ -2,11 +2,12 @@ package graft.sources.netcdf
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
 
-/** Distributed NetCDF write: each partition of `df` streams its rows
-  * into its own `part-NNNNN.nc` file through a chunk-size write buffer
+/** Distributed NetCDF write: each non-empty partition of `df` streams
+  * its rows into its own `part-NNNNN.nc` file (an empty partition lands
+  * no file) through the sink's [[NcDataWriter]] and its chunk-size
+  * write buffer
   * — the cluster generalization of the reference's
   * `createStreamerVariable` + `streamNumpyData(single_entity=True)`
   * loop (records appended one at a time, flushed per chunk budget,
@@ -52,11 +53,7 @@ object NcIO {
         * netCDF4's `createVariable(zlib=)`. "store" skips the Deflater
         * entirely for high-entropy columns. */
       varCodecs: Map[String, String] = Map.empty): Unit = {
-    require(!(compress && compressChunks),
-      "choose one of compress (.nc.gz) or compressChunks (.ncz)")
     val schema = df.schema
-    require(!schema.fieldNames.contains("record"),
-      "column name `record` is reserved for the netcdf3 record index")
     // fixed-length array columns: infer the length from the first row
     // (the classic format needs dimension sizes in the header)
     // prefer caller-declared lengths: the inference fallback costs one
@@ -68,29 +65,21 @@ object NcIO {
       if (arrayCols.isEmpty) Map.empty[String, Int]
       else {
         import org.apache.spark.sql.functions.{col, size}
-        val rows = df.select(arrayCols.map(c => size(col(c)).as(c)).toSeq: _*).take(1)
+        // quoted: a column name may hold dots, which col() would read as a path
+        val rows = df.select(arrayCols.map(c =>
+          size(col("`" + c.replace("`", "``") + "`")).as(c)).toSeq: _*).take(1)
         require(rows.nonEmpty,
           s"cannot infer fixed lengths for array columns ${arrayCols.mkString(", ")} " +
             "from an empty DataFrame")
         arrayCols.zipWithIndex.map { case (c, i) => c -> rows.head.getInt(i) }.toMap
       })
     schema.fields.foreach(f => NcFormat.varSpecOf(f, allLens, stringWidth)) // validate early
-    val spark = df.sparkSession
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val p = new Path(dir)
-    val fs = p.getFileSystem(hconf)
-    if (fs.exists(p)) fs.delete(p, true)
-    fs.mkdirs(p)
-
-    val serConf = new SerializableHadoopConf(hconf)
-    val rdd = df.queryExecution.toRdd // RDD[InternalRow], no extra copy
-    rdd.mapPartitionsWithIndex { (pid, rows) =>
-      writePartition(schema, dir, pid, rows, chunkBytes, allLens, stringWidth, serConf,
-        gatts, vatts, fixedVars, compress, compressChunks, dvatts, dgatts,
-        varChunkBytes, varCodecs)
-      Iterator.single(pid)
-    }.count() // run the job
-    ()
+    val options = Map("chunkbytes" -> chunkBytes.toString,
+      "stringwidth" -> stringWidth.toString, "compress" -> compress.toString,
+      "compresschunks" -> compressChunks.toString)
+    ChunkedWrite.write(df, NetCDF3, dir, options)((name, serConf) =>
+      new NcDataWriter(schema, dir, name, options, serConf, allLens, gatts, vatts, fixedVars,
+        dvatts, dgatts, varChunkBytes, varCodecs))
   }
 
   /** Total records in a dataset dir — header metadata only, no record
@@ -192,40 +181,34 @@ object NcIO {
     } else false
   }
 
-  /** All attributes across the part files of `dir`, one row per
-    * (file, var, attr, element): global attrs under var_name GLOBAL,
-    * NC_CHAR values in sval, numeric elements in dval. Header-only
-    * reads (metadata scale — no record data is touched); callers
-    * aggregate across part files (e.g. min/max of per-file
-    * actual_range). */
-  /** Attr rows of one part file: (file, var, attr, element idx, sval, dval). */
-  private def attrRowsOf(fs: org.apache.hadoop.fs.FileSystem,
-      f: Path): Seq[(String, String, String, Long, String, Option[Double])] = {
-    val meta = NcFormat.readMeta(fs, f)
-    def attRows(varName: String, atts: Seq[NcFormat.NcAttr]) = atts.flatMap { a =>
-      if (a.ncType == NcFormat.NC_CHAR)
-        Seq((f.getName, varName, a.name, 0L, a.text, Option.empty[Double]))
-      else a.nums.zipWithIndex.map { case (x, i) =>
-        (f.getName, varName, a.name, i.toLong, null: String, Some(x))
-      }
-    }
-    attRows("GLOBAL", meta.gatts) ++ meta.vars.flatMap(v => attRows(v.name, v.atts))
-  }
-
   /** Above ~100 part files the per-file header reads fan out to
     * executors — at 100 TB (10⁵-10⁶ parts) a sequential driver loop
     * would serialize on metadata; below that the driver loop avoids a
     * job launch. */
   private val DRIVER_ATTR_FILES = 100
 
-  def readAttrs(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
+  /** Attr rows of one part file: (file, var, attr, element idx, sval, dval). */
+  private def attrRowsOf(container: ChunkedContainer, fs: org.apache.hadoop.fs.FileSystem,
+      f: Path): Seq[(String, String, String, Long, Option[String], Option[Double])] =
+    container.attrRows(container.readMeta(fs, f)).map { case (v, a, i, sv, dv) =>
+      (f.getName, v, a, i, sv, dv)
+    }
+
+  /** All attributes across the part files of `dir`, one row per
+    * (file, var, attr, element): global attrs under var_name GLOBAL,
+    * text values in sval, numeric elements in dval
+    * ([[ChunkedContainer.attrRows]]). Header-only reads (metadata scale
+    * — no record data is touched); callers aggregate across part files
+    * (e.g. min/max of per-file actual_range). */
+  def readAttrs(spark: org.apache.spark.sql.SparkSession, container: ChunkedContainer,
+      dir: String): DataFrame = {
     import spark.implicits._
     val p = new Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parts = NetCDF3.listFiles(fs, p)
+    val parts = container.listFiles(fs, p)
+    val cols = Seq("file", "var_name", "attr_name", "idx", "sval", "dval")
     if (parts.length <= DRIVER_ATTR_FILES) {
-      parts.flatMap(f => attrRowsOf(fs, f))
-        .toDF("file", "var_name", "attr_name", "idx", "sval", "dval")
+      parts.flatMap(attrRowsOf(container, fs, _)).toDF(cols: _*)
     } else {
       val serConf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
       val names = parts.map(_.toString)
@@ -233,11 +216,15 @@ object NcIO {
       spark.sparkContext.parallelize(names, slices)
         .flatMap { n =>
           val path = new Path(n)
-          attrRowsOf(path.getFileSystem(serConf.value), path)
+          attrRowsOf(container, path.getFileSystem(serConf.value), path)
         }
-        .toDF("file", "var_name", "attr_name", "idx", "sval", "dval")
+        .toDF(cols: _*)
     }
   }
+
+  /** [[readAttrs]] of a classic netCDF dir. */
+  def readAttrs(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
+    readAttrs(spark, NetCDF3, dir)
 
   /** A fixed (non-record) variable of `dir`'s first part file as
     * (idx, value) rows. Fixed vars are coordinate-scale (bounded by a
@@ -270,132 +257,4 @@ object NcIO {
     } finally in.close()
     values.zipWithIndex.map { case (x, i) => (i.toLong, x) }.toDF("idx", "value")
   }
-
-  private def writePartition(
-      schema: StructType,
-      dir: String,
-      pid: Int,
-      rows: Iterator[InternalRow],
-      chunkBytes: Int,
-      arrayLens: Map[String, Int],
-      stringWidth: Int,
-      serConf: SerializableHadoopConf,
-      gatts: Seq[(String, String)],
-      vatts: Map[String, Seq[(String, String)]],
-      fixedVars: Seq[(String, Array[Double])],
-      compress: Boolean,
-      compressChunks: Boolean,
-      dvatts: Map[String, Seq[(String, Array[Double])]],
-      dgatts: Seq[(String, Array[Double])],
-      varChunkBytes: Map[String, Int],
-      varCodecs: Map[String, String]): Unit = {
-    val pf = new NcPartFile(schema, dir, f"part-$pid%05d", chunkBytes, arrayLens,
-      stringWidth, serConf, gatts, vatts, fixedVars, compress, compressChunks, dvatts, dgatts,
-      varChunkBytes, varCodecs)
-    try {
-      rows.foreach(pf.write)
-      pf.commit()
-    } catch { case t: Throwable => pf.abort(); throw t }
-  }
-}
-
-/** Row-at-a-time part-file writer shared by the [[NcIO]] RDD job and
-  * the DSv2 batch/streaming write paths ([[NcDataWriter]]): rows spool
-  * locally through the chunked [[NcFormat.Writer]], and `commit()`
-  * (optionally gzips and) uploads to `dir/<baseName>.nc[.gz]` via a
-  * temp-name rename, so task retries and re-executed streaming epochs
-  * can never leave torn files — re-runs of the same (partition, epoch)
-  * replace the same destination atomically.
-  */
-private[netcdf] final class NcPartFile(
-    schema: StructType,
-    dir: String,
-    baseName: String,
-    chunkBytes: Int,
-    arrayLens: Map[String, Int],
-    stringWidth: Int,
-    serConf: SerializableHadoopConf,
-    gatts: Seq[(String, String)],
-    vatts: Map[String, Seq[(String, String)]],
-    fixedVars: Seq[(String, Array[Double])],
-    compress: Boolean,
-    compressChunks: Boolean = false,
-    dvatts: Map[String, Seq[(String, Array[Double])]] = Map.empty,
-    dgatts: Seq[(String, Array[Double])] = Nil,
-    varChunkBytes: Map[String, Int] = Map.empty,
-    varCodecs: Map[String, String] = Map.empty) {
-
-  private val getters: Array[InternalRow => Any] =
-    schema.fields.zipWithIndex.map { case (f, i) =>
-      f.dataType match {
-        case DoubleType => (r: InternalRow) => r.getDouble(i)
-        case FloatType => (r: InternalRow) => r.getFloat(i)
-        case IntegerType => (r: InternalRow) => r.getInt(i)
-        case LongType => (r: InternalRow) => r.getLong(i)
-        case ShortType => (r: InternalRow) => r.getShort(i)
-        case ByteType => (r: InternalRow) => r.getByte(i)
-        case StringType => (r: InternalRow) => r.getUTF8String(i).getBytes
-        case ArrayType(DoubleType, _) => (r: InternalRow) =>
-          r.getArray(i).toDoubleArray.asInstanceOf[Array[_]]
-        case ArrayType(FloatType, _) => (r: InternalRow) =>
-          r.getArray(i).toFloatArray.asInstanceOf[Array[_]]
-        case ArrayType(IntegerType, _) => (r: InternalRow) =>
-          r.getArray(i).toIntArray.asInstanceOf[Array[_]]
-        case ArrayType(LongType, _) => (r: InternalRow) =>
-          r.getArray(i).toLongArray.asInstanceOf[Array[_]]
-        case other => throw new IllegalArgumentException(s"unsupported $other")
-      }
-    }
-  private val local = java.io.File.createTempFile(baseName, ".nc")
-  private val writer = new NcFormat.Writer(local.getPath, schema, chunkBytes, arrayLens,
-    stringWidth, gatts, vatts, fixedVars, compressChunks, dvatts, dgatts,
-    varChunkBytes, varCodecs)
-  private val nFields = schema.size
-
-  def write(r: InternalRow): Unit = {
-    // classic NetCDF has no null encoding: fail loudly rather than
-    // silently persisting nulls as zeros/empty strings
-    var i = 0
-    while (i < nFields) {
-      if (r.isNullAt(i)) throw new IllegalArgumentException(
-        s"null in column ${schema.fields(i).name}: the classic NetCDF format has no " +
-          "null encoding — fill or filter nulls before writing")
-      i += 1
-    }
-    writer.writeRow(i => getters(i)(r))
-  }
-
-  def commit(): Unit = {
-    try {
-      writer.close()
-      // compression happens after close(): numrecs and the zone-map
-      // attrs are random-access patches, impossible inside a gzip
-      // stream, so the uncompressed spool is the patch target
-      val upload =
-        if (!compress) local
-        else {
-          val gz = java.io.File.createTempFile(baseName, ".nc.gz")
-          val in = new java.io.FileInputStream(local)
-          val out = new java.util.zip.GZIPOutputStream(
-            new java.io.BufferedOutputStream(new java.io.FileOutputStream(gz), 1 << 16))
-          try {
-            val buf = new Array[Byte](1 << 16)
-            var n = in.read(buf)
-            while (n >= 0) { if (n > 0) out.write(buf, 0, n); n = in.read(buf) }
-          } finally { in.close(); out.close() }
-          gz
-        }
-      val ext = if (compressChunks) "ncz" else if (compress) "nc.gz" else "nc"
-      val dest = new Path(dir, s"$baseName.$ext")
-      val tmp = new Path(dir, s".$baseName-${java.util.UUID.randomUUID()}.$ext.tmp")
-      val fs = dest.getFileSystem(serConf.value)
-      try {
-        fs.copyFromLocalFile(true, true, new Path(upload.getPath), tmp)
-        if (fs.exists(dest)) fs.delete(dest, false)
-        if (!fs.rename(tmp, dest)) throw new java.io.IOException(s"rename to $dest failed")
-      } finally if (upload ne local) upload.delete()
-    } finally local.delete()
-  }
-
-  def abort(): Unit = local.delete()
 }

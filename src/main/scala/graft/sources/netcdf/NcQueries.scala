@@ -157,7 +157,7 @@ object NcQueries {
       vatts = Map(
         "l_quantity" -> Seq("units" -> "count"),
         "l_extendedprice" -> Seq("units" -> "USD")))
-    NcIO.readAttrs(s, out)
+    NcIO.readAttrs(s, NetCDF3, out)
       .groupBy("var_name", "attr_name", "idx")
       .agg(min(col("sval")).as("sval"),
         min(col("dval")).as("mn"), max(col("dval")).as("mx"))
@@ -197,7 +197,7 @@ object NcQueries {
         "geospatial_bounds" -> Array(-90.0, 90.0),
         "grid_spacing" -> Array(0.25),
         "format_version" -> Array(2.0, 1.0)))
-    NcIO.readAttrs(s, out)
+    NcIO.readAttrs(s, NetCDF3, out)
       .filter(col("var_name") === "GLOBAL")
       .groupBy("attr_name", "idx")
       .agg(countDistinct(col("file")).as("n_files"),
@@ -562,7 +562,7 @@ object NcQueries {
       out,
       dvatts = Map("l_quantity_packed" -> Seq(
         "scale_factor" -> Array(0.25), "add_offset" -> Array(0.0))))
-    val attrs = NcIO.readAttrs(s, out)
+    val attrs = NcIO.readAttrs(s, NetCDF3, out)
       .filter(col("var_name") === "l_quantity_packed" &&
         col("attr_name").isin("scale_factor", "add_offset"))
       .select("attr_name", "dval").distinct().collect()
@@ -747,7 +747,7 @@ object NcQueries {
         .repartition(2),
       out,
       dvatts = Map("l_quantity" -> Seq("_FillValue" -> Array(FILL))))
-    val fill = NcIO.readAttrs(s, out)
+    val fill = NcIO.readAttrs(s, NetCDF3, out)
       .filter(col("var_name") === "l_quantity" && col("attr_name") === "_FillValue")
       .select("dval").distinct().collect().head.getDouble(0)
     s.read.format(SRC).load(out)
@@ -789,7 +789,7 @@ object NcQueries {
         col("value")),
       out,
       vatts = Map("time" -> Seq("units" -> "hours since 1970-01-01 00:00:00")))
-    val units = NcIO.readAttrs(s, out)
+    val units = NcIO.readAttrs(s, NetCDF3, out)
       .filter(col("var_name") === "time" && col("attr_name") === "units")
       .select("sval").distinct().collect().head.getString(0)
     val multMicros: Long = units.split(" ")(0) match {
@@ -887,7 +887,7 @@ object NcQueries {
         "time_360" -> Seq("units" -> "days since 1970-01-01", "calendar" -> "360_day")))
     // header-only metadata read: (var → units/calendar), driving the
     // per-variable decode dispatch below
-    val attrs = NcIO.readAttrs(s, out)
+    val attrs = NcIO.readAttrs(s, NetCDF3, out)
       .filter(col("attr_name").isin("units", "calendar"))
       .select("var_name", "attr_name", "sval").distinct().collect()
       .groupBy(_.getString(0))

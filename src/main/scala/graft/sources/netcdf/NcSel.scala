@@ -3,7 +3,7 @@ package graft.sources.netcdf
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.sql.types.{DoubleType, LongType}
 
 /** Value-based coordinate selection — the xarray `sel()` sugar on top
   * of a netCDF source's zone-map pruning, generic over the container:
@@ -289,12 +289,56 @@ private[netcdf] abstract class ValueSel(container: ChunkedContainer) {
             * (col("target") - col("lo.c")) / (col("hi.c") - col("lo.c")))
           .as("ival"))
   }
+
+  /** The range-bucketed sorted lineitem fixture every sel gate of this
+    * container scans: 8 part files with disjoint `l_orderkey` zone
+    * maps, written through the container's DSv2 sink with its default
+    * geometry, so the guaranteed-distance windows prune real part
+    * files. Staged once per (session, sf dir) — the stageOnce
+    * read-side convention: these gates test PRUNED SELECTION over a
+    * sorted layout, not the write. */
+  protected def sortedFixture(s: SparkSession, dir: String): String = {
+    val out = NcQueries.scratch(s, dir, s"${container.name}_sel_sorted")
+    NcQueries.stageOnce(out) {
+      graft.Tables.t(s, dir, "lineitem")
+        .select(col("l_orderkey"), col("l_linenumber").cast(LongType).as("l_linenumber"),
+          col("l_quantity"))
+        .repartitionByRange(8, col("l_orderkey"), col("l_linenumber"))
+        .sortWithinPartitions("l_orderkey", "l_linenumber")
+        .write.format(container.provider).mode("overwrite").save(out)
+    }
+    out
+  }
+
+  /** 2-D curvilinear selection over a y×300 grid whose lat(y,x) =
+    * y + (7x mod 13)/100 and lon(y,x) = x + (11y mod 17)/100 (curved,
+    * axis-free — exact rational arithmetic so both engines build the
+    * identical grid), cell values from the sorted lineitem quantity
+    * sequence of [[sortedFixture]]. The grid is written range-bucketed
+    * on the cell index, so each part file covers a tight lat band and
+    * the [[nearest2d]] witness bound prunes real files. */
+  protected def gridNearest2d(s: SparkSession, dir: String,
+      targets: Seq[(Double, Double)]): DataFrame = {
+    val cells = open(s, sortedFixture(s, dir)).select(
+      col("record").as("cell"),
+      expr("record div 300").as("y"),
+      expr("record % 300").as("x"),
+      expr("cast(record div 300 as double) + cast(((record % 300) * 7) % 13 as double) / 100.0")
+        .as("lat"),
+      expr("cast(record % 300 as double) + cast(((record div 300) * 11) % 17 as double) / 100.0")
+        .as("lon"),
+      col("l_quantity").as("val"))
+    val gridOut = NcQueries.scratch(s, dir, s"${container.name}_coord2d_grid")
+    NcQueries.stageOnce(gridOut) {
+      cells.repartitionByRange(8, col("cell")).sortWithinPartitions("cell").drop("cell")
+        .write.format(container.provider).mode("overwrite").save(gridOut)
+    }
+    nearest2d(s, gridOut, "lat", "lon", targets)
+  }
 }
 
 /** [[ValueSel]] bound to the classic netcdf3 source. */
 object NcSel extends ValueSel(NetCDF3) {
-
-  private val SRC = NetCDF3.provider
 
   /** Driver-contract query: range-bucketed sorted write (disjoint
     * per-file zone maps), then nearest-record selection for three
@@ -304,29 +348,8 @@ object NcSel extends ValueSel(NetCDF3) {
     * The oracle replays each selection as an ORDER BY abs-distance
     * LIMIT 1 over the globally sorted rows. All three targets resolve
     * in ONE pruned scan via [[nearestAll]]. */
-  /** Session-staged range-bucketed sorted fixture shared by all four
-    * sel gates (r16 optimization round — the stageOnce read-side
-    * convention: these gates test PRUNED SELECTION over a sorted
-    * layout, so the layout is paid once per (session, sf dir);
-    * pre-r16 each key re-sorted and re-wrote an identical copy under
-    * its own name on every invocation). */
-  private def sortedSelFixture(s: SparkSession, dir: String): String = {
-    import graft.Tables.t
-    val out = NcQueries.scratch(s, dir, "sel_sorted")
-    NcQueries.stageOnce(out) {
-      NcIO.write(
-        t(s, dir, "lineitem")
-          .select(col("l_orderkey"), col("l_linenumber").cast(org.apache.spark.sql.types.LongType)
-            .as("l_linenumber"), col("l_quantity"))
-          .repartitionByRange(8, col("l_orderkey"), col("l_linenumber"))
-          .sortWithinPartitions("l_orderkey", "l_linenumber"),
-        out)
-    }
-    out
-  }
-
   def ncSelCoord: (SparkSession, String) => DataFrame = (s, dir) => {
-    val out = sortedSelFixture(s, dir)
+    val out = sortedFixture(s, dir)
     nearestAll(s, out, "l_orderkey", Seq(1234.0, 1500.5, 1.0e9))
       .select(col("target"), col("record"), col("l_orderkey"), col("l_quantity"),
         col("dist"))
@@ -349,7 +372,7 @@ object NcSel extends ValueSel(NetCDF3) {
     * scan via [[interpAll]]. The oracle replays each bracket as two
     * LATERAL ORDER-BY-LIMIT-1 lookups. */
   def ncSelInterp: (SparkSession, String) => DataFrame = (s, dir) => {
-    val out = sortedSelFixture(s, dir)
+    val out = sortedFixture(s, dir)
     interpAll(s, out, "l_orderkey", "l_quantity", Seq(-5.0, 1234.0, 1500.5, 1.0e9))
   }
 
@@ -380,7 +403,7 @@ object NcSel extends ValueSel(NetCDF3) {
     * and the two conditional-MIN partial aggregates ship one scalar
     * struct pair per (partition, target). */
   def ncSelInterpMulti: (SparkSession, String) => DataFrame = (s, dir) => {
-    val out = sortedSelFixture(s, dir)
+    val out = sortedFixture(s, dir)
     interpAll(s, out, "l_orderkey", "l_quantity",
       Seq(-100.0, 3.0, 32.25, 451.0, 999.5, 1234.75, 4000.0, 2.0e9))
   }
@@ -403,37 +426,13 @@ object NcSel extends ValueSel(NetCDF3) {
       |  SELECT CAST(l_orderkey AS DOUBLE) AS c, l_quantity AS v FROM o
       |  WHERE l_orderkey > t.target ORDER BY l_orderkey, record LIMIT 1) hi ON true""".stripMargin
 
-  /** 2-D curvilinear selection as a gated query: a y×300 grid whose
-    * lat(y,x) = y + (7x mod 13)/100 and lon(y,x) = x + (11y mod 17)/100
-    * (curved, axis-free — exact rational arithmetic so both engines
-    * build the identical grid), cell values from the sorted lineitem
-    * quantity sequence. The grid is written range-bucketed on the cell
-    * index, so each part file covers a tight lat band and the
-    * [[nearest2d]] witness bound has real teeth. Three targets:
-    * mid-grid, the (0,0) corner, and one absurdly far away (the whole
-    * corpus becomes the window — the clamp case). The oracle replays
-    * each selection as ORDER BY dist², record LIMIT 1 over the
-    * regenerated grid. */
-  def ncSelCoord2d: (SparkSession, String) => DataFrame = (s, dir) => {
-    val sortedOut = sortedSelFixture(s, dir)
-    val cells = s.read.format(SRC).load(sortedOut).select(
-      col("record").as("cell"),
-      expr("record div 300").as("y"),
-      expr("record % 300").as("x"),
-      expr("cast(record div 300 as double) + cast(((record % 300) * 7) % 13 as double) / 100.0")
-        .as("lat"),
-      expr("cast(record % 300 as double) + cast(((record div 300) * 11) % 17 as double) / 100.0")
-        .as("lon"),
-      col("l_quantity").as("val"))
-    val gridOut = NcQueries.scratch(s, dir, "coord2d_grid")
-    NcQueries.stageOnce(gridOut) {
-      NcIO.write(
-        cells.repartitionByRange(8, col("cell")).sortWithinPartitions("cell").drop("cell"),
-        gridOut)
-    }
-    nearest2d(s, gridOut, "lat", "lon",
-      Seq((57.3, 123.45), (0.0, 0.0), (1.0e9, -5.0)))
-  }
+  /** 2-D curvilinear selection as a gated query over
+    * [[ValueSel.gridNearest2d]]'s grid. Three targets: mid-grid, the
+    * (0,0) corner, and one absurdly far away (the whole corpus becomes
+    * the window — the clamp case). The oracle replays each selection as
+    * ORDER BY dist², record LIMIT 1 over the regenerated grid. */
+  def ncSelCoord2d: (SparkSession, String) => DataFrame = (s, dir) =>
+    gridNearest2d(s, dir, Seq((57.3, 123.45), (0.0, 0.0), (1.0e9, -5.0)))
 
   val ncSelCoord2dSql: String =
     """WITH o AS (SELECT l_quantity AS v,

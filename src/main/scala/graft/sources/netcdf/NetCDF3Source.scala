@@ -14,7 +14,7 @@ class NetCDF3Source extends ChunkedSource(NetCDF3)
   * deflated `.ncz`) as a [[ChunkedContainer]]. Reads split at the
   * `chunkBytes` read-buffer size (default 4 MiB); `.nc.gz` files
   * decompress sequentially and are read whole. Writes go through
-  * [[NcDataWriter]] (or the RDD job in [[NcIO.write]]). */
+  * [[NcDataWriter]]. */
 object NetCDF3 extends ChunkedContainer {
   type Meta = NcFormat.NcMeta
 
@@ -31,6 +31,13 @@ object NetCDF3 extends ChunkedContainer {
   def sparkSchema(m: Meta): StructType = m.sparkSchema
   def actualRange(m: Meta, variable: String): Option[(Double, Double)] =
     m.recordVars.find(_.name == variable).flatMap(_.range)
+  def attrRows(m: Meta): Seq[(String, String, Long, Option[String], Option[Double])] = {
+    def rows(varName: String, atts: Seq[NcFormat.NcAttr]) = atts.flatMap { a =>
+      if (a.ncType == NcFormat.NC_CHAR) Seq((varName, a.name, 0L, Some(a.text), None))
+      else a.nums.zipWithIndex.map { case (x, i) => (varName, a.name, i.toLong, None, Some(x)) }
+    }
+    rows("GLOBAL", m.gatts) ++ m.vars.flatMap(v => rows(v.name, v.atts))
+  }
 
   private def chunkBytes(options: Map[String, String]): Int =
     options.getOrElse("chunkbytes", (4 << 20).toString).toInt

@@ -35,6 +35,17 @@ object NetCDF4 extends ChunkedContainer {
   def sparkSchema(m: Meta): StructType = m.sparkSchema
   def actualRange(m: Meta, variable: String): Option[(Double, Double)] =
     m.vars.find(_.name == variable).flatMap(_.range)
+  def attrRows(m: Meta): Seq[(String, String, Long, Option[String], Option[Double])] = {
+    def rows(varName: String, atts: Seq[Hdf5Format.H5Attr]) = atts.flatMap { a =>
+      a.text match {
+        case Some(s) => Seq((varName, a.name, 0L, Some(s), None))
+        case None => a.nums.zipWithIndex.map { case (d, i) =>
+          (varName, a.name, i.toLong, None, Some(d))
+        }.toSeq
+      }
+    }
+    rows("GLOBAL", m.rootAttrs) ++ m.vars.flatMap(v => rows(v.name, v.attrs))
+  }
 
   /** Splits align to the largest selected variable's chunk, so boundary
     * chunks are re-read by at most one neighbor task. */

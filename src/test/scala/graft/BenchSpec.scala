@@ -71,4 +71,17 @@ class BenchSpec extends AnyFunSuite {
     assert(Bench.loadAvg1("[-1,-1,-1]") == -1.0)
     assert(Bench.loadAvg1("garbage") == -1.0)
   }
+
+  test("header names its commit after cpus; the watchdog baseline ignores it") {
+    val full = Bench.emitFullLine(Map("a" -> 1.5), "sfX", cpus = 8)
+    assert(Bench.commit == "unknown" || Bench.commit.matches("[0-9a-f]{40}"), Bench.commit)
+    assert(full.contains("\"cpus\":8,\"commit\":\"" + Bench.commit + "\","), full)
+    assert(Bench.emitLine(Map("a" -> 1.5), "sfX", cpus = 8)
+      .contains("\"commit\":\"" + Bench.commit + "\","))
+    assert(Bench.baselineOf(full, "sfX", 8) == Map("a" -> 1.5))
+    assert(Bench.baselineOf(full.replace(Bench.commit, "0" * 40), "sfX", 8) == Map("a" -> 1.5))
+    assert(Bench.commitOf(Seq("echo", "ab" * 20)) == "ab" * 20)
+    assert(Bench.commitOf(Seq("git", "-C", "/nonexistent-graft-dir", "rev-parse", "HEAD")) ==
+      "unknown")
+  }
 }

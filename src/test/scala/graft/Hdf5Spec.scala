@@ -1204,4 +1204,15 @@ class Hdf5Spec extends AnyFunSuite {
     }
     assert(e2.getMessage.contains("record"))
   }
+
+  test("Hdf5IO.write lands a part file only for each non-empty partition") {
+    val dir = "/tmp/graft_h5/typed_empty_parts"
+    Hdf5IO.write(spark.range(5).select(col("id").cast("double").as("x")).repartition(8), dir)
+    val recs = NetCDF4.listFiles(fs, new Path(dir))
+      .map(f => NetCDF4.numRecs(NetCDF4.readMeta(fs, f)))
+    assert(recs.nonEmpty && recs.forall(_ > 0), s"records per landed file: $recs")
+    assert(recs.sum == 5)
+    val back = spark.read.format(SRC).load(dir).select("x").collect().map(_.getDouble(0))
+    assert(back.sorted.toSeq == (0 until 5).map(_.toDouble))
+  }
 }

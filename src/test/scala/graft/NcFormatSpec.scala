@@ -50,12 +50,14 @@ class NcFormatSpec extends AnyFunSuite {
     assert(metas.map(_.numRecs).sum == 10)
   }
 
-  test("empty partitions produce valid zero-record files") {
+  test("empty partitions land no file; the written records read back") {
     val dir = "/tmp/graft_nc_fmt/empty"
     val df = spark.range(5).select(col("id").cast("double").as("x")).repartition(8)
     NcIO.write(df, dir)
     val back = spark.read.format(SRC).load(dir)
     assert(back.count() == 5)
+    val files = graft.sources.netcdf.NetCDF3.listFiles(fs, new Path(dir))
+    assert(files.forall(NcFormat.readMeta(fs, _).numRecs > 0), "a landed file has 0 records")
   }
 
   test("single small record var uses unpadded slabs (spec special case)") {

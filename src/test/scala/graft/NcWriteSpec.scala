@@ -144,4 +144,30 @@ class NcWriteSpec extends AnyFunSuite {
     // record ids are 0..11 with each value at its own index
     assert(mf.filter(col("record").cast("double") === col("x")).count() == 12)
   }
+
+  test("NcIO.write lands a part file only for each non-empty partition") {
+    import graft.sources.netcdf.{NcIO, NetCDF3}
+    import org.apache.hadoop.fs.Path
+    val dir = "/tmp/graft_nc_spec/typed_empty_parts"
+    NcIO.write(spark.range(5).select(col("id").cast("double").as("x")).repartition(8), dir)
+    val p = new Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val recs = NetCDF3.listFiles(fs, p).map(f => NetCDF3.numRecs(NetCDF3.readMeta(fs, f)))
+    assert(recs.nonEmpty && recs.forall(_ > 0), s"records per landed file: $recs")
+    assert(recs.sum == 5)
+    val back = spark.read.format(SRC).load(dir).select("x").collect().map(_.getDouble(0))
+    assert(back.sorted.toSeq == (0 until 5).map(_.toDouble))
+  }
+
+  test("NcIO.write takes an array column whose name holds commas and dots") {
+    import graft.sources.netcdf.NcIO
+    val dir = "/tmp/graft_nc_spec/typed_array_name"
+    // unaliased, the array column is named "array(CAST(id AS DOUBLE), 1.0)"
+    val df = spark.range(4).select(array(col("id").cast("double"), lit(1.0)))
+    NcIO.write(df.repartition(2), dir)
+    val back = spark.read.format(SRC).load(dir)
+    assert(back.columns.toSeq == Seq("record", df.columns.head))
+    assert(back.select(col(s"`${df.columns.head}`")(0)).collect().map(_.getDouble(0)).sorted
+      .toSeq == Seq(0.0, 1.0, 2.0, 3.0))
+  }
 }
