@@ -119,12 +119,12 @@ object ShuffleAudit {
       // r15 (r14 verdict #6 root-cause): parquet-hadoop 1.16 defaults
       // vectored IO ON, and its range reads are served off the task
       // thread — the per-thread FS statistics behind bytesRead then
-      // see only the footer reads (ScanBytesProbe measured 0.2-0.7%
-      // of disk bytes counted with it on, 100.1% with it off). The
-      // input-byte DENOMINATOR of every rate column needs the real
-      // bytes, so the audit session scans without vectored IO. This
-      // is measurement fidelity only — the engine under bench/verify
-      // keeps the (faster) default.
+      // see only the footer reads (an r15 A/B of one parquet scan in
+      // one JVM counted 0.2-0.7% of disk bytes with it on, 100.1%
+      // with it off). The input-byte DENOMINATOR of every rate
+      // column needs the real bytes, so the audit session scans
+      // without vectored IO. This is measurement fidelity only — the
+      // engine under bench/verify keeps the (faster) default.
       "spark.hadoop.parquet.hadoop.vectored.io.enabled" -> "false")
     if (!new java.io.File(s"$bigDir/documents.parquet").exists()) {
       if (x100) BenchSf1.replicateWide(spark, srcDir, bigDir, 100, Session.cpus * 2)

@@ -66,9 +66,11 @@ trait ChunkedContainer extends Serializable {
   /** Driver-side validation of write options, before any task runs. */
   def checkWriteOptions(options: Map[String, String]): Unit = ()
 
-  /** The per-task writer of one part file `dir/<baseName>.<ext>`. */
+  /** The per-task writer of one part file `dir/<baseName>.<ext>`,
+    * giving each variable named in `varAttrs` those attributes. */
   def dataWriter(schema: StructType, dir: String, baseName: String,
-      options: Map[String, String], serConf: SerializableHadoopConf): DataWriter[InternalRow]
+      options: Map[String, String], serConf: SerializableHadoopConf,
+      varAttrs: Map[String, Seq[Attr]] = Map.empty): DataWriter[InternalRow]
 
   /** Part files of `dir` in record order (name order); `dir` may also
     * name a single part file. A missing dir has no part files. */

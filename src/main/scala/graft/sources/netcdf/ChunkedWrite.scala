@@ -111,15 +111,28 @@ private[netcdf] case class ChunkedWriterFactory(container: ChunkedContainer,
       options, serConf)
 }
 
+/** One attribute of a written variable or file, in either container:
+  * a text value (`text`) or a vector of doubles (`nums`, read only
+  * when `text` is None). The typed writes ([[NcIO.write]],
+  * [[Hdf5IO.write]]) and [[ChunkedContainer.dataWriter]] take it. */
+case class Attr(name: String, text: Option[String], nums: Array[Double])
+
+object Attr {
+  def text(name: String, value: String): Attr = Attr(name, Some(value), Array.empty)
+  def nums(name: String, values: Double*): Attr = Attr(name, None, values.toArray)
+}
+
 /** The steps every write of a part-file dataset shares, whether it
   * comes through the DSv2 sink above or a typed entry point. */
 private[netcdf] object ChunkedWrite {
 
-  /** Driver-side checks before any task runs. */
+  /** Driver-side checks before any task runs: a malformed `arrayLens`
+    * fails here, on the caller's thread, not inside a task. */
   def check(container: ChunkedContainer, schema: StructType,
       options: Map[String, String]): Unit = {
     require(!schema.fieldNames.contains("record"),
       s"column name `record` is reserved for the ${container.name} record index")
+    NcWriteConf.arrayLens(options)
     container.checkWriteOptions(options)
   }
 

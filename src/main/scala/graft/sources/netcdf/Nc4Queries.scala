@@ -14,38 +14,10 @@ import org.apache.spark.sql.types._
   * then read back through [[NetCDF4Source]] and checked against the
   * DuckDB oracle over the original parquet — a hash match proves the
   * full HDF5 encode → chunk B-tree → deflate → decode path lossless.
+  * The keys the classic container shares run the [[ChunkedQueries]]
+  * bodies with the layouts passed in [[queries]].
   */
-object Nc4Queries {
-
-  type Q = (SparkSession, String) => DataFrame
-
-  private val SRC = "graft.sources.netcdf.NetCDF4Source"
-
-  /** Write 4 lineitem variables into a deflate-chunked netCDF-4 file
-    * set (v0 superblock — the netCDF4 library's default layout), read
-    * back, aggregate. Same oracle as the classic roundtrip: the two
-    * formats must agree with each other AND with parquet. */
-  def nc4ReadRoundtrip: Q = (s, dir) => {
-    val out = NcQueries.scratch(s, dir, "h5roundtrip")
-    Hdf5IO.write(
-      t(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_quantity"), col("l_extendedprice"), col("l_discount"))
-        .repartition(4),
-      out, chunkRecs = 4096, deflate = true, h5ver = 0)
-    s.read.format(SRC).load(out)
-      .agg(
-        count(lit(1)).as("n"),
-        sum(col("l_orderkey")).as("sum_key"),
-        dsum(col("l_quantity")).as("sum_qty"),
-        sum(dec(col("l_extendedprice")) * oneMinus(col("l_discount"))).cast(DoubleType)
-          .as("sum_disc_price"))
-  }
-
-  val nc4ReadRoundtripSql: String =
-    """SELECT COUNT(*) AS n, CAST(SUM(l_orderkey) AS BIGINT) AS sum_key,
-      |  CAST(SUM(CAST(l_quantity AS DECIMAL(9,2))) AS DOUBLE) AS sum_qty,
-      |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(9,2)) * (CAST(1 AS DECIMAL(9,2)) - CAST(l_discount AS DECIMAL(9,2)))) AS DOUBLE) AS sum_disc_price
-      |FROM lineitem""".stripMargin
+object Nc4Queries extends ChunkedQueries(NetCDF4) {
 
   /** The reference's headline capability as the standard Spark write
     * surface: `df.write.format("netcdf4").save(dir)` streams rows
@@ -59,7 +31,7 @@ object Nc4Queries {
     * part file — no library call, no driver funnel, N tasks = N files
     * written in parallel. */
   def nc4WriteRoundtrip: Q = (s, dir) => {
-    val out = NcQueries.scratch(s, dir, "h5dsv2_write")
+    val out = scratch(s, dir, "h5dsv2_write")
     t(s, dir, "lineitem")
       .select(col("l_orderkey"), col("l_quantity"), col("l_extendedprice"), col("l_discount"))
       .repartition(4)
@@ -76,9 +48,9 @@ object Nc4Queries {
           .as("sum_disc_price"))
   }
 
-  // same lossless computation as the read-direction roundtrip — the
+  // same lossless computation as the typed-write roundtrip — the
   // write surface must agree with parquet through the identical oracle
-  val nc4WriteRoundtripSql: String = nc4ReadRoundtripSql
+  val nc4WriteRoundtripSql: String = roundtripSql
 
   /** DSv2 append-mode netCDF-4 write: two separate jobs land disjoint
     * halves (even/odd order keys) into ONE dir — incremental ingest,
@@ -89,7 +61,7 @@ object Nc4Queries {
     * proves the scan handles mixed-generation directories — exactly
     * what a real archive accumulates across library upgrades. */
   def nc4Dsv2WriteRoundtrip: Q = (s, dir) => {
-    val out = NcQueries.scratch(s, dir, "h5append")
+    val out = scratch(s, dir, "h5append")
     val li = t(s, dir, "lineitem")
       .select(col("l_orderkey"), col("l_quantity"), col("l_extendedprice"))
     li.filter(col("l_orderkey") % 2 === 0).repartition(2)
@@ -126,7 +98,7 @@ object Nc4Queries {
     * into exactly one (pinned by a loud file-count check), and the
     * read-back aggregate hash-matches parquet. */
   def nc4CompactAuto: Q = (s, dir) => {
-    val out = NcQueries.scratch(s, dir, "h5compauto")
+    val out = scratch(s, dir, "h5compauto")
     val li = t(s, dir, "lineitem")
       .select(col("l_orderkey"), col("l_quantity"), col("l_extendedprice"))
     li.filter(col("l_orderkey") % 2 === 0).repartition(2)
@@ -150,117 +122,6 @@ object Nc4Queries {
 
   val nc4CompactAutoSql: String = nc4Dsv2WriteRoundtripSql
 
-  /** MFDataset-style multi-DIR aggregation over netCDF-4 (r9 — the
-    * nc3 twin is nc_multifile_union; wild corpora split along time
-    * into directories of HDF5 containers just as often): two dirs
-    * written deterministically, presented as ONE dataset with records
-    * re-based by cumulative header counts ([[NcIO.multifile]] —
-    * metadata reads only, the union stays a pure scan union with all
-    * per-file pruning intact); a record-ordinal-weighted decimal sum
-    * pins every re-based index. */
-  def nc4MultifileUnion: Q = (s, dir) => {
-    val outA = NcQueries.scratch(s, dir, "h5mfa")
-    val outB = NcQueries.scratch(s, dir, "h5mfb")
-    val li = t(s, dir, "lineitem")
-      .select(col("l_orderkey"), col("l_linenumber").cast(LongType).as("l_linenumber"),
-        col("l_quantity"))
-    li.filter(col("l_orderkey") % 2 === 0).repartition(1)
-      .sortWithinPartitions("l_orderkey", "l_linenumber")
-      .write.format(SRC).mode("overwrite").option("shuffle", "true").save(outA)
-    li.filter(col("l_orderkey") % 2 === 1).repartition(1)
-      .sortWithinPartitions("l_orderkey", "l_linenumber")
-      .write.format(SRC).mode("overwrite").option("h5ver", "2").save(outB)
-    NcIO.multifile(s, NetCDF4, Seq(outA, outB))
-      .agg(count(lit(1)).as("n"),
-        max(col("record")).as("max_record"),
-        sum(col("record").cast(DecimalType(18, 0)) *
-          col("l_quantity").cast(DecimalType(9, 2)))
-          .cast(DoubleType).as("wsum"))
-  }
-
-  val nc4MultifileUnionSql: String = NcQueries.ncMultifileUnionSql
-
-  /** CF calendar decode over the netCDF-4 container (r9 — nc3 twin is
-    * nc_time_calendar; model-output archives carry `noleap`/`360_day`
-    * axes in HDF5 files just as often): three day-count variables
-    * written with units/calendar attributes through the HDF5 attr
-    * path, decode dispatch driven by a header-only
-    * [[NcIO.readAttrs]] read, per-calendar arithmetic the SHARED
-    * [[NcQueries.cfYmdExpr]] integer construction — both containers
-    * must decode pre-epoch offsets identically or the hash splits.
-    * Oracle: the nc3 gate's SQL verbatim. */
-  def nc4TimeCalendar: Q = (s, dir) => {
-    val out = NcQueries.scratch(s, dir, "h5cfcal")
-    val days = floor(unix_micros(col("ts")).cast(DoubleType) / lit(8.64e10))
-      .cast(DoubleType)
-    def sa(n: String, v: String) = Hdf5Format.H5Attr(n, Some(v), Array.empty)
-    Hdf5IO.write(
-      graft.Tables.events(s, dir).select(
-        days.as("time_std"), days.as("time_noleap"), days.as("time_360")),
-      out,
-      varAttrs = Map(
-        "time_std" -> Seq(sa("units", "days since 1970-01-01"), sa("calendar", "standard")),
-        "time_noleap" -> Seq(sa("units", "days since 1970-01-01"), sa("calendar", "noleap")),
-        "time_360" -> Seq(sa("units", "days since 1970-01-01"), sa("calendar", "360_day"))))
-    val attrs = NcIO.readAttrs(s, NetCDF4, out).drop("file")
-      .filter(col("attr_name").isin("units", "calendar"))
-      .select("var_name", "attr_name", "sval").distinct().collect()
-      .groupBy(_.getString(0))
-      .map { case (v, rows) =>
-        v -> rows.map(r => r.getString(1) -> r.getString(2)).toMap
-      }
-    def decode(v: String): String = NcQueries.cfYmdExpr(v, attrs(v))
-    s.read.format(SRC).load(out)
-      .selectExpr(
-        s"${decode("time_std")} as std_ymd",
-        s"${decode("time_noleap")} as noleap_ymd",
-        s"${decode("time_360")} as c360_ymd")
-      .agg(
-        count(lit(1)).as("n"),
-        min("std_ymd").as("std_min"), max("std_ymd").as("std_max"),
-        sum("std_ymd").as("std_sum"),
-        min("noleap_ymd").as("noleap_min"), max("noleap_ymd").as("noleap_max"),
-        sum("noleap_ymd").as("noleap_sum"),
-        min("c360_ymd").as("c360_min"), max("c360_ymd").as("c360_max"),
-        sum("c360_ymd").as("c360_sum"))
-  }
-
-  val nc4TimeCalendarSql: String = NcQueries.ncTimeCalendarSql
-
-  /** Streaming netCDF-4 *sink* (`writeStream.format("netcdf4")`):
-    * netcdf4 → netcdf4 streaming copy. Part files stream in
-    * micro-batches through the DSv2 reader; each epoch appends
-    * `part-e<epoch>-<pid>.nc4` files — deterministic names, replace
-    * on replay, exactly-once without a commit log (the classic twin
-    * is stream_nc_sink). Batch read-back gated against parquet. */
-  def streamNc4Sink: Q = (s, dir) => {
-    val src = NcQueries.scratch(s, dir, "h5sink_src")
-    val out = NcQueries.scratch(s, dir, "h5sink_out")
-    val ckpt = NcQueries.scratch(s, dir, "h5sink_ckpt")
-    Hdf5IO.write(
-      t(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_quantity"), col("l_discount"))
-        .repartition(3),
-      src)
-    graft.streaming.StreamStage.drain(s, "nc4sink", stableCkpt = ckpt)(
-      s.readStream.format(SRC).load(src)
-      .drop("record") // virtual read column; `record` is reserved on write
-      .writeStream.format(SRC)
-      .option("path", out))
-    s.read.format(SRC).load(out)
-      .agg(
-        count(lit(1)).as("n"),
-        sum(col("l_orderkey")).as("sum_key"),
-        dsum(col("l_quantity")).as("sum_qty"),
-        dsum(col("l_discount")).as("sum_disc"))
-  }
-
-  val streamNc4SinkSql: String =
-    """SELECT COUNT(*) AS n, CAST(SUM(l_orderkey) AS BIGINT) AS sum_key,
-      |  CAST(SUM(CAST(l_quantity AS DECIMAL(9,2))) AS DOUBLE) AS sum_qty,
-      |  CAST(SUM(CAST(l_discount AS DECIMAL(9,2))) AS DOUBLE) AS sum_disc
-      |FROM lineitem""".stripMargin
-
   /** Vlen STRING variables (r8 — the netCDF-4 `str` dtype, HDF5
     * datatype class 9 + global heap; the most common non-numeric
     * type in wild files): full variable-length document text written
@@ -272,7 +133,7 @@ object Nc4Queries {
     * corrupted byte anywhere in heap encode/decode breaks the hash
     * (a fixed-width path would truncate and fail immediately). */
   def nc4StringRoundtrip: Q = (s, dir) => {
-    val out = NcQueries.scratch(s, dir, "h5vlen")
+    val out = scratch(s, dir, "h5vlen")
     t(s, dir, "documents")
       .select(col("doc_id"), col("text"), col("lang"))
       .repartition(2)
@@ -309,7 +170,7 @@ object Nc4Queries {
     * must hash-match parquet — one wrong member offset or width
     * breaks it. */
   def nc4Compound: Q = (s, dir) => {
-    val out = NcQueries.scratch(s, dir, "h5compound")
+    val out = scratch(s, dir, "h5compound")
     t(s, dir, "lineitem")
       .select(
         struct(
@@ -348,7 +209,7 @@ object Nc4Queries {
     * record, or link framing byte loses a variable and breaks the
     * gate. */
   def nc4DenseGroups: Q = (s, dir) => {
-    val out = NcQueries.scratch(s, dir, "h5dense")
+    val out = scratch(s, dir, "h5dense")
     t(s, dir, "lineitem")
       .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
         col("l_linenumber").cast(LongType).as("l_linenumber"),
@@ -397,7 +258,7 @@ object Nc4Queries {
     * / fixed-array mapping — and the roundtrip aggregate must
     * hash-match parquet through the shuffle+deflate pipeline. */
   def nc4FixedArray: Q = (s, dir) => {
-    val out = NcQueries.scratch(s, dir, "h5fixedarr")
+    val out = scratch(s, dir, "h5fixedarr")
     t(s, dir, "lineitem")
       .select(col("l_orderkey"), col("l_quantity"), col("l_extendedprice"))
       .repartition(2)
@@ -428,7 +289,7 @@ object Nc4Queries {
     * records carry (size, mask) ahead of the scaled offsets, and one
     * wrong record framing byte scrambles every chunk address. */
   def nc4Btree2Chunks: Q = (s, dir) => {
-    val out = NcQueries.scratch(s, dir, "h5btree2")
+    val out = scratch(s, dir, "h5btree2")
     t(s, dir, "lineitem")
       .select(col("l_orderkey"), col("l_quantity"), col("l_discount"))
       .repartition(2)
@@ -462,7 +323,7 @@ object Nc4Queries {
     * whole-variable buffer — with record pushdown intact; gate
     * aggregates hash-match parquet. */
   def nc4Contiguous: Q = (s, dir) => {
-    val out = NcQueries.scratch(s, dir, "h5contig")
+    val out = scratch(s, dir, "h5contig")
     t(s, dir, "lineitem")
       .select(col("l_orderkey"), col("l_quantity"), col("l_tax"))
       .repartition(2)
@@ -495,7 +356,7 @@ object Nc4Queries {
     * element counts and DECIMAL-exact element values, so a wrong
     * count or one lost element anywhere breaks the hash. */
   def nc4VlenSeq: Q = (s, dir) => {
-    val out = NcQueries.scratch(s, dir, "h5vlenseq")
+    val out = scratch(s, dir, "h5vlenseq")
     t(s, dir, "lineitem")
       .groupBy(col("l_orderkey"))
       .agg(collect_list(col("l_quantity").cast(DoubleType)).as("qtys"))
@@ -541,7 +402,7 @@ object Nc4Queries {
     * indirection — data aggregates and the resolved `_enum_members`
     * table must hash-match. */
   def nc4CommittedTypes: Q = (s, dir) => {
-    val out = NcQueries.scratch(s, dir, "h5committed")
+    val out = scratch(s, dir, "h5committed")
     t(s, dir, "lineitem")
       .groupBy(col("l_orderkey"))
       .agg(collect_list(col("l_quantity").cast(DoubleType)).as("qtys"),
@@ -592,7 +453,7 @@ object Nc4Queries {
     * the first stored element's raw bytes as genuinely byte-swapped
     * so a both-sides-LE bug cannot self-cancel. */
   def nc4BigEndian: Q = (s, dir) => {
-    val out = NcQueries.scratch(s, dir, "h5bigend")
+    val out = scratch(s, dir, "h5bigend")
     t(s, dir, "lineitem")
       .select(col("l_orderkey"), col("l_quantity"), col("l_extendedprice"))
       .repartition(2)
@@ -629,7 +490,7 @@ object Nc4Queries {
     * coordinate variable, a 1-D data var, and a rank-3 var through
     * the layout and hashes all three resolved dim lists. */
   def nc4DimScales: Q = (s, dir) => {
-    val out = NcQueries.scratch(s, dir, "h5dims")
+    val out = scratch(s, dir, "h5dims")
     t(s, dir, "embeddings")
       .select(col("vec_id").cast(DoubleType).as("row"), col("embedding"),
         col("label").cast(IntegerType).as("label"))
@@ -679,9 +540,9 @@ object Nc4Queries {
     * bounds land in the result row, so a discovery that picked the
     * wrong variable breaks the hash, not just the plan. */
   def nc4SelCoord: Q = (s, dir) => {
-    val out = NcQueries.scratch(s, dir, "h5selcoord")
+    val out = scratch(s, dir, "h5selcoord")
     // r16 optimization: read gate (coordinate selection) — staged once
-    NcQueries.stageOnce(out) {
+    stageOnce(out) {
       t(s, dir, "orders")
         .select(col("o_orderkey").cast(DoubleType).as("row"),
           col("o_totalprice"))
@@ -728,7 +589,7 @@ object Nc4Queries {
     * roundtrip — a reader that served zeros instead of the fill, or
     * a writer that mis-indexed the surviving chunks, breaks sum_v. */
   def nc4SparseFill: Q = (s, dir) => {
-    val out = NcQueries.scratch(s, dir, "h5sparse")
+    val out = scratch(s, dir, "h5sparse")
     t(s, dir, "lineitem")
       .select(col("l_orderkey"),
         expr("CAST(CASE WHEN (l_orderkey DIV 512) % 2 = 0 THEN -999 ELSE l_extendedprice END AS DOUBLE)")
@@ -775,7 +636,7 @@ object Nc4Queries {
     * order, a wrong corner stride, or an edge-tile pad leak each
     * break a distinct column. */
   def nc4Rank3: Q = (s, dir) => {
-    val out = NcQueries.scratch(s, dir, "h5rank3")
+    val out = scratch(s, dir, "h5rank3")
     t(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding"),
         col("label").cast(IntegerType).as("label"))
@@ -817,7 +678,7 @@ object Nc4Queries {
     * per-bit aggregates (`n_hibit`, `sum_lo`) replay the packing in
     * both engines bit-exactly. */
   def nc4Bitfield: Q = (s, dir) => {
-    val out = NcQueries.scratch(s, dir, "h5bitfield")
+    val out = scratch(s, dir, "h5bitfield")
     t(s, dir, "events")
       .select(col("event_id"),
         (col("user_id") % 16)
@@ -863,7 +724,7 @@ object Nc4Queries {
     * datatype's tag via the synthetic `_opaque_tag` attribute —
     * mirroring the `_enum_members` device. */
   def nc4Opaque: Q = (s, dir) => {
-    val out = NcQueries.scratch(s, dir, "h5opaque")
+    val out = scratch(s, dir, "h5opaque")
     t(s, dir, "documents")
       .select(col("doc_id"), unhex(md5(col("text"))).as("digest"))
       .repartition(2)
@@ -903,7 +764,7 @@ object Nc4Queries {
     * rides the resolved name list (a one-byte address error resolves
     * to "?" and breaks the hash) next to the data aggregate. */
   def nc4RefAttrs: Q = (s, dir) => {
-    val out = NcQueries.scratch(s, dir, "h5refattr")
+    val out = scratch(s, dir, "h5refattr")
     t(s, dir, "lineitem")
       .select(col("l_orderkey"),
         col("l_linenumber").cast(LongType).as("l_linenumber"),
@@ -941,7 +802,7 @@ object Nc4Queries {
     * must detect each file's base independently and read every
     * record through the shifted chunk/heap/index addresses. */
   def nc4UserBlock: Q = (s, dir) => {
-    val out = NcQueries.scratch(s, dir, "h5ublock")
+    val out = scratch(s, dir, "h5ublock")
     t(s, dir, "lineitem")
       .select(col("l_orderkey"), col("l_quantity"), col("l_extendedprice"))
       .repartition(3)
@@ -987,7 +848,7 @@ object Nc4Queries {
     * so any geometry drift between the two on-disk array layouts
     * breaks the hash. */
   def nc4ArrayDtype: Q = (s, dir) => {
-    val out = NcQueries.scratch(s, dir, "h5arraydt")
+    val out = scratch(s, dir, "h5arraydt")
     t(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding"),
         col("label").cast(LongType).as("label"))
@@ -1017,49 +878,6 @@ object Nc4Queries {
       |  CAST(SUM(CAST(CAST(embedding[6] AS DOUBLE) AS DECIMAL(12,8))) AS DOUBLE) AS sum_e5
       |FROM embeddings""".stripMargin
 
-  /** GRID FROM THE netCDF-4 STORE (r8 — the classic
-    * `grid_from_source_index` twin: the grid family's chunk table
-    * derives straight from an HDF5-stored variable's record index,
-    * so grid operators run off the modern container too, not just
-    * CDF-1/2/5): same record-ordinal chunking, per-chunk value hash,
-    * and DECIMAL sums as the classic key — one query proves the
-    * nc4 scan's `record` ordinal is contiguous and ordered across
-    * the chunked+shuffled store. */
-  def gridFromNc4: Q = (s, dir) => {
-    val out = NcQueries.scratch(s, dir, "h5gridsrc")
-    NcQueries.stageOnce(out)(
-      t(s, dir, "lineitem")
-        .select(col("l_orderkey"),
-          col("l_linenumber").cast(LongType).as("l_linenumber"),
-          col("l_quantity"))
-        .repartition(1).sortWithinPartitions("l_orderkey", "l_linenumber")
-        .write.format(SRC).mode("overwrite")
-        .option("h5ver", "2")
-        .option("shuffle", "true")
-        .save(out))
-    s.read.format(SRC).load(out)
-      .select(col("record"), col("l_quantity").as("v"))
-      .groupBy(expr("record div 512").as("chunk_idx"))
-      .agg(min(col("record")).as("origin"),
-        count(lit(1)).as("shape"),
-        md5(concat_ws(",", graft.functions.NgramExpressions.sorted_vals(collect_list(struct(col("record"),
-            expr("CAST(CAST(v AS INT) AS STRING)"))))))
-          .as("values_hash"),
-        expr("CAST(SUM(CAST(v AS DECIMAL(9,2))) AS DOUBLE)").as("sum_val"))
-      .select(lit("l_quantity").as("variable"), col("chunk_idx"), col("origin"),
-        col("shape"), col("values_hash"), col("sum_val"))
-  }
-
-  val gridFromNc4Sql: String =
-    """WITH o AS (SELECT l_quantity AS v,
-      |  row_number() OVER (ORDER BY l_orderkey, l_linenumber) - 1 AS idx
-      |  FROM lineitem)
-      |SELECT 'l_quantity' AS variable, idx // 512 AS chunk_idx,
-      |  MIN(idx) AS origin, COUNT(*) AS shape,
-      |  md5(string_agg(CAST(CAST(v AS INT) AS VARCHAR), ',' ORDER BY idx)) AS values_hash,
-      |  CAST(SUM(CAST(v AS DECIMAL(9,2))) AS DOUBLE) AS sum_val
-      |FROM o GROUP BY idx // 512""".stripMargin
-
   /** ZSTANDARD filter (r8 — registered HDF5 filter 32015, what
     * netCDF-4.9's `nc_def_var_zstandard` emits: the modern archive
     * codec new wild files increasingly carry, previously a loud
@@ -1071,7 +889,7 @@ object Nc4Queries {
     * range reader decodes via the shared filter-mask slot logic —
     * shuffle and fletcher32 compose unchanged. */
   def nc4Zstd: Q = (s, dir) => {
-    val out = NcQueries.scratch(s, dir, "h5zstd")
+    val out = scratch(s, dir, "h5zstd")
     t(s, dir, "lineitem")
       .select(col("l_orderkey"), col("l_quantity"), col("l_extendedprice"))
       .repartition(2)
@@ -1109,7 +927,7 @@ object Nc4Queries {
     * keep-bit count, a broken alternation, or a missing marker
     * attribute each break a distinct gate column. */
   def nc4Quantize: Q = (s, dir) => {
-    val out = NcQueries.scratch(s, dir, "h5quant")
+    val out = scratch(s, dir, "h5quant")
     // the un-quantized twin columns ride in the SAME file (lossless
     // roundtrip), so the validators compare row-wise with no join key
     t(s, dir, "lineitem")
@@ -1163,7 +981,7 @@ object Nc4Queries {
     * one wrong name byte or value in the member framing breaks the
     * hash alongside the data aggregate. */
   def nc4Enum: Q = (s, dir) => {
-    val out = NcQueries.scratch(s, dir, "h5enum")
+    val out = scratch(s, dir, "h5enum")
     val members = (1 to 7).map(i => s"LINE$i=$i").mkString(",")
     t(s, dir, "lineitem")
       .select(col("l_orderkey"),
@@ -1198,7 +1016,7 @@ object Nc4Queries {
     * rows straight from the header bytes with no data I/O at all;
     * string min/max pin the NUL-trim path through the inline buffer. */
   def nc4CompactLayout: Q = (s, dir) => {
-    val out = NcQueries.scratch(s, dir, "h5compact")
+    val out = scratch(s, dir, "h5compact")
     t(s, dir, "nation")
       .select(col("n_nationkey"), col("n_regionkey"), col("n_name"))
       .repartition(1)
@@ -1234,14 +1052,14 @@ object Nc4Queries {
     * creation params rather than trusting this writer's, and one
     * wrong addressing step scrambles whole chunk spans. */
   def nc4ExtensibleArray: Q = (s, dir) => {
-    val out = NcQueries.scratch(s, dir, "h5extarr")
+    val out = scratch(s, dir, "h5extarr")
     // staged: the READ-side EA walk (inline/direct/secondary-block
     // addressing through the filter pipeline) is the operator under
     // test at query time; the deliberately-tiny-chunk write is fixture
     // layout (its per-chunk DEFLATE cost is the root-caused r8/r9
     // super-linear bench line; write scaling is covered by the
     // default-chunk probe in BenchSf1)
-    NcQueries.stageOnce(out)(
+    stageOnce(out)(
       t(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_quantity"), col("l_extendedprice"))
         .repartition(2)
@@ -1276,7 +1094,7 @@ object Nc4Queries {
     * inside every tile including the edge, so a wrong column offset
     * or stride anywhere breaks the hash. */
   def nc4PartialChunks: Q = (s, dir) => {
-    val out = NcQueries.scratch(s, dir, "h5tiled")
+    val out = scratch(s, dir, "h5tiled")
     t(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding"))
       .repartition(2)
@@ -1317,13 +1135,12 @@ object Nc4Queries {
     * the metadata surface (readAttrs) must reproduce the exact
     * attribute table including the automatic zone-map range. */
   def nc4DenseAttrs: Q = (s, dir) => {
-    val out = NcQueries.scratch(s, dir, "h5denseattrs")
+    val out = scratch(s, dir, "h5denseattrs")
     Hdf5IO.write(
       t(s, dir, "lineitem").select(col("l_quantity")).repartition(1),
       out, h5ver = 2, denseAttrs = true,
       varAttrs = Map("l_quantity" ->
-        ((0 until 10).map(i => Hdf5Format.H5Attr(s"a$i", None, Array(i * 1.5))) :+
-          Hdf5Format.H5Attr("units", Some("count"), Array.empty))))
+        ((0 until 10).map(i => Attr.nums(s"a$i", i * 1.5)) :+ Attr.text("units", "count"))))
     NcIO.readAttrs(s, NetCDF4, out).drop("file")
   }
 
@@ -1349,7 +1166,7 @@ object Nc4Queries {
     * aggregates the same columns from parquet: one transposed byte
     * anywhere breaks the hash. */
   def nc4ShuffleRoundtrip: Q = (s, dir) => {
-    val out = NcQueries.scratch(s, dir, "h5shuffle")
+    val out = scratch(s, dir, "h5shuffle")
     Hdf5IO.write(
       t(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_partkey"), col("l_quantity"), col("l_tax"))
@@ -1382,7 +1199,7 @@ object Nc4Queries {
     * checksum (a mismatch throws, never silent corruption). Aggregate
     * hash-matched against parquet. */
   def nc4FletcherRoundtrip: Q = (s, dir) => {
-    val out = NcQueries.scratch(s, dir, "h5fletcher")
+    val out = scratch(s, dir, "h5fletcher")
     Hdf5IO.write(
       t(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_quantity"), col("l_discount"))
@@ -1405,33 +1222,6 @@ object Nc4Queries {
       |  MAX(l_orderkey) AS max_key
       |FROM lineitem""".stripMargin
 
-  /** Variable pruning + record-range pushdown against the 1.8+ HDF5
-    * generation (superblock v2, OHDR headers, link messages): read
-    * only records [1000, 2000) of two of three variables. The pruned
-    * variable's chunks are never fetched (HDF5 stores per-variable
-    * chunk trees), and the record bounds reach the scan — the same
-    * plan contract NcSpec pins for the classic source. */
-  def nc4ReadPrune: Q = (s, dir) => {
-    val out = NcQueries.scratch(s, dir, "h5sorted")
-    NcQueries.stageOnce(out)(Hdf5IO.write(
-      t(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_linenumber").cast(LongType).as("l_linenumber"),
-          col("l_quantity"))
-        .repartition(1)
-        .sortWithinPartitions("l_orderkey", "l_linenumber"),
-      out, chunkRecs = 1024, deflate = true, h5ver = 2))
-    s.read.format(SRC).load(out)
-      .filter(col("record") >= 1000L && col("record") < 2000L)
-      .select("record", "l_orderkey", "l_quantity")
-  }
-
-  val nc4ReadPruneSql: String =
-    """SELECT rn - 1 AS record, l_orderkey, l_quantity FROM (
-      |  SELECT l_orderkey, l_quantity,
-      |    row_number() OVER (ORDER BY l_orderkey, l_linenumber) AS rn
-      |  FROM lineitem) sub
-      |WHERE rn - 1 >= 1000 AND rn - 1 < 2000""".stripMargin
-
   /** netCDF-4 attribute surface: write with per-variable string AND
     * double-array attributes (`Variable.setncattr` parity — the typed
     * attribute messages live in each dataset's object header), read
@@ -1442,16 +1232,15 @@ object Nc4Queries {
     * oracle recomputes from the source parquet — so the gate checks
     * the attribute codec AND the zone-map values in one query. */
   def nc4Attrs: Q = (s, dir) => {
-    val out = NcQueries.scratch(s, dir, "h5attrs")
+    val out = scratch(s, dir, "h5attrs")
     Hdf5IO.write(
       t(s, dir, "lineitem").select(col("l_quantity"), col("l_extendedprice"))
         .repartition(2),
       out,
       varAttrs = Map(
-        "l_quantity" -> Seq(Hdf5Format.H5Attr("units", Some("count"), Array.empty)),
+        "l_quantity" -> Seq(Attr.text("units", "count")),
         "l_extendedprice" -> Seq(
-          Hdf5Format.H5Attr("units", Some("USD"), Array.empty),
-          Hdf5Format.H5Attr("valid_range", None, Array(0.0, 200000.0)))))
+          Attr.text("units", "USD"), Attr.nums("valid_range", 0.0, 200000.0))))
     NcIO.readAttrs(s, NetCDF4, out).drop("file")
       .groupBy("var_name", "attr_name", "idx")
       .agg(min(col("sval")).as("sval"),
@@ -1475,67 +1264,6 @@ object Nc4Queries {
       |  UNION ALL SELECT 'l_extendedprice', 'actual_range', 0, NULL, MIN(l_extendedprice) FROM lineitem
       |  UNION ALL SELECT 'l_extendedprice', 'actual_range', 1, NULL, MAX(l_extendedprice) FROM lineitem)""".stripMargin
 
-  /** Write-side range bucketing for the HDF5 source (the nc_sorted_skip
-    * twin): `repartitionByRange` on the filter key gives the 8 part
-    * files disjoint automatic `actual_range` zone maps, so a selective
-    * value filter plans only the covering file(s) — Hdf5Spec pins the
-    * partition count. The filter itself is re-evaluated by Spark
-    * (pruning is conservative); the oracle aggregates the same slice
-    * from the original parquet. */
-  def nc4SortedSkip: Q = (s, dir) => {
-    val out = NcQueries.scratch(s, dir, "h5sorted_skip")
-    // r16 optimization: read gate (zone-map skip) — layout staged once
-    NcQueries.stageOnce(out)(Hdf5IO.write(
-      t(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_quantity"), col("l_extendedprice"))
-        .repartitionByRange(8, col("l_orderkey"))
-        .sortWithinPartitions("l_orderkey"),
-      out, chunkRecs = 1024))
-    s.read.format(SRC).load(out)
-      .filter(col("l_orderkey") >= 1000L && col("l_orderkey") < 2000L)
-      .agg(
-        count(lit(1)).as("n"),
-        sum(col("l_orderkey")).as("sum_key"),
-        dsum(col("l_quantity")).as("sum_qty"),
-        min(col("l_orderkey")).as("min_key"),
-        max(col("l_orderkey")).as("max_key"))
-  }
-
-  val nc4SortedSkipSql: String =
-    """SELECT COUNT(*) AS n, CAST(SUM(l_orderkey) AS BIGINT) AS sum_key,
-      |  CAST(SUM(CAST(l_quantity AS DECIMAL(9,2))) AS DOUBLE) AS sum_qty,
-      |  MIN(l_orderkey) AS min_key, MAX(l_orderkey) AS max_key
-      |FROM lineitem
-      |WHERE l_orderkey >= 1000 AND l_orderkey < 2000""".stripMargin
-
-  /** Micro-batch Structured Streaming ingest of a netCDF-4 dir
-    * (incremental file ingest, exactly-once records — the reference's
-    * chunk-streaming semantics over its actual on-disk format):
-    * offset = immutable-file count, the global record index rebased
-    * from header metadata per batch; a complete-mode aggregate drains
-    * the staged dir and must equal the batch aggregate over parquet. */
-  def nc4StreamIngest: Q = (s, dir) => {
-    val out = NcQueries.scratch(s, dir, "h5stream_ingest")
-    Hdf5IO.write(
-      t(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_quantity"), col("l_extendedprice"))
-        .repartition(3),
-      out, chunkRecs = 4096)
-    val stream = s.readStream.format(SRC).load(out)
-    val agg = stream.agg(
-      count(lit(1)).as("n"),
-      sum(col("l_orderkey")).as("sum_key"),
-      dsum(col("l_quantity")).as("sum_qty"))
-    graft.streaming.StreamStage.drain(s, "nc4_ingest")(agg.writeStream.outputMode("complete")
-      .format("memory").queryName("graft_stream_nc4_ingest"))
-    s.table("graft_stream_nc4_ingest")
-  }
-
-  val nc4StreamIngestSql: String =
-    """SELECT COUNT(*) AS n, CAST(SUM(l_orderkey) AS BIGINT) AS sum_key,
-      |  CAST(SUM(CAST(l_quantity AS DECIMAL(9,2))) AS DOUBLE) AS sum_qty
-      |FROM lineitem""".stripMargin
-
   /** REAL HDF5 group hierarchy (`createGroup`/`groups[...]` parity —
     * every structured netCDF-4 product ships groups): '/'-pathed
     * variables land in genuine old-style subgroups (each with its own
@@ -1547,7 +1275,7 @@ object Nc4Queries {
     * classic-format nc_groups: both formats' group semantics must
     * agree with each other and with parquet. */
   def nc4Groups: Q = (s, dir) => {
-    val out = NcQueries.scratch(s, dir, "h5groups")
+    val out = scratch(s, dir, "h5groups")
     Hdf5IO.write(
       t(s, dir, "lineitem").select(
         col("l_orderkey").as("obs/key"),
@@ -1571,162 +1299,6 @@ object Nc4Queries {
       |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(9,2)) * (CAST(1 AS DECIMAL(9,2)) - CAST(l_discount AS DECIMAL(9,2)))) AS DOUBLE) AS sum_disc_price
       |FROM lineitem""".stripMargin
 
-  /** CF time decode driven by HDF5 attributes (the netCDF-4 twin of
-    * nc_time_decode): the time axis is written as numeric offsets
-    * plus a `units` STRING attribute in the dataset's object header;
-    * the reader fetches the attribute (one header-metadata pass) to
-    * derive the multiplier and reconstructs timestamps map-side.
-    * Same oracle as the classic-format query. */
-  def nc4TimeDecode: Q = (s, dir) => {
-    val out = NcQueries.scratch(s, dir, "h5cftime")
-    Hdf5IO.write(
-      graft.Tables.events(s, dir).select(
-        (unix_micros(col("ts")).cast(DoubleType) / lit(3.6e9)).as("time"),
-        col("value")),
-      out,
-      varAttrs = Map("time" -> Seq(
-        Hdf5Format.H5Attr("units", Some("hours since 1970-01-01 00:00:00"), Array.empty))))
-    val units = NcIO.readAttrs(s, NetCDF4, out).drop("file")
-      .filter(col("var_name") === "time" && col("attr_name") === "units")
-      .select("sval").distinct().collect().head.getString(0)
-    val multMicros: Long = units.split(" ")(0) match {
-      case "seconds" => 1000000L
-      case "minutes" => 60L * 1000000L
-      case "hours" => 3600L * 1000000L
-      case "days" => 86400L * 1000000L
-      case u => throw new IllegalArgumentException(s"unsupported CF unit: $u")
-    }
-    s.read.format(SRC).load(out)
-      .select(timestamp_micros(round(col("time") * multMicros.toDouble, 0)
-        .cast(LongType)).as("ts2"), col("value"))
-      .groupBy(to_date(col("ts2")).as("day"))
-      .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
-  }
-
-  val nc4TimeDecodeSql: String =
-    """WITH enc AS (
-      |  SELECT CAST(epoch_us(ts) AS DOUBLE) / 3.6e9 AS time, value FROM events),
-      |dec AS (
-      |  SELECT make_timestamp(CAST(round(time * 3600000000.0, 0) AS BIGINT)) AS ts2,
-      |         value
-      |  FROM enc)
-      |SELECT CAST(ts2 AS DATE) AS day, COUNT(*) AS n,
-      |  CAST(SUM(CAST(value AS DECIMAL(9,2))) AS DOUBLE) AS sum_value
-      |FROM dec GROUP BY 1""".stripMargin
-
-  /** netCDF-4 mask-and-scale parity (`set_auto_maskandscale` — THE
-    * netCDF4 convenience every real file leans on): l_quantity packed
-    * into NC_SHORT storage (4× narrower) with typed `scale_factor` /
-    * `add_offset` double attributes in the dataset's object header;
-    * the reader fetches the factors FROM the file and unpacks
-    * map-side. Exact scale 0.25 makes the roundtrip bit-identical. */
-  def nc4ScaleOffset: Q = (s, dir) => {
-    val out = NcQueries.scratch(s, dir, "h5packed")
-    Hdf5IO.write(
-      t(s, dir, "lineitem")
-        .select(col("l_orderkey"),
-          round(col("l_quantity") / 0.25).cast(ShortType).as("l_quantity_packed"))
-        .repartition(2),
-      out,
-      varAttrs = Map("l_quantity_packed" -> Seq(
-        Hdf5Format.H5Attr("scale_factor", None, Array(0.25)),
-        Hdf5Format.H5Attr("add_offset", None, Array(0.0)))))
-    val attrs = NcIO.readAttrs(s, NetCDF4, out).drop("file")
-      .filter(col("var_name") === "l_quantity_packed" &&
-        col("attr_name").isin("scale_factor", "add_offset"))
-      .select("attr_name", "dval").distinct().collect()
-      .map(r => r.getString(0) -> r.getDouble(1)).toMap
-    s.read.format(SRC).load(out)
-      .select(col("l_orderkey"),
-        (col("l_quantity_packed").cast(DoubleType) * attrs("scale_factor")
-          + attrs("add_offset")).as("l_quantity"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("l_orderkey")).as("sum_key"),
-        dsum(col("l_quantity")).as("sum_qty"),
-        min(col("l_quantity")).as("min_qty"),
-        max(col("l_quantity")).as("max_qty"))
-  }
-
-  val nc4ScaleOffsetSql: String =
-    """SELECT COUNT(*) AS n, CAST(SUM(l_orderkey) AS BIGINT) AS sum_key,
-      |  CAST(SUM(CAST(l_quantity AS DECIMAL(9,2))) AS DOUBLE) AS sum_qty,
-      |  MIN(l_quantity) AS min_qty, MAX(l_quantity) AS max_qty
-      |FROM lineitem""".stripMargin
-
-  /** CF `_FillValue` missing-data roundtrip over HDF5 (NUG attribute
-    * conventions): nulls persisted AS the declared NC_FILL_DOUBLE
-    * sentinel, the attribute recorded as a typed double in the
-    * dataset header; the reader fetches it from one header read and
-    * masks sentinel → null map-side — masked values provably stay out
-    * of every aggregate. */
-  def nc4FillvalueMask: Q = (s, dir) => {
-    val FILL = 9.96920996838869e+36 // NC_FILL_DOUBLE (public NetCDF spec)
-    val out = NcQueries.scratch(s, dir, "h5fillmask")
-    Hdf5IO.write(
-      t(s, dir, "lineitem")
-        .select(col("l_orderkey"),
-          when(col("l_quantity") === 1.0, lit(FILL))
-            .otherwise(col("l_quantity")).as("l_quantity"))
-        .repartition(2),
-      out,
-      varAttrs = Map("l_quantity" -> Seq(
-        Hdf5Format.H5Attr("_FillValue", None, Array(FILL)))))
-    val fill = NcIO.readAttrs(s, NetCDF4, out).drop("file")
-      .filter(col("var_name") === "l_quantity" && col("attr_name") === "_FillValue")
-      .select("dval").distinct().collect().head.getDouble(0)
-    s.read.format(SRC).load(out)
-      .select(col("l_orderkey"),
-        when(col("l_quantity") === fill, lit(null).cast(DoubleType))
-          .otherwise(col("l_quantity")).as("qty"))
-      .agg(count(lit(1)).as("n"),
-        sum(when(col("qty").isNull, 1L).otherwise(0L)).as("n_missing"),
-        sum(col("l_orderkey")).as("sum_key"),
-        dsum(col("qty")).as("sum_qty"),
-        min(col("qty")).as("min_qty"), max(col("qty")).as("max_qty"))
-  }
-
-  val nc4FillvalueMaskSql: String =
-    """SELECT COUNT(*) AS n,
-      |  CAST(SUM(CASE WHEN l_quantity = 1.00 THEN 1 ELSE 0 END) AS BIGINT) AS n_missing,
-      |  CAST(SUM(l_orderkey) AS BIGINT) AS sum_key,
-      |  CAST(SUM(CASE WHEN l_quantity <> 1.00
-      |    THEN CAST(l_quantity AS DECIMAL(9,2)) END) AS DOUBLE) AS sum_qty,
-      |  MIN(CASE WHEN l_quantity <> 1.00 THEN l_quantity END) AS min_qty,
-      |  MAX(CASE WHEN l_quantity <> 1.00 THEN l_quantity END) AS max_qty
-      |FROM lineitem""".stripMargin
-
-  /** Strided index selection over HDF5 (xarray `isel(slice(lo, hi,
-    * step))` — decimation): the [lo, hi) record range pushes down to
-    * scan partitions and the chunk B-tree walk; the stride is a
-    * map-side `record % step` — no row leaves its partition. Same
-    * oracle as the classic form. */
-  def nc4IselStride: Q = (s, dir) => {
-    val out = NcQueries.scratch(s, dir, "h5stride")
-    NcQueries.stageOnce(out)(Hdf5IO.write(
-      t(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_linenumber").cast(LongType).as("l_linenumber"),
-          col("l_quantity"))
-        .repartition(1).sortWithinPartitions("l_orderkey", "l_linenumber"),
-      out, chunkRecs = 1024))
-    s.read.format(SRC).load(out)
-      .filter(col("record") >= 1000L && col("record") < 9000L &&
-        col("record") % 4 === 0)
-      .agg(count(lit(1)).as("n"),
-        sum(col("record")).as("sum_rec"),
-        dsum(col("l_quantity")).as("sum_qty"),
-        min(col("record")).as("min_rec"),
-        max(col("record")).as("max_rec"))
-  }
-
-  val nc4IselStrideSql: String =
-    """WITH o AS (SELECT l_quantity AS v,
-      |  row_number() OVER (ORDER BY l_orderkey, l_linenumber) - 1 AS idx
-      |  FROM lineitem)
-      |SELECT COUNT(*) AS n, CAST(SUM(idx) AS BIGINT) AS sum_rec,
-      |  CAST(SUM(CAST(v AS DECIMAL(9,2))) AS DOUBLE) AS sum_qty,
-      |  MIN(idx) AS min_rec, MAX(idx) AS max_rec
-      |FROM o WHERE idx >= 1000 AND idx < 9000 AND idx % 4 = 0""".stripMargin
-
   /** kerchunk-style CHUNK MANIFEST (r12 — the cloud-native NetCDF
     * pattern: scan the container's chunk index ONCE into a queryable
     * manifest, then let object-store readers seek chunks without ever
@@ -1741,8 +1313,8 @@ object Nc4Queries {
     * row. Ingest is staged once per session (read-side gate
     * convention); the manifest itself is chunk-count-sized. */
   def nc4ChunkManifest: Q = (s, dir) => {
-    val out = NcQueries.scratch(s, dir, "h5manifest")
-    NcQueries.stageOnce(out) {
+    val out = scratch(s, dir, "h5manifest")
+    stageOnce(out) {
       Hdf5IO.write(
         t(s, dir, "lineitem").select(col("l_orderkey"), col("l_quantity"))
           .repartition(1),
@@ -1778,17 +1350,18 @@ object Nc4Queries {
     "nc4_chunk_manifest" -> nc4ChunkManifest,
     "nc4_fletcher_roundtrip" -> nc4FletcherRoundtrip,
     "nc4_shuffle_roundtrip" -> nc4ShuffleRoundtrip,
-    "nc4_isel_stride" -> nc4IselStride,
-    "nc4_fillvalue_mask" -> nc4FillvalueMask,
-    "nc4_scale_offset" -> nc4ScaleOffset,
-    "nc4_time_decode" -> nc4TimeDecode,
-    "nc4_read_roundtrip" -> nc4ReadRoundtrip,
+    "nc4_isel_stride" -> iselStride(Map("chunkrecs" -> "1024")),
+    "nc4_fillvalue_mask" -> fillvalueMask,
+    "nc4_scale_offset" -> scaleOffset,
+    "nc4_time_decode" -> timeDecode,
+    "nc4_read_roundtrip" -> roundtrip,
     "nc4_write_roundtrip" -> nc4WriteRoundtrip,
     "nc4_dsv2_write_roundtrip" -> nc4Dsv2WriteRoundtrip,
     "nc4_compact_auto" -> nc4CompactAuto,
-    "nc4_multifile_union" -> nc4MultifileUnion,
-    "nc4_time_calendar" -> nc4TimeCalendar,
-    "stream_nc4_sink" -> streamNc4Sink,
+    "nc4_multifile_union" ->
+      multifileUnion(Map("shuffle" -> "true"), Map("h5ver" -> "2")),
+    "nc4_time_calendar" -> timeCalendar,
+    "stream_nc4_sink" -> streamSink,
     "nc4_string_roundtrip" -> nc4StringRoundtrip,
     "nc4_compound" -> nc4Compound,
     "nc4_dense_groups" -> nc4DenseGroups,
@@ -1804,7 +1377,7 @@ object Nc4Queries {
     "nc4_committed_types" -> nc4CommittedTypes,
     "nc4_quantize" -> nc4Quantize,
     "nc4_zstd" -> nc4Zstd,
-    "grid_from_nc4_index" -> gridFromNc4,
+    "grid_from_nc4_index" -> gridFromIndex(Map("h5ver" -> "2", "shuffle" -> "true")),
     "nc4_rank3" -> nc4Rank3,
     "nc4_bitfield" -> nc4Bitfield,
     "nc4_opaque" -> nc4Opaque,
@@ -1815,26 +1388,26 @@ object Nc4Queries {
     "nc4_dim_scales" -> nc4DimScales,
     "nc4_sel_coord" -> nc4SelCoord,
     "nc4_dense_attrs" -> nc4DenseAttrs,
-    "nc4_read_prune" -> nc4ReadPrune,
+    "nc4_read_prune" -> readPrune(Map("chunkrecs" -> "1024", "h5ver" -> "2")),
     "nc4_attrs" -> nc4Attrs,
-    "nc4_sorted_skip" -> nc4SortedSkip,
-    "nc4_stream_ingest" -> nc4StreamIngest,
+    "nc4_sorted_skip" -> sortedSkip(Map("chunkrecs" -> "1024")),
+    "nc4_stream_ingest" -> streamIngest,
     "nc4_groups" -> nc4Groups)
   val oracles: Map[String, String] = Map(
     "nc4_chunk_manifest" -> nc4ChunkManifestSql,
     "nc4_fletcher_roundtrip" -> nc4FletcherRoundtripSql,
     "nc4_shuffle_roundtrip" -> nc4ShuffleRoundtripSql,
-    "nc4_isel_stride" -> nc4IselStrideSql,
-    "nc4_fillvalue_mask" -> nc4FillvalueMaskSql,
-    "nc4_scale_offset" -> nc4ScaleOffsetSql,
-    "nc4_time_decode" -> nc4TimeDecodeSql,
-    "nc4_read_roundtrip" -> nc4ReadRoundtripSql,
+    "nc4_isel_stride" -> iselStrideSql,
+    "nc4_fillvalue_mask" -> fillvalueMaskSql,
+    "nc4_scale_offset" -> scaleOffsetSql,
+    "nc4_time_decode" -> timeDecodeSql,
+    "nc4_read_roundtrip" -> roundtripSql,
     "nc4_write_roundtrip" -> nc4WriteRoundtripSql,
     "nc4_dsv2_write_roundtrip" -> nc4Dsv2WriteRoundtripSql,
     "nc4_compact_auto" -> nc4CompactAutoSql,
-    "nc4_multifile_union" -> nc4MultifileUnionSql,
-    "nc4_time_calendar" -> nc4TimeCalendarSql,
-    "stream_nc4_sink" -> streamNc4SinkSql,
+    "nc4_multifile_union" -> multifileUnionSql,
+    "nc4_time_calendar" -> timeCalendarSql,
+    "stream_nc4_sink" -> streamSinkSql,
     "nc4_string_roundtrip" -> nc4StringRoundtripSql,
     "nc4_compound" -> nc4CompoundSql,
     "nc4_dense_groups" -> nc4DenseGroupsSql,
@@ -1850,7 +1423,7 @@ object Nc4Queries {
     "nc4_committed_types" -> nc4CommittedTypesSql,
     "nc4_quantize" -> nc4QuantizeSql,
     "nc4_zstd" -> nc4ZstdSql,
-    "grid_from_nc4_index" -> gridFromNc4Sql,
+    "grid_from_nc4_index" -> gridFromIndexSql,
     "nc4_rank3" -> nc4Rank3Sql,
     "nc4_bitfield" -> nc4BitfieldSql,
     "nc4_opaque" -> nc4OpaqueSql,
@@ -1861,9 +1434,9 @@ object Nc4Queries {
     "nc4_dim_scales" -> nc4DimScalesSql,
     "nc4_sel_coord" -> nc4SelCoordSql,
     "nc4_dense_attrs" -> nc4DenseAttrsSql,
-    "nc4_read_prune" -> nc4ReadPruneSql,
+    "nc4_read_prune" -> readPruneSql,
     "nc4_attrs" -> nc4AttrsSql,
-    "nc4_sorted_skip" -> nc4SortedSkipSql,
-    "nc4_stream_ingest" -> nc4StreamIngestSql,
+    "nc4_sorted_skip" -> sortedSkipSql,
+    "nc4_stream_ingest" -> streamIngestSql,
     "nc4_groups" -> nc4GroupsSql)
 }

@@ -33,7 +33,8 @@ import org.apache.spark.sql.types._
   * `implicit` — the on-disk chunk index generation). */
 private[netcdf] class Nc4DataWriter(schema: StructType, dir: String, baseName: String,
     options: Map[String, String], serConf: SerializableHadoopConf,
-    varAttrs: Map[String, Seq[Hdf5Format.H5Attr]] = Map.empty)
+    varAttrs: Map[String, Seq[Attr]] = Map.empty,
+    arrayLens: Map[String, Int] = Map.empty)
     extends DataWriter[InternalRow] {
 
   private val chunkRecs = options.getOrElse("chunkrecs", "4096").toInt
@@ -70,7 +71,7 @@ private[netcdf] class Nc4DataWriter(schema: StructType, dir: String, baseName: S
         (p.substring(0, i).trim, p.substring(i + 1).trim.toLong)
       }
     }
-  private val declaredLens = NcWriteConf.arrayLens(options)
+  private val declaredLens = NcWriteConf.arrayLens(options) ++ arrayLens
   /** `quantize.<col>` = "bitgroom:NSD" | "bitround:NSB" — netCDF-4.9
     * lossy quantization applied before the filter pipeline */
   private val quantize: Map[String, (String, Int)] =
@@ -217,7 +218,9 @@ private[netcdf] class Nc4DataWriter(schema: StructType, dir: String, baseName: S
           f.name -> record.getArray(i).numElements()
       }
       w = new Hdf5Format.Hdf5Writer(schema, chunkRecs, deflate, stringWidth,
-        lens, h5ver, varAttrs = varAttrs, shuffle = shuffle, fletcher = fletcher,
+        lens, h5ver, varAttrs = varAttrs.map { case (v, as) =>
+          v -> as.map(a => Hdf5Format.H5Attr(a.name, a.text, a.nums))
+        }, shuffle = shuffle, fletcher = fletcher,
         vlenStrings = vlenStrings, denseRoot = denseGroups,
         chunkIndex = chunkIndex, denseAttrs = denseAttrs, chunkCols = chunkCols,
         layout = layout, eaPageBits = eaPageBits, vlenSeqs = vlenSeqs,
@@ -259,25 +262,25 @@ private[netcdf] class Nc4DataWriter(schema: StructType, dir: String, baseName: S
   * file per non-empty partition of `df` (an empty partition lands no
   * file), each written by [[Nc4DataWriter]]. The named parameters
   * become that writer's option keys, so defaults and parsing live in
-  * one place; only `varAttrs` (per-variable HDF5 attributes, whose
-  * names a string option cannot carry) goes to the writer directly. */
+  * one place; `varAttrs` (per-variable attributes) and `arrayLens`
+  * (fixed array lengths) go to the writer directly, since the names
+  * they hold are free text a string option cannot carry. */
 object Hdf5IO {
 
   def write(df: DataFrame, dir: String, chunkRecs: Int = 4096,
       deflate: Boolean = true, h5ver: Int = 0, stringWidth: Int = 32,
       arrayLens: Map[String, Int] = Map.empty,
-      varAttrs: Map[String, Seq[Hdf5Format.H5Attr]] = Map.empty,
+      varAttrs: Map[String, Seq[Attr]] = Map.empty,
       shuffle: Boolean = false, fletcher: Boolean = false,
       vlenStrings: Boolean = false, denseRoot: Boolean = false,
       chunkIndex: String = "btree1", denseAttrs: Boolean = false): Unit = {
     val options = Map("chunkrecs" -> chunkRecs.toString, "deflate" -> deflate.toString,
       "h5ver" -> h5ver.toString, "stringwidth" -> stringWidth.toString,
-      "arraylens" -> arrayLens.map { case (c, n) => s"$c=$n" }.mkString(","),
       "shuffle" -> shuffle.toString, "fletcher" -> fletcher.toString,
       "vlenstrings" -> vlenStrings.toString, "densegroups" -> denseRoot.toString,
       "chunkindex" -> chunkIndex, "denseattrs" -> denseAttrs.toString)
     val schema = df.schema
     ChunkedWrite.write(df, NetCDF4, dir, options)((name, serConf) =>
-      new Nc4DataWriter(schema, dir, name, options, serConf, varAttrs))
+      new Nc4DataWriter(schema, dir, name, options, serConf, varAttrs, arrayLens))
   }
 }

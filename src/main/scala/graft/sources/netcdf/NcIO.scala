@@ -24,8 +24,13 @@ object NcIO {
 
   def write(df: DataFrame, dir: String, chunkBytes: Int = 4 << 20,
       stringWidth: Int = 32, arrayLens: Map[String, Int] = Map.empty,
-      gatts: Seq[(String, String)] = Nil,
-      vatts: Map[String, Seq[(String, String)]] = Map.empty,
+      /** file-level attributes: NC_CHAR text or NC_DOUBLE numbers
+        * (bounds, grid spacing, version vectors). */
+      globalAttrs: Seq[Attr] = Nil,
+      /** per-variable attributes: NC_CHAR text (units, calendar) or
+        * NC_DOUBLE numbers — CF-conventions scale_factor, add_offset,
+        * valid_range, _FillValue. */
+      varAttrs: Map[String, Seq[Attr]] = Map.empty,
       fixedVars: Seq[(String, Array[Double])] = Nil,
       /** gzip each part file (.nc.gz) after the numrecs/zone-map
         * patches — whole-file compression, the storage-cost lever at
@@ -39,12 +44,6 @@ object NcIO {
         * intact (the NetCDF4/HDF5 chunked-storage model). Prefer this
         * over `compress` whenever readers matter. */
       compressChunks: Boolean = false,
-      /** typed NC_DOUBLE per-variable attributes — CF-conventions
-        * numeric metadata (scale_factor, add_offset, valid_range…). */
-      dvatts: Map[String, Seq[(String, Array[Double])]] = Map.empty,
-      /** typed NC_DOUBLE GLOBAL attributes — file-level numeric
-        * metadata (bounds, grid spacing, version vectors). */
-      dgatts: Seq[(String, Array[Double])] = Nil,
       /** per-variable block-size budget (bytes) for the .ncz sink —
         * netCDF4's `createVariable(chunksizes=)`; unnamed variables
         * inherit `chunkBytes`. Non-empty ⇒ var-major .ncz v2 layout. */
@@ -78,8 +77,8 @@ object NcIO {
       "stringwidth" -> stringWidth.toString, "compress" -> compress.toString,
       "compresschunks" -> compressChunks.toString)
     ChunkedWrite.write(df, NetCDF3, dir, options)((name, serConf) =>
-      new NcDataWriter(schema, dir, name, options, serConf, allLens, gatts, vatts, fixedVars,
-        dvatts, dgatts, varChunkBytes, varCodecs))
+      new NcDataWriter(schema, dir, name, options, serConf, allLens, globalAttrs, varAttrs,
+        fixedVars, varChunkBytes, varCodecs))
   }
 
   /** Total records in a dataset dir — header metadata only, no record

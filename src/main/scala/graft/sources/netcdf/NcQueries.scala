@@ -8,92 +8,10 @@ import org.apache.spark.sql.types._
 /** Driver-contract queries exercising the NetCDF write/read path end
   * to end (SURVEY.md §2A). The oracle runs against the original
   * parquet, so a hash match proves the binary roundtrip through the
-  * classic-NetCDF codec is lossless.
+  * classic-NetCDF codec is lossless. The keys netCDF-4 shares run the
+  * [[ChunkedQueries]] bodies with this container's default layout.
   */
-object NcQueries {
-
-  type Q = (SparkSession, String) => DataFrame
-
-  private val SRC = "graft.sources.netcdf.NetCDF3Source"
-
-  /** Scratch dir keyed by (applicationId, sf dir): no two Spark
-    * processes can ever share a path, so a concurrent/overlapping run
-    * (driver retry, bench/verify overlap) cannot delete-then-rewrite a
-    * directory another JVM is mid-read of. Stable within a session so
-    * bench re-runs reuse their own files.
-    */
-  private[graft] def scratch(s: SparkSession, dir: String, tag: String): String =
-    s"/tmp/graft_nc/${s.sparkContext.applicationId}/" +
-      s"${dir.replaceAll("[^A-Za-z0-9.]", "_")}/$tag"
-
-  /** Session-staged INGEST writes for the read-side gates (the r6
-    * `indexedQty` convention extended to NetCDF stores): a gate whose
-    * operator under test is read behavior — pruning, stride
-    * selection, chunk-index walks, grid-from-index — pays its sorted
-    * single-writer layout ONCE per (session, sf dir), like a real
-    * pipeline pays layout at ingest time, not per query. Gates whose
-    * operator IS the write path (roundtrips, filter stacks, compact)
-    * keep per-invocation writes. Keyed by the scratch path, which
-    * already embeds applicationId + sf dir. */
-  private val stagedWrites = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-  private[graft] def stageOnce(out: String)(write: => Unit): Unit = {
-    // computeIfAbsent serializes concurrent first-touches on the same
-    // key: exactly one caller runs the write, later callers block
-    // until it finishes — no double overwrite, no reader racing a
-    // half-replaced file (the non-atomic contains/add hazard)
-    stagedWrites.computeIfAbsent(out, _ => { write; java.lang.Boolean.TRUE })
-    ()
-  }
-
-  /** Write 4 lineitem variables to chunked NetCDF part files (4-way
-    * parallel), read them back through the DSv2, aggregate. */
-  def ncWriteReadRoundtrip: Q = (s, dir) => {
-    val out = scratch(s, dir, "roundtrip")
-    NcIO.write(
-      t(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_quantity"), col("l_extendedprice"), col("l_discount"))
-        .repartition(4),
-      out)
-    s.read.format(SRC).load(out)
-      .agg(
-        count(lit(1)).as("n"),
-        sum(col("l_orderkey")).as("sum_key"),
-        dsum(col("l_quantity")).as("sum_qty"),
-        sum(dec(col("l_extendedprice")) * oneMinus(col("l_discount"))).cast(DoubleType)
-          .as("sum_disc_price"))
-  }
-
-  // DuckDB's SUM(BIGINT) yields HUGEINT (INT128), which the driver's
-  // checker formats differently than Spark's BIGINT — every integer
-  // SUM in these oracles must be CAST back to BIGINT (r2 verdict §1).
-  val ncWriteReadRoundtripSql: String =
-    """SELECT COUNT(*) AS n, CAST(SUM(l_orderkey) AS BIGINT) AS sum_key,
-      |  CAST(SUM(CAST(l_quantity AS DECIMAL(9,2))) AS DOUBLE) AS sum_qty,
-      |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(9,2)) * (CAST(1 AS DECIMAL(9,2)) - CAST(l_discount AS DECIMAL(9,2)))) AS DOUBLE) AS sum_disc_price
-      |FROM lineitem""".stripMargin
-
-  /** Variable pruning + record-range pushdown: write sorted, read only
-    * records [1000, 2000) of two variables. */
-  def ncReadPrune: Q = (s, dir) => {
-    val out = scratch(s, dir, "sorted")
-    stageOnce(out)(NcIO.write(
-      t(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_linenumber").cast(LongType).as("l_linenumber"),
-          col("l_quantity"))
-        .repartition(1)
-        .sortWithinPartitions("l_orderkey", "l_linenumber"),
-      out))
-    s.read.format(SRC).load(out)
-      .filter(col("record") >= 1000L && col("record") < 2000L)
-      .select("record", "l_orderkey", "l_quantity")
-  }
-
-  val ncReadPruneSql: String =
-    """SELECT rn - 1 AS record, l_orderkey, l_quantity FROM (
-      |  SELECT l_orderkey, l_quantity,
-      |    row_number() OVER (ORDER BY l_orderkey, l_linenumber) AS rn
-      |  FROM lineitem) sub
-      |WHERE rn - 1 >= 1000 AND rn - 1 < 2000""".stripMargin
+object NcQueries extends ChunkedQueries(NetCDF3) {
 
   /** N-D variable roundtrip: the 64-dim embedding becomes a rank-2
     * (record × 64) float variable. Float storage is bit-exact, so the
@@ -153,10 +71,11 @@ object NcQueries {
         .select(col("l_orderkey"), col("l_quantity"), col("l_extendedprice"))
         .repartition(2),
       out,
-      gatts = Seq("title" -> "graft lineitem export", "institution" -> "graft"),
-      vatts = Map(
-        "l_quantity" -> Seq("units" -> "count"),
-        "l_extendedprice" -> Seq("units" -> "USD")))
+      globalAttrs = Seq(Attr.text("title", "graft lineitem export"),
+        Attr.text("institution", "graft")),
+      varAttrs = Map(
+        "l_quantity" -> Seq(Attr.text("units", "count")),
+        "l_extendedprice" -> Seq(Attr.text("units", "USD"))))
     NcIO.readAttrs(s, NetCDF3, out)
       .groupBy("var_name", "attr_name", "idx")
       .agg(min(col("sval")).as("sval"),
@@ -192,11 +111,11 @@ object NcQueries {
     NcIO.write(
       t(s, dir, "lineitem").select(col("l_orderkey"), col("l_quantity")).repartition(2),
       out,
-      gatts = Seq("title" -> "graft global-attr export"),
-      dgatts = Seq(
-        "geospatial_bounds" -> Array(-90.0, 90.0),
-        "grid_spacing" -> Array(0.25),
-        "format_version" -> Array(2.0, 1.0)))
+      globalAttrs = Seq(
+        Attr.text("title", "graft global-attr export"),
+        Attr.nums("geospatial_bounds", -90.0, 90.0),
+        Attr.nums("grid_spacing", 0.25),
+        Attr.nums("format_version", 2.0, 1.0)))
     NcIO.readAttrs(s, NetCDF3, out)
       .filter(col("var_name") === "GLOBAL")
       .groupBy("attr_name", "idx")
@@ -267,41 +186,6 @@ object NcQueries {
       |  CAST(SUM(CAST(l_quantity AS DECIMAL(9,2))) AS DOUBLE) AS sum_qty,
       |  CAST(SUM(CAST(l_discount AS DECIMAL(9,2))) AS DOUBLE) AS sum_disc
       |FROM lineitem""".stripMargin
-
-  /** Write-side range bucketing for maximal zone-map selectivity:
-    * `repartitionByRange` on the filter column gives every part file a
-    * DISJOINT `actual_range`, so a selective read prunes all but the
-    * covering file(s) from the scan — at 100 TB, sorting on the
-    * dominant filter key at write time turns zone maps from a
-    * best-effort skip into near-partition-pruning (the classic
-    * sort-on-ingest lever; ZonemapSortSpec asserts the file-skip
-    * count). The oracle aggregates the same slice from the original
-    * parquet, proving the pruned read returns exactly the right rows. */
-  def ncSortedSkip: Q = (s, dir) => {
-    val out = scratch(s, dir, "sorted_skip")
-    // r16 optimization: read gate (zone-map skip) — layout staged once
-    stageOnce(out)(NcIO.write(
-      t(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_quantity"), col("l_extendedprice"))
-        .repartitionByRange(8, col("l_orderkey"))
-        .sortWithinPartitions("l_orderkey"),
-      out))
-    s.read.format(SRC).load(out)
-      .filter(col("l_orderkey") >= 1000L && col("l_orderkey") < 2000L)
-      .agg(
-        count(lit(1)).as("n"),
-        sum(col("l_orderkey")).as("sum_key"),
-        dsum(col("l_quantity")).as("sum_qty"),
-        min(col("l_orderkey")).as("min_key"),
-        max(col("l_orderkey")).as("max_key"))
-  }
-
-  val ncSortedSkipSql: String =
-    """SELECT COUNT(*) AS n, CAST(SUM(l_orderkey) AS BIGINT) AS sum_key,
-      |  CAST(SUM(CAST(l_quantity AS DECIMAL(9,2))) AS DOUBLE) AS sum_qty,
-      |  MIN(l_orderkey) AS min_key, MAX(l_orderkey) AS max_key
-      |FROM lineitem
-      |WHERE l_orderkey >= 1000 AND l_orderkey < 2000""".stripMargin
 
   /** Chunk-compressed (.ncz) roundtrip under a selective read: range-
     * bucketed sorted write with per-block deflate, then a value-filtered
@@ -431,40 +315,6 @@ object NcQueries {
       |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(9,2))) AS DOUBLE) AS sum_price
       |FROM lineitem""".stripMargin
 
-  /** Streaming NetCDF *sink* (the reference's headline streaming-write
-    * semantics as a `writeStream` surface): netcdf3 → netcdf3 streaming
-    * copy. Source part files stream in micro-batches through the DSv2
-    * reader, and each epoch appends `part-e<epoch>-<pid>.nc` files at
-    * the sink; the batch read-back must agree with the original parquet,
-    * proving the sink's append path is lossless and exactly-once. */
-  def streamNcSink: Q = (s, dir) => {
-    val src = scratch(s, dir, "sink_src")
-    val out = scratch(s, dir, "sink_out")
-    val ckpt = scratch(s, dir, "sink_ckpt")
-    NcIO.write(
-      t(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_quantity"), col("l_discount"))
-        .repartition(3),
-      src)
-    graft.streaming.StreamStage.drain(s, "ncsink", stableCkpt = ckpt)(
-      s.readStream.format(SRC).load(src)
-      .drop("record") // virtual read column; `record` is reserved on write
-      .writeStream.format(SRC)
-      .option("path", out))
-    s.read.format(SRC).load(out)
-      .agg(
-        count(lit(1)).as("n"),
-        sum(col("l_orderkey")).as("sum_key"),
-        dsum(col("l_quantity")).as("sum_qty"),
-        dsum(col("l_discount")).as("sum_disc"))
-  }
-
-  val streamNcSinkSql: String =
-    """SELECT COUNT(*) AS n, CAST(SUM(l_orderkey) AS BIGINT) AS sum_key,
-      |  CAST(SUM(CAST(l_quantity AS DECIMAL(9,2))) AS DOUBLE) AS sum_qty,
-      |  CAST(SUM(CAST(l_discount AS DECIMAL(9,2))) AS DOUBLE) AS sum_disc
-      |FROM lineitem""".stripMargin
-
   /** Streaming sink + automatic compaction: the source is rate-limited
     * to ONE part file per trigger (`maxFilesPerTrigger` admission
     * control), so the sink accumulates per-epoch small files — the
@@ -515,152 +365,6 @@ object NcQueries {
       |  CAST(SUM(CAST(l_discount AS DECIMAL(9,2))) AS DOUBLE) AS sum_disc
       |FROM lineitem""".stripMargin
 
-  /** End-to-end micro-batch ingest: lineitem → chunked .nc part files
-    * → Structured Streaming read through the netcdf3 source → complete-
-    * mode aggregation in a memory sink. The oracle aggregates the
-    * original parquet, so a match proves the streaming path delivers
-    * every record exactly once. */
-  def streamNcIngest: Q = (s, dir) => {
-    val out = scratch(s, dir, "stream_ingest")
-    NcIO.write(
-      t(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_quantity"), col("l_extendedprice"))
-        .repartition(3),
-      out)
-    val stream = s.readStream.format(SRC).load(out)
-    val agg = stream.agg(
-      count(lit(1)).as("n"),
-      sum(col("l_orderkey")).as("sum_key"),
-      dsum(col("l_quantity")).as("sum_qty"))
-    graft.streaming.StreamStage.drain(s, "nc_ingest")(agg.writeStream.outputMode("complete")
-      .format("memory").queryName("graft_stream_nc_ingest"))
-    s.table("graft_stream_nc_ingest")
-  }
-
-  val streamNcIngestSql: String =
-    """SELECT COUNT(*) AS n, CAST(SUM(l_orderkey) AS BIGINT) AS sum_key,
-      |  CAST(SUM(CAST(l_quantity AS DECIMAL(9,2))) AS DOUBLE) AS sum_qty
-      |FROM lineitem""".stripMargin
-
-  /** CF-conventions packed variable: l_quantity stored as NC_SHORT
-    * (4× narrower than NC_DOUBLE) with typed NC_DOUBLE
-    * `scale_factor`/`add_offset` attributes, unpacked on read as
-    * packed·scale + offset — the netCDF4 auto mask-and-scale
-    * contract. scale=0.25 represents the integral quantities exactly,
-    * so unpacked values are bit-identical to the originals and the
-    * oracle (over the source parquet) must agree on every aggregate.
-    * The scale/offset applied at read time come from the FILE HEADERS
-    * (readAttrs), not from the writer's literals — the roundtrip
-    * proves typed-attribute encoding end to end. */
-  def ncScaleOffset: Q = (s, dir) => {
-    val out = scratch(s, dir, "packed")
-    NcIO.write(
-      t(s, dir, "lineitem")
-        .select(col("l_orderkey"),
-          round(col("l_quantity") / 0.25).cast(ShortType).as("l_quantity_packed"))
-        .repartition(2),
-      out,
-      dvatts = Map("l_quantity_packed" -> Seq(
-        "scale_factor" -> Array(0.25), "add_offset" -> Array(0.0))))
-    val attrs = NcIO.readAttrs(s, NetCDF3, out)
-      .filter(col("var_name") === "l_quantity_packed" &&
-        col("attr_name").isin("scale_factor", "add_offset"))
-      .select("attr_name", "dval").distinct().collect()
-      .map(r => r.getString(0) -> r.getDouble(1)).toMap
-    s.read.format(SRC).load(out)
-      .select(col("l_orderkey"),
-        (col("l_quantity_packed").cast(DoubleType) * attrs("scale_factor")
-          + attrs("add_offset")).as("l_quantity"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("l_orderkey")).as("sum_key"),
-        dsum(col("l_quantity")).as("sum_qty"),
-        min(col("l_quantity")).as("min_qty"),
-        max(col("l_quantity")).as("max_qty"))
-  }
-
-  val ncScaleOffsetSql: String =
-    """SELECT COUNT(*) AS n, CAST(SUM(l_orderkey) AS BIGINT) AS sum_key,
-      |  CAST(SUM(CAST(l_quantity AS DECIMAL(9,2))) AS DOUBLE) AS sum_qty,
-      |  MIN(l_quantity) AS min_qty, MAX(l_quantity) AS max_qty
-      |FROM lineitem""".stripMargin
-
-  /** MFDataset-style multi-file union: two shard dirs (even/odd order
-    * keys, each written sorted) presented as ONE dataset along a
-    * contiguous record dimension via [[NcIO.multifile]] — offsets from
-    * header metadata only. The record-ordinal-weighted decimal sum
-    * proves every record of every shard landed at exactly its re-based
-    * index. */
-  def ncMultifileUnion: Q = (s, dir) => {
-    val outA = scratch(s, dir, "mfa")
-    val outB = scratch(s, dir, "mfb")
-    val li = t(s, dir, "lineitem")
-      .select(col("l_orderkey"), col("l_linenumber").cast(LongType).as("l_linenumber"),
-        col("l_quantity"))
-    stageOnce(outA)(NcIO.write(li.filter(col("l_orderkey") % 2 === 0).repartition(1)
-      .sortWithinPartitions("l_orderkey", "l_linenumber"), outA))
-    stageOnce(outB)(NcIO.write(li.filter(col("l_orderkey") % 2 === 1).repartition(1)
-      .sortWithinPartitions("l_orderkey", "l_linenumber"), outB))
-    NcIO.multifile(s, NetCDF3, Seq(outA, outB))
-      .agg(count(lit(1)).as("n"),
-        max(col("record")).as("max_record"),
-        sum(col("record").cast(DecimalType(18, 0)) * dec(col("l_quantity")))
-          .cast(DoubleType).as("wsum"))
-  }
-
-  val ncMultifileUnionSql: String =
-    """WITH a AS (
-      |  SELECT l_quantity,
-      |    row_number() OVER (ORDER BY l_orderkey, l_linenumber) - 1 AS record
-      |  FROM lineitem WHERE l_orderkey % 2 = 0),
-      |b AS (
-      |  SELECT l_quantity,
-      |    row_number() OVER (ORDER BY l_orderkey, l_linenumber) - 1
-      |      + (SELECT COUNT(*) FROM a) AS record
-      |  FROM lineitem WHERE l_orderkey % 2 = 1),
-      |u AS (SELECT * FROM a UNION ALL SELECT * FROM b)
-      |SELECT COUNT(*) AS n, MAX(record) AS max_record,
-      |  CAST(SUM(CAST(record AS DECIMAL(18,0)) * CAST(l_quantity AS DECIMAL(9,2))) AS DOUBLE) AS wsum
-      |FROM u""".stripMargin
-
-  /** The 100 TB grid-construction path (GridOps.tableToGrid's
-    * scaladoc): when the stream index already EXISTS in the data —
-    * here the netcdf3 source's `record` column — chunked-grid
-    * construction needs NO global sort and NO zipWithIndex count job:
-    * one hash shuffle on chunk_idx, order restored per chunk from the
-    * index itself. Output matches grid_table_to_grid's shape and the
-    * SAME oracle: the sorted write fixes record order = (l_orderkey,
-    * l_linenumber) order. */
-  def gridFromSourceIndex: Q = (s, dir) => {
-    val out = scratch(s, dir, "gridsrc")
-    stageOnce(out)(NcIO.write(
-      t(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_linenumber").cast(LongType).as("l_linenumber"),
-          col("l_quantity"))
-        .repartition(1).sortWithinPartitions("l_orderkey", "l_linenumber"),
-      out))
-    s.read.format(SRC).load(out)
-      .select(col("record"), col("l_quantity").as("v"))
-      .groupBy(expr("record div 512").as("chunk_idx"))
-      .agg(min(col("record")).as("origin"),
-        count(lit(1)).as("shape"),
-        md5(concat_ws(",", graft.functions.NgramExpressions.sorted_vals(collect_list(struct(col("record"),
-            expr("CAST(CAST(v AS INT) AS STRING)"))))))
-          .as("values_hash"),
-        expr("CAST(SUM(CAST(v AS DECIMAL(9,2))) AS DOUBLE)").as("sum_val"))
-      .select(lit("l_quantity").as("variable"), col("chunk_idx"), col("origin"),
-        col("shape"), col("values_hash"), col("sum_val"))
-  }
-
-  val gridFromSourceIndexSql: String =
-    """WITH o AS (SELECT l_quantity AS v,
-      |  row_number() OVER (ORDER BY l_orderkey, l_linenumber) - 1 AS idx
-      |  FROM lineitem)
-      |SELECT 'l_quantity' AS variable, idx // 512 AS chunk_idx,
-      |  MIN(idx) AS origin, COUNT(*) AS shape,
-      |  md5(string_agg(CAST(CAST(v AS INT) AS VARCHAR), ',' ORDER BY idx)) AS values_hash,
-      |  CAST(SUM(CAST(v AS DECIMAL(9,2))) AS DOUBLE) AS sum_val
-      |FROM o GROUP BY idx // 512""".stripMargin
-
   /** Small-file compaction roundtrip: 8 range-ordered small parts (a
     * streaming sink's epoch residue) compacted to 2 large parts via
     * [[NcIO.compact]]; the record-ordinal-weighted checksum proves the
@@ -689,265 +393,6 @@ object NcQueries {
       |SELECT COUNT(*) AS n, MAX(record) AS max_record,
       |  CAST(SUM(CAST(record AS DECIMAL(18,0)) * CAST(v AS DECIMAL(9,2))) AS DOUBLE) AS wsum
       |FROM o""".stripMargin
-
-  /** Strided index selection (xarray `isel(time=slice(lo, hi, step))`
-    * — decimation): the [lo, hi) record-range filter pushes down to
-    * the source's record ranges (part files and chunks wholly outside
-    * never open/decompress), and the stride survives as a map-side
-    * `record % step` — no row ever leaves its partition. When
-    * step ≥ chunk size the modulus could prune whole chunks too;
-    * documented, not special-cased (the range pushdown is what moves
-    * the 100 TB needle). Deterministic record numbering comes from the
-    * same single-writer ordered layout as [[gridFromSourceIndex]]. */
-  def ncIselStride: Q = (s, dir) => {
-    val out = scratch(s, dir, "stride")
-    stageOnce(out)(NcIO.write(
-      t(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_linenumber").cast(LongType).as("l_linenumber"),
-          col("l_quantity"))
-        .repartition(1).sortWithinPartitions("l_orderkey", "l_linenumber"),
-      out))
-    s.read.format(SRC).load(out)
-      .filter(col("record") >= 1000L && col("record") < 9000L &&
-        col("record") % 4 === 0)
-      .agg(count(lit(1)).as("n"),
-        sum(col("record")).as("sum_rec"),
-        dsum(col("l_quantity")).as("sum_qty"),
-        min(col("record")).as("min_rec"),
-        max(col("record")).as("max_rec"))
-  }
-
-  val ncIselStrideSql: String =
-    """WITH o AS (SELECT l_quantity AS v,
-      |  row_number() OVER (ORDER BY l_orderkey, l_linenumber) - 1 AS idx
-      |  FROM lineitem)
-      |SELECT COUNT(*) AS n, CAST(SUM(idx) AS BIGINT) AS sum_rec,
-      |  CAST(SUM(CAST(v AS DECIMAL(9,2))) AS DOUBLE) AS sum_qty,
-      |  MIN(idx) AS min_rec, MAX(idx) AS max_rec
-      |FROM o WHERE idx >= 1000 AND idx < 9000 AND idx % 4 = 0""".stripMargin
-
-  /** CF _FillValue masking (the classic format's missing-data
-    * convention, NUG §"Attribute Conventions"): the writer has no
-    * null encoding — missing values are written AS the declared
-    * `_FillValue` sentinel (NC_FILL_DOUBLE = 9.96920996838869e+36,
-    * the spec default) with the attribute recorded NC_DOUBLE-typed;
-    * the reader fetches the attribute (one header read) and masks
-    * sentinel → null map-side before aggregating. Here "missing" is
-    * every l_quantity = 1.00 record, so the oracle can re-derive the
-    * mask from the original parquet; the gate checks the missing
-    * count AND that masked values stay out of the aggregates. */
-  def ncFillvalueMask: Q = (s, dir) => {
-    val FILL = 9.96920996838869e+36 // NC_FILL_DOUBLE (public NetCDF spec)
-    val out = scratch(s, dir, "fillmask")
-    NcIO.write(
-      t(s, dir, "lineitem")
-        .select(col("l_orderkey"),
-          when(col("l_quantity") === 1.0, lit(FILL))
-            .otherwise(col("l_quantity")).as("l_quantity"))
-        .repartition(2),
-      out,
-      dvatts = Map("l_quantity" -> Seq("_FillValue" -> Array(FILL))))
-    val fill = NcIO.readAttrs(s, NetCDF3, out)
-      .filter(col("var_name") === "l_quantity" && col("attr_name") === "_FillValue")
-      .select("dval").distinct().collect().head.getDouble(0)
-    s.read.format(SRC).load(out)
-      .select(col("l_orderkey"),
-        when(col("l_quantity") === fill, lit(null).cast(DoubleType))
-          .otherwise(col("l_quantity")).as("qty"))
-      .agg(count(lit(1)).as("n"),
-        sum(when(col("qty").isNull, 1L).otherwise(0L)).as("n_missing"),
-        sum(col("l_orderkey")).as("sum_key"),
-        dsum(col("qty")).as("sum_qty"),
-        min(col("qty")).as("min_qty"), max(col("qty")).as("max_qty"))
-  }
-
-  val ncFillvalueMaskSql: String =
-    """SELECT COUNT(*) AS n,
-      |  CAST(SUM(CASE WHEN l_quantity = 1.00 THEN 1 ELSE 0 END) AS BIGINT) AS n_missing,
-      |  CAST(SUM(l_orderkey) AS BIGINT) AS sum_key,
-      |  CAST(SUM(CASE WHEN l_quantity <> 1.00
-      |    THEN CAST(l_quantity AS DECIMAL(9,2)) END) AS DOUBLE) AS sum_qty,
-      |  MIN(CASE WHEN l_quantity <> 1.00 THEN l_quantity END) AS min_qty,
-      |  MAX(CASE WHEN l_quantity <> 1.00 THEN l_quantity END) AS max_qty
-      |FROM lineitem""".stripMargin
-
-  /** CF time-coordinate decode (the "units: hours since <epoch>"
-    * convention every NetCDF time axis uses): the time variable is
-    * written as NUMERIC offsets with its units recorded as a string
-    * attribute, and the READER derives the decode — multiplier parsed
-    * from the attribute, offsets turned back into timestamps map-side
-    * — rather than hard-coding a calendar. The daily rollup over the
-    * decoded axis must match the same rollup over the original
-    * parquet timestamps; both engines apply the identical
-    * divide→round→scale chain, so the decode is bit-deterministic
-    * even where hours-since-epoch is not exactly representable. */
-  def ncTimeDecode: Q = (s, dir) => {
-    val out = scratch(s, dir, "cftime")
-    NcIO.write(
-      graft.Tables.events(s, dir).select(
-        (unix_micros(col("ts")).cast(DoubleType) / lit(3.6e9)).as("time"),
-        col("value")),
-      out,
-      vatts = Map("time" -> Seq("units" -> "hours since 1970-01-01 00:00:00")))
-    val units = NcIO.readAttrs(s, NetCDF3, out)
-      .filter(col("var_name") === "time" && col("attr_name") === "units")
-      .select("sval").distinct().collect().head.getString(0)
-    val multMicros: Long = units.split(" ")(0) match {
-      case "seconds" => 1000000L
-      case "minutes" => 60L * 1000000L
-      case "hours"   => 3600L * 1000000L
-      case "days"    => 86400L * 1000000L
-      case u => throw new IllegalArgumentException(s"unsupported CF unit: $u")
-    }
-    s.read.format(SRC).load(out)
-      .select(timestamp_micros(round(col("time") * multMicros.toDouble, 0)
-        .cast(LongType)).as("ts2"), col("value"))
-      .groupBy(to_date(col("ts2")).as("day"))
-      .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
-  }
-
-  val ncTimeDecodeSql: String =
-    """WITH enc AS (
-      |  SELECT CAST(epoch_us(ts) AS DOUBLE) / 3.6e9 AS time, value FROM events),
-      |dec AS (
-      |  SELECT make_timestamp(CAST(round(time * 3600000000.0, 0) AS BIGINT)) AS ts2,
-      |         value
-      |  FROM enc)
-      |SELECT CAST(ts2 AS DATE) AS day, COUNT(*) AS n,
-      |  CAST(SUM(CAST(value AS DECIMAL(9,2))) AS DOUBLE) AS sum_value
-      |FROM dec GROUP BY 1""".stripMargin
-
-  /** CF CALENDAR-aware time decode (r6) — the attribute pair every
-    * real climate file carries: `units: days since <epoch>` plus
-    * `calendar: standard|noleap|360_day` (CF conventions §4.4; model
-    * output is routinely on the fake calendars, and xarray users'
-    * time axes come from exactly this decode). Three time variables
-    * share the same stored day offsets but each carries its OWN
-    * calendar attribute; the reader fetches (units, calendar) from
-    * the file headers and DISPATCHES the decode per variable:
-    *
-    *  - `standard` → real proleptic-Gregorian date arithmetic;
-    *  - `noleap` (365_day) → fixed 365-day years, month lengths from
-    *    the cumulative-day table — pure integer arithmetic;
-    *  - `360_day` → twelve 30-day months — pure integer arithmetic.
-    *
-    * All decode math is map-side integer expressions (no shuffle
-    * before the final 1-row aggregate); the oracle replays the same
-    * arithmetic in DuckDB, so a single wrong month boundary breaks
-    * the hash. Output is a wide digest row: per calendar, min/max/sum
-    * of the decoded y*10000+m*100+d. */
-  /** CF time decode (units "days since 1970-01-01" + calendar attr)
-    * as one integer-exact yyyymmdd expression per variable — shared by
-    * the netcdf3 and netcdf4 calendar gates, so both containers
-    * dispatch the IDENTICAL per-calendar arithmetic from their own
-    * header metadata. */
-  private[netcdf] def cfYmdExpr(varName: String, a: Map[String, String]): String = {
-      val units = a("units")
-      require(units.startsWith("days since 1970-01-01"),
-        s"unsupported CF epoch in '$units'")
-      val d = s"cast($varName as bigint)"
-      a.getOrElse("calendar", "standard") match {
-        case "standard" | "gregorian" | "proleptic_gregorian" =>
-          s"cast(year(date_add(date'1970-01-01', cast($varName as int))) * 10000 + " +
-            s"month(date_add(date'1970-01-01', cast($varName as int))) * 100 + " +
-            s"day(date_add(date'1970-01-01', cast($varName as int))) as bigint)"
-        // integer calendars use the canonical POSITIVE residue (pmod)
-        // and a floor-division derived from it — `$d - pmod($d, n)` is
-        // exactly divisible by n, so `div` on it is floor-division for
-        // negative (pre-epoch) offsets too, matching the oracle's
-        // identical construction instead of diverging on trunc-vs-floor
-        case "noleap" | "365_day" =>
-          val r = s"pmod($d, 365)"
-          val q = s"(($d - pmod($d, 365)) div 365)"
-          val cum = Seq(0, 31, 59, 90, 120, 151, 181, 212, 243, 273, 304, 334)
-          val month = (1 to 11).map(m =>
-            s"WHEN $r < ${cum(m)} THEN $m").mkString("CASE ", " ", " ELSE 12 END")
-          val mstart = (1 to 11).map(m =>
-            s"WHEN $r < ${cum(m)} THEN ${cum(m - 1)}").mkString("CASE ", " ", " ELSE 334 END")
-          s"(1970 + $q) * 10000 + ($month) * 100 + ($r - ($mstart) + 1)"
-        case "360_day" =>
-          val r = s"pmod($d, 360)"
-          val q = s"(($d - pmod($d, 360)) div 360)"
-          s"(1970 + $q) * 10000 + (1 + $r div 30) * 100 + (1 + $r % 30)"
-        case c => throw new IllegalArgumentException(s"unsupported CF calendar: $c")
-      }
-    }
-
-  def ncTimeCalendar: Q = (s, dir) => {
-    val out = scratch(s, dir, "cfcal")
-    val days = floor(unix_micros(col("ts")).cast(DoubleType) / lit(8.64e10))
-      .cast(DoubleType)
-    NcIO.write(
-      graft.Tables.events(s, dir).select(
-        days.as("time_std"), days.as("time_noleap"), days.as("time_360")),
-      out,
-      vatts = Map(
-        "time_std" -> Seq("units" -> "days since 1970-01-01", "calendar" -> "standard"),
-        "time_noleap" -> Seq("units" -> "days since 1970-01-01", "calendar" -> "noleap"),
-        "time_360" -> Seq("units" -> "days since 1970-01-01", "calendar" -> "360_day")))
-    // header-only metadata read: (var → units/calendar), driving the
-    // per-variable decode dispatch below
-    val attrs = NcIO.readAttrs(s, NetCDF3, out)
-      .filter(col("attr_name").isin("units", "calendar"))
-      .select("var_name", "attr_name", "sval").distinct().collect()
-      .groupBy(_.getString(0))
-      .map { case (v, rows) =>
-        v -> rows.map(r => r.getString(1) -> r.getString(2)).toMap
-      }
-    def decodeExpr(varName: String): String = cfYmdExpr(varName, attrs(varName))
-    s.read.format(SRC).load(out)
-      .selectExpr(
-        s"${decodeExpr("time_std")} as std_ymd",
-        s"${decodeExpr("time_noleap")} as noleap_ymd",
-        s"${decodeExpr("time_360")} as c360_ymd")
-      .agg(
-        count(lit(1)).as("n"),
-        min("std_ymd").as("std_min"), max("std_ymd").as("std_max"),
-        sum("std_ymd").as("std_sum"),
-        min("noleap_ymd").as("noleap_min"), max("noleap_ymd").as("noleap_max"),
-        sum("noleap_ymd").as("noleap_sum"),
-        min("c360_ymd").as("c360_min"), max("c360_ymd").as("c360_max"),
-        sum("c360_ymd").as("c360_sum"))
-  }
-
-  val ncTimeCalendarSql: String = {
-    val cum = Seq(0, 31, 59, 90, 120, 151, 181, 212, 243, 273, 304, 334)
-    val month = (1 to 11).map(m =>
-      s"WHEN r365 < ${cum(m)} THEN $m").mkString("CASE ", " ", " ELSE 12 END")
-    val mstart = (1 to 11).map(m =>
-      s"WHEN r365 < ${cum(m)} THEN ${cum(m - 1)}").mkString("CASE ", " ", " ELSE 334 END")
-    // DuckDB's `%` keeps the dividend's sign and `//` truncates, so the
-    // positive residue is built by hand — ((d % n) + n) % n — and the
-    // floor quotient as (d - r) // n, which is exact division on a
-    // multiple of n. Same construction as the Spark side's pmod + div,
-    // so pre-epoch (negative-offset) days decode identically.
-    s"""WITH enc AS (
-       |  SELECT CAST(FLOOR(CAST(epoch_us(ts) AS DOUBLE) / 8.64e10) AS BIGINT) AS d
-       |  FROM events),
-       |res AS (
-       |  SELECT d,
-       |    ((d % 365) + 365) % 365 AS r365,
-       |    ((d % 360) + 360) % 360 AS r360
-       |  FROM enc),
-       |decoded AS (
-       |  SELECT
-       |    year(DATE '1970-01-01' + CAST(d AS INTEGER)) * 10000 +
-       |      month(DATE '1970-01-01' + CAST(d AS INTEGER)) * 100 +
-       |      day(DATE '1970-01-01' + CAST(d AS INTEGER)) AS std_ymd,
-       |    (1970 + (d - r365) // 365) * 10000 + ($month) * 100 +
-       |      (r365 - ($mstart) + 1) AS noleap_ymd,
-       |    (1970 + (d - r360) // 360) * 10000 + (1 + r360 // 30) * 100 +
-       |      (1 + r360 % 30) AS c360_ymd
-       |  FROM res)
-       |SELECT COUNT(*) AS n,
-       |  CAST(MIN(std_ymd) AS BIGINT) AS std_min, CAST(MAX(std_ymd) AS BIGINT) AS std_max,
-       |  CAST(SUM(std_ymd) AS BIGINT) AS std_sum,
-       |  CAST(MIN(noleap_ymd) AS BIGINT) AS noleap_min, CAST(MAX(noleap_ymd) AS BIGINT) AS noleap_max,
-       |  CAST(SUM(noleap_ymd) AS BIGINT) AS noleap_sum,
-       |  CAST(MIN(c360_ymd) AS BIGINT) AS c360_min, CAST(MAX(c360_ymd) AS BIGINT) AS c360_max,
-       |  CAST(SUM(c360_ymd) AS BIGINT) AS c360_sum
-       |FROM decoded""".stripMargin
-  }
 
   /** netCDF4 GROUP hierarchy (`createGroup`/`groups[...]` parity) over
     * the flat classic namespace: variables carry path names
@@ -986,55 +431,55 @@ object NcQueries {
 
   val queries: Map[String, Q] = Map(
     "nc_groups" -> ncGroups,
-    "nc_time_decode" -> ncTimeDecode,
-    "nc_fillvalue_mask" -> ncFillvalueMask,
-    "nc_isel_stride" -> ncIselStride,
-    "nc_scale_offset" -> ncScaleOffset,
-    "nc_multifile_union" -> ncMultifileUnion,
+    "nc_time_decode" -> timeDecode,
+    "nc_fillvalue_mask" -> fillvalueMask,
+    "nc_isel_stride" -> iselStride(Map.empty),
+    "nc_scale_offset" -> scaleOffset,
+    "nc_multifile_union" -> multifileUnion(Map.empty, Map.empty),
     "nc_compact" -> ncCompact,
-    "grid_from_source_index" -> gridFromSourceIndex,
-    "nc_write_read_roundtrip" -> ncWriteReadRoundtrip,
-    "nc_read_prune" -> ncReadPrune,
+    "grid_from_source_index" -> gridFromIndex(Map.empty),
+    "nc_write_read_roundtrip" -> roundtrip,
+    "nc_read_prune" -> readPrune(Map.empty),
     "nc_ndarray_roundtrip" -> ncNdarrayRoundtrip,
     "nc_string_roundtrip" -> ncStringRoundtrip,
     "nc_attrs_roundtrip" -> ncAttrsRoundtrip,
     "nc_global_attrs" -> ncGlobalAttrs,
     "nc_fixed_roundtrip" -> ncFixedRoundtrip,
     "nc_gzip_roundtrip" -> ncGzipRoundtrip,
-    "nc_sorted_skip" -> ncSortedSkip,
+    "nc_sorted_skip" -> sortedSkip(Map.empty),
     "nc_dsv2_write_roundtrip" -> ncDsv2WriteRoundtrip,
     "nc_append_roundtrip" -> ncAppendRoundtrip,
     "nc_ncz_roundtrip" -> ncNczRoundtrip,
     "nc_var_codec" -> ncVarCodec,
-    "nc_time_calendar" -> ncTimeCalendar,
-    "stream_nc_ingest" -> streamNcIngest,
-    "stream_nc_sink" -> streamNcSink,
+    "nc_time_calendar" -> timeCalendar,
+    "stream_nc_ingest" -> streamIngest,
+    "stream_nc_sink" -> streamSink,
     "stream_compact_auto" -> streamCompactAuto)
 
   val oracles: Map[String, String] = Map(
     "nc_groups" -> ncGroupsSql,
-    "nc_time_decode" -> ncTimeDecodeSql,
-    "nc_fillvalue_mask" -> ncFillvalueMaskSql,
-    "nc_isel_stride" -> ncIselStrideSql,
-    "nc_scale_offset" -> ncScaleOffsetSql,
-    "nc_multifile_union" -> ncMultifileUnionSql,
+    "nc_time_decode" -> timeDecodeSql,
+    "nc_fillvalue_mask" -> fillvalueMaskSql,
+    "nc_isel_stride" -> iselStrideSql,
+    "nc_scale_offset" -> scaleOffsetSql,
+    "nc_multifile_union" -> multifileUnionSql,
     "nc_compact" -> ncCompactSql,
-    "grid_from_source_index" -> gridFromSourceIndexSql,
-    "nc_write_read_roundtrip" -> ncWriteReadRoundtripSql,
-    "nc_read_prune" -> ncReadPruneSql,
+    "grid_from_source_index" -> gridFromIndexSql,
+    "nc_write_read_roundtrip" -> roundtripSql,
+    "nc_read_prune" -> readPruneSql,
     "nc_ndarray_roundtrip" -> ncNdarrayRoundtripSql,
     "nc_string_roundtrip" -> ncStringRoundtripSql,
     "nc_attrs_roundtrip" -> ncAttrsRoundtripSql,
     "nc_global_attrs" -> ncGlobalAttrsSql,
     "nc_fixed_roundtrip" -> ncFixedRoundtripSql,
     "nc_gzip_roundtrip" -> ncGzipRoundtripSql,
-    "nc_sorted_skip" -> ncSortedSkipSql,
+    "nc_sorted_skip" -> sortedSkipSql,
     "nc_dsv2_write_roundtrip" -> ncDsv2WriteRoundtripSql,
     "nc_append_roundtrip" -> ncAppendRoundtripSql,
     "nc_ncz_roundtrip" -> ncNczRoundtripSql,
     "nc_var_codec" -> ncVarCodecSql,
-    "nc_time_calendar" -> ncTimeCalendarSql,
-    "stream_nc_ingest" -> streamNcIngestSql,
-    "stream_nc_sink" -> streamNcSinkSql,
+    "nc_time_calendar" -> timeCalendarSql,
+    "stream_nc_ingest" -> streamIngestSql,
+    "stream_nc_sink" -> streamSinkSql,
     "stream_compact_auto" -> streamCompactAutoSql)
 }

@@ -6,11 +6,16 @@ import org.apache.spark.sql.connector.write.{DataWriter, WriterCommitMessage}
 import org.apache.spark.sql.types._
 
 private[netcdf] object NcWriteConf {
-  /** Parse `arrayLens` option: `col=len,col=len`. */
+  /** Parse `arrayLens` option: `col=len,col=len`. An entry that is
+    * not `name=<whole number>` throws, naming the option and entry. */
   def arrayLens(options: Map[String, String]): Map[String, Int] =
     options.get("arraylens").map(_.split(",").filter(_.nonEmpty).map { kv =>
-      val Array(c, n) = kv.split("=", 2)
-      c.trim -> n.trim.toInt
+      kv.split("=", 2) match {
+        case Array(c, n) if c.trim.nonEmpty && n.trim.toIntOption.exists(_ >= 0) =>
+          c.trim -> n.trim.toInt
+        case _ => throw new IllegalArgumentException(
+          s"arrayLens entry '$kv' is not col=len (a whole-number length)")
+      }
     }.toMap).getOrElse(Map.empty)
 }
 
@@ -35,11 +40,9 @@ private[netcdf] case class NcFileCommitted(name: String, records: Long)
 private[netcdf] class NcDataWriter(schema: StructType, dir: String, baseName: String,
     options: Map[String, String], serConf: SerializableHadoopConf,
     arrayLens: Map[String, Int] = Map.empty,
-    gatts: Seq[(String, String)] = Nil,
-    vatts: Map[String, Seq[(String, String)]] = Map.empty,
+    globalAttrs: Seq[Attr] = Nil,
+    varAttrs: Map[String, Seq[Attr]] = Map.empty,
     fixedVars: Seq[(String, Array[Double])] = Nil,
-    dvatts: Map[String, Seq[(String, Array[Double])]] = Map.empty,
-    dgatts: Seq[(String, Array[Double])] = Nil,
     varChunkBytes: Map[String, Int] = Map.empty,
     varCodecs: Map[String, String] = Map.empty)
     extends DataWriter[InternalRow] {
@@ -81,8 +84,15 @@ private[netcdf] class NcDataWriter(schema: StructType, dir: String, baseName: St
         f.name -> first.getArray(i).numElements()
     }
     local = java.io.File.createTempFile(baseName, ".nc")
+    // the header lists each variable's text attributes in caller
+    // order, then its numeric ones
+    def texts(as: Seq[Attr]) = as.collect { case Attr(n, Some(t), _) => n -> t }
+    def doubles(as: Seq[Attr]) = as.collect { case Attr(n, None, v) => n -> v }
+    def perVar[T](split: Seq[Attr] => Seq[T]) =
+      varAttrs.map { case (v, as) => v -> split(as) }.filter(_._2.nonEmpty)
     writer = new NcFormat.Writer(local.getPath, schema, chunkBytes, lens, stringWidth,
-      gatts, vatts, fixedVars, compressChunks, dvatts, dgatts, varChunkBytes, varCodecs)
+      texts(globalAttrs), perVar(texts), fixedVars, compressChunks, perVar(doubles),
+      doubles(globalAttrs), varChunkBytes, varCodecs)
   }
 
   override def write(record: InternalRow): Unit = {

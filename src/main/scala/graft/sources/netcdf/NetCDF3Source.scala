@@ -59,8 +59,9 @@ object NetCDF3 extends ChunkedContainer {
       "choose one of compress (.nc.gz) or compressChunks (.ncz)")
 
   def dataWriter(schema: StructType, dir: String, baseName: String,
-      options: Map[String, String], serConf: SerializableHadoopConf): DataWriter[InternalRow] =
-    new NcDataWriter(schema, dir, baseName, options, serConf)
+      options: Map[String, String], serConf: SerializableHadoopConf,
+      varAttrs: Map[String, Seq[Attr]]): DataWriter[InternalRow] =
+    new NcDataWriter(schema, dir, baseName, options, serConf, varAttrs = varAttrs)
 }
 
 /** Every netcdf3 schema type decodes straight into column vectors —

@@ -64,8 +64,9 @@ object NetCDF4 extends ChunkedContainer {
     new Nc4ReaderFactory(required, serConf)
 
   def dataWriter(schema: StructType, dir: String, baseName: String,
-      options: Map[String, String], serConf: SerializableHadoopConf): DataWriter[InternalRow] =
-    new Nc4DataWriter(schema, dir, baseName, options, serConf)
+      options: Map[String, String], serConf: SerializableHadoopConf,
+      varAttrs: Map[String, Seq[Attr]]): DataWriter[InternalRow] =
+    new Nc4DataWriter(schema, dir, baseName, options, serConf, varAttrs = varAttrs)
 }
 
 class Nc4ReaderFactory(required: StructType, serConf: SerializableHadoopConf)

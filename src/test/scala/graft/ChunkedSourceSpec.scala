@@ -69,6 +69,19 @@ class ChunkedSourceSpec extends AnyFunSuite with TimeLimits {
         .rdd.getNumPartitions == 3)
     }
 
+    test(s"$fmt: a malformed arrayLens entry fails on the caller's thread, naming it") {
+      val dir = s"/tmp/graft_chunked_spec/$fmt/arraylens"
+      val df = spark.range(4).select(array(col("id").cast("double"), lit(1.0)).as("v"))
+      // a task used to die on it: MatchError (no '=') or NumberFormatException
+      for (bad <- Seq("v", "v=x")) {
+        val e = intercept[IllegalArgumentException] {
+          df.write.format(fmt).mode("overwrite").option("arrayLens", bad).save(dir)
+        }
+        assert(e.getMessage.contains("arrayLens") && e.getMessage.contains(s"'$bad'"),
+          e.getMessage)
+      }
+    }
+
     test(s"$fmt: maxFilesPerTrigger must be a positive whole number") {
       val dir = s"/tmp/graft_chunked_spec/$fmt/opts"
       li.limit(100).repartition(1).write.format(fmt).mode("overwrite").save(dir)

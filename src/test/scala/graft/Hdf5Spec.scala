@@ -1215,4 +1215,16 @@ class Hdf5Spec extends AnyFunSuite {
     val back = spark.read.format(SRC).load(dir).select("x").collect().map(_.getDouble(0))
     assert(back.sorted.toSeq == (0 until 5).map(_.toDouble))
   }
+
+  test("Hdf5IO.write takes a declared length for an array column whose name holds commas") {
+    val dir = "/tmp/graft_h5/typed_array_name"
+    // unaliased, the array column is named "array(CAST(id AS DOUBLE), 1.0)"
+    val df = spark.range(4).select(array(col("id").cast("double"), lit(1.0)))
+    val name = df.columns.head
+    Hdf5IO.write(df.repartition(2), dir, arrayLens = Map(name -> 2))
+    val back = spark.read.format(SRC).load(dir)
+    assert(back.columns.toSeq == Seq("record", name))
+    assert(back.select(col(s"`$name`")(0)).collect().map(_.getDouble(0)).sorted.toSeq ==
+      Seq(0.0, 1.0, 2.0, 3.0))
+  }
 }

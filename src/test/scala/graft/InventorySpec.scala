@@ -23,6 +23,26 @@ class InventorySpec extends AnyFunSuite {
     assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
   }
 
+  test("each nc/nc4 twin pair is registered and shares one oracle") {
+    val twins = Seq(
+      "nc_write_read_roundtrip" -> "nc4_read_roundtrip",
+      "nc_read_prune" -> "nc4_read_prune",
+      "nc_sorted_skip" -> "nc4_sorted_skip",
+      "nc_isel_stride" -> "nc4_isel_stride",
+      "nc_multifile_union" -> "nc4_multifile_union",
+      "grid_from_source_index" -> "grid_from_nc4_index",
+      "nc_scale_offset" -> "nc4_scale_offset",
+      "nc_fillvalue_mask" -> "nc4_fillvalue_mask",
+      "nc_time_decode" -> "nc4_time_decode",
+      "nc_time_calendar" -> "nc4_time_calendar",
+      "stream_nc_ingest" -> "nc4_stream_ingest",
+      "stream_nc_sink" -> "stream_nc4_sink")
+    for ((nc, nc4) <- twins) {
+      assert(SparkEntry.queries.contains(nc) && SparkEntry.queries.contains(nc4), (nc, nc4))
+      assert(SparkEntry.oracleSql(nc) == SparkEntry.oracleSql(nc4), (nc, nc4))
+    }
+  }
+
   test("inventory matches SURVEY §2 keys (set equality, both directions)") {
     val survey = scala.io.Source.fromFile("/root/repo/SURVEY.md", "UTF-8").mkString
     val keyRe = """\| `([a-z0-9_]+)` \|""".r

@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.netcdf.{NcFormat, NcIO}
+import graft.sources.netcdf.{Attr, NcFormat, NcIO}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.Row
@@ -126,8 +126,9 @@ class NcFormatSpec extends AnyFunSuite {
     NcIO.write(
       spark.range(20).select(col("id").cast("double").as("x")).repartition(2),
       dir,
-      gatts = Seq("title" -> "unit test", "history" -> "written by NcFormatSpec"),
-      vatts = Map("x" -> Seq("units" -> "m/s", "long_name" -> "speed")))
+      globalAttrs = Seq(Attr.text("title", "unit test"),
+        Attr.text("history", "written by NcFormatSpec")),
+      varAttrs = Map("x" -> Seq(Attr.text("units", "m/s"), Attr.text("long_name", "speed"))))
     val files = graft.sources.netcdf.NetCDF3.listFiles(fs, new Path(dir))
     val metas = files.map(NcFormat.readMeta(fs, _))
     metas.foreach { m =>

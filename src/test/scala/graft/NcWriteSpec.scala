@@ -93,14 +93,13 @@ class NcWriteSpec extends AnyFunSuite {
   }
 
   test("typed NC_DOUBLE attributes roundtrip through the header") {
-    import graft.sources.netcdf.{NcIO, NetCDF3}
+    import graft.sources.netcdf.{Attr, NcIO, NetCDF3}
     val dir = "/tmp/graft_nc_spec/dvatts"
     NcIO.write(
       spark.range(0, 10).select(col("id").cast("double").as("x")).repartition(1),
       dir,
-      vatts = Map("x" -> Seq("units" -> "kelvin")),
-      dvatts = Map("x" -> Seq("scale_factor" -> Array(0.5),
-        "valid_range" -> Array(-1.0, 99.5))))
+      varAttrs = Map("x" -> Seq(Attr.text("units", "kelvin"), Attr.nums("scale_factor", 0.5),
+        Attr.nums("valid_range", -1.0, 99.5))))
     val attrs = NcIO.readAttrs(spark, dir)
       .filter(col("var_name") === "x").collect()
       .map(r => (r.getString(2), r.getLong(3)) ->

@@ -46,4 +46,16 @@ class SessionSpec extends AnyFunSuite {
     }
     assert(setters.map(_.getName) == Seq("Session.scala"), setters)
   }
+
+  test("src/main/scala holds exactly 7 mains") {
+    def files(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(files) else Seq(f)
+    val mains = files(new java.io.File("src/main/scala")).filter(_.getName.endsWith(".scala"))
+      .map { f =>
+        val src = scala.io.Source.fromFile(f, "UTF-8")
+        try f.getName -> """def main\(""".r.findAllMatchIn(src.mkString).size finally src.close()
+      }
+      .filter(_._2 > 0)
+    assert(mains.map(_._2).sum == 7, mains)
+  }
 }

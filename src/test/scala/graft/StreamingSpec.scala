@@ -97,8 +97,8 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("stream_nc_ingest query is rerunnable in one session (bench runs it twice)") {
-    val r1 = graft.sources.netcdf.NcQueries.streamNcIngest(spark, sf).collect()
-    val r2 = graft.sources.netcdf.NcQueries.streamNcIngest(spark, sf).collect()
+    val r1 = graft.sources.netcdf.NcQueries.queries("stream_nc_ingest")(spark, sf).collect()
+    val r2 = graft.sources.netcdf.NcQueries.queries("stream_nc_ingest")(spark, sf).collect()
     assert(r1.sameElements(r2))
     assert(r1.head.getLong(0) > 0)
   }
