@@ -401,7 +401,9 @@ object NgramExpressions {
     * call site satisfies it): first fields are non-null and DISTINCT
     * within the array — with distinct keys `array_sort`'s struct
     * ordering never reaches the second field, so key-sort ≡
-    * struct-sort. */
+    * struct-sort. A duplicate key breaks that equivalence (the key
+    * sort keeps input order where the struct sort orders by value), so
+    * it throws instead of returning a silently different array. */
   def sortedValsArr(arr: ArrayData, keyKind: Int, valType: DataType): ArrayData = {
     val sz = arr.numElements()
     val lkeys = if (keyKind <= 1) new Array[Long](sz) else null
@@ -429,6 +431,15 @@ object NgramExpressions {
           java.lang.Long.compare(lkeys(a), lkeys(b))
       }
     java.util.Arrays.sort(idx, cmp)
+    i = 1
+    while (i < sz) {
+      if (cmp.compare(idx(i - 1), idx(i)) == 0) {
+        val k = if (keyKind == 2) skeys(idx(i)).toString else lkeys(idx(i)).toString
+        throw new IllegalArgumentException(
+          s"sorted_vals: duplicate key $k — keys must be distinct within the array")
+      }
+      i += 1
+    }
     val out = new Array[Any](sz)
     i = 0
     while (i < sz) { out(i) = vals(idx(i)); i += 1 }

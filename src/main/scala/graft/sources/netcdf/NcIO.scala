@@ -38,7 +38,7 @@ object NcIO {
         * partition per file), so pair `compress` with enough write
         * partitions to keep read parallelism. */
       compress: Boolean = false,
-      /** per-chunk compression (.ncz): deflate-compressed record
+      /** per-chunk compression (.ncz): shuffle+deflate-4 record
         * blocks behind an uncompressed classic header + block index —
         * keeps the file SPLITTABLE and record-range/zone-map pruning
         * intact (the NetCDF4/HDF5 chunked-storage model). Prefer this
@@ -48,7 +48,7 @@ object NcIO {
         * netCDF4's `createVariable(chunksizes=)`; unnamed variables
         * inherit `chunkBytes`. Non-empty ⇒ var-major .ncz v2 layout. */
       varChunkBytes: Map[String, Int] = Map.empty,
-      /** per-variable codec for the .ncz sink ("store" | "deflate") —
+      /** per-variable codec for the .ncz sink ("store" | "deflate" | "zstd") —
         * netCDF4's `createVariable(zlib=)`. "store" skips the Deflater
         * entirely for high-entropy columns. */
       varCodecs: Map[String, String] = Map.empty): Unit = {

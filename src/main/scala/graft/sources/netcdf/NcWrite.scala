@@ -32,7 +32,7 @@ private[netcdf] case class NcFileCommitted(name: String, records: Long)
   * [[ChunkedWrite.land]].
   *
   * Options: `chunkBytes`, `stringWidth`, `compress` (gzip part files),
-  * `compressChunks` (per-chunk deflate, `.ncz`), `arrayLens`. The
+  * `compressChunks` (per-chunk shuffle+deflate, `.ncz`), `arrayLens`. The
   * typed metadata of [[NcIO.write]] (its driver-inferred array
   * lengths, attributes, fixed variables, per-variable block sizes and
   * codecs) arrives as constructor arguments: column and attribute
@@ -53,29 +53,30 @@ private[netcdf] class NcDataWriter(schema: StructType, dir: String, baseName: St
   private val compressChunks = options.get("compresschunks").exists(_.toBoolean)
   private val declaredLens = NcWriteConf.arrayLens(options) ++ arrayLens
   private val nFields = schema.size
-  private val getters: Array[InternalRow => Any] =
+  private var local: java.io.File = null
+  private var writer: NcFormat.Writer = null
+  /** one typed put per column, bound once: no boxing per value */
+  private val colWriters: Array[InternalRow => Unit] =
     schema.fields.zipWithIndex.map { case (f, i) =>
       f.dataType match {
-        case DoubleType => (r: InternalRow) => r.getDouble(i)
-        case FloatType => (r: InternalRow) => r.getFloat(i)
-        case IntegerType => (r: InternalRow) => r.getInt(i)
-        case LongType => (r: InternalRow) => r.getLong(i)
-        case ShortType => (r: InternalRow) => r.getShort(i)
-        case ByteType => (r: InternalRow) => r.getByte(i)
-        case StringType => (r: InternalRow) => r.getUTF8String(i).getBytes
-        case ArrayType(DoubleType, _) => (r: InternalRow) =>
-          r.getArray(i).toDoubleArray.asInstanceOf[Array[_]]
-        case ArrayType(FloatType, _) => (r: InternalRow) =>
-          r.getArray(i).toFloatArray.asInstanceOf[Array[_]]
-        case ArrayType(IntegerType, _) => (r: InternalRow) =>
-          r.getArray(i).toIntArray.asInstanceOf[Array[_]]
-        case ArrayType(LongType, _) => (r: InternalRow) =>
-          r.getArray(i).toLongArray.asInstanceOf[Array[_]]
+        case DoubleType => (r: InternalRow) => writer.putDouble(i, r.getDouble(i))
+        case FloatType => (r: InternalRow) => writer.putFloat(i, r.getFloat(i))
+        case IntegerType => (r: InternalRow) => writer.putInt(i, r.getInt(i))
+        case LongType => (r: InternalRow) => writer.putLong(i, r.getLong(i))
+        case ShortType => (r: InternalRow) => writer.putShort(i, r.getShort(i))
+        case ByteType => (r: InternalRow) => writer.putByte(i, r.getByte(i))
+        case StringType => (r: InternalRow) => writer.putString(i, r.getUTF8String(i).getBytes)
+        case ArrayType(DoubleType, _) =>
+          (r: InternalRow) => writer.putDoubles(i, r.getArray(i).toDoubleArray)
+        case ArrayType(FloatType, _) =>
+          (r: InternalRow) => writer.putFloats(i, r.getArray(i).toFloatArray)
+        case ArrayType(IntegerType, _) =>
+          (r: InternalRow) => writer.putInts(i, r.getArray(i).toIntArray)
+        case ArrayType(LongType, _) =>
+          (r: InternalRow) => writer.putLongs(i, r.getArray(i).toLongArray)
         case other => throw new IllegalArgumentException(s"unsupported $other")
       }
     }
-  private var local: java.io.File = null
-  private var writer: NcFormat.Writer = null
   private var nRecs = 0L
 
   private def open(first: InternalRow): Unit = {
@@ -106,7 +107,9 @@ private[netcdf] class NcDataWriter(schema: StructType, dir: String, baseName: St
           "null encoding — fill or filter nulls before writing")
       i += 1
     }
-    writer.writeRow(i => getters(i)(record))
+    i = 0
+    while (i < nFields) { colWriters(i)(record); i += 1 }
+    writer.endRow()
     nRecs += 1
   }
 
@@ -138,6 +141,10 @@ private[netcdf] class NcDataWriter(schema: StructType, dir: String, baseName: St
     NcFileCommitted(baseName, nRecs)
   }
 
-  override def abort(): Unit = if (local != null) local.delete()
+  // close the spool's stream (and the writer's Deflater) before the
+  // delete, or the open descriptor keeps the deleted file's blocks
+  override def abort(): Unit =
+    try if (writer != null) writer.discard()
+    finally if (local != null) local.delete()
   override def close(): Unit = ()
 }

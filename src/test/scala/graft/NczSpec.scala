@@ -1,6 +1,9 @@
 package graft
 
-import graft.sources.netcdf.NcIO
+import java.io.{DataOutputStream, File, FileOutputStream}
+import java.nio.file.{Files, Paths}
+
+import graft.sources.netcdf.{Hdf5Format, NcFormat, NcIO}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -131,5 +134,201 @@ class NczSpec extends AnyFunSuite {
       .find(_.getName.endsWith(".ncz")).get
     assert(NcFormat.readNczIndex(fs, part2).blocks.exists(_._2 > 0),
       "compressible lineitem blocks should still deflate")
+  }
+
+  // ------------------------------------------------------------------
+  // GRF3 (shuffle4+deflate-4 blocks) and the legacy GRFZ layout
+  // ------------------------------------------------------------------
+
+  private def fsOf(d: String) = new Path(d).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def partOf(d: String, ext: String): Path =
+    fsOf(d).listStatus(new Path(d)).map(_.getPath).find(_.getName.endsWith(ext)).get
+
+  /** The GRFZ (.ncz v1) encoding of a plain `.nc` file, as the writer
+    * produced it before GRF3: the same header, then `chunkBytes /
+    * recSize` whole records per block, each deflated unshuffled by a
+    * default `java.util.zip.Deflater` — or stored raw (negative length)
+    * when that does not shrink it, or when `storeLast` forces the tail
+    * block raw — then the v1 footer. */
+  private def legacyNcz(plain: Path, out: File, chunkBytes: Int, storeLast: Boolean): Unit = {
+    val meta = NcFormat.readMeta(fsOf(plain.toString), plain)
+    val bytes = Files.readAllBytes(Paths.get(plain.toUri.getPath))
+    val dataStart = meta.recordVars.map(_.begin).min.toInt
+    val recSize = meta.recSize.toInt
+    val rpb = math.max(1, chunkBytes / recSize)
+    val o = new DataOutputStream(new FileOutputStream(out))
+    try {
+      o.write(bytes, 0, dataStart)
+      var pos = dataStart.toLong
+      val index = scala.collection.mutable.ArrayBuffer.empty[(Long, Int, Int)]
+      var r = 0
+      while (r < meta.numRecs) {
+        val n = math.min(rpb.toLong, meta.numRecs - r).toInt
+        val raw = java.util.Arrays.copyOfRange(bytes, dataStart + r * recSize,
+          dataStart + (r + n) * recSize)
+        val d = new java.util.zip.Deflater()
+        d.setInput(raw); d.finish()
+        val comp = new java.io.ByteArrayOutputStream()
+        val tmp = new Array[Byte](1 << 16)
+        while (!d.finished()) comp.write(tmp, 0, d.deflate(tmp))
+        d.end()
+        val last = r + n == meta.numRecs
+        if (comp.size() < raw.length && !(storeLast && last)) {
+          o.write(comp.toByteArray); index += ((pos, comp.size(), n)); pos += comp.size()
+        } else {
+          o.write(raw); index += ((pos, -raw.length, n)); pos += raw.length
+        }
+        r += n
+      }
+      o.writeInt(index.size)
+      o.writeLong(rpb.toLong)
+      index.foreach { case (off, clen, k) => o.writeLong(off); o.writeInt(clen); o.writeInt(k) }
+      o.writeLong(pos)
+      o.writeInt(NcFormat.NCZ_MAGIC)
+    } finally o.close()
+  }
+
+  private def mixed = spark.range(0, 3000).selectExpr("id",
+    "CAST(id * 0.37 AS DOUBLE) AS d", "CAST(sin(id) AS FLOAT) AS f",
+    "CAST(id % 7 AS INT) AS i", "CAST(id % 5 - 2 AS SHORT) AS h",
+    "array(CAST(id AS FLOAT), CAST(id / 3 AS FLOAT), CAST(-id AS FLOAT)) AS a",
+    "concat('s', CAST(id AS STRING)) AS s")
+
+  /** Every value of a netcdf3 read, floats and doubles as raw bits. */
+  private def bits(d: String): Seq[Seq[Any]] =
+    spark.read.format("netcdf3").load(d).orderBy("record").collect().toSeq.map(_.toSeq.map {
+      case x: Double => java.lang.Double.doubleToRawLongBits(x)
+      case x: Float => java.lang.Float.floatToRawIntBits(x)
+      case xs: scala.collection.Seq[_] => xs.map {
+        case x: Float => java.lang.Float.floatToRawIntBits(x)
+        case x => x
+      }
+      case x => x
+    })
+
+  test("shuffle4 is the 4-byte HDF5 shuffle, tail verbatim") {
+    val rnd = new scala.util.Random(7)
+    Seq(0, 1, 3, 4, 5, 15, 16, 17, 19, 64, 67, 4099).foreach { n =>
+      val src = Array.fill(n)(rnd.nextInt(256).toByte)
+      val shuf = new Array[Byte](n)
+      NcFormat.shuffle4(src, shuf, n)
+      assert(shuf.sameElements(Hdf5Format.shuffleBytes(src, 4)), s"len $n")
+    }
+  }
+
+  test("a shuffled block wider than the reader's inflate window, with a sub-word tail, reads back") {
+    import org.apache.spark.sql.types._
+    // one short column: 2-byte records, so 100001 records make a
+    // 200002-byte block — four 64 KiB inflate pieces and a 2-byte tail
+    val n = 100001
+    val path = "/tmp/graft_nc_spec/ncz_wide_block.ncz"
+    val w = new NcFormat.Writer(path, StructType(Seq(StructField("s", ShortType))),
+      chunkBytes = 1 << 20, compressChunks = true)
+    (0 until n).foreach(r => w.writeRow(_ => ((r * 7919) % 65536 - 32768).toShort))
+    w.close()
+    val p = new Path(path)
+    val fs = fsOf(path)
+    val idx = NcFormat.readNczAny(fs, p).left.toOption.get
+    assert(idx.codec == NcFormat.CODEC_SHUFFLE4_DEFLATE && idx.blocks.length == 1 &&
+      idx.blocks(0)._2 > 0)
+    val rd = new NcFormat.RangeReader(fs, p, NcFormat.readMeta(fs, p), 0L, n.toLong, Seq("s"))
+    try {
+      assert(rd.loadChunk() == n)
+      (0 until n).foreach(r => assert(rd.getShortAt(0, r) == ((r * 7919) % 65536 - 32768).toShort,
+        s"record $r"))
+    } finally rd.close()
+  }
+
+  test("GRFZ files written before the shuffle codec read back bit-exact") {
+    val plain = "/tmp/graft_nc_spec/grfz_plain"
+    val legacy = "/tmp/graft_nc_spec/grfz_legacy"
+    NcIO.write(mixed.repartition(1), plain, chunkBytes = 4096)
+    new File(legacy).mkdirs()
+    new File(legacy).listFiles().foreach(_.delete())
+    legacyNcz(partOf(plain, ".nc"), new File(legacy, "part-00000.ncz"), 4096, storeLast = true)
+    val idx = NcFormat.readNczAny(fsOf(legacy), partOf(legacy, ".ncz")).left.toOption.get
+    assert(idx.codec == NcFormat.CODEC_DEFLATE && idx.blocks.length > 3)
+    assert(idx.blocks.init.forall(_._2 > 0) && idx.blocks.last._2 < 0)
+    val back = bits(legacy)
+    assert(back.size == 3000)
+    assert(back == bits(plain))
+    // and a record-range slice seeks into the legacy blocks
+    assert(spark.read.format("netcdf3").load(legacy)
+      .filter(col("record") >= 1234L && col("record") < 1300L)
+      .agg(sum("id")).head().getLong(0) == (1234L until 1300L).sum)
+  }
+
+  test("the default .ncz footer carries codec 3 and stores no more than GRFZ") {
+    val plain = "/tmp/graft_nc_spec/grf3_plain"
+    val ncz = "/tmp/graft_nc_spec/grf3_ncz"
+    val legacy = "/tmp/graft_nc_spec/grf3_legacy"
+    // the gridded float variable the codec is for: a 16x16 field of
+    // quantised values (a slow ramp plus bounded noise, in 1/64 steps)
+    // with a time and a station per record, 5000 records (two blocks)
+    val rows = spark.range(0, 5000, 1, 1).selectExpr(
+      "transform(sequence(0, 255), j -> CAST((16 * ((CAST(id DIV 64 AS INT) + j DIV 16 + j % 16) % 256)" +
+        " + pmod(hash(id, j), 256) - 128) / 64.0 AS FLOAT)) AS field",
+      "CAST(id AS DOUBLE) * 0.25D AS time", "CAST(pmod(hash(id), 1000) AS INT) AS station")
+    NcIO.write(rows, plain)
+    NcIO.write(rows, ncz, compressChunks = true)
+    new File(legacy).mkdirs()
+    new File(legacy).listFiles().foreach(_.delete())
+    legacyNcz(partOf(plain, ".nc"), new File(legacy, "part-00000.ncz"), 4 << 20,
+      storeLast = false)
+    val part = partOf(ncz, ".ncz")
+    val idx = NcFormat.readNczAny(fsOf(ncz), part).left.toOption.get
+    assert(idx.codec == NcFormat.CODEC_SHUFFLE4_DEFLATE && idx.blocks.length == 2)
+    val fs = fsOf(ncz)
+    val stored = fs.getFileStatus(part).getLen
+    val grfz = fs.getFileStatus(partOf(legacy, ".ncz")).getLen
+    assert(stored <= grfz, s"GRF3 $stored bytes > GRFZ $grfz bytes")
+    assert(bits(ncz) == bits(plain))
+  }
+
+  test("an unknown codec byte raises an IOException naming file, variable, block and codec") {
+    val dir = "/tmp/graft_nc_spec/ncz_bad_codec"
+    NcIO.write(li.limit(500).repartition(1), dir, compressChunks = true,
+      varCodecs = Map("l_orderkey" -> "deflate"))
+    val part = partOf(dir, ".ncz")
+    // v2 footer: nVars: int, then var 0's recordsPerBlock: long, codec: byte
+    val raf = new java.io.RandomAccessFile(part.toUri.getPath, "rw")
+    try {
+      raf.seek(raf.length() - 12)
+      val footerStart = raf.readLong()
+      raf.seek(footerStart + 4 + 8)
+      assert(raf.readByte() == NcFormat.CODEC_DEFLATE)
+      raf.seek(footerStart + 4 + 8)
+      raf.writeByte(9)
+    } finally raf.close()
+    val fs = fsOf(dir)
+    val meta = NcFormat.readMeta(fs, part)
+    val rd = new NcFormat.RangeReader(fs, part, meta, 0L, meta.numRecs, Seq("l_orderkey"))
+    val e = try intercept[java.io.IOException](rd.loadChunk()) finally rd.close()
+    Seq(part.toString, "variable l_orderkey", "block 0", "codec 9").foreach(w =>
+      assert(e.getMessage.contains(w), e.getMessage))
+    // the same error surfaces through a scan
+    val se = intercept[Exception](spark.read.format("netcdf3").load(dir).agg(sum("l_orderkey")).collect())
+    assert(Iterator.iterate[Throwable](se)(_.getCause).takeWhile(_ != null)
+      .exists(x => x.isInstanceOf[java.io.IOException] && x.getMessage.contains("codec 9")))
+  }
+
+  test("an aborted write closes its spool before deleting it") {
+    import graft.sources.netcdf.{NetCDF3, SerializableHadoopConf}
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.types._
+    val base = s"abort_probe_${System.nanoTime()}"
+    val w = NetCDF3.dataWriter(StructType(Seq(StructField("x", DoubleType))),
+      "/tmp/graft_nc_spec/abort", base, Map("compresschunks" -> "true"),
+      new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration))
+    (0 until 100).foreach(i => w.write(InternalRow(i.toDouble)))
+    // descriptors of this JVM that point at the spool (a deleted file
+    // still shows, with a " (deleted)" suffix)
+    def spoolFds: Seq[String] = Option(new File("/proc/self/fd").listFiles()).toSeq.flatten
+      .flatMap(f => scala.util.Try(Files.readSymbolicLink(f.toPath).toString).toOption)
+      .filter(_.contains(base))
+    assert(spoolFds.nonEmpty, "the spool should be open while writing")
+    w.abort()
+    w.close()
+    assert(spoolFds.isEmpty, spoolFds.mkString(", "))
   }
 }

@@ -318,6 +318,26 @@ class VectorExprSpec extends AnyFunSuite {
     assert(r2.filter(expr("native <> hof")).isEmpty)
   }
 
+  test("SortedVals rejects a duplicate key instead of diverging from array_sort(struct)") {
+    import graft.functions.NgramExpressions.sorted_vals
+    // key 1 twice with values in descending order: the key sort keeps
+    // input order (9.0, 2.0), array_sort's struct order gives (2.0, 9.0)
+    val df = spark.sql(
+      "SELECT array(struct(1 AS k, 9.0D AS v), struct(0 AS k, 5.0D AS v), struct(1 AS k, 2.0D AS v)) AS a")
+    assert(df.select(expr("transform(array_sort(a), p -> p.v)")).head().getSeq[Double](0) ==
+      Seq(5.0, 2.0, 9.0))
+    val e = intercept[Exception](df.select(sorted_vals(col("a"))).collect())
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toList
+    val iae = chain.collectFirst { case x: IllegalArgumentException => x }
+    assert(iae.exists(x => x.getMessage.contains("sorted_vals") &&
+      x.getMessage.contains("duplicate key 1")), chain.map(_.toString).mkString(" <- "))
+    // string keys too
+    val s = spark.sql("SELECT array(struct('b' AS k, 1 AS v), struct('b' AS k, 0 AS v)) AS a")
+    val e2 = intercept[Exception](s.select(sorted_vals(col("a"))).collect())
+    assert(Iterator.iterate[Throwable](e2)(_.getCause).takeWhile(_ != null)
+      .exists(x => x.isInstanceOf[IllegalArgumentException] && x.getMessage.contains("duplicate key b")))
+  }
+
   test("CountsIn matches the transform/filter HOF formulation, incl. null keys") {
     import graft.functions.CountsIn.counts_in
     val docs = spark.read.parquet(s"$sf/documents.parquet").select("text")
