@@ -1,8 +1,7 @@
 package graft.sources.netcdf
 
-import java.io.{ByteArrayOutputStream, DataInputStream, EOFException}
+import java.io.{ByteArrayOutputStream, DataInputStream}
 import java.nio.{ByteBuffer, ByteOrder}
-import java.util.zip.{Deflater, Inflater}
 
 import org.apache.hadoop.fs.{FSDataInputStream, FileSystem, Path}
 import org.apache.spark.sql.types._
@@ -380,78 +379,6 @@ object Hdf5Format {
     s
   }
 
-  // HDF5 shuffle filter (id 2): byte transpose at ELEMENT granularity
-  // — all byte-0s of every element, then all byte-1s, … — which groups
-  // similar-magnitude bytes and is why netCDF4 defaults shuffle=True
-  // before deflate. Pure permutation: output length == input length.
-  // ---------------------------------------------------------------
-  private[graft] def shuffleBytes(src: Array[Byte], elemSize: Int): Array[Byte] = {
-    val n = src.length / elemSize
-    val dst = new Array[Byte](src.length)
-    var j = 0
-    var k = 0
-    while (j < elemSize) {
-      var i = 0
-      while (i < n) { dst(k) = src(i * elemSize + j); k += 1; i += 1 }
-      j += 1
-    }
-    // non-multiple tail (e.g. an appended fletcher32 word) stays put
-    var r = n * elemSize
-    while (r < src.length) { dst(r) = src(r); r += 1 }
-    dst
-  }
-
-  private[graft] def deshuffleBytes(src: Array[Byte], dst: Array[Byte],
-      len: Int, elemSize: Int): Unit = {
-    val n = len / elemSize
-    var j = 0
-    var k = 0
-    while (j < elemSize) {
-      var i = 0
-      while (i < n) { dst(i * elemSize + j) = src(k); k += 1; i += 1 }
-      j += 1
-    }
-    // HDF5 shuffle leaves a non-multiple tail (e.g. an appended
-    // fletcher32 word) unshuffled at the end
-    var r = n * elemSize
-    while (r < len) { dst(r) = src(r); r += 1 }
-  }
-
-  // ---------------------------------------------------------------
-  // HDF5 fletcher32 filter (id 3): the checksum netCDF4 enables with
-  // `fletcher32=True`. Faithful to the public H5_checksum_fletcher32
-  // (16-bit big-endian words, 360-word partial-sum folding, odd-byte
-  // pad) with the 4-byte value appended little-endian — netCDF4 sets
-  // it FIRST in the pipeline, so the checksum covers the RAW chunk.
-  // ---------------------------------------------------------------
-  private[graft] def fletcher32(data: Array[Byte], len: Int): Int = {
-    var sum1 = 0L
-    var sum2 = 0L
-    var off = 0
-    var words = len / 2
-    while (words > 0) {
-      var tlen = if (words > 360) 360 else words
-      words -= tlen
-      while (tlen > 0) {
-        sum1 += (((data(off) & 0xffL) << 8) | (data(off + 1) & 0xffL))
-        off += 2
-        sum2 += sum1
-        tlen -= 1
-      }
-      sum1 = (sum1 & 0xffff) + (sum1 >>> 16)
-      sum2 = (sum2 & 0xffff) + (sum2 >>> 16)
-    }
-    if (len % 2 == 1) {
-      sum1 += (data(off) & 0xffL) << 8
-      sum2 += sum1
-      sum1 = (sum1 & 0xffff) + (sum1 >>> 16)
-      sum2 = (sum2 & 0xffff) + (sum2 >>> 16)
-    }
-    sum1 = (sum1 & 0xffff) + (sum1 >>> 16)
-    sum2 = (sum2 & 0xffff) + (sum2 >>> 16)
-    ((sum2 << 16) | sum1).toInt
-  }
-
   // ---------------------------------------------------------------
   // netCDF-4.9 quantization (`nc_def_var_quantize`; Zender 2016,
   // "Bit Grooming", GMD 9:3199). A LOSSY pre-filter step the library
@@ -753,6 +680,9 @@ object Hdf5Format {
   // writer
   // ---------------------------------------------------------------
 
+  /** zlib level of the deflate filter (netCDF4-python's `complevel`) */
+  private val DEFLATE_LEVEL = 6
+
   /** Per-variable accumulation during a streaming write: rows buffer
     * into a raw chunk; full chunks deflate immediately, so resident
     * state is one raw chunk + the compressed chunk list. */
@@ -782,7 +712,9 @@ object Hdf5Format {
       /** class-10 ARRAY datatype: the array column is a RANK-1
         * dataspace whose element is the whole k-vector — no trailing
         * dataspace dim, no tiling; the element size is rowBytes */
-      val arrayDt: Boolean = false) {
+      val arrayDt: Boolean = false,
+      /** the writer's chunk codec, shared by all of its variables */
+      codec: ChunkCodec) {
     require(zstd == 0 || !deflate, "zstd and deflate are mutually exclusive")
     /** flattened trailing width for array kinds (0 for scalars) */
     val width: Int = kind match {
@@ -843,15 +775,6 @@ object Hdf5Format {
       if (d > vMax) vMax = d
     }
 
-    /** lazily-created reusable deflater (ended by the writer's
-      * finish(); see encodeChunk) */
-    private var _defl: Deflater = null
-    private def sharedDeflater: Deflater = {
-      if (_defl == null) _defl = new Deflater(6)
-      _defl
-    }
-    def endDeflater(): Unit = if (_defl != null) { _defl.end(); _defl = null }
-
     /** netCDF-4.9 quantization ordinal — one per STORED element (array
       * elements each advance it), driving BitGroom's shave/set
       * alternation */
@@ -865,11 +788,6 @@ object Hdf5Format {
       case None => x
     }
 
-    /** Run one raw chunk through the write pipeline (netCDF4's call
-      * order: fletcher32, then shuffle, then deflate; the filter
-      * mask's bit i refers to pipeline position i, so the deflate
-      * skip-bit shifts right for each filter ahead of it) and append
-      * the stored form. `mustClone` marks `pre` as a shared buffer. */
     /** All-fill detector for sparse writes (fill = zeros when no
       * defined value rides on the variable). */
     private def isAllFill(buf: Array[Byte]): Boolean = {
@@ -887,49 +805,40 @@ object Hdf5Format {
       true
     }
 
-    private def encodeChunk(preIn: Array[Byte], mustClone: Boolean): Unit = {
+    /** Run one raw chunk through the write pipeline and append the
+      * stored form. netCDF4's call order: fletcher32 (appended
+      * little-endian, covering the raw chunk), then shuffle, then
+      * deflate or zstd; the filter mask's bit i refers to pipeline
+      * position i, so the compression skip-bit shifts right for each
+      * filter ahead of it. `mustClone` marks `chunk` as a shared buffer. */
+    private def encodeChunk(chunk: Array[Byte], mustClone: Boolean): Unit = {
       // sparse: an all-fill chunk stays UNALLOCATED — a null slot in
       // the stored list keeps every later chunk's logical position
-      if (sparse && isAllFill(preIn)) { stored += ((null, 0)); return }
-      var pre: Array[Byte] = preIn
+      if (sparse && isAllFill(chunk)) { stored += ((null, 0)); return }
+      val len = chunk.length + (if (fletcher) 4 else 0)
+      var pre = chunk
       if (fletcher) {
-        val withCk = java.util.Arrays.copyOf(preIn, preIn.length + 4)
-        val ck = fletcher32(preIn, preIn.length)
-        withCk(preIn.length) = (ck & 0xff).toByte
-        withCk(preIn.length + 1) = ((ck >>> 8) & 0xff).toByte
-        withCk(preIn.length + 2) = ((ck >>> 16) & 0xff).toByte
-        withCk(preIn.length + 3) = ((ck >>> 24) & 0xff).toByte
-        pre = withCk
+        pre = java.util.Arrays.copyOf(chunk, len)
+        ByteBuffer.wrap(pre).order(ByteOrder.LITTLE_ENDIAN)
+          .putInt(chunk.length, ChunkCodec.fletcher32(chunk, chunk.length))
       }
-      if (shuffle) pre = shuffleBytes(pre, kind.elemSize)
-      val deflateSkipBit = 1 << ((if (fletcher) 1 else 0) + (if (shuffle) 1 else 0))
-      if (zstd > 0) {
-        val comp = com.github.luben.zstd.Zstd.compress(pre, zstd)
-        // same per-chunk codec escape as deflate: incompressible
-        // chunks store raw with the filter's mask bit set
-        if (comp.length < pre.length) stored += ((comp, 0))
-        else stored += ((if ((pre eq preIn) && mustClone) pre.clone() else pre, deflateSkipBit))
-      } else if (deflate) {
-        // ONE native deflater per variable, reset per chunk: a fresh
-        // Deflater is a JNI allocation, and a small-chunk variable
-        // encodes tens of thousands of chunks — per-chunk
-        // instantiation was the sf1 smoke's 4× super-linear term on
-        // nc4_extensible_array
-        val d = sharedDeflater
-        d.reset()
-        d.setInput(pre); d.finish()
-        val out = new ByteArrayOutputStream(preIn.length / 2)
-        val tmp = new Array[Byte](8192)
-        while (!d.finished()) out.write(tmp, 0, d.deflate(tmp))
-        val comp = out.toByteArray
-        // per-chunk codec escape: an incompressible chunk is stored
-        // raw with the filter masked out (spec: filter mask bit i set
-        // = filter i skipped) — same device as the .ncz store codec;
-        // shuffle/fletcher stay applied (they never grow bytes beyond
-        // the fixed 4-byte checksum)
-        if (comp.length < pre.length) stored += ((comp, 0))
-        else stored += ((if ((pre eq preIn) && mustClone) pre.clone() else pre, deflateSkipBit))
-      } else stored += ((if ((pre eq preIn) && mustClone) pre.clone() else pre, 0))
+      val es = if (shuffle) kind.elemSize else 1
+      val n =
+        if (zstd > 0) codec.zstd(pre, len, zstd, es, s"chunk of $name")
+        else if (deflate) codec.deflate(pre, len, DEFLATE_LEVEL, es)
+        else -1
+      if (n >= 0) stored += ((java.util.Arrays.copyOf(codec.out, n), 0))
+      else {
+        // stored as is: a chunk its compressor does not shrink has the
+        // compression filter masked out (spec: filter mask bit i set =
+        // filter i skipped), the same device as the .ncz store codec;
+        // shuffle and fletcher32 stay applied
+        val raw =
+          if (shuffle) { val s = new Array[Byte](len); ChunkCodec.shuffle(pre, len, es, s, 0, len); s }
+          else if ((pre eq chunk) && mustClone) chunk.clone() else pre
+        stored += ((raw,
+          if (zstd > 0 || deflate) 1 << ((if (fletcher) 1 else 0) + (if (shuffle) 1 else 0)) else 0))
+      }
     }
 
     def flushChunk(): Unit = if (inChunk > 0) {
@@ -1436,6 +1345,11 @@ object Hdf5Format {
         bb.array()
     }
 
+    /** one chunk codec for every variable, ended by finish() or
+      * discard(): a zlib stream per chunk is a JNI allocation, and was the
+      * sf1 smoke's 4x super-linear term on nc4_extensible_array */
+    private val codec = new ChunkCodec
+
     private val vars: Array[VarState] = schema.fields.map { f =>
       // a data column that IS a named dim is that dim's coordinate
       // variable — it carries the dimension-scale CLASS marker itself
@@ -1449,7 +1363,7 @@ object Hdf5Format {
         trailDims.getOrElse(f.name, Nil).toArray,
         trailChunks.getOrElse(f.name, Nil).toArray,
         fillBytesOf(f), sparse, zstdLevel,
-        arrayDt = arrayDatatype.contains(f.name))
+        arrayDt = arrayDatatype.contains(f.name), codec = codec)
     }
 
     def writeRow(get: Int => Any): Unit = {
@@ -1530,7 +1444,7 @@ object Hdf5Format {
           f.u16(2).u16(0).u16(0).u16(1).u32(v.kind.elemSize).u32(0)
         }
         if (v.deflate) {
-          f.u16(1).u16(0).u16(0).u16(1).u32(6) // deflate, no name, mandatory, level 6
+          f.u16(1).u16(0).u16(0).u16(1).u32(DEFLATE_LEVEL) // deflate, no name, mandatory, level
           f.u32(0) // spec-mandated pad after an ODD client-value count,
           // unconditionally — v1 headers' 8-byte message padding used to
           // mask its absence, but v2 OHDR framing is byte-exact
@@ -2204,12 +2118,14 @@ object Hdf5Format {
       val rootAttrMsgs: Seq[(Int, Array[Byte])] =
         rootAttrs.map { case (k, s) => MSG_ATTRIBUTE -> attributeBytes(H5Attr(k, Some(s), Array.empty)) }
 
-      val out = if (h5ver == 0) finishV0(rootAttrMsgs) else finishV2(rootAttrMsgs)
       // vlen refs encode through the chunk pipeline inside finishV*,
-      // so the reusable deflaters are freed only once all bytes exist
-      vars.foreach(_.endDeflater())
-      out
+      // so the codec is ended only once all bytes exist
+      try if (h5ver == 0) finishV0(rootAttrMsgs) else finishV2(rootAttrMsgs)
+      finally codec.end()
     }
+
+    /** Give up on the file: free the codec's native state. */
+    def discard(): Unit = codec.end()
 
     private final val GCOL_MAX = 64 << 10
 
@@ -4327,57 +4243,17 @@ object Hdf5Format {
           (sr / v.chunkRecs, arr)
         }
     private var curBlock: Long = -1L
+    /** the current row block's decoded tiles, null until first used;
+      * their arrays are reused from block to block */
     private val tileBBs: Array[ByteBuffer] =
       if (tiled) new Array[ByteBuffer](nCB) else null
+    private val tileBufs: Array[Array[Byte]] =
+      if (tiled) new Array[Array[Byte]](nCB) else null
 
-    /** Decode one stored tile into a fresh buffer (inverse pipeline:
-      * inflate, de-shuffle, fletcher verify) — the tiled twin of
-      * loadChunk, without the shared-buffer reuse. */
-    private def decodeTile(c: H5Chunk): Array[Byte] = {
-      val fletBit = 1
-      val shufBit = 1 << (if (v.fletcher) 1 else 0)
-      val deflateSkipBit =
-        1 << ((if (v.fletcher) 1 else 0) + (if (v.shuffle) 1 else 0))
-      val stored = new Array[Byte](c.storedSize)
-      in.readFully(c.addr, stored, 0, stored.length)
-      var cur: Array[Byte] = stored
-      if (v.zstd && (c.filterMask & deflateSkipBit) == 0) {
-        val dst = new Array[Byte](tileLen + extra)
-        com.github.luben.zstd.Zstd.decompress(dst, stored)
-        cur = dst
-      } else if (v.deflate && (c.filterMask & deflateSkipBit) == 0) {
-        val dst = new Array[Byte](tileLen + extra)
-        val inf = new Inflater()
-        inf.setInput(stored)
-        var off = 0
-        while (off < dst.length && !inf.finished()) {
-          val n = inf.inflate(dst, off, dst.length - off)
-          if (n == 0 && inf.needsInput()) throw new EOFException("truncated deflate chunk")
-          off += n
-        }
-        inf.end()
-        cur = dst
-      }
-      if (v.shuffle && (c.filterMask & shufBit) == 0) {
-        val dst = new Array[Byte](cur.length)
-        deshuffleBytes(cur, dst, cur.length, v.kind.elemSize)
-        cur = dst
-      }
-      if (v.fletcher && (c.filterMask & fletBit) == 0) {
-        val dataLen = cur.length - 4
-        val exp = fletcher32(cur, dataLen)
-        val got = (cur(dataLen) & 0xff) | ((cur(dataLen + 1) & 0xff) << 8) |
-          ((cur(dataLen + 2) & 0xff) << 16) | ((cur(dataLen + 3) & 0xff) << 24)
-        if (exp != got) throw new java.io.IOException(
-          f"fletcher32 mismatch in ${v.name}: stored 0x$got%08x computed 0x$exp%08x")
-      }
-      cur
-    }
-
-    /** Tile the variable's fill pattern across `buf` (zeros when the
-      * fill value is undefined — freshly allocated buffers need no
-      * work then). */
-    private def fillBuf(buf: Array[Byte]): Array[Byte] = {
+    /** Reset `buf` to the variable's fill pattern (zeros when the fill
+      * value is undefined). */
+    private def fillBuf(buf: Array[Byte]): Unit = {
+      java.util.Arrays.fill(buf, 0.toByte)
       if (v.fill.nonEmpty) {
         val es = v.fill.length
         var o = 0
@@ -4386,7 +4262,6 @@ object Hdf5Format {
           o += es
         }
       }
-      buf
     }
 
     /** The decoded tile holding (rec, tile j) in tiled mode;
@@ -4398,30 +4273,31 @@ object Hdf5Format {
         curBlock = blk
       }
       if (tileBBs(j) == null) {
-        val c = tilesByBlock.get(blk).flatMap(a => Option(a(j)))
-        val buf = c.map(decodeTile).getOrElse(fillBuf(new Array[Byte](tileLen)))
+        if (tileBufs(j) == null) tileBufs(j) = new Array[Byte](tileLen + extra)
+        val buf = tileBufs(j)
+        tilesByBlock.get(blk).flatMap(a => Option(a(j))) match {
+          case Some(c) =>
+            if (decodeChunk(c, buf, tileLen) != tileLen) throw new java.io.IOException(
+              s"$path: variable ${v.name}: stored tile at record ${c.startRec} is short")
+          case None => fillBuf(buf)
+        }
         tileBBs(j) = ByteBuffer.wrap(buf).order(ord)
       }
       tileBBs(j)
     }
 
     private var ci = 0
-    /** compact variables (class 0) carry their whole payload in the
-      * metadata: the "chunk buffer" IS the inline data, pre-loaded */
-    private val raw =
-      if (v.compactData.nonEmpty) v.compactData
-      else new Array[Byte]((v.kind.rowBytes * slabRecs).toInt)
     /** trailing bytes beyond the data itself (the fletcher32 word) */
     private val extra = if (v.fletcher) 4 else 0
-    /** scratch buffers for filtered chunks: inflate lands in `workA`;
-      * the shuffle transpose needs a second distinct buffer only when
-      * fletcher32 also rides (otherwise `raw` serves as the target) */
-    private val workA: Array[Byte] =
-      if (v.shuffle || v.fletcher) new Array[Byte](raw.length + extra)
-      else Array.emptyByteArray
-    private val workB: Array[Byte] =
-      if (v.shuffle && v.fletcher) new Array[Byte](raw.length + extra)
-      else Array.emptyByteArray
+    /** compact variables (class 0) carry their whole payload in the
+      * metadata: the "chunk buffer" IS the inline data, pre-loaded.
+      * Otherwise chunks decode straight into it, checksum word included. */
+    private val raw =
+      if (v.compactData.nonEmpty) v.compactData
+      else new Array[Byte]((v.kind.rowBytes * slabRecs).toInt + extra)
+    /** one codec per reader: its inflate state and stored-bytes array
+      * are reused for every chunk */
+    private val codec = new ChunkCodec
     /** element byte order — LE for everything the modern library
       * writes, BE for POWER/SPARC-era wild files */
     private val ord =
@@ -4435,63 +4311,39 @@ object Hdf5Format {
       * evidence the spec asserts on */
     def plannedStoredBytes: Long = covering.map(_.storedSize.toLong).sum
 
-    private def loadChunk(c: H5Chunk): Unit = {
+    /** Decode stored chunk or tile `c` into `dst[0, len + extra)`,
+      * inverting every filter its mask does not skip: decompress, then
+      * unshuffle, then check fletcher32. Returns the data bytes decoded,
+      * checksum word excluded; a compressed chunk must decode to exactly
+      * `len` of them. */
+    private def decodeChunk(c: H5Chunk, dst: Array[Byte], len: Int): Int = {
       // filter-mask bit positions follow the pipeline call order
-      // (fletcher32, shuffle, deflate): each present leading filter
-      // shifts the later filters' skip-bits one slot right
-      val fletBit = 1
+      // (fletcher32, shuffle, compression): each present leading
+      // filter shifts the later filters' skip-bits one slot right
       val shufBit = 1 << (if (v.fletcher) 1 else 0)
-      val deflateSkipBit =
-        1 << ((if (v.fletcher) 1 else 0) + (if (v.shuffle) 1 else 0))
-      val stored = new Array[Byte](c.storedSize)
-      in.readFully(c.addr, stored, 0, stored.length)
-      if (v.zstd && (c.filterMask & deflateSkipBit) == 0) {
-        val dst = if (v.shuffle || v.fletcher) workA else raw
-        com.github.luben.zstd.Zstd.decompress(dst, stored)
-        finishFilters(dst, dst.length, c.filterMask, shufBit, fletBit)
-        chunkEnd = c.startRec + slabRecs
-      } else if (v.deflate && (c.filterMask & deflateSkipBit) == 0) {
-        val dst = if (v.shuffle || v.fletcher) workA else raw
-        val inf = new Inflater()
-        inf.setInput(stored)
-        var off = 0
-        while (off < dst.length && !inf.finished()) {
-          val n = inf.inflate(dst, off, dst.length - off)
-          if (n == 0 && inf.needsInput()) throw new EOFException("truncated deflate chunk")
-          off += n
+      val compBit = shufBit << (if (v.shuffle) 1 else 0)
+      def where = s"$path: variable ${v.name}, chunk at record ${c.startRec}, element ${c.startCol}"
+      val stored = codec.staging(c.storedSize)
+      in.readFully(c.addr, stored, 0, c.storedSize)
+      val es = if (v.shuffle && (c.filterMask & shufBit) == 0) v.kind.elemSize else 1
+      val n =
+        if ((v.deflate || v.zstd) && (c.filterMask & compBit) == 0) {
+          if (v.zstd) codec.unzstd(stored, c.storedSize, dst, len + extra, es, where)
+          else codec.inflate(stored, c.storedSize, dst, len + extra, es, where)
+          len + extra
+        } else {
+          require(c.storedSize <= len + extra,
+            s"stored chunk ${c.storedSize} > buffer ${len + extra}")
+          ChunkCodec.unshuffle(stored, 0, c.storedSize, dst, c.storedSize, es)
+          c.storedSize
         }
-        inf.end()
-        finishFilters(dst, dst.length, c.filterMask, shufBit, fletBit)
-        chunkEnd = c.startRec + slabRecs
-      } else {
-        require(stored.length <= raw.length + extra,
-          s"stored chunk ${stored.length} > buffer ${raw.length + extra}")
-        finishFilters(stored, stored.length, c.filterMask, shufBit, fletBit)
-        chunkEnd = c.startRec + (stored.length - extra) / v.kind.rowBytes
-      }
-      chunkStart = c.startRec
-    }
-
-    /** Invert the shuffle and fletcher32 stages of a chunk sitting in
-      * `src` (post-inflate), landing the payload in `raw`. */
-    private def finishFilters(src: Array[Byte], len: Int, mask: Int,
-        shufBit: Int, fletBit: Int): Unit = {
-      var cur = src
-      if (v.shuffle && (mask & shufBit) == 0) {
-        val dst = if (v.fletcher) workB else raw
-        deshuffleBytes(cur, dst, len, v.kind.elemSize)
-        cur = dst
-      }
-      if (v.fletcher && (mask & fletBit) == 0) {
-        val dataLen = len - 4
-        val exp = fletcher32(cur, dataLen)
-        val got = (cur(dataLen) & 0xff) | ((cur(dataLen + 1) & 0xff) << 8) |
-          ((cur(dataLen + 2) & 0xff) << 16) | ((cur(dataLen + 3) & 0xff) << 24)
+      if (v.fletcher && (c.filterMask & 1) == 0) {
+        val exp = ChunkCodec.fletcher32(dst, n - 4)
+        val got = ByteBuffer.wrap(dst).order(ByteOrder.LITTLE_ENDIAN).getInt(n - 4)
         if (exp != got) throw new java.io.IOException(
           f"fletcher32 mismatch in ${v.name}: stored 0x$got%08x computed 0x$exp%08x")
       }
-      if (!(cur eq raw))
-        System.arraycopy(cur, 0, raw, 0, math.min(cur.length - extra, raw.length))
+      n - extra
     }
 
     /** Position the buffer on the chunk containing `rec`. A record
@@ -4501,11 +4353,12 @@ object Hdf5Format {
     private def ensure(rec: Long): Int = {
       if (rec < chunkStart || rec >= chunkEnd) {
         while (ci < covering.length && covering(ci).startRec + slabRecs <= rec) ci += 1
-        if (ci < covering.length && covering(ci).startRec <= rec)
-          loadChunk(covering(ci))
-        else {
+        if (ci < covering.length && covering(ci).startRec <= rec) {
+          val c = covering(ci)
+          chunkStart = c.startRec
+          chunkEnd = c.startRec + decodeChunk(c, raw, raw.length - extra) / v.kind.rowBytes
+        } else {
           // chunks are block-aligned, so the whole block is absent
-          java.util.Arrays.fill(raw, 0.toByte)
           fillBuf(raw)
           chunkStart = (rec / slabRecs) * slabRecs
           chunkEnd = chunkStart + slabRecs
@@ -4654,6 +4507,8 @@ object Hdf5Format {
       java.util.Arrays.copyOfRange(raw, off, off + v.kind.elemSize)
     }
 
-    def close(): Unit = in.close()
+    def close(): Unit =
+      try in.close()
+      finally codec.end()
   }
 }

@@ -253,7 +253,7 @@ private[netcdf] class Nc4DataWriter(schema: StructType, dir: String, baseName: S
     NcFileCommitted(baseName, nRecs)
   }
 
-  override def abort(): Unit = ()
+  override def abort(): Unit = if (w != null) w.discard()
   override def close(): Unit = ()
 }
 

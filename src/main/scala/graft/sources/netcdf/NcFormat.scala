@@ -169,10 +169,11 @@ object NcFormat {
     * `recordsPerBlock`:
     *   nBlocks: int, recordsPerBlock: long, codec: byte,
     *   then per block (fileOffset: long, compLen: int, nRecs: int).
-    * The writer uses codec 3: a 4-byte byte-shuffle of the block (plane
-    * j holds byte j of every 4-byte word; a tail shorter than a word is
-    * copied verbatim), then deflate at level 4 — netCDF4-python's
-    * `zlib=True` default (`complevel=4`, `shuffle=True`). Four bytes is
+    * The writer uses codec 3: a byte shuffle of the block at element
+    * size 4 ([[ChunkCodec.shuffle]]: plane j holds byte j of every
+    * 4-byte word; a tail shorter than a word is copied verbatim), then
+    * deflate at level 4 — netCDF4-python's `zlib=True` default
+    * (`complevel=4`, `shuffle=True`). Four bytes is
     * the classic format's slab alignment, so the shuffle groups the
     * same byte of neighbouring elements. Stored blocks stay raw and
     * unshuffled, as in v1.
@@ -187,6 +188,11 @@ object NcFormat {
   val CODEC_DEFLATE: Byte = 1
   val CODEC_ZSTD: Byte = 2
   val CODEC_SHUFFLE4_DEFLATE: Byte = 3
+
+  /** zlib level of the deflate codecs (netCDF4-python's `complevel`
+    * default) and the zstd level */
+  private val DEFLATE_LEVEL = 4
+  private val ZSTD_LEVEL = 3
 
   /** .ncz v2 footer magic ("GRF2"): per-VARIABLE block layout — the
     * netCDF4 `createVariable(chunksizes=, zlib=)` model. Record data is
@@ -382,25 +388,6 @@ object NcFormat {
       case dt => VarSpec(f.name, ncTypeOf(dt), 1, isString = false, isArray = false)
     }
 
-  /** 4-byte byte-shuffle of `src[0, len)` into `dst` (the `GRF3`
-    * codec's first stage): plane j holds byte j of every whole 4-byte
-    * word, and a tail shorter than a word is copied verbatim. One plane
-    * at a time: on JDK 17 this plain loop measured 0.9–1.4 ms per 4 MiB
-    * block, faster than moving whole words through a 4x4 byte
-    * transpose (2.3–4 ms). `RangeReader` inverts it piece by piece as
-    * it inflates. */
-  private[graft] def shuffle4(src: Array[Byte], dst: Array[Byte], len: Int): Unit = {
-    val n = len >>> 2
-    var j = 0
-    while (j < 4) {
-      val base = j * n
-      var i = 0
-      while (i < n) { dst(base + i) = src(4 * i + j); i += 1 }
-      j += 1
-    }
-    System.arraycopy(src, 4 * n, dst, 4 * n, len - 4 * n)
-  }
-
   /** Streaming writer for one .nc part file: every column becomes a
     * record variable along the unlimited `record` dimension — scalar
     * numerics as rank-1 vars, fixed-length arrays as rank-2 vars over
@@ -427,8 +414,9 @@ object NcFormat {
       vatts: Map[String, Seq[(String, String)]] = Map.empty,
       fixedVars: Seq[(String, Array[Double])] = Nil,
       /** store record data as independently compressed blocks with an
-        * index footer (.ncz — see [[isChunked]]): shuffle4+deflate-4
-        * blocks under a [[NCZ3_MAGIC]] footer unless the per-variable
+        * index footer (.ncz — see [[isChunked]]): blocks shuffled at
+        * element size 4 by [[ChunkCodec.shuffle]], then deflated at
+        * level 4, under a [[NCZ3_MAGIC]] footer unless the per-variable
         * maps below ask for v2. The header (and its close-time
         * numrecs/zone-map patches) stays uncompressed. */
       compressChunks: Boolean = false,
@@ -448,7 +436,7 @@ object NcFormat {
       varChunkBytes: Map[String, Int] = Map.empty,
       /** per-variable codec (netCDF4's `zlib=`): "deflate" (default,
         * level 4 — per-block store fallback when deflate doesn't
-        * shrink), "zstd" (level 3) or "store" (never run the Deflater:
+        * shrink), "zstd" (level 3) or "store" (never run deflate:
         * the right call for high-entropy columns, where at 100 TB
         * attempted-then-discarded compression is pure wasted CPU).
         * Requires `compressChunks`. */
@@ -558,25 +546,9 @@ object NcFormat {
     private var filePos: Long = headerBytes.length.toLong +
       fixedVars.map { case (_, vs) => val sz = 8L * vs.length; sz + pad4(sz) }.sum
 
-    // one Deflater (level 4) per writer, reset for every block and
-    // ended at close; shuffle and codec output buffers are reused
-    private var deflater: java.util.zip.Deflater = null
-    private var shuf: Array[Byte] = Array.emptyByteArray
-    private var comp: Array[Byte] = Array.emptyByteArray
-
-    /** Deflate `src[0, len)` into `comp`; the compressed length, or -1
-      * when deflate does not shrink the block. */
-    private def deflateInto(src: Array[Byte], len: Int): Int = {
-      if (deflater == null) deflater = new java.util.zip.Deflater(4)
-      if (comp.length < len) comp = new Array[Byte](len)
-      val d = deflater
-      d.reset()
-      d.setInput(src, 0, len)
-      d.finish()
-      var n = 0
-      while (!d.finished() && n < len) n += d.deflate(comp, n, len - n)
-      if (d.finished() && n < len) n else -1
-    }
+    /** one chunk codec per writer (its deflate state and buffers reused
+      * for every block), ended at close or discard */
+    private val blockCodec = new ChunkCodec
 
     /** Write a full or tail block through its codec. Store-vs-compress
       * per block: a block its codec does not shrink is kept raw (and
@@ -584,22 +556,13 @@ object NcFormat {
     private def flush(b: Block): Unit = if (b.recs > 0) {
       val len = b.recs * b.stride
       val n = b.codec match {
-        case CODEC_DEFLATE => deflateInto(b.bytes, len)
-        case CODEC_SHUFFLE4_DEFLATE =>
-          if (shuf.length < len) shuf = new Array[Byte](len)
-          shuffle4(b.bytes, shuf, len)
-          deflateInto(shuf, len)
-        case CODEC_ZSTD =>
-          val bound = com.github.luben.zstd.Zstd.compressBound(len.toLong).toInt
-          if (comp.length < bound) comp = new Array[Byte](bound)
-          val k = com.github.luben.zstd.Zstd.compressByteArray(comp, 0, bound, b.bytes, 0, len, 3)
-          if (com.github.luben.zstd.Zstd.isError(k)) throw new java.io.IOException(
-            s"$path: zstd: ${com.github.luben.zstd.Zstd.getErrorName(k)}")
-          if (k < len) k.toInt else -1
+        case CODEC_DEFLATE => blockCodec.deflate(b.bytes, len, DEFLATE_LEVEL, 1)
+        case CODEC_SHUFFLE4_DEFLATE => blockCodec.deflate(b.bytes, len, DEFLATE_LEVEL, 4)
+        case CODEC_ZSTD => blockCodec.zstd(b.bytes, len, ZSTD_LEVEL, 1, path)
         case _ => -1
       }
       if (n >= 0) {
-        out.write(comp, 0, n)
+        out.write(blockCodec.out, 0, n)
         b.index += ((filePos, n, b.recs))
         filePos += n
       } else {
@@ -872,19 +835,17 @@ object NcFormat {
       endRow()
     }
 
-    private def endDeflater(): Unit = if (deflater != null) { deflater.end(); deflater = null }
-
-    /** Give up on the file: close the stream and free the Deflater
+    /** Give up on the file: close the stream and free the codec
       * without writing the tail, footer or header patches. The caller
       * deletes the file. */
     def discard(): Unit =
       try out.close()
       catch { case _: java.io.IOException => }
-      finally endDeflater()
+      finally blockCodec.end()
 
     def close(): Unit = {
       try blocks.foreach(flush) // partial tail blocks
-      finally endDeflater()
+      finally blockCodec.end()
       if (v2) {
         val footerStart = filePos
         out.writeInt(specs.length)
@@ -1158,12 +1119,8 @@ object NcFormat {
       nI
     }
 
-    // block decoding state, reused across blocks and ended at close
-    private var inflater: java.util.zip.Inflater = null
-    private var comp: Array[Byte] = Array.emptyByteArray
-    /** inflate window of a shuffled block: its planes are scattered
-      * into place piece by piece, so no block-sized scratch is needed */
-    private var piece: Array[Byte] = null
+    /** block decoding state, reused across blocks and ended at close */
+    private val blockCodec = new ChunkCodec
 
     /** Decode one .ncz block of any layout (`GRFZ`, `GRF3`, v2) into
       * `dst[0, rawLen)`: a stored block (negative length) is read raw,
@@ -1171,8 +1128,8 @@ object NcFormat {
       * names the block's variable for errors. */
     private def decodeBlock(what: String, b: Int, codec: Byte, off: Long, clen: Int,
         rawLen: Int, dst: Array[Byte]): Unit = {
-      def fail(msg: String) =
-        throw new java.io.IOException(s"$path: $what, block $b, codec $codec: $msg")
+      def where = s"$path: $what, block $b, codec $codec"
+      def fail(msg: String) = throw new java.io.IOException(s"$where: $msg")
       if (codec < CODEC_STORE || codec > CODEC_SHUFFLE4_DEFLATE)
         fail("unknown codec (0 store, 1 deflate, 2 zstd, 3 shuffle4+deflate)")
       seekTo(off)
@@ -1183,55 +1140,13 @@ object NcFormat {
         pos += rawLen
       } else {
         if (codec == CODEC_STORE) fail(s"a compressed length ($clen) under the store codec")
-        if (comp.length < clen) comp = new Array[Byte](clen)
+        val comp = blockCodec.staging(clen)
         raf.readFully(comp, 0, clen)
         pos += clen
-        if (codec == CODEC_ZSTD) {
-          val k = com.github.luben.zstd.Zstd.decompressByteArray(dst, 0, rawLen, comp, 0, clen)
-          if (com.github.luben.zstd.Zstd.isError(k))
-            fail(com.github.luben.zstd.Zstd.getErrorName(k))
-          require(k == rawLen, s"$path $what block $b: zstd $k of $rawLen bytes")
-        } else inflate(what, b, clen, dst, rawLen, codec == CODEC_SHUFFLE4_DEFLATE)
+        if (codec == CODEC_ZSTD) blockCodec.unzstd(comp, clen, dst, rawLen, 1, where)
+        else blockCodec.inflate(comp, clen, dst, rawLen,
+          if (codec == CODEC_SHUFFLE4_DEFLATE) 4 else 1, where)
       }
-    }
-
-    /** Inflate `comp[0, clen)` into `dst[0, rawLen)`. A shuffled block
-      * (see [[shuffle4]]) inflates through `piece` and each piece is
-      * scattered back to its words: byte i of plane j is byte j of word
-      * i, and bytes past the last whole word are the verbatim tail. */
-    private def inflate(what: String, b: Int, clen: Int, dst: Array[Byte], rawLen: Int,
-        shuffled: Boolean): Unit = {
-      if (inflater == null) inflater = new java.util.zip.Inflater()
-      if (shuffled && piece == null) piece = new Array[Byte](64 << 10)
-      val inf = inflater
-      inf.reset()
-      inf.setInput(comp, 0, clen)
-      val words = rawLen >>> 2
-      var filled = 0
-      while (filled < rawLen && !inf.finished()) {
-        val n =
-          if (!shuffled) inf.inflate(dst, filled, rawLen - filled)
-          else inf.inflate(piece, 0, math.min(piece.length, rawLen - filled))
-        if (n == 0 && inf.needsInput())
-          throw new EOFException(s"truncated .ncz block $b ($what) in $path")
-        if (shuffled) {
-          var p = 0
-          while (p < n) {
-            val off = filled + p
-            if (off >= 4 * words) { dst(off) = piece(p); p += 1 }
-            else {
-              val j = off / words
-              val i0 = off - j * words
-              val run = math.min(n - p, words - i0)
-              var q = 0
-              while (q < run) { dst(4 * (i0 + q) + j) = piece(p + q); q += 1 }
-              p += run
-            }
-          }
-        }
-        filled += n
-      }
-      require(filled == rawLen, s"$path $what block $b: inflated $filled of $rawLen bytes")
     }
 
     def chunkStartRecord: Long = bufStart
@@ -1313,6 +1228,6 @@ object NcFormat {
 
     def close(): Unit =
       try raf.close()
-      finally if (inflater != null) { inflater.end(); inflater = null }
+      finally blockCodec.end()
   }
 }

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import java.security.MessageDigest
 import java.util.concurrent.atomic.AtomicReference
 
-import graft.sources.netcdf.{Hdf5Format, NcFormat}
+import graft.sources.netcdf.{ChunkCodec, Hdf5Format, NcFormat}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.types._
@@ -168,6 +168,64 @@ class ChunkCodecSpec extends AnyFunSuite {
     }
   }
 
+  test("one shuffle at element sizes 1/2/4/8, any tail, through every decoder") {
+    // known answers: planes of whole elements, then the verbatim tail
+    val ten = Array.tabulate[Byte](10)(_.toByte)
+    val four = new Array[Byte](10)
+    ChunkCodec.shuffle(ten, 10, 4, four, 0, 10)
+    assert(four.toSeq == Seq[Byte](0, 4, 1, 5, 2, 6, 3, 7, 8, 9))
+    val two = new Array[Byte](5)
+    ChunkCodec.shuffle(ten, 5, 2, two, 0, 5)
+    assert(two.toSeq == Seq[Byte](0, 2, 1, 3, 4))
+    val codec = new ChunkCodec
+    try {
+      val rnd = new scala.util.Random(7)
+      for (es <- Seq(1, 2, 4, 8); n <- Seq(0, 1, 3, 4, 5, 15, 16, 17, 19, 64, 67, 4099, 200003)) {
+        // low-entropy input, so deflate and zstd shrink it
+        val src = Array.tabulate(n)(i => (if (i % es == 0) rnd.nextInt(4) else i / 1000).toByte)
+        val k = n / es
+        val expect = Array.tabulate(n)(p => if (p < k * es) src((p % k) * es + p / k) else src(p))
+        val shuf = new Array[Byte](n)
+        ChunkCodec.shuffle(src, n, es, shuf, 0, n)
+        assert(shuf.sameElements(expect), s"shuffle es $es len $n")
+        // and a window at a time, as the shuffled deflate feeds it
+        val win = new Array[Byte](n)
+        (0 until n by 1000).foreach { from =>
+          val piece = new Array[Byte](math.min(1000, n - from))
+          ChunkCodec.shuffle(src, n, es, piece, from, piece.length)
+          System.arraycopy(piece, 0, win, from, piece.length)
+        }
+        assert(win.sameElements(expect), s"windowed shuffle es $es len $n")
+        val back = new Array[Byte](n)
+        ChunkCodec.unshuffle(shuf, 0, n, back, n, es)
+        assert(back.sameElements(src), s"unshuffle es $es len $n")
+        val d = codec.deflate(src, n, 4, es)
+        // the windowed shuffle+deflate writes exactly what a one-shot
+        // deflate of the whole shuffled chunk writes
+        val whole = new java.util.zip.Deflater(4)
+        whole.setInput(shuf); whole.finish()
+        val ref = new Array[Byte](n + 1024)
+        var rn = 0
+        while (!whole.finished()) rn += whole.deflate(ref, rn, ref.length - rn)
+        whole.end()
+        assert(if (rn < n) d == rn && codec.out.take(d).sameElements(ref.take(rn)) else d == -1,
+          s"deflate es $es len $n")
+        if (d >= 0) {
+          val inflated = new Array[Byte](n)
+          codec.inflate(codec.out, d, inflated, n, es, "test")
+          assert(inflated.sameElements(src), s"inflate es $es len $n")
+        }
+        val z = codec.zstd(src, n, 3, es, "test")
+        if (z >= 0) {
+          val unz = new Array[Byte](n)
+          codec.unzstd(codec.out, z, unz, n, es, "test")
+          assert(unz.sameElements(src), s"unzstd es $es len $n")
+        }
+        if (n >= 4099) assert(d >= 0 && z >= 0, s"es $es len $n should compress")
+      }
+    } finally codec.end()
+  }
+
   // ---- hostile chunk streams ----
 
   /** Run `body` on a daemon thread and wait at most 30 s, so a reader
@@ -210,7 +268,7 @@ class ChunkCodecSpec extends AnyFunSuite {
     try (0 until 512).foreach(r => rd.getInt(r)) finally rd.close()
   }
 
-  test("netCDF-4: a chunk whose zlib stream wants a preset dictionary fails, naming it") {
+  test("netCDF-4: a chunk whose zlib stream wants a preset dictionary fails") {
     val (p, v) = twoChunkNc4("fdict.nc4")
     patch(p, v.chunks(1).addr, fdict)
     bounded("nc4 FDICT read")(readAllH5(p, v)) match {
@@ -221,7 +279,7 @@ class ChunkCodecSpec extends AnyFunSuite {
     }
   }
 
-  test("netCDF-4: a chunk that inflates short fails instead of serving the previous chunk") {
+  test("netCDF-4: a chunk that inflates short fails, not serving the previous chunk") {
     val (p, v) = twoChunkNc4("short.nc4")
     // a valid zlib stream of the first half of chunk 2's raw bytes
     val half = java.nio.ByteBuffer.allocate(128 * 4).order(java.nio.ByteOrder.LITTLE_ENDIAN)

@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.netcdf.{Hdf5Format, Hdf5IO, NetCDF4, RecordRangePartition}
+import graft.sources.netcdf.{ChunkCodec, Hdf5Format, Hdf5IO, NetCDF4, RecordRangePartition}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.Row
@@ -162,10 +162,11 @@ class Hdf5Spec extends AnyFunSuite {
 
   test("shuffle transpose is an exact inverse pair and helps compression") {
     val src = (0 until 512 * 8).map(i => (i % 251).toByte).toArray
-    val shuf = Hdf5Format.shuffleBytes(src, 8)
+    val shuf = new Array[Byte](src.length)
+    ChunkCodec.shuffle(src, src.length, 8, shuf, 0, src.length)
     assert(!java.util.Arrays.equals(shuf, src))
     val back = new Array[Byte](src.length)
-    Hdf5Format.deshuffleBytes(shuf, back, src.length, 8)
+    ChunkCodec.unshuffle(shuf, 0, src.length, back, src.length, 8)
     assert(java.util.Arrays.equals(back, src))
     // incompressible-as-longs data (counter in the LOW byte) becomes
     // runs after the transpose — the reason the filter exists

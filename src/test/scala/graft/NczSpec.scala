@@ -3,7 +3,7 @@ package graft
 import java.io.{DataOutputStream, File, FileOutputStream}
 import java.nio.file.{Files, Paths}
 
-import graft.sources.netcdf.{Hdf5Format, NcFormat, NcIO}
+import graft.sources.netcdf.{NcFormat, NcIO}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -205,16 +205,6 @@ class NczSpec extends AnyFunSuite {
       }
       case x => x
     })
-
-  test("shuffle4 is the 4-byte HDF5 shuffle, tail verbatim") {
-    val rnd = new scala.util.Random(7)
-    Seq(0, 1, 3, 4, 5, 15, 16, 17, 19, 64, 67, 4099).foreach { n =>
-      val src = Array.fill(n)(rnd.nextInt(256).toByte)
-      val shuf = new Array[Byte](n)
-      NcFormat.shuffle4(src, shuf, n)
-      assert(shuf.sameElements(Hdf5Format.shuffleBytes(src, 4)), s"len $n")
-    }
-  }
 
   test("a shuffled block wider than the reader's inflate window, with a sub-word tail, reads back") {
     import org.apache.spark.sql.types._
