@@ -74,7 +74,9 @@ class ChunkCodecSpec extends AnyFunSuite {
   }
 
   // SHA-256 of each file below, recorded from the writers before the
-  // two containers shared one codec; any drift means the bytes changed
+  // two containers shared one codec (the h5_tiled_* files: before the
+  // writer and the readers shared one tile geometry); any drift means
+  // the bytes changed
   private val golden = Map(
     "h5_deflate" -> "d1abc55700e2a681aa367c00d23f1266e171b2871532b8f9376825d7e2da3a7d",
     "h5_shuffle_fletcher_deflate" -> "728c9f658c58e3b42981f16c8586f6029d2fb8f299faf82e5212c4afb604eb8d",
@@ -82,6 +84,11 @@ class ChunkCodecSpec extends AnyFunSuite {
     "h5_zstd_shuffle_fletcher" -> "79c3cadf682b6fa3cc928e68b4f1e60e13b1b348a02586278bbcf92026e075c0",
     "h5_tiled_rank3" -> "4d19b223c6acc7c62e8bf474679132f4fca3ed5644c4a0909557651e6ba14ce5",
     "h5_sparse_fill" -> "9e0dc41eb47774ca94d03328fc930cd2d0155cc22393118cfb08a9367f06c1d8",
+    "h5_tiled_rank2" -> "dd892d26f2075f413e6918fc4e207d4463f53ac2f21ee200a333167618f8e6e9",
+    "h5_tiled_rank3_fixedarray" -> "95b6f6f982f1bfec4cd653b915b51315a38c241d6d39510e936ef1a79dfc9d8b",
+    "h5_tiled_rank3_extarray" -> "9571684c983f8836032543fcf3d7249b53c81e873bbde97b8051395762e21b1c",
+    "h5_tiled_rank3_btree2" -> "42313700735b21a4a2e142db09ec9e547de453d1586682d848c41361aa3a317e",
+    "h5_tiled_rank3_implicit" -> "10a51656c6c312494019281c7517d07c823a1ecdfb0d87e05eb61befee83272e",
     "ncz_grf3" -> "7596121ff724823cac3d6533ccbc932928bccd65659cf043664fd0367ef92196",
     "ncz_grf3_stored" -> "c15bda4d9bd37cd41b65712809133260c9b441e51df0e9ca9e417aa5ab4580a5",
     "ncz_v2_store_deflate_zstd" -> "212aa34210a3f7ea6419df6ddc29a682db1930066e758bf66d08764fa27aa1a1")
@@ -116,6 +123,28 @@ class ChunkCodecSpec extends AnyFunSuite {
     try (0 until n).foreach(r => assert(rd.getDouble(r) == sp(r), s"sp($r)"))
     finally rd.close()
     assert(sha(sparse) == golden("h5_sparse_fill"), "h5_sparse_fill")
+  }
+
+  test("golden bytes: every chunk index writes a tiled variable as recorded") {
+    // the tile grid feeds every index encoder: a rank-2 partial-width
+    // field (four 4-wide column tiles) through the B-tree v1, and the
+    // rank-3 (4,4)/(3,2) field (four tiles, three of them edge tiles)
+    // through each layout-v4 index that admits several chunks
+    def rank3(index: String, filtered: Boolean = true) = new Hdf5Format.Hdf5Writer(h5Schema,
+      chunkRecs = 32, deflate = filtered, h5ver = 2, chunkIndex = index,
+      arrayLens = Map("field" -> 16), shuffle = filtered, fletcher = filtered,
+      trailDims = Map("field" -> Seq(4, 4)), trailChunks = Map("field" -> Seq(3, 2)))
+    val files = Seq(
+      "h5_tiled_rank2" -> h5(new Hdf5Format.Hdf5Writer(h5Schema, chunkRecs = 32,
+        arrayLens = Map("field" -> 16), shuffle = true, fletcher = true, chunkCols = 4)),
+      "h5_tiled_rank3_fixedarray" -> h5(rank3("fixedarray")),
+      "h5_tiled_rank3_extarray" -> h5(rank3("extarray")),
+      "h5_tiled_rank3_btree2" -> h5(rank3("btree2")),
+      "h5_tiled_rank3_implicit" -> h5(rank3("implicit", filtered = false)))
+    files.foreach { case (name, bytes) =>
+      checkH5(save(s"$name.nc4", bytes))
+      assert(sha(bytes) == golden(name), name)
+    }
   }
 
   private val ncSchema = StructType(Seq(

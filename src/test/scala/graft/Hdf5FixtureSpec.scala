@@ -165,6 +165,77 @@ class Hdf5FixtureSpec extends AnyFunSuite {
   }
 
   // -----------------------------------------------------------------
+  // hostile chunk geometry in a writer-produced v1 file (no header
+  // checksums, so each patch isolates one field): a chunk key off the
+  // tile grid, and a chunk too large for one JVM array. Each must be
+  // an IOException naming the file and the variable, not an index or
+  // array-size error from inside the reader.
+  // -----------------------------------------------------------------
+
+  private def u64At(b: Array[Byte], off: Int, x: Long): Unit =
+    java.nio.ByteBuffer.wrap(b).order(java.nio.ByteOrder.LITTLE_ENDIAN).putLong(off, x)
+  private def u32Of(b: Array[Byte], off: Int): Int =
+    java.nio.ByteBuffer.wrap(b).order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt(off)
+
+  /** Read every element of the one variable in `p`, metadata included. */
+  private def readAll(p: Path): Unit = {
+    val v = Hdf5Format.readMeta(fs, p).vars.head
+    val rd = new Hdf5Format.VarReader(fs, p, v, 0L, v.numRecs)
+    try (0L until v.numRecs).foreach { r =>
+      v.kind match {
+        case Hdf5Format.KFloatArr(k) => (0 until k).foreach(j => rd.getFloatElem(r, j))
+        case _ => rd.getFloat(r)
+      }
+    } finally rd.close()
+  }
+
+  test("patched chunk B-tree key off the tile grid is an IOException naming it") {
+    import org.apache.spark.sql.types._
+    val w = new Hdf5Format.Hdf5Writer(StructType(Seq(StructField("vec",
+      ArrayType(FloatType, containsNull = false), nullable = false))),
+      chunkRecs = 32, arrayLens = Map("vec" -> 16), chunkCols = 4)
+    (0 until 100).foreach(r => w.putFloatArrAt(0, Array.tabulate(16)(j => r * 16f + j)))
+    val base = w.finish()
+    // the chunk B-tree node: "TREE" with node type 1 (type 0 is the
+    // root group's); its first key is (size u32, mask u32, record
+    // offset u64, column offset u64, element offset u64)
+    val tree = base.indices.indexWhere(i => i + 5 <= base.length &&
+      base(i) == 'T' && base(i + 1) == 'R' && base(i + 2) == 'E' && base(i + 3) == 'E' &&
+      base(i + 4) == 1)
+    assert(tree > 0, "chunk B-tree not found in writer output")
+    readAll(writeFile("tile_key_base.nc4", base)) // unpatched: reads
+    // past the 16 columns, then inside them but off a 4-wide tile edge
+    for (col <- Seq(16L, 2L)) {
+      val patched = base.clone()
+      u64At(patched, tree + 24 + 16, col)
+      val e = intercept[java.io.IOException](readAll(writeFile(s"tile_key_$col.nc4", patched)))
+      assert(e.getMessage.contains(s"tile_key_$col.nc4") && e.getMessage.contains("variable vec") &&
+        e.getMessage.contains(s"offset $col"), e.getMessage)
+    }
+  }
+
+  test("patched layout chunk too large to buffer is an IOException naming it") {
+    import org.apache.spark.sql.types._
+    val w = new Hdf5Format.Hdf5Writer(StructType(Seq(StructField("f", FloatType,
+      nullable = false))), chunkRecs = 77)
+    (0 until 200).foreach(r => w.putFloatAt(0, r * 0.5f))
+    val base = w.finish()
+    // layout message v3, chunked (class 2), rank 2: B-tree address,
+    // then chunk dims (77 records, 4-byte element)
+    val lay = base.indices.indexWhere(i => i + 19 <= base.length &&
+      base(i) == 3 && base(i + 1) == 2 && base(i + 2) == 2 &&
+      u32Of(base, i + 11) == 77 && u32Of(base, i + 15) == 4)
+    assert(lay > 0, "layout message not found in writer output")
+    readAll(writeFile("huge_chunk_base.nc4", base)) // unpatched: reads
+    val patched = base.clone()
+    java.nio.ByteBuffer.wrap(patched).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      .putInt(lay + 11, 0x7FFFFFFF)
+    val e = intercept[java.io.IOException](readAll(writeFile("huge_chunk.nc4", patched)))
+    assert(e.getMessage.contains("huge_chunk.nc4") && e.getMessage.contains("variable f"),
+      e.getMessage)
+  }
+
+  // -----------------------------------------------------------------
   // dense attributes: FRHP (root direct block) + v2 B-tree type 8 +
   // serialized v3 AND v1 attribute messages as managed heap objects
   // -----------------------------------------------------------------
