@@ -165,12 +165,147 @@ object Hdf5Format {
 
   /** One stored chunk: logical start record, file offset, stored
     * (possibly compressed) byte count, filter mask (bit 0 set = the
-    * deflate filter was SKIPPED for this chunk), and — for rank-2
-    * variables chunked along BOTH dims (the netCDF4 library's default
-    * layout) — the tile's first column. Full-width chunks have
-    * startCol 0. */
+    * deflate filter was SKIPPED for this chunk), and — for variables
+    * chunked along their trailing dims too (the netCDF4 library's
+    * default layout) — the flattened element offset of the tile's
+    * corner ([[TileGeom.cornerOfTile]]; rank 2: its first column).
+    * Full-width chunks have startCol 0. */
   case class H5Chunk(startRec: Long, addr: Long, storedSize: Int, filterMask: Int,
       startCol: Int = 0)
+
+  /** The chunk grid over a variable's trailing (non-record) dims: the
+    * one definition the writer, the header parser and the range reader
+    * share. `dims` are the logical trailing dims the array column
+    * flattens row-major (rank 2: the one array width; empty for scalars
+    * and class-10 arrays, whose k-vector is the element itself), and
+    * `chunk` is the chunk extent along each, 1..dim. A row block of
+    * records splits into `nTiles` tiles numbered in row-major tile
+    * order — the order every chunk index linearizes scaled offsets
+    * in — and edge tiles are stored full-size, zero-padded. Untiled
+    * (every extent full): one tile, the whole row block. The rank-2
+    * partial-width layout is the one-trailing-dim case. */
+  private[graft] final case class TileGeom(dims: Seq[Int], chunk: Seq[Int]) {
+    private val d = dims.toArray
+    private val c = chunk.toArray
+    require(c.length == d.length && c.forall(_ >= 1), s"bad tile grid $this")
+    val rank: Int = d.length
+    /** elements in one flattened row */
+    val rowElems: Int = d.product
+    /** elements in one tile row (the whole row when untiled) */
+    val tileRowElems: Int = c.product
+    /** tile counts per dim */
+    private val tilesPerDim = Array.tabulate(rank)(i => (d(i) + c(i) - 1) / c(i))
+    /** any extent partial → row blocks split into tiles */
+    val tiled: Boolean = rowElems > 0 && (0 until rank).exists(i => c(i) < d(i))
+    val nTiles: Int = if (tiled) tilesPerDim.product else 1
+    /** row-major strides over the tiles, over a row's elements and over
+      * one tile row's elements */
+    private val tileStride = TileGeom.suffixProducts(tilesPerDim)
+    private val elemStride = TileGeom.suffixProducts(d)
+    private val inTileStride = TileGeom.suffixProducts(c)
+
+    override def toString: String = s"${dims.mkString("x")} in ${chunk.mkString("x")} tiles"
+
+    /** Bytes of one chunk (one tile) of `chunkRecs` records of
+      * `elemSize`-byte elements, computed as a Long: a chunk no JVM
+      * array can hold is an IOException naming `where`. */
+    def chunkBytes(elemSize: Int, chunkRecs: Int, where: => String): Int = {
+      val n = elemSize.toLong * tileRowElems * chunkRecs
+      if (n > TileGeom.MaxChunkBytes) throw new java.io.IOException(
+        s"$where: a chunk of $chunkRecs records of $this is $n bytes, " +
+          s"over the ${TileGeom.MaxChunkBytes}-byte array bound")
+      n.toInt
+    }
+
+    /** Tile `t`'s coordinate along dim `i`, in tiles. */
+    def tileCoord(t: Long, i: Int): Int =
+      if (tiled) ((t / tileStride(i)) % tilesPerDim(i)).toInt else 0
+
+    /** Flattened element offset of tile `t`'s corner. */
+    def cornerOfTile(t: Long): Int = {
+      var corner = 0
+      var i = 0
+      while (i < rank) { corner += tileCoord(t, i) * c(i) * elemStride(i); i += 1 }
+      corner
+    }
+
+    /** Tile index of a flattened corner offset (inverse of [[cornerOfTile]]). */
+    def tileOfCorner(corner: Int): Int = (locate(corner) >>> 32).toInt
+
+    /** Flattened corner of the tile that starts at `start(i)` along each
+      * dim: element offsets (B-tree v1 keys) or, when `scaled`, offsets
+      * in chunk extents (v2 B-tree records). A start off the tile grid —
+      * past its dim, or not on a tile edge — is an IOException naming
+      * `where` and the offset. */
+    def cornerOf(start: Array[Long], scaled: Boolean, where: => String): Int = {
+      var corner = 0
+      var i = 0
+      while (i < rank) {
+        val s = start(i)
+        val tile = if (scaled) s else if (s % c(i) == 0) s / c(i) else -1L
+        // a zero-length dim still keys its chunks at offset 0
+        if (tile < 0 || tile >= math.max(1, tilesPerDim(i))) throw new java.io.IOException(
+          s"$where: chunk offset $s along trailing dim ${i + 1} is off the tile grid $this")
+        corner += tile.toInt * c(i) * elemStride(i)
+        i += 1
+      }
+      corner
+    }
+
+    /** Element `k` of a flattened row → its tile (high 32 bits) and its
+      * element offset within one tile row (low 32 bits). */
+    def locate(k: Int): Long = {
+      var rem = k
+      var t = 0
+      var off = 0
+      var i = 0
+      while (i < rank) {
+        val j = rem / elemStride(i)
+        rem -= j * elemStride(i)
+        t += (j / c(i)) * tileStride(i)
+        off += (j % c(i)) * inTileStride(i)
+        i += 1
+      }
+      (t.toLong << 32) | off
+    }
+
+    /** Copy tile `t` of the first `nRecs` flattened rows in `rows`
+      * (`esz`-byte elements) into the zeroed `tile`, one full tile row
+      * per record, as one contiguous run per innermost tile line; the
+      * lines and cells past an edge tile's dims keep their zero padding. */
+    def gather(rows: Array[Byte], nRecs: Int, t: Int, esz: Int, tile: Array[Byte]): Unit = {
+      val last = rank - 1
+      val corner = cornerOfTile(t)
+      val runBytes = math.min(c(last), d(last) - tileCoord(t, last) * c(last)) * esz
+      var r = 0
+      while (r < nRecs) {
+        var line = 0 // in-tile element offset of the line
+        while (line < tileRowElems) {
+          var src = corner
+          var inRange = true
+          var i = 0
+          while (i < last) {
+            val o = (line / inTileStride(i)) % c(i)
+            inRange &&= tileCoord(t, i) * c(i) + o < d(i)
+            src += o * elemStride(i)
+            i += 1
+          }
+          if (inRange) System.arraycopy(rows, (r * rowElems + src) * esz,
+            tile, (r * tileRowElems + line) * esz, runBytes)
+          line += c(last)
+        }
+        r += 1
+      }
+    }
+  }
+
+  private[graft] object TileGeom {
+    /** the largest byte array every JVM allocates */
+    val MaxChunkBytes: Int = Int.MaxValue - 8
+
+    /** Row-major strides: out(i) = Π dims(i+1..) (1 for the last dim). */
+    private def suffixProducts(dims: Array[Int]): Array[Int] = dims.scanRight(1)(_ * _).tail
+  }
 
   /** Extensible-array geometry (HDF5 spec III.J — the ≥1.10 chunk
     * index for ONE unlimited dimension, i.e. exactly the shape of a
@@ -243,10 +378,11 @@ object Hdf5Format {
         * `fletcher32=True`, set FIRST in the pipeline (checksum covers
         * the raw chunk; the 4-byte word rides through shuffle/deflate) */
       fletcher: Boolean = false,
-      /** rank-2 tile width when the variable is chunked along BOTH
-        * dims (netCDF4's default layout chunks every dim); 0 = chunks
-        * span the full second dimension */
-      chunkCols: Int = 0,
+      /** the chunk grid over the trailing dims: what a row block of
+        * `chunkRecs` records splits into when the variable is chunked
+        * along them too (netCDF4's default layout chunks every dim);
+        * empty for scalars and class-10 arrays */
+      geom: TileGeom = TileGeom(Nil, Nil),
       /** compact layout (class 0): the data lives INSIDE the object
         * header's layout message — ≤64 KiB by the format contract, so
         * carrying it in the metadata is free */
@@ -254,19 +390,12 @@ object Hdf5Format {
       /** big-endian numerics (datatype-message order bit): served by
         * order-aware element accessors — POWER/SPARC-written files */
       bigEndian: Boolean = false,
-      /** rank ≥ 3: logical trailing dims (the array column flattens
-        * them row-major); empty for rank ≤ 2 */
-      tdims: Seq[Int] = Nil,
-      /** rank ≥ 3: chunk extent per trailing dim (tiles when any is
-        * partial — the library's default rank-3 layout) */
-      ctrail: Seq[Int] = Nil,
       /** DEFINED fill value (element bytes): what UNALLOCATED chunks
         * of a sparse variable read as (zeros when empty/undefined) */
       fill: Array[Byte] = Array.emptyByteArray,
       /** ZSTANDARD filter (registered id 32015, netCDF-4.9) in the
         * terminal pipeline slot instead of deflate */
       zstd: Boolean = false) {
-    def chunkBytes: Int = (kind.rowBytes * chunkRecs).toInt
     /** CF `actual_range` zone map, when the writer recorded one. */
     def range: Option[(Double, Double)] =
       attrs.find(a => a.name == "actual_range" && a.nums.length == 2)
@@ -367,16 +496,6 @@ object Hdf5Format {
       while (j < 4) { out(ub + 44 + j) = (c & 0xff).toByte; c >>= 8; j += 1 }
     }
     out
-  }
-
-  // ---------------------------------------------------------------
-  /** Row-major strides: out(i) = Π dims(i+1..) (1 for the last dim). */
-  private def suffixProducts(dims: Array[Int]): Array[Int] = {
-    val s = new Array[Int](dims.length)
-    var acc = 1
-    var i = dims.length - 1
-    while (i >= 0) { s(i) = acc; acc *= dims(i); i -= 1 }
-    s
   }
 
   // ---------------------------------------------------------------
@@ -689,15 +808,12 @@ object Hdf5Format {
   private final class VarState(val name: String, val kind: H5Kind,
       val chunkRecs: Int, val deflate: Boolean, val attrs: Seq[H5Attr],
       val shuffle: Boolean = false, val fletcher: Boolean = false,
-      val chunkCols: Int = 0, val bigEndian: Boolean = false,
+      val bigEndian: Boolean = false,
       val quant: Option[(String, Int)] = None,
-      /** rank ≥ 3: logical trailing dims (the flattened array column
-        * unflattens row-major over these) — empty for rank ≤ 2 */
-      val tdims: Array[Int] = Array.emptyIntArray,
-      /** rank ≥ 3: chunk sizes along the trailing dims (full when not
-        * given) — the netCDF4 library's default chunking is partial
-        * in EVERY dim, so real rank-3 layouts tile in all of them */
-      val ctrailIn: Array[Int] = Array.emptyIntArray,
+      /** the chunk grid over the trailing dims — the netCDF4 library's
+        * default chunking is partial in EVERY dim, so real layouts
+        * tile in all of them */
+      val geom: TileGeom = TileGeom(Nil, Nil),
       /** DEFINED fill value (element bytes, file byte order) — rides
         * in the fill value message; with `sparse`, all-fill chunks
         * are left UNALLOCATED, the library's behavior for regions
@@ -711,52 +827,14 @@ object Hdf5Format {
       val zstd: Int = 0,
       /** class-10 ARRAY datatype: the array column is a RANK-1
         * dataspace whose element is the whole k-vector — no trailing
-        * dataspace dim, no tiling; the element size is rowBytes */
+        * dataspace dim, so an empty `geom`; the element size is rowBytes */
       val arrayDt: Boolean = false,
       /** the writer's chunk codec, shared by all of its variables */
       codec: ChunkCodec) {
     require(zstd == 0 || !deflate, "zstd and deflate are mutually exclusive")
-    /** flattened trailing width for array kinds (0 for scalars) */
-    val width: Int = kind match {
-      case KFloatArr(k) => k
-      case KDoubleArr(k) => k
-      case KLongArr(k) => k
-      case _ => 0
-    }
-    require(tdims.isEmpty || tdims.product == width,
-      s"trailing dims ${tdims.mkString("x")} must flatten to $width for $name")
-    require(!arrayDt || width > 0,
-      s"arraydt needs an array column, $name is scalar")
-    // ---- trailing-dim chunk geometry, general over rank: the rank-2
-    // partial-width layout is the one-trailing-dim (m = 1) case.
-    // Class-10 array datatypes have NO trailing dataspace dims: the
-    // k-vector is the element itself ----
-    /** logical trailing dims (rank-2 = the single array width) */
-    val trailD: Array[Int] =
-      if (arrayDt) Array.emptyIntArray
-      else if (tdims.nonEmpty) tdims
-      else if (width > 0) Array(width) else Array.emptyIntArray
-    /** chunk extent per trailing dim */
-    val trailC: Array[Int] =
-      if (arrayDt) Array.emptyIntArray
-      else if (tdims.nonEmpty) { if (ctrailIn.nonEmpty) ctrailIn else tdims }
-      else if (width > 0) Array(if (chunkCols > 0) chunkCols else width)
-      else Array.emptyIntArray
-    require(trailC.length == trailD.length &&
-      trailC.zip(trailD).forall { case (c, d) => c >= 1 && c <= d },
-      s"trailing chunk dims ${trailC.mkString("x")} out of range for $name")
-    /** any trailing dim chunked partially → row blocks split into tiles */
-    val tiled: Boolean = trailC.zip(trailD).exists { case (c, d) => c < d }
-    /** tile counts per trailing dim, their row-major strides, and the
-      * element strides inside one flattened row / one tile row */
-    val nbs: Array[Int] = trailD.zip(trailC).map { case (d, c) => (d + c - 1) / c }
-    val nbStride: Array[Int] = suffixProducts(nbs)
-    val fstride: Array[Int] = suffixProducts(trailD)
-    val cstride: Array[Int] = suffixProducts(trailC)
-    /** tiles per row block (rank-2: column tiles) */
-    val nColBlocks: Int = if (tiled) nbs.product else 1
-    /** elements in one tile row */
-    val tileRowElems: Int = if (trailC.isEmpty) 0 else trailC.product
+    /** bytes of one stored tile (tiled variables only) */
+    private val tileBytes =
+      if (geom.tiled) geom.chunkBytes(kind.elemSize, chunkRecs, s"variable $name") else 0
     val raw = new Array[Byte]((kind.rowBytes * chunkRecs).toInt)
     val bb: ByteBuffer = ByteBuffer.wrap(raw).order(
       if (bigEndian) ByteOrder.BIG_ENDIAN else ByteOrder.LITTLE_ENDIAN)
@@ -845,58 +923,14 @@ object Hdf5Format {
       // edge chunks are stored FULL-SIZE (zero-padded) — the HDF5
       // chunked-storage contract; logical dims bound what readers use
       java.util.Arrays.fill(raw, (kind.rowBytes * inChunk).toInt, raw.length, 0.toByte)
-      if (tiled) {
-        // partial-width layout, general over rank: the full-width row
-        // block splits into trailing-dim tile boxes (edge tiles
-        // zero-padded to full size per the chunked-storage contract),
-        // appended in row-major tile order — the same order every
-        // chunk index linearizes scaled offsets in. Rank-2 partial
-        // width is the one-trailing-dim case (one contiguous run per
-        // row); deeper ranks gather one contiguous innermost run per
-        // outer-coordinate combination.
-        val esz = kind.elemSize
-        val m = trailD.length
-        val rowB = width * esz
-        val tileRowB = tileRowElems * esz
-        val corner = new Array[Int](m)
-        val odo = new Array[Int](m) // odometer over dims 0..m-2
+      if (geom.tiled) {
+        // the row block splits into its tiles, appended in row-major
+        // tile order — the order every chunk index linearizes scaled
+        // offsets in
         var t = 0
-        while (t < nColBlocks) {
-          var i = 0
-          while (i < m) { corner(i) = ((t / nbStride(i)) % nbs(i)) * trailC(i); i += 1 }
-          val tile = new Array[Byte](chunkRecs * tileRowB)
-          val runElems = math.min(trailC(m - 1), trailD(m - 1) - corner(m - 1))
-          var r = 0
-          while (r < inChunk) {
-            java.util.Arrays.fill(odo, 0)
-            var more = true
-            while (more) {
-              // in-range outer coords only; out-of-range boxes stay zero
-              var srcOff = corner(m - 1)
-              var dstOff = 0
-              var inRange = true
-              var d = 0
-              while (d < m - 1) {
-                val j = corner(d) + odo(d)
-                if (j >= trailD(d)) inRange = false
-                srcOff += j * fstride(d)
-                dstOff += odo(d) * cstride(d)
-                d += 1
-              }
-              if (inRange && runElems > 0)
-                System.arraycopy(raw, r * rowB + srcOff * esz,
-                  tile, r * tileRowB + dstOff * esz, runElems * esz)
-              // advance the odometer (rightmost outer dim fastest)
-              var p = m - 2
-              more = p >= 0
-              while (p >= 0) {
-                odo(p) += 1
-                if (odo(p) < trailC(p)) p = -1
-                else { odo(p) = 0; p -= 1; if (p < 0) more = false }
-              }
-            }
-            r += 1
-          }
+        while (t < geom.nTiles) {
+          val tile = new Array[Byte](tileBytes)
+          geom.gather(raw, inChunk, t, kind.elemSize, tile)
           encodeChunk(tile, mustClone = false)
           t += 1
         }
@@ -1053,17 +1087,17 @@ object Hdf5Format {
       val q = qF(x); track(q.toDouble); bb.putFloat(q); endValue()
     }
     def putFloatArrV(a: Array[Float]): Unit = {
-      val k = width
+      val k = kind.rowElems
       var i = 0; while (i < k) { bb.putFloat(qF(if (i < a.length) a(i) else 0f)); i += 1 }
       endValue()
     }
     def putDoubleArrV(a: Array[Double]): Unit = {
-      val k = width
+      val k = kind.rowElems
       var i = 0; while (i < k) { bb.putDouble(qD(if (i < a.length) a(i) else 0.0)); i += 1 }
       endValue()
     }
     def putLongArrV(a: Array[Long]): Unit = {
-      val k = width
+      val k = kind.rowElems
       var i = 0; while (i < k) { bb.putLong(if (i < a.length) a(i) else 0L); i += 1 }
       endValue()
     }
@@ -1345,6 +1379,30 @@ object Hdf5Format {
         bb.array()
     }
 
+    /** Column `f`'s chunk grid: its trailing dims (rank 2: the one
+      * array width) chunked by `trailChunks`, or at rank 2 by
+      * `chunkCols`; none for scalars and class-10 arrays. */
+    private def geomOf(f: StructField): TileGeom = {
+      val width = kindOf(f) match {
+        case k @ (KFloatArr(_) | KDoubleArr(_) | KLongArr(_)) => k.rowElems
+        case _ => 0
+      }
+      require(!arrayDatatype(f.name) || width > 0,
+        s"arraydt needs an array column, ${f.name} is scalar")
+      if (width == 0 || arrayDatatype(f.name)) TileGeom(Nil, Nil)
+      else {
+        val dims = trailDims.getOrElse(f.name, Seq(width))
+        require(dims.product == width,
+          s"trailing dims ${dims.mkString("x")} must flatten to $width for ${f.name}")
+        val ext = trailChunks.getOrElse(f.name,
+          if (chunkCols > 0 && !trailDims.contains(f.name)) Seq(chunkCols) else dims)
+        require(ext.length == dims.length &&
+          ext.zip(dims).forall { case (c, d) => c >= 1 && c <= d },
+          s"trailing chunk dims ${ext.mkString("x")} out of range for ${f.name}")
+        TileGeom(dims, ext)
+      }
+    }
+
     /** one chunk codec for every variable, ended by finish() or
       * discard(): a zlib stream per chunk is a JNI allocation, and was the
       * sf1 smoke's 4x super-linear term on nc4_extensible_array */
@@ -1358,10 +1416,7 @@ object Hdf5Format {
         else Nil
       new VarState(f.name, kindOf(f), chunkRecs, deflate,
         varAttrs.getOrElse(f.name, Nil) ++ quantAttr(f.name) ++ scaleAttr,
-        shuffle, fletcher, chunkCols,
-        bigEndian, quantize.get(f.name),
-        trailDims.getOrElse(f.name, Nil).toArray,
-        trailChunks.getOrElse(f.name, Nil).toArray,
+        shuffle, fletcher, bigEndian, quantize.get(f.name), geomOf(f),
         fillBytesOf(f), sparse, zstdLevel,
         arrayDt = arrayDatatype.contains(f.name), codec = codec)
     }
@@ -1406,7 +1461,7 @@ object Hdf5Format {
         objRefs: Seq[(String, Seq[Long])] = Nil): Seq[(Int, Array[Byte])] = {
       val dims: Seq[Long] = v.kind match {
         case KFloatArr(_) | KDoubleArr(_) | KLongArr(_) =>
-          v.numRecs +: v.trailD.toSeq.map(_.toLong)
+          v.numRecs +: v.geom.dims.map(_.toLong)
         case _ => Seq(v.numRecs)
       }
       val msgs = scala.collection.mutable.ArrayBuffer.empty[(Int, Array[Byte])]
@@ -1463,7 +1518,7 @@ object Hdf5Format {
       val lay = new Buf
       val chunkDims: Seq[Int] = v.kind match {
         case KFloatArr(_) | KDoubleArr(_) | KLongArr(_) =>
-          v.chunkRecs +: v.trailC.toSeq
+          v.chunkRecs +: v.geom.chunk
         case _ => Seq(v.chunkRecs)
       }
       if (compactLayout) {
@@ -1705,13 +1760,9 @@ object Hdf5Format {
         b.u32(size).u32(mask)
         // row-major tile order: chunk idx → (row block, trailing tile
         // coords), one logical offset per dataset dim
-        b.u64((idx.toLong / v.nColBlocks) * v.chunkRecs)
-        val t = (idx % v.nColBlocks).toInt
-        var i = 0
-        while (i < v.trailD.length) {
-          b.u64(((t / v.nbStride(i)) % v.nbs(i)).toLong * v.trailC(i))
-          i += 1
-        }
+        val g = v.geom
+        b.u64((idx.toLong / g.nTiles) * v.chunkRecs)
+        (0 until g.rank).foreach(i => b.u64(g.tileCoord(idx % g.nTiles, i).toLong * g.chunk(i)))
         b.u64(0) // element-size dimension offset
       }
       present.foreach { case ((bytes, mask), i) =>
@@ -1807,7 +1858,7 @@ object Hdf5Format {
     private def btree2Index(v: VarState, chunkAddrs: Seq[Long],
         selfAddr: Long): Array[Byte] = {
       val filtered = v.deflate || v.shuffle || v.fletcher || v.zstd > 0
-      val rank = 1 + v.trailD.length // dataspace dims (record + trailing)
+      val rank = 1 + v.geom.rank // dataspace dims (record + trailing)
       val recSize = if (filtered) 8 + 4 + 4 + 8 * rank else 8 + 8 * rank
       // sparse: unallocated (null) chunks have NO record — positions
       // below index through the PRESENT chunks only
@@ -1820,13 +1871,9 @@ object Hdf5Format {
         val i = presentIdx(p)
         out.u64(chunkAddrs(i))
         if (filtered) out.u32(v.stored(i)._1.length).u32(v.stored(i)._2)
-        out.u64(i.toLong / v.nColBlocks) // scaled offset along the record dim
-        val t = (i % v.nColBlocks).toInt
-        var d = 0
-        while (d < v.trailD.length) {
-          out.u64(((t / v.nbStride(d)) % v.nbs(d)).toLong)
-          d += 1
-        }
+        val g = v.geom
+        out.u64(i.toLong / g.nTiles) // scaled offset along the record dim
+        (0 until g.rank).foreach(d => out.u64(g.tileCoord(i % g.nTiles, d)))
       }
       def leaf(indices: Range): Array[Byte] = {
         val lf = new Buf
@@ -2406,7 +2453,7 @@ object Hdf5Format {
         dimScales.foreach { case (c, ds) =>
           val v = vars.find(_.name == c).get
           ds.zipWithIndex.foreach { case (d, i) =>
-            val n = if (i == 0) v.numRecs else v.trailD(i - 1).toLong
+            val n = if (i == 0) v.numRecs else v.geom.dims(i - 1).toLong
             require(m.getOrElse(d, n) == n,
               s"dim $d length drift: ${m.getOrElse(d, n)} vs $n")
             m(d) = n
@@ -2860,8 +2907,7 @@ object Hdf5Format {
       f"$what checksum mismatch at $addr (stored 0x$stored%08x, computed 0x$computed%08x)")
   }
 
-  private def readFixedArrayChunks(r: R, addr: Long, chunkRecs: Int,
-      nCB: Int, cornerOfTile: Long => Int,
+  private def readFixedArrayChunks(r: R, addr: Long, chunkRecs: Int, geom: TileGeom,
       filtered: Boolean, rawChunkBytes: Long, name: String): Array[H5Chunk] = {
     val h = new BB(r.bytesAt(addr, 28))
     verifyCk(h.data, 24, "fixed array header", addr)
@@ -2887,8 +2933,8 @@ object Hdf5Format {
           (0 until szBytes).foreach(k => s |= (db.u8().toLong << (8 * k)))
           (s.toInt, db.u32().toInt)
         } else (rawChunkBytes.toInt, 0) // unfiltered chunks store full-size
-      if (cAddr != UNDEF) acc += H5Chunk((i / nCB) * chunkRecs, cAddr, sz, mask,
-        cornerOfTile(i % nCB))
+      if (cAddr != UNDEF) acc += H5Chunk((i / geom.nTiles) * chunkRecs, cAddr, sz, mask,
+        geom.cornerOfTile(i % geom.nTiles))
     }
     val pageSize = 1L << pageBits
     if (nEntries <= pageSize) {
@@ -2946,8 +2992,7 @@ object Hdf5Format {
     * its own checksum. UNDEF addresses and uninitialized pages are
     * unallocated (sparse) regions and simply skip their element
     * span. */
-  private def readExtensibleArrayChunks(r: R, addr: Long, chunkRecs: Int,
-      nCB: Int, cornerOfTile: Long => Int,
+  private def readExtensibleArrayChunks(r: R, addr: Long, chunkRecs: Int, geom: TileGeom,
       filtered: Boolean, rawChunkBytes: Long, nChunks: Long,
       name: String): Array[H5Chunk] = {
     val h = new BB(r.bytesAt(addr, 72))
@@ -2974,8 +3019,8 @@ object Hdf5Format {
           (0 until szBytes).foreach(k => s |= (b.u8().toLong << (8 * k)))
           (s.toInt, b.u32().toInt)
         } else (rawChunkBytes.toInt, 0)
-      if (cAddr != UNDEF) acc += H5Chunk((posIdx / nCB) * chunkRecs, cAddr, sz, mask,
-        cornerOfTile(posIdx % nCB))
+      if (cAddr != UNDEF) acc += H5Chunk((posIdx / geom.nTiles) * chunkRecs, cAddr, sz, mask,
+        geom.cornerOfTile(posIdx % geom.nTiles))
     }
     /** One data block's elements. Unpaged blocks carry them inline;
       * paged blocks (past 2^pageBits elements) are a bare prefix with
@@ -3070,10 +3115,10 @@ object Hdf5Format {
     * dimension): depth-0 and depth-1 trees via [[btree2Records]].
     * Type 10 records are (address, scaled offsets); type 11 adds
     * (chunk size, filter mask) with the size width derivable from the
-    * record size. Scaled offset × chunk dim = start position. */
+    * record size. Scaled offset × chunk dim = start position; a scaled
+    * offset off the tile grid is an IOException naming `where`. */
   private def readBtree2Chunks(r: R, addr: Long, chunkRecs: Int, rank: Int,
-      cornerOfScaled: Array[Long] => Int,
-      filtered: Boolean, rawChunkBytes: Long, name: String): Array[H5Chunk] = {
+      geom: TileGeom, filtered: Boolean, rawChunkBytes: Long, where: String): Array[H5Chunk] = {
     val (recSize, n, recs) = btree2Records(r, addr, if (filtered) 11 else 10)
     val szLen = recSize - 8 - 4 - 8 * rank // type 11 chunk-size width
     (0 until n).map { _ =>
@@ -3088,7 +3133,7 @@ object Hdf5Format {
       val scaledTrail = new Array[Long](rank - 1)
       var d = 0
       while (d < rank - 1) { scaledTrail(d) = recs.u64(); d += 1 }
-      H5Chunk(scaled0 * chunkRecs, cAddr, sz, mask, cornerOfScaled(scaledTrail))
+      H5Chunk(scaled0 * chunkRecs, cAddr, sz, mask, geom.cornerOf(scaledTrail, scaled = true, where))
     }.sortBy(c => (c.startRec, c.startCol)).toArray
   }
 
@@ -3205,7 +3250,7 @@ object Hdf5Format {
   private[graft] def btree2ChunksForTest(fs: FileSystem, path: Path, addr: Long,
       chunkRecs: Int): Array[H5Chunk] = {
     val in = fs.open(path)
-    try readBtree2Chunks(new R(in), addr, chunkRecs, 1, _ => 0,
+    try readBtree2Chunks(new R(in), addr, chunkRecs, 1, TileGeom(Nil, Nil),
       filtered = false, 16L, "test")
     finally in.close()
   }
@@ -3279,7 +3324,7 @@ object Hdf5Format {
   private[graft] def fixedArrayChunksForTest(fs: FileSystem, path: Path, addr: Long,
       chunkRecs: Int, filtered: Boolean, rawChunkBytes: Long): Array[H5Chunk] = {
     val in = fs.open(path)
-    try readFixedArrayChunks(new R(in), addr, chunkRecs, 1, _ => 0,
+    try readFixedArrayChunks(new R(in), addr, chunkRecs, TileGeom(Nil, Nil),
       filtered, rawChunkBytes, "test")
     finally in.close()
   }
@@ -3291,7 +3336,7 @@ object Hdf5Format {
       chunkRecs: Int, filtered: Boolean, rawChunkBytes: Long,
       nChunks: Long): Array[H5Chunk] = {
     val in = fs.open(path)
-    try readExtensibleArrayChunks(new R(in), addr, chunkRecs, 1, _ => 0,
+    try readExtensibleArrayChunks(new R(in), addr, chunkRecs, TileGeom(Nil, Nil),
       filtered, rawChunkBytes, nChunks, "test")
     finally in.close()
   }
@@ -3667,7 +3712,7 @@ object Hdf5Format {
   }
 
   /** Parse one dataset's object header into an H5Var. */
-  private def readDataset(r: R, name: String, addr: Long): Option[H5Var] = {
+  private def readDataset(r: R, path: Path, name: String, addr: Long): Option[H5Var] = {
     val msgs = readMessages(r, addr)
     var dims: Seq[Long] = Nil
     var kindCls = -1
@@ -3897,61 +3942,26 @@ object Hdf5Format {
       case _ =>
     }
     if (dims.isEmpty || kindCls < 0) return None
-    // a wild file chunked ALSO along the second dimension (chunk dims
-    // [r, k', esize] with k' < k — the netCDF4 library's DEFAULT
-    // rank-2 layout) tiles each row block into column tiles; record
-    // the tile width so the range reader assembles rows across tiles
-    // (v3 chunk dims carry a trailing element-size dim; v4 dims do not)
-    val chunkColsOf: Int =
-      if ((chunkDims.length == 3 || (layoutV4 && chunkDims.length == 2)) &&
-          dims.length == 2 && chunkDims(1).toLong < dims(1))
-        chunkDims(1)
-      else 0
-    // ---- trailing-dim chunk geometry, general over rank: elements of
-    // a rank-N variable flatten row-major into one array column, so a
-    // chunk's logical corner has a well-defined flattened element
-    // offset; the rank-2 partial-width layout is the one-trailing-dim
-    // case. (time, lat, lon) with the library's default chunking —
-    // partial in EVERY dim — is the wild rank-3 shape this serves. ----
+    val where = s"$path: variable $name"
+    // ---- the chunk grid over the trailing dims: rank-2 partial-width
+    // column tiles, or (time, lat, lon) with the library's default
+    // chunking, partial in EVERY dim. v3 chunk dims carry a trailing
+    // element-size dim; v4 dims do not. ----
     require(dims.length <= 8, s"rank ${dims.length} > 8 unsupported for $name")
     val flatW: Long = if (dims.length >= 2) dims.tail.product else 1L
     require(flatW <= Int.MaxValue,
       s"flattened trailing width $flatW exceeds array-column bound for $name")
-    val trailAll: Array[Int] =
-      if (dims.length >= 2) dims.tail.map(_.toInt).toArray else Array.emptyIntArray
-    val ctrailAll: Array[Int] =
-      if (trailAll.isEmpty || chunkDims.isEmpty) trailAll // contiguous/compact: untiled
-      else {
-        val cd = if (layoutV4) chunkDims else chunkDims.dropRight(1)
-        require(cd.length == dims.length,
-          s"chunk rank ${cd.length} != dataset rank ${dims.length} for $name")
-        cd.tail.zip(trailAll).map { case (c, d) => math.max(1, math.min(c, d)) }.toArray
-      }
-    val fstrideAll: Array[Int] = suffixProducts(trailAll)
-    val nbsAll: Array[Int] =
-      trailAll.zip(ctrailAll).map { case (d, c) => (d + math.max(1, c) - 1) / math.max(1, c) }
-    val nbStrideAll: Array[Int] = suffixProducts(nbsAll)
-    /** tiles per row block (1 when chunks span the full trailing dims) */
-    val nCB: Int = if (nbsAll.isEmpty) 1 else nbsAll.product
-    /** flattened corner element offset of tile `t` (row-major tile order) */
-    val cornerOfTile: Long => Int = t => {
-      var corner = 0L
-      var i = 0
-      while (i < nbsAll.length) {
-        corner += ((t / nbStrideAll(i)) % nbsAll(i)) * ctrailAll(i).toLong * fstrideAll(i)
-        i += 1
-      }
-      corner.toInt
-    }
-    /** flattened corner from per-trailing-dim SCALED offsets (chunk units) */
-    val cornerOfScaled: Array[Long] => Int = s => {
-      var corner = 0L
-      var i = 0
-      while (i < s.length && i < ctrailAll.length) {
-        corner += s(i) * ctrailAll(i).toLong * fstrideAll(i)
-        i += 1
-      }
-      corner.toInt
+    val trailAll: Seq[Int] = dims.drop(1).map(_.toInt)
+    val geom: TileGeom = {
+      val ext =
+        if (trailAll.isEmpty || chunkDims.isEmpty) trailAll // contiguous/compact: untiled
+        else {
+          val cd = if (layoutV4) chunkDims else chunkDims.dropRight(1)
+          require(cd.length == dims.length,
+            s"chunk rank ${cd.length} != dataset rank ${dims.length} for $name")
+          cd.tail
+        }
+      TileGeom(trailAll, ext.zip(trailAll).map { case (c, d) => math.max(1, math.min(c, d)) })
     }
     val kind: H5Kind = (kindCls, elemSize, dims.size) match {
       case (0, 8, 1) => KLong
@@ -3996,14 +4006,12 @@ object Hdf5Format {
     val _ = signed
     val filtered = deflate || shuffle || fletcher || zstdF
     val rowBytesOf: Long = elemSize.toLong * flatW
-    /** stored bytes of ONE chunk = one tile (full-width when untiled) */
-    val chunkBytesOf: Long = {
-      val tileElems = if (ctrailAll.isEmpty) 1L else ctrailAll.map(_.toLong).product
-      elemSize.toLong * tileElems * math.max(1, chunkRecs)
-    }
+    /** stored bytes of ONE chunk = one tile (full-width when untiled),
+      * bounded so every reader buffer fits one array */
+    val chunkBytesOf: Int = geom.chunkBytes(elemSize, math.max(1, chunkRecs), where)
     val nChunksOf: Long =
       if (chunkRecs <= 0) 0L
-      else ((dims.head + chunkRecs - 1) / chunkRecs) * nCB
+      else ((dims.head + chunkRecs - 1) / chunkRecs) * geom.nTiles
     val chunks: Array[H5Chunk] =
       if (btreeAddr == UNDEF) Array.empty
       else if (layoutV4) chunkIdxType match {
@@ -4012,23 +4020,23 @@ object Hdf5Format {
         // (2), a Fixed Array (3), an Extensible Array (4, one
         // unlimited dim), or a v2 B-tree (5, several unlimited dims).
         case 1 =>
-          require(nCB == 1, s"single-chunk index with partial-width tiling for $name")
-          val sz = if (singleChunkSize > 0) singleChunkSize.toInt else chunkBytesOf.toInt
+          require(!geom.tiled, s"single-chunk index with partial-width tiling for $name")
+          val sz = if (singleChunkSize > 0) singleChunkSize.toInt else chunkBytesOf
           Array(H5Chunk(0L, btreeAddr, sz, singleChunkMask))
         case 2 =>
           require(!filtered, s"implicit chunk index with filters for $name")
           (0L until nChunksOf).map(i =>
-            H5Chunk((i / nCB) * chunkRecs, btreeAddr + i * chunkBytesOf,
-              chunkBytesOf.toInt, 0, cornerOfTile(i % nCB))).toArray
+            H5Chunk((i / geom.nTiles) * chunkRecs, btreeAddr + i * chunkBytesOf,
+              chunkBytesOf, 0, geom.cornerOfTile(i % geom.nTiles))).toArray
         case 3 =>
-          readFixedArrayChunks(r, btreeAddr, chunkRecs, nCB, cornerOfTile,
+          readFixedArrayChunks(r, btreeAddr, chunkRecs, geom,
             filtered, chunkBytesOf, name)
         case 4 =>
-          readExtensibleArrayChunks(r, btreeAddr, chunkRecs, nCB, cornerOfTile,
+          readExtensibleArrayChunks(r, btreeAddr, chunkRecs, geom,
             filtered, chunkBytesOf, nChunksOf, name)
         case 5 =>
           readBtree2Chunks(r, btreeAddr, chunkRecs, chunkDims.length,
-            cornerOfScaled, filtered, chunkBytesOf, name)
+            geom, filtered, chunkBytesOf, where)
         case t => throw new java.io.IOException(
           s"unknown layout-v4 chunk index type $t for $name")
       }
@@ -4048,18 +4056,13 @@ object Hdf5Format {
             val size = body.u32().toInt
             val mask = body.u32().toInt
             val startRec = body.u64()
-            // trailing-dim logical offsets flatten row-major into the
-            // chunk's corner element offset (rank-2: the column start)
-            var corner = 0L
-            var d = 0
-            while (d < trailAll.length) {
-              corner += body.u64() * fstrideAll(d)
-              d += 1
-            }
+            // trailing-dim element offsets: the chunk's tile corner
+            val start = Array.fill(geom.rank)(body.u64())
             body.u64() // element-size dimension offset (always 0)
             val child = body.u64()
             if (level > 0) walk(child)
-            else acc += H5Chunk(startRec, child, size, mask, corner.toInt)
+            else acc += H5Chunk(startRec, child, size, mask,
+              geom.cornerOf(start, scaled = false, where))
           }
         }
         walk(btreeAddr)
@@ -4080,10 +4083,8 @@ object Hdf5Format {
     })
     Some(H5Var(name, kind, dims.head, math.max(1, chunkRecs), deflate,
       contiguous, chunks, attrsOut, shuffle = shuffle, fletcher = fletcher,
-      chunkCols = chunkColsOf, compactData = compactBytes,
+      geom = geom, compactData = compactBytes,
       bigEndian = bigEndian,
-      tdims = if (dims.length >= 3) trailAll.toSeq else Nil,
-      ctrail = if (dims.length >= 3) ctrailAll.toSeq else Nil,
       fill = if (fillBytes.length == elemSize) fillBytes else Array.emptyByteArray,
       zstd = zstdF))
   }
@@ -4126,7 +4127,7 @@ object Hdf5Format {
       def walk(prefix: String, msgs: Seq[(Int, Array[Byte])]): Seq[H5Var] =
         readLinks(r, msgs).sortBy(_._1).flatMap { case (nm, a) =>
           nameOfAddr(a) = prefix + nm
-          readDataset(r, prefix + nm, a) match {
+          readDataset(r, path, prefix + nm, a) match {
             case Some(v) => Seq(v)
             case None => walk(prefix + nm + "/", readMessages(r, a))
           }
@@ -4189,66 +4190,28 @@ object Hdf5Format {
         }
         acc.toArray
       }
-    // ---- partial-width (tiled) chunk layout, general over rank: rows
-    // assemble across trailing-dim tile boxes (rank-2 partial width is
-    // the one-trailing-dim case); the current row block's tiles decode
-    // lazily ----
-    private val width: Int = v.kind match {
-      case KFloatArr(k) => k
-      case KDoubleArr(k) => k
-      case KLongArr(k) => k
-      case _ => 0
-    }
-    /** trailing logical dims / chunk extents (rank-2 partial width
-      * folds into the same geometry via chunkCols) */
-    private val trailD: Array[Int] =
-      if (v.tdims.nonEmpty) v.tdims.toArray
-      else if (width > 0) Array(width) else Array.emptyIntArray
-    private val trailC: Array[Int] =
-      if (v.tdims.nonEmpty) v.ctrail.toArray
-      else if (width > 0) Array(if (v.chunkCols > 0) v.chunkCols else width)
-      else Array.emptyIntArray
-    private val tiled: Boolean =
-      trailD.nonEmpty && trailC.zip(trailD).exists { case (c, d) => c < d }
-    private val m: Int = trailD.length
-    private val nbs: Array[Int] =
-      trailD.zip(trailC).map { case (d, c) => (d + c - 1) / c }
-    private val nbStride: Array[Int] = suffixProducts(nbs)
-    private val fstride: Array[Int] = suffixProducts(trailD)
-    private val cstride: Array[Int] = suffixProducts(trailC)
-    private val nCB: Int = if (tiled) nbs.product else 1
+    // ---- tiled chunk layout (`v.geom`): rows assemble across the
+    // trailing-dim tiles; the current row block's tiles decode lazily ----
+    private val tiled: Boolean = v.geom.tiled
     private val tileRowBytes: Int =
-      if (tiled) trailC.product * v.kind.elemSize else 0
+      if (tiled) v.geom.tileRowElems * v.kind.elemSize else 0
     private val tileLen: Int = tileRowBytes * v.chunkRecs
-    /** tile linear index of a chunk from its flattened corner offset */
-    private def tileIdxOfCorner(corner: Int): Int = {
-      var rem = corner
-      var t = 0
-      var i = 0
-      while (i < m) {
-        val c = rem / fstride(i)
-        rem -= c * fstride(i)
-        t += (c / trailC(i)) * nbStride(i)
-        i += 1
-      }
-      t
-    }
     /** covering row blocks → tile-indexed chunk list (tiled mode) */
     private val tilesByBlock: Map[Long, Array[H5Chunk]] =
       if (!tiled) Map.empty
       else v.chunks.filter(c => c.startRec < r1 && c.startRec + v.chunkRecs > r0)
         .groupBy(_.startRec).map { case (sr, cs) =>
-          val arr = new Array[H5Chunk](nCB)
-          cs.foreach(c => arr(tileIdxOfCorner(c.startCol)) = c)
+          val arr = new Array[H5Chunk](v.geom.nTiles)
+          cs.foreach(c => arr(v.geom.tileOfCorner(c.startCol)) = c)
           (sr / v.chunkRecs, arr)
         }
     private var curBlock: Long = -1L
     /** the current row block's decoded tiles, null until first used;
       * their arrays are reused from block to block */
     private val tileBBs: Array[ByteBuffer] =
-      if (tiled) new Array[ByteBuffer](nCB) else null
+      if (tiled) new Array[ByteBuffer](v.geom.nTiles) else null
     private val tileBufs: Array[Array[Byte]] =
-      if (tiled) new Array[Array[Byte]](nCB) else null
+      if (tiled) new Array[Array[Byte]](v.geom.nTiles) else null
 
     /** Reset `buf` to the variable's fill pattern (zeros when the fill
       * value is undefined). */
@@ -4291,9 +4254,12 @@ object Hdf5Format {
     private val extra = if (v.fletcher) 4 else 0
     /** compact variables (class 0) carry their whole payload in the
       * metadata: the "chunk buffer" IS the inline data, pre-loaded.
-      * Otherwise chunks decode straight into it, checksum word included. */
+      * Otherwise chunks decode straight into it, checksum word
+      * included; a tiled variable's elements read through its tiles,
+      * so it needs none (its row block may exceed what one array holds). */
     private val raw =
       if (v.compactData.nonEmpty) v.compactData
+      else if (tiled) Array.emptyByteArray
       else new Array[Byte]((v.kind.rowBytes * slabRecs).toInt + extra)
     /** one codec per reader: its inflate state and stored-bytes array
       * are reused for every chunk */
@@ -4458,24 +4424,12 @@ object Hdf5Format {
       out
     }
     /** Locate element (rec, flattened k) in tiled mode: leaves the
-      * owning tile's buffer in `curTileBB` and returns the byte
-      * offset. Unflattens k row-major over the trailing dims — the
-      * rank-2 case reduces to (k / chunkCols, k % chunkCols). */
+      * owning tile's buffer in `curTileBB` and returns the byte offset. */
     private var curTileBB: ByteBuffer = null
     @inline private def tileLocate(rec: Long, k: Int): Int = {
-      var rem = k
-      var t = 0
-      var off = 0
-      var i = 0
-      while (i < m) {
-        val j = rem / fstride(i)
-        rem -= j * fstride(i)
-        t += (j / trailC(i)) * nbStride(i)
-        off += (j % trailC(i)) * cstride(i)
-        i += 1
-      }
-      curTileBB = tileBB(rec, t)
-      (rec % v.chunkRecs).toInt * tileRowBytes + off * v.kind.elemSize
+      val loc = v.geom.locate(k)
+      curTileBB = tileBB(rec, (loc >>> 32).toInt)
+      (rec % v.chunkRecs).toInt * tileRowBytes + loc.toInt * v.kind.elemSize
     }
     def getFloatElem(rec: Long, k: Int): Float =
       if (tiled) { val o = tileLocate(rec, k); curTileBB.getFloat(o) }

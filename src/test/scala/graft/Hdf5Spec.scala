@@ -809,7 +809,7 @@ class Hdf5Spec extends AnyFunSuite {
     val meta = Hdf5Format.readMeta(fs, f)
     val mv = meta.vars.find(_.name == "v").get
     assert(mv.kind == Hdf5Format.KDoubleArr(48))
-    assert(mv.tdims == Seq(6, 8) && mv.ctrail == Seq(3, 5))
+    assert(mv.geom == Hdf5Format.TileGeom(Seq(6, 8), Seq(3, 5)), mv.geom)
     // 2 tiles x 2 tiles per row block, 13 row blocks
     assert(mv.chunks.length == 13 * 4, s"${mv.chunks.length} chunks")
     val back = spark.read.format(SRC).load(dir)
@@ -1090,7 +1090,7 @@ class Hdf5Spec extends AnyFunSuite {
       val f = NetCDF4.listFiles(fs, new Path(dir)).head
       val meta = Hdf5Format.readMeta(fs, f)
       val v = meta.vars.find(_.name == "vec").get
-      assert(v.chunkCols == 4, s"$idx: chunkCols ${v.chunkCols}")
+      assert(v.geom == Hdf5Format.TileGeom(Seq(10), Seq(4)), s"$idx: geom ${v.geom}")
       // ceil(3000/256)=12 row blocks × 3 col tiles = 36 chunks
       assert(v.chunks.length == 36, s"$idx: ${v.chunks.length} chunks")
       assert(v.chunks.map(c => (c.startRec, c.startCol)).toSet ==

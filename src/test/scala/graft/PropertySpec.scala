@@ -320,6 +320,75 @@ class PropertySpec extends AnyFunSuite {
   }
 
   // -----------------------------------------------------------------
+  // HDF5 tile geometry: rank-1..3 trailing dims, any chunk extents
+  // (edge tiles included), against a brute-force tiling that
+  // enumerates tiles and their cells instead of dividing
+  // -----------------------------------------------------------------
+
+  private val genTileGeom: Gen[Hdf5Format.TileGeom] = for {
+    rank <- Gen.choose(1, 3)
+    dims <- Gen.listOfN(rank, Gen.choose(1, 7))
+    chunk <- Gen.sequence[List[Int], Int](dims.map(d => Gen.choose(1, d)))
+  } yield Hdf5Format.TileGeom(dims, chunk)
+
+  /** Row-major coordinates of every cell of a box (first dim slowest). */
+  private def cells(ext: Seq[Int]): Seq[List[Int]] =
+    ext.foldRight(Seq(List.empty[Int])) { (e, rest) => for (x <- 0 until e; r <- rest) yield x :: r }
+
+  /** flattened element k → (tile, in-tile offset), by enumeration */
+  private def bruteTiling(g: Hdf5Format.TileGeom): Map[Int, (Int, Int)] = {
+    val grid = g.dims.zip(g.chunk).map { case (d, c) => (d + c - 1) / c }
+    (for {
+      (tc, t) <- cells(grid).zipWithIndex
+      (ic, off) <- cells(g.chunk).zipWithIndex
+      at = tc.zip(ic).zip(g.chunk).map { case ((a, b), c) => a * c + b }
+      if at.zip(g.dims).forall { case (x, d) => x < d }
+    } yield at.zip(g.dims).foldLeft(0) { case (k, (x, d)) => k * d + x } -> (t, off)).toMap
+  }
+
+  test("tile geometry: corner and tile invert, locate matches a brute-force tiling (property)") {
+    run(Prop.forAll(genTileGeom) { g =>
+      val brute = bruteTiling(g)
+      val grid = g.dims.zip(g.chunk).map { case (d, c) => (d + c - 1) / c }
+      val starts = cells(grid)
+      g.nTiles == starts.length && brute.size == g.rowElems &&
+        g.tiled == g.dims.zip(g.chunk).exists { case (d, c) => c < d } &&
+        (0 until g.nTiles).forall { t =>
+          val corner = g.cornerOfTile(t)
+          val s = starts(t).map(_.toLong).toArray
+          g.tileOfCorner(corner) == t && brute(corner) == (t, 0) &&
+            (0 until g.rank).forall(i => g.tileCoord(t, i) == starts(t)(i)) &&
+            g.cornerOf(s, scaled = true, "p") == corner &&
+            g.cornerOf(s.zip(g.chunk).map { case (x, c) => x * c }, scaled = false, "p") == corner
+        } &&
+        (0 until g.rowElems).forall { k =>
+          val loc = g.locate(k)
+          ((loc >>> 32).toInt, loc.toInt) == brute(k)
+        }
+    }, min = 200)
+  }
+
+  test("tile geometry: the writer's gather and the reader's locate return every element (property)") {
+    run(Prop.forAll(genTileGeom, Gen.choose(1, 3), Gen.oneOf(1, 4, 8)) { (g, nRecs, esz) =>
+      // element (r, k) holds a distinct esz-byte pattern
+      val rows = Array.tabulate(nRecs * g.rowElems * esz)(i => (i * 31 + 7).toByte)
+      val tiles = Array.tabulate(g.nTiles) { t =>
+        val tile = new Array[Byte](nRecs * g.tileRowElems * esz)
+        g.gather(rows, nRecs, t, esz, tile)
+        tile
+      }
+      (0 until nRecs).forall { r =>
+        (0 until g.rowElems).forall { k =>
+          val loc = g.locate(k)
+          val at = (r * g.tileRowElems + loc.toInt) * esz
+          (0 until esz).forall(b =>
+            tiles((loc >>> 32).toInt)(at + b) == rows((r * g.rowElems + k) * esz + b))
+        }
+      }
+    }, min = 200)
+  }
+
+  // -----------------------------------------------------------------
   // r15b integer devices: equal-width bucketing + Heaps moment sums
   // -----------------------------------------------------------------
 
