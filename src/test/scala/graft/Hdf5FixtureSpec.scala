@@ -235,6 +235,33 @@ class Hdf5FixtureSpec extends AnyFunSuite {
       e.getMessage)
   }
 
+  test("patched chunk B-tree stored size (negative, past EOF) is an IOException naming it") {
+    import org.apache.spark.sql.types._
+    val w = new Hdf5Format.Hdf5Writer(StructType(Seq(StructField("f", FloatType,
+      nullable = false))), chunkRecs = 32)
+    (0 until 100).foreach(r => w.putFloatAt(0, r * 0.5f))
+    val base = w.finish()
+    // the chunk B-tree node (type 1); its first key opens with the
+    // chunk's stored size (u32) and its child pointer is the chunk's
+    // address, after the key's mask and two offsets
+    val tree = base.indices.indexWhere(i => i + 5 <= base.length &&
+      base(i) == 'T' && base(i + 1) == 'R' && base(i + 2) == 'E' && base(i + 3) == 'E' &&
+      base(i + 4) == 1)
+    assert(tree > 0, "chunk B-tree not found in writer output")
+    readAll(writeFile("stored_size_base.nc4", base)) // unpatched: reads
+    val addr = java.nio.ByteBuffer.wrap(base).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      .getLong(tree + 24 + 8 + 16)
+    // 0xFFFFFFFF reads as a negative Int; the other ends one byte past EOF
+    for ((tag, size) <- Seq("neg" -> -1, "eof" -> (base.length - addr + 1).toInt)) {
+      val patched = base.clone()
+      java.nio.ByteBuffer.wrap(patched).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+        .putInt(tree + 24, size)
+      val e = intercept[java.io.IOException](readAll(writeFile(s"stored_size_$tag.nc4", patched)))
+      assert(e.getMessage.contains(s"stored_size_$tag.nc4") && e.getMessage.contains("variable f"),
+        e.getMessage)
+    }
+  }
+
   // -----------------------------------------------------------------
   // dense attributes: FRHP (root direct block) + v2 B-tree type 8 +
   // serialized v3 AND v1 attribute messages as managed heap objects

@@ -3,7 +3,7 @@ package graft
 import graft.sources.netcdf.{ChunkCodec, Hdf5Format, Hdf5IO, NetCDF4, RecordRangePartition}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -86,6 +86,12 @@ class Hdf5Spec extends AnyFunSuite {
         (col("id") * 2).cast(DoubleType).as("y")).coalesce(1),
       dir, chunkRecs = 1000, deflate = true)
     val all = spark.read.format(SRC).load(dir)
+    // no variable selected: count() and the virtual record column alone
+    // still step through every record of the range
+    assert(all.count() == 100000L)
+    assert(all.select("record").agg(sum("record")).head().getLong(0) == (0L until 100000L).sum)
+    val recOnly = all.filter(col("record") >= 4500L && col("record") < 7250L).select("record")
+    assert(recOnly.collect().map(_.getLong(0)).sorted.toSeq == (4500L until 7250L))
     val sliced = all.filter(col("record") >= 50000L && col("record") < 51000L)
       .select("record", "x")
     assert(sliced.count() == 1000)
@@ -313,6 +319,33 @@ class Hdf5Spec extends AnyFunSuite {
     val s0 = back.filter(col("sv") === "doc-42").select("lk", "emb").head()
     assert(s0.getLong(0) == 42L * 1000000007L)
     assert(s0.getSeq[Float](1) == Seq.fill(8)(14f))
+
+    // bitfields of every width read zero-extended (a stored 0x80 byte is
+    // 128), and opaque elements as their exact bytes, zeros included
+    val bitsDir = "/tmp/graft_h5/dsv2_write_bits"
+    val bitsSchema = StructType(Seq(StructField("b1", LongType), StructField("b2", LongType),
+      StructField("b4", LongType), StructField("b8", LongType), StructField("op", BinaryType)))
+    def bitsRow(k: Int) = Row(0x80L | (k % 0x80), 0x8000L | k, 0x80000000L | k,
+      0x8000000000000000L | k, Array[Byte](0x80.toByte, (k % 251).toByte, 0, -1, 0))
+    spark.createDataFrame(spark.sparkContext.parallelize((0 until 700).map(bitsRow), 2), bitsSchema)
+      .write.format(SRC).mode("overwrite")
+      .option("chunkrecs", "128").option("shuffle", "true")
+      .option("bitfield.b1", "1").option("bitfield.b2", "2")
+      .option("bitfield.b4", "4").option("bitfield.b8", "8")
+      .option("opaque.op", "5:flags")
+      .save(bitsDir)
+    val bits = spark.read.format(SRC).load(bitsDir)
+    assert(bits.schema.map(_.dataType) ==
+      Seq(LongType, LongType, LongType, LongType, LongType, BinaryType), bits.schema.toString)
+    val rows = bits.collect().sortBy(_.getLong(0))
+    assert(rows.length == 700)
+    rows.zipWithIndex.foreach { case (r, k) =>
+      val want = bitsRow(k)
+      (0 until 4).foreach(j => assert(r.getLong(j + 1) == want.getLong(j), s"record $k col $j"))
+      assert(r.getAs[Array[Byte]](5).toSeq == want.getAs[Array[Byte]](4).toSeq, s"record $k op")
+    }
+    assert(rows(0).getLong(1) == 128L && rows(0).getLong(2) == 0x8000L &&
+      rows(0).getLong(3) == 0x80000000L)
   }
 
   test("DSv2 append mode accumulates part files; overwrite truncates") {
@@ -393,6 +426,15 @@ class Hdf5Spec extends AnyFunSuite {
     assert(exp == got)
     val r42 = back.filter(col("rec_c.k") === 42L).select("rec_c.s").head()
     assert(r42.getString(0) == "s42")
+    // nested-schema pruning hands the scan a member subset in another
+    // order than the file's (k, i, d, s); each maps back by name
+    val pruned = back.select(col("record"), col("rec_c.s"), col("rec_c.k"))
+    val readStruct = pruned.queryExecution.executedPlan.collectFirst {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b.scan.readSchema()
+    }.get("rec_c").dataType.asInstanceOf[StructType]
+    assert(readStruct.fieldNames.toSet == Set("s", "k"), readStruct.toString)
+    val got2 = pruned.collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
+    assert(got2.sortBy(_._1).toSeq == (0L until 2000L).map(k => (k, s"s$k", k)))
 
     // hand-built v3 message (HDF5 1.8+ writer framing): unpadded
     // names, minimal-byte offsets — 12-byte element {i64 a; f4 b}
@@ -1070,6 +1112,37 @@ class Hdf5Spec extends AnyFunSuite {
       val win = back.filter(col("record") >= 5000L && col("record") < 5200L)
       assert(win.agg(sum("k")).head().getLong(0) == (5000L until 5200L).sum)
     }
+    // slabs are 4 MiB per variable, so variables of different row sizes
+    // cut their slabs at different records: a 256-float field every 4096
+    // records, a double scalar every 524288, an int scalar every 1048576
+    def contiguous(name: String, n: Long, cols: Column*) = {
+      val dir = s"/tmp/graft_h5/contig_$name"
+      spark.range(n).select(cols: _*).coalesce(1).write.format(SRC).mode("overwrite")
+        .option("layout", "contiguous").option("chunkrecs", "1024").save(dir)
+      spark.read.format(SRC).load(dir)
+    }
+    val wide = contiguous("wide", 9000L, col("id").as("k"),
+      expr("transform(sequence(0, 255), i -> CAST(id * 256 + i AS FLOAT))").as("field"),
+      (col("id") * 0.5).as("time"))
+    def checkWide(df: DataFrame, lo: Long, hi: Long): Unit = {
+      val rows = df.select("record", "field", "time").collect().sortBy(_.getLong(0))
+      assert(rows.map(_.getLong(0)).toSeq == (lo until hi))
+      rows.foreach { r =>
+        val rec = r.getLong(0)
+        assert(r.getSeq[Float](1) == (0 until 256).map(i => (rec * 256 + i).toFloat), s"field $rec")
+        assert(r.getDouble(2) == rec * 0.5, s"time $rec")
+      }
+    }
+    checkWide(wide, 0L, 9000L)
+    checkWide(wide.filter(col("record") >= 4000L && col("record") < 8300L), 4000L, 8300L)
+    val tall = contiguous("tall", 530000L, (col("id") * 0.5).as("time"),
+      col("id").cast(IntegerType).as("station"))
+    val cross = tall.filter(col("record") >= 524000L && col("record") < 525000L)
+      .select("record", "time", "station").collect().sortBy(_.getLong(0))
+    assert(cross.map(r => (r.getLong(0), r.getDouble(1), r.getInt(2))).toSeq ==
+      (524000L until 525000L).map(k => (k, k * 0.5, k.toInt)))
+    assert(tall.agg(count(lit(1)), sum("time"), sum("station")).head() ==
+      Row(530000L, (0L until 530000L).map(_ * 0.5).sum, (0L until 530000L).sum))
   }
 
   test("partial-width 2-D chunking (netCDF4 default layout) assembles rows across tiles") {
