@@ -1,21 +1,26 @@
 package graft.sources.netcdf
 
+import java.nio.{ByteBuffer, ByteOrder}
 import java.util
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.SparkContext
+import org.apache.spark.{SparkContext, TaskContext}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxFiles, SupportsAdmissionControl}
 import org.apache.spark.sql.connector.write.{DataWriter, LogicalWriteInfo, WriteBuilder}
+import org.apache.spark.sql.execution.datasources.v2.PartitionReaderFromIterator
+import org.apache.spark.sql.execution.vectorized.{OnHeapColumnVector, WritableColumnVector}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 
 /** What differs between the two on-disk generations a chunked variable
   * lives in — classic netCDF ([[NetCDF3]]) and netCDF-4/HDF5
@@ -60,8 +65,10 @@ trait ChunkedContainer extends Serializable {
   /** Whether a file's record range can be split across tasks. */
   def splittable(f: Path): Boolean = true
 
-  def readerFactory(required: StructType, options: Map[String, String],
-      serConf: SerializableHadoopConf): PartitionReaderFactory
+  /** Opens one partition for reading the record variables `vars` (the
+    * required columns without `record`), in the order of its fields. */
+  def openRuns(part: RecordRangePartition, vars: StructType, options: Map[String, String],
+      conf: Configuration): RecordRuns
 
   /** Driver-side validation of write options, before any task runs. */
   def checkWriteOptions(options: Map[String, String]): Unit = ()
@@ -284,7 +291,7 @@ class ChunkedScan(container: ChunkedContainer, required: StructType, dir: String
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    container.readerFactory(required, options, serConf)
+    new ChunkedReaderFactory(container, required, options, serConf)
 
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
     new ChunkedMicroBatchStream(container, dir, required, options, serConf)
@@ -468,5 +475,160 @@ class ChunkedMicroBatchStream(container: ChunkedContainer, dir: String,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    container.readerFactory(required, options, serConf)
+    new ChunkedReaderFactory(container, required, options, serConf)
+}
+
+/** One partition's record variables, read forward in runs of whole
+  * records: the contract each container gives [[ChunkedColumnarReader]]. */
+trait RecordRuns extends java.io.Closeable {
+  /** The most records one run holds. */
+  def maxRun: Int
+  /** Loads the next run; returns its record count, 0 at the partition end. */
+  def nextRun(): Int
+  /** Fills rows [0, n) of `c` with variable `slot` of the `n`-record run
+    * just loaded. */
+  def fill(slot: Int, c: WritableColumnVector, n: Int): Unit
+}
+
+/** Ships the scan to the tasks; batch scans and micro-batches alike read
+  * through one [[ChunkedColumnarReader]] per partition. */
+class ChunkedReaderFactory(container: ChunkedContainer, required: StructType,
+    options: Map[String, String], serConf: SerializableHadoopConf)
+    extends PartitionReaderFactory {
+
+  override def supportColumnarReads(partition: InputPartition): Boolean = true
+
+  override def createColumnarReader(partition: InputPartition): PartitionReader[ColumnarBatch] = {
+    val part = partition.asInstanceOf[RecordRangePartition]
+    val vars = StructType(required.filterNot(_.name == "record"))
+    new ChunkedColumnarReader(container.openRuns(part, vars, options, serConf.value), required,
+      part.fileOffset + part.localStart)
+  }
+
+  /** The rows of the same batches, closed with the task, for a plan that
+    * does not take batches. */
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
+    val batches = createColumnarReader(partition)
+    Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => batches.close()))
+    new PartitionReaderFromIterator(Iterator.continually(batches).takeWhile(_.next())
+      .flatMap(_.get().rowIterator().asScala))
+  }
+}
+
+/** The one reader of both containers: each run of records becomes one
+  * ColumnarBatch, the virtual `record` column numbered from `firstRecord`
+  * (the global index of the partition's first record). */
+final class ChunkedColumnarReader(runs: RecordRuns, required: StructType, firstRecord: Long)
+    extends PartitionReader[ColumnarBatch] {
+
+  private val vectors = required.fields.map(f => new OnHeapColumnVector(runs.maxRun, f.dataType))
+  private val batch = new ColumnarBatch(vectors.toArray[ColumnVector])
+  /** each column's variable slot, -1 for `record` */
+  private val slots = {
+    var s = -1
+    required.fields.map(f => if (f.name == "record") -1 else { s += 1; s })
+  }
+  private var record = firstRecord
+
+  override def next(): Boolean = {
+    val n = runs.nextRun()
+    if (n == 0) return false
+    var j = 0
+    while (j < vectors.length) {
+      val c = vectors(j)
+      c.reset()
+      if (slots(j) >= 0) runs.fill(slots(j), c, n)
+      else { var i = 0; while (i < n) { c.putLong(i, record + i); i += 1 } }
+      j += 1
+    }
+    record += n
+    batch.setNumRows(n)
+    true
+  }
+
+  override def get(): ColumnarBatch = batch
+  override def close(): Unit = try batch.close() finally runs.close()
+}
+
+/** The column fills both containers share, over records stored at a
+  * fixed stride: numeric scalars, fixed-length numeric arrays, NUL-trimmed
+  * fixed-width strings and exact fixed-width binary. */
+object ColumnFill {
+
+  /** Fills rows [0, n) of `c` from `n` records in `buf`, the first at byte
+    * `off` and one every `stride` bytes, each `width` elements of the
+    * column's type (bytes, for strings and binary) in byte order `order`. */
+  def fixed(c: WritableColumnVector, n: Int, buf: Array[Byte], order: ByteOrder, off: Int,
+      stride: Int, width: Int): Unit = c.dataType match {
+    case StringType | BinaryType =>
+      val trim = c.dataType == StringType
+      var i = 0
+      while (i < n) {
+        val o = off + i * stride
+        var len = width
+        if (trim) while (len > 0 && buf(o + len - 1) == 0) len -= 1
+        c.putByteArray(i, buf, o, len)
+        i += 1
+      }
+    case _: ArrayType =>
+      val child = c.arrayData()
+      val es = elemSize(child.dataType)
+      val bb = ByteBuffer.wrap(buf).order(order)
+      reserve(child, n * width)
+      var i = 0
+      while (i < n) { c.putArray(i, i * width, width); i += 1 }
+      if (stride == width * es) put(child, 0, n * width, bb, off, es)
+      else {
+        i = 0
+        while (i < n) { put(child, i * width, width, bb, off + i * stride, es); i += 1 }
+      }
+    case _ => put(c, 0, n, ByteBuffer.wrap(buf).order(order), off, stride)
+  }
+
+  /** Puts `count` numeric elements of `bb`'s array into rows from `row` of
+    * `c`, the first at byte `off` and one every `step` bytes: one bulk copy
+    * when they are packed and little-endian (the bulk `put*(…, byte[], …)`
+    * forms copy in the platform's order, so big-endian data never takes
+    * them), one read each otherwise. */
+  def put(c: WritableColumnVector, row: Int, count: Int, bb: ByteBuffer, off: Int,
+      step: Int): Unit = {
+    val buf = bb.array
+    val bulk = step == elemSize(c.dataType) && bb.order == ByteOrder.LITTLE_ENDIAN
+    var i = 0
+    c.dataType match {
+      case FloatType =>
+        if (bulk) c.putFloatsLittleEndian(row, count, buf, off)
+        else while (i < count) { c.putFloat(row + i, bb.getFloat(off + i * step)); i += 1 }
+      case DoubleType =>
+        if (bulk) c.putDoublesLittleEndian(row, count, buf, off)
+        else while (i < count) { c.putDouble(row + i, bb.getDouble(off + i * step)); i += 1 }
+      case IntegerType =>
+        if (bulk) c.putIntsLittleEndian(row, count, buf, off)
+        else while (i < count) { c.putInt(row + i, bb.getInt(off + i * step)); i += 1 }
+      case LongType =>
+        if (bulk) c.putLongsLittleEndian(row, count, buf, off)
+        else while (i < count) { c.putLong(row + i, bb.getLong(off + i * step)); i += 1 }
+      case ShortType =>
+        while (i < count) { c.putShort(row + i, bb.getShort(off + i * step)); i += 1 }
+      case ByteType =>
+        if (step == 1) c.putBytes(row, count, buf, off)
+        else while (i < count) { c.putByte(row + i, buf(off + i * step)); i += 1 }
+      case t => throw new IllegalArgumentException(s"no fixed-size fill for $t")
+    }
+  }
+
+  /** Sizes `c` for the `need` elements of a run. Spark's `reserve`
+    * allocates twice what it is asked for: asking for half first holds
+    * one run's elements, not two runs'. */
+  def reserve(c: WritableColumnVector, need: Int): Unit = {
+    c.reserve((need + 1) / 2)
+    c.reserve(need)
+  }
+
+  private def elemSize(t: DataType): Int = t match {
+    case ByteType => 1
+    case ShortType => 2
+    case IntegerType | FloatType => 4
+    case _ => 8
+  }
 }

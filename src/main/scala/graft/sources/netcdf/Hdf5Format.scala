@@ -4,6 +4,7 @@ import java.io.{ByteArrayOutputStream, DataInputStream}
 import java.nio.{ByteBuffer, ByteOrder}
 
 import org.apache.hadoop.fs.{FSDataInputStream, FileSystem, Path}
+import org.apache.spark.sql.execution.vectorized.WritableColumnVector
 import org.apache.spark.sql.types._
 
 /** From-scratch read/write subset of the HDF5 file format — the
@@ -448,7 +449,7 @@ object Hdf5Format {
   /** Base-shifting stream: positions presented to callers are
     * superblock-relative; the shift happens at the seek/pread layer so
     * every read path inherits it. */
-  private final class ShiftedInput(raw: FSDataInputStream, base: Long)
+  private final class ShiftedInput(raw: FSDataInputStream, val base: Long)
       extends java.io.InputStream
       with org.apache.hadoop.fs.Seekable
       with org.apache.hadoop.fs.PositionedReadable {
@@ -788,7 +789,6 @@ object Hdf5Format {
   private val MSG_FILL = 0x0005
   private val MSG_LINK = 0x0006
   private val MSG_LAYOUT = 0x0008
-  private val MSG_GROUP_INFO = 0x000A
   private val MSG_FILTER = 0x000B
   private val MSG_ATTRIBUTE = 0x000C
   private val MSG_CONTINUATION = 0x0010
@@ -1739,9 +1739,8 @@ object Hdf5Format {
     }
 
     private def datasetHeaderV2(v: VarState, btreeAddr: Long,
-        attrInfoAddr: Long = UNDEF, typeAddr: Long = UNDEF,
-        dimRefs: Seq[(Long, Int)] = Nil,
-        objRefs: Seq[(String, Seq[Long])] = Nil): Array[Byte] =
+        attrInfoAddr: Long = UNDEF, typeAddr: Long, dimRefs: Seq[(Long, Int)],
+        objRefs: Seq[(String, Seq[Long])]): Array[Byte] =
       objectHeaderV2(datasetMsgs(v, btreeAddr, attrInfoAddr, typeAddr, dimRefs, objRefs),
         if (typeAddr != UNDEF) Set(MSG_DATATYPE) else Set.empty)
 
@@ -2687,7 +2686,9 @@ object Hdf5Format {
   // reader
   // ---------------------------------------------------------------
 
-  private final class R(in: FSDataInputStream) {
+  /** Positioned reads of a file opened by [[openShifted]]; `eof` is its
+    * length from the superblock, where [[readMeta]] knows it. */
+  private final class R(in: FSDataInputStream, val eof: Long = Long.MaxValue) {
     def seek(pos: Long): Unit = in.seek(pos)
     def pos: Long = in.getPos
     def readFully(b: Array[Byte]): Array[Byte] = { in.readFully(b, 0, b.length); b }
@@ -4005,7 +4006,6 @@ object Hdf5Format {
     }
     val _ = signed
     val filtered = deflate || shuffle || fletcher || zstdF
-    val rowBytesOf: Long = elemSize.toLong * flatW
     /** stored bytes of ONE chunk = one tile (full-width when untiled),
       * bounded so every reader buffer fits one array */
     val chunkBytesOf: Int = geom.chunkBytes(elemSize, math.max(1, chunkRecs), where)
@@ -4068,6 +4068,13 @@ object Hdf5Format {
         walk(btreeAddr)
         acc.sortBy(c => (c.startRec, c.startCol)).toArray
       }
+    // every index kind's stored sizes size a reader's buffer: bound each
+    // chunk by the file before any reader allocates for it
+    chunks.foreach { c =>
+      if (c.storedSize < 0 || c.addr < 0 || c.addr > r.eof - c.storedSize)
+        throw new java.io.IOException(s"$where: chunk at record ${c.startRec} stores " +
+          s"${c.storedSize} bytes at ${c.addr}, past the file's ${r.eof} bytes")
+    }
     // the enum member table surfaces as a synthetic attribute so the
     // metadata path (readAttrs) can gate it — derived from the
     // datatype message, never stored as a real attribute
@@ -4094,7 +4101,8 @@ object Hdf5Format {
   def readMeta(fs: FileSystem, path: Path): H5Meta = {
     val in = openShifted(fs, path)
     try {
-      val r = new R(in)
+      val shift = in.getWrappedStream match { case s: ShiftedInput => s.base; case _ => 0L }
+      val r = new R(in, fs.getFileStatus(path).getLen - shift)
       val sig = r.bytesAt(0L, 9)
       require((sig(0) & 0xff) == 0x89 && sig(1) == 'H' && sig(2) == 'D' && sig(3) == 'F',
         s"$path is not an HDF5 file")
@@ -4165,17 +4173,25 @@ object Hdf5Format {
   }
 
   /** Range reader for one variable: loads + inflates exactly the
-    * chunks covering [r0, r1), exposing per-record typed accessors.
-    * One instance per (task, variable); chunks stream through a single
+    * chunks covering [r0, r1), and fills runs of records into column
+    * vectors ([[fill]]) or serves per-record typed accessors. One
+    * instance per (task, variable); chunks stream through a single
     * reusable raw buffer. */
   final class VarReader(fs: FileSystem, path: Path, v: H5Var, r0: Long, r1: Long) {
     private val in = openShifted(fs, path)
     /** Contiguous layout is presented as synthetic raw "chunks" of
       * bounded slab size, so a huge unchunked variable never needs a
-      * whole-variable buffer; real chunked vars use the B-tree list. */
+      * whole-variable buffer; real chunked vars use the B-tree list,
+      * and a compact variable is one block. */
     private val slabRecs: Int =
-      if (v.contiguousAddr == UNDEF) v.chunkRecs
+      if (v.compactData.nonEmpty) math.max(1L, v.numRecs).toInt
+      else if (v.contiguousAddr == UNDEF) v.chunkRecs
       else math.max(1, ((4 << 20) / v.kind.rowBytes).toInt)
+
+    /** Records per chunk, slab or row block: the grid runs must not cross. */
+    def blockRecs: Int = slabRecs
+    /** The record after the chunk, slab or row block holding `rec`. */
+    def blockEnd(rec: Long): Long = (rec / slabRecs + 1) * slabRecs
     private val covering: Array[H5Chunk] =
       if (v.contiguousAddr == UNDEF)
         v.chunks.filter(c => c.startRec < r1 && c.startRec + v.chunkRecs > r0)
@@ -4381,31 +4397,40 @@ object Hdf5Format {
       out
     }
 
-    /** Resolve a vlen-string element: 16-byte ref (length, collection
-      * address, object index) → heap payload bytes. */
+    /** The global-heap payload the 16-byte vlen reference at `off` names
+      * (length, collection address, object index); null for an empty or
+      * null reference. */
+    private def heapObject(off: Int): Array[Byte] = {
+      val addr = bb.getLong(off + 4)
+      val idx = bb.getInt(off + 12)
+      if (bb.getInt(off) == 0 || addr == 0L || addr == UNDEF) null
+      else gcol(addr).getOrElse(idx,
+        throw new java.io.IOException(s"global heap object $idx missing at $addr for ${v.name}"))
+    }
+
+    /** Resolve a vlen-string element: 16-byte ref → heap payload bytes. */
     def getVlenString(rec: Long): Array[Byte] = {
       val off = ensure(rec)
       val len = bb.getInt(off)
-      val addr = bb.getLong(off + 4)
-      val idx = bb.getInt(off + 12)
-      if (len == 0 || addr == 0L || addr == UNDEF) return Array.emptyByteArray
-      val bytes = gcol(addr).getOrElse(idx,
-        throw new java.io.IOException(s"global heap object $idx missing at $addr for ${v.name}"))
-      if (bytes.length == len) bytes else java.util.Arrays.copyOf(bytes, len)
+      val bytes = heapObject(off)
+      if (bytes == null) Array.emptyByteArray
+      else if (bytes.length == len) bytes else java.util.Arrays.copyOf(bytes, len)
     }
 
-    /** Resolve a vlen-SEQUENCE element: the ref's length field counts
-      * base-type elements; payload decodes as a raw LE run. */
-    def getVlenSeq(rec: Long, base: H5Kind): Array[Any] = {
-      val off = ensure(rec)
+    /** A vlen-SEQUENCE element's payload and element count: the ref's
+      * length field counts base-type elements, stored as a raw LE run. */
+    private def vlenSeq(off: Int, base: H5Kind): (Array[Byte], Int) = {
+      val bytes = heapObject(off)
+      if (bytes == null) return (Array.emptyByteArray, 0)
       val n = bb.getInt(off)
-      val addr = bb.getLong(off + 4)
-      val idx = bb.getInt(off + 12)
-      if (n == 0 || addr == 0L || addr == UNDEF) return Array.empty[Any]
-      val bytes = gcol(addr).getOrElse(idx,
-        throw new java.io.IOException(s"global heap object $idx missing at $addr for ${v.name}"))
       require(bytes.length >= n * base.elemSize,
         s"vlen sequence payload ${bytes.length} < ${n * base.elemSize} for ${v.name}")
+      (bytes, n)
+    }
+
+    /** Resolve a vlen-SEQUENCE element into boxed base-type values. */
+    def getVlenSeq(rec: Long, base: H5Kind): Array[Any] = {
+      val (bytes, n) = vlenSeq(ensure(rec), base)
       val pb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
       val out = new Array[Any](n)
       var i = 0
@@ -4441,24 +4466,74 @@ object Hdf5Format {
       if (tiled) { val o = tileLocate(rec, k); curTileBB.getLong(o) }
       else bb.getLong(ensure(rec) + 8 * k)
 
-    /** Bitfield element, ZERO-extended (a bag of bits is unsigned by
-      * construction; a stored 0x80 byte reads as 128, never -128).
-      * Width-8 words return raw long bits. Byte order rides the
-      * variable's order-aware buffer like every atomic accessor. */
-    def getBitfield(rec: Long): Long = {
-      val off = ensure(rec)
-      v.kind.elemSize match {
-        case 1 => raw(off) & 0xffL
-        case 2 => bb.getShort(off) & 0xffffL
-        case 4 => bb.getInt(off) & 0xffffffffL
-        case _ => bb.getLong(off)
-      }
+    /** Fills rows [0, n) of `c` with records [rec, rec + n), which lie in
+      * one chunk, slab or row block ([[blockEnd]]). Fixed-size kinds go
+      * through [[ColumnFill]]; the rest fill here:
+      *  - a bitfield narrower than 8 bytes zero-extends (a bag of bits is
+      *    unsigned by construction: a stored 0x80 byte reads as 128);
+      *  - vlen strings and sequences resolve through the cached GCOL walk;
+      *  - a compound fills the members of the (possibly pruned and
+      *    reordered) struct `c` by name;
+      *  - a tiled array assembles each row across its tiles. */
+    def fill(rec: Long, n: Int, c: WritableColumnVector): Unit = v.kind match {
+      case KBitfield(w) if w < 8 =>
+        val off = ensure(rec)
+        val mask = (1L << (8 * w)) - 1
+        var i = 0
+        while (i < n) {
+          val o = off + i * w
+          c.putLong(i, mask & (if (w == 1) raw(o).toInt else if (w == 2) bb.getShort(o).toInt
+            else bb.getInt(o)))
+          i += 1
+        }
+      case KVlenStr =>
+        var i = 0
+        while (i < n) { val b = getVlenString(rec + i); c.putByteArray(i, b, 0, b.length); i += 1 }
+      case KVlenSeq(base) =>
+        val child = c.arrayData()
+        var at = 0
+        var i = 0
+        while (i < n) {
+          val (bytes, m) = vlenSeq(ensure(rec + i), base)
+          child.reserve(at + m)
+          ColumnFill.put(child, at, m, ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN), 0,
+            base.elemSize)
+          c.putArray(i, at, m)
+          at += m
+          i += 1
+        }
+      case KCompound(ms, size) =>
+        val off = ensure(rec)
+        val st = c.dataType.asInstanceOf[StructType]
+        var j = 0
+        while (j < st.length) {
+          val (_, k, moff) = ms.find(_._1 == st(j).name).getOrElse(throw new java.io.IOException(
+            s"compound member ${st(j).name} not in ${v.name} of $path"))
+          ColumnFill.fixed(c.getChild(j), n, raw, ord, off + moff, size, widthOf(k))
+          j += 1
+        }
+      case k if tiled =>
+        val w = k.rowElems
+        val child = c.arrayData()
+        ColumnFill.reserve(child, n * w)
+        var i = 0
+        while (i < n) {
+          c.putArray(i, i * w, w)
+          var j = 0
+          while (j < w) {
+            val o = tileLocate(rec + i, j)
+            ColumnFill.put(child, i * w + j, 1, curTileBB, o, k.elemSize)
+            j += 1
+          }
+          i += 1
+        }
+      case k => ColumnFill.fixed(c, n, raw, ord, ensure(rec), k.rowBytes.toInt, widthOf(k))
     }
 
-    /** Opaque element: the fixed-width byte payload, verbatim. */
-    def getOpaque(rec: Long): Array[Byte] = {
-      val off = ensure(rec)
-      java.util.Arrays.copyOfRange(raw, off, off + v.kind.elemSize)
+    /** Elements per record of a fixed-size kind; bytes, for strings and opaque. */
+    private def widthOf(k: H5Kind): Int = k match {
+      case _: KString | _: KOpaque => k.elemSize
+      case _ => k.rowElems
     }
 
     def close(): Unit =

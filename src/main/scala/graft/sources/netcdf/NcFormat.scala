@@ -1,11 +1,12 @@
 package graft.sources.netcdf
 
 import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream, EOFException, FileOutputStream, RandomAccessFile}
-import java.nio.ByteBuffer
+import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.charset.StandardCharsets
 import java.util.zip.GZIPInputStream
 
 import org.apache.hadoop.fs.{FSDataInputStream, FileSystem, Path}
+import org.apache.spark.sql.execution.vectorized.WritableColumnVector
 import org.apache.spark.sql.types._
 
 /** NetCDF classic binary codec (CDF-1 / CDF-2 / CDF-5), implemented
@@ -903,9 +904,10 @@ object NcFormat {
   // ---------------------------------------------------------- chunk read
 
   /** Chunked reader over a record range [r0, r1) of one file —
-    * yieldNumpyData semantics: pulls `recordsPerChunk` records into one
-    * buffer per call and exposes typed accessors for the requested
-    * variables only. */
+    * yieldNumpyData semantics: pulls up to `maxRun` records into one
+    * buffer per call, for the requested variables only. As the classic
+    * container's [[RecordRuns]] it fills them into column vectors through
+    * [[ColumnFill]]; typed per-record accessors serve direct callers. */
   final class RangeReader(
       fs: FileSystem,
       path: Path,
@@ -913,7 +915,7 @@ object NcFormat {
       r0: Long,
       r1: Long,
       wanted: Seq[String],
-      chunkBytes: Int = 4 << 20) {
+      chunkBytes: Int = 4 << 20) extends RecordRuns {
 
     private val raf = openData(fs, path)
     // chunk loads move strictly forward through the record range, so a
@@ -1006,7 +1008,7 @@ object NcFormat {
     private val v2CacheBlock: Array[Int] =
       if (ncz2 == null) null else Array.fill(wanted.size)(-1)
 
-    val recordsPerChunk: Int =
+    val maxRun: Int =
       if (ncz2 != null) {
         // the chunk grid follows the finest-chunked WANTED var (others
         // are sliced from their cached larger blocks); count-only scans
@@ -1025,8 +1027,6 @@ object NcFormat {
     private var bb: ByteBuffer = ByteBuffer.wrap(buf)
     private def growBuf(bytes: Int): Unit =
       if (buf.length < bytes) { buf = new Array[Byte](bytes); bb = ByteBuffer.wrap(buf) }
-    private var bufStart = 0L // record index of buf(0)
-    private var bufCount = 0
 
     def hasNext: Boolean = next < r1
 
@@ -1034,14 +1034,12 @@ object NcFormat {
     def loadChunk(): Int =
       if (ncz2 != null) loadNcz2Chunk()
       else if (nczIdx != null) loadNczBlock() else {
-      val n = math.min(recordsPerChunk.toLong, r1 - next).toInt
+      val n = math.min(maxRun.toLong, r1 - next).toInt
       val bytes = (n * recSize).toInt
       growBuf(bytes)
       seekTo(dataStart + next * recSize)
       raf.readFully(buf, 0, bytes)
       pos += bytes
-      bufStart = next
-      bufCount = n
       next += n
       n
     }
@@ -1061,11 +1059,9 @@ object NcFormat {
       val startInBlock = (next - b * rpb).toInt
       val n = math.min(nrecs.toLong - startInBlock, r1 - next).toInt
       // shift the in-range records to the front so slot offsets (which
-      // assume the chunk starts at record `bufStart`) stay uniform
+      // assume the loaded run starts at buf(0)) stay uniform
       if (startInBlock > 0)
         System.arraycopy(buf, startInBlock * recSize.toInt, buf, 0, n * recSize.toInt)
-      bufStart = next
-      bufCount = n
       next += n
       n
     }
@@ -1086,7 +1082,7 @@ object NcFormat {
         if (boundary - next < n) n = boundary - next
         s += 1
       }
-      if (n > recordsPerChunk) n = recordsPerChunk // count-only scans
+      if (n > maxRun) n = maxRun // count-only scans
       val nI = n.toInt
       val bytes = nI * recSize.toInt
       growBuf(bytes)
@@ -1113,8 +1109,6 @@ object NcFormat {
         }
         s += 1
       }
-      bufStart = next
-      bufCount = nI
       next += nI
       nI
     }
@@ -1149,67 +1143,33 @@ object NcFormat {
       }
     }
 
-    def chunkStartRecord: Long = bufStart
-
-    /** nc_type of slot `slot` (for typed columnar fills). */
-    def slotType(slot: Int): Int = slots(slot)._1.ncType
-
     private val slotOff: Array[Int] = slots.map(_._2.toInt).toArray
     private val recSizeI: Int = recSize.toInt
     private def slotBase(slot: Int, i: Int): Int = i * recSizeI + slotOff(slot)
+    /** elements per record of each slot (bytes, for NC_CHAR) */
+    private val slotWidth: Array[Int] =
+      slots.map { case (v, _) => (v.slabSize(meta.dims) / typeSize(v.ncType)).toInt }.toArray
 
-    /** Element count of slot `slot`'s per-record slab. */
-    def slotElems(slot: Int): Int = {
-      val (v, _) = slots(slot)
-      (v.slabSize(meta.dims) / typeSize(v.ncType)).toInt
-    }
+    def nextRun(): Int = if (hasNext) loadChunk() else 0
 
-    /** Raw chunk buffer + slab offset, for zero-copy columnar fills of
-      * NC_CHAR slabs (the caller trims trailing NULs). */
-    def rawBuf: Array[Byte] = buf
-    def slotOffset(slot: Int, i: Int): Int = slotBase(slot, i)
+    /** Big-endian records at the record stride: the shared fill. */
+    def fill(slot: Int, c: WritableColumnVector, n: Int): Unit =
+      ColumnFill.fixed(c, n, buf, ByteOrder.BIG_ENDIAN, slotOff(slot), recSizeI, slotWidth(slot))
 
-    // element accessors for multi-element (rank-2) numeric slabs
-    def getDoubleElem(slot: Int, i: Int, k: Int): Double =
-      bb.getDouble(slotBase(slot, i) + 8 * k)
     def getFloatElem(slot: Int, i: Int, k: Int): Float =
       bb.getFloat(slotBase(slot, i) + 4 * k)
-    def getIntElem(slot: Int, i: Int, k: Int): Int =
-      bb.getInt(slotBase(slot, i) + 4 * k)
-    def getLongElem(slot: Int, i: Int, k: Int): Long =
-      bb.getLong(slotBase(slot, i) + 8 * k)
-    def getShortElem(slot: Int, i: Int, k: Int): Short =
-      bb.getShort(slotBase(slot, i) + 2 * k)
-    def getByteElem(slot: Int, i: Int, k: Int): Byte = buf(slotBase(slot, i) + k)
-
     def getDoubleAt(slot: Int, i: Int): Double = bb.getDouble(slotBase(slot, i))
-    def getFloatAt(slot: Int, i: Int): Float = bb.getFloat(slotBase(slot, i))
     def getIntAt(slot: Int, i: Int): Int = bb.getInt(slotBase(slot, i))
     def getLongAt(slot: Int, i: Int): Long = bb.getLong(slotBase(slot, i))
     def getShortAt(slot: Int, i: Int): Short = bb.getShort(slotBase(slot, i))
-    def getByteAt(slot: Int, i: Int): Byte = buf(slotBase(slot, i))
-
-    /** Read slot `slot` of in-chunk record `i` as a double (widening). */
-    def getDouble(slot: Int, i: Int): Double = {
-      val (v, off) = slots(slot)
-      val base = (i * recSize + off).toInt
-      v.ncType match {
-        case NC_DOUBLE => bb.getDouble(base)
-        case NC_FLOAT => bb.getFloat(base).toDouble
-        case NC_INT => bb.getInt(base).toDouble
-        case NC_INT64 => bb.getLong(base).toDouble
-        case NC_SHORT => bb.getShort(base).toDouble
-        case NC_BYTE => buf(base).toDouble
-      }
-    }
 
     /** Read slot `slot` of in-chunk record `i` boxed in its own type.
       * NC_CHAR slabs come back as Array[Byte] (zero-trimmed by the
       * caller); multi-element numeric slabs as Array[_]. */
     def getValue(slot: Int, i: Int): Any = {
-      val (v, off) = slots(slot)
-      val base = (i * recSize + off).toInt
-      val nElems = (v.slabSize(meta.dims) / typeSize(v.ncType)).toInt
+      val v = slots(slot)._1
+      val base = slotBase(slot, i)
+      val nElems = slotWidth(slot)
       def scalar(pos: Int): Any = v.ncType match {
         case NC_DOUBLE => bb.getDouble(pos)
         case NC_FLOAT => bb.getFloat(pos)

@@ -1,8 +1,8 @@
 package graft.sources.netcdf
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.write.DataWriter
 import org.apache.spark.sql.types._
 
@@ -13,8 +13,8 @@ class NetCDF3Source extends ChunkedSource(NetCDF3)
 /** Classic netCDF part files (`.nc`, gzipped `.nc.gz`, per-chunk
   * deflated `.ncz`) as a [[ChunkedContainer]]. Reads split at the
   * `chunkBytes` read-buffer size (default 4 MiB); `.nc.gz` files
-  * decompress sequentially and are read whole. Writes go through
-  * [[NcDataWriter]]. */
+  * decompress sequentially and are read whole. A partition's runs come
+  * from [[NcFormat.RangeReader]]; writes go through [[NcDataWriter]]. */
 object NetCDF3 extends ChunkedContainer {
   type Meta = NcFormat.NcMeta
 
@@ -49,9 +49,13 @@ object NetCDF3 extends ChunkedContainer {
   // gzip part files decompress sequentially — not splittable
   override def splittable(f: Path): Boolean = !NcFormat.isGzip(f)
 
-  def readerFactory(required: StructType, options: Map[String, String],
-      serConf: SerializableHadoopConf): PartitionReaderFactory =
-    new NcReaderFactory(required, chunkBytes(options), serConf)
+  def openRuns(part: RecordRangePartition, vars: StructType, options: Map[String, String],
+      conf: Configuration): RecordRuns = {
+    val path = new Path(part.file)
+    val fs = path.getFileSystem(conf)
+    new NcFormat.RangeReader(fs, path, NcFormat.readMeta(fs, path), part.localStart,
+      part.localEnd, vars.fieldNames.toSeq, chunkBytes(options))
+  }
 
   override def checkWriteOptions(options: Map[String, String]): Unit =
     require(!(options.get("compress").exists(_.toBoolean) &&
@@ -62,142 +66,4 @@ object NetCDF3 extends ChunkedContainer {
       options: Map[String, String], serConf: SerializableHadoopConf,
       varAttrs: Map[String, Seq[Attr]]): DataWriter[InternalRow] =
     new NcDataWriter(schema, dir, baseName, options, serConf, varAttrs = varAttrs)
-}
-
-/** Every netcdf3 schema type decodes straight into column vectors —
-  * one typed fill loop per variable per chunk, no per-row branching:
-  * scalars via direct puts, NC_CHAR strings via zero-copy
-  * putByteArray from the chunk buffer, rank-2 numeric arrays via
-  * child-vector appends — so reads are columnar only. */
-class NcReaderFactory(required: StructType, chunkBytes: Int, serConf: SerializableHadoopConf)
-    extends PartitionReaderFactory {
-  override def supportColumnarReads(partition: InputPartition): Boolean = true
-
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    throw new UnsupportedOperationException("netcdf3 reads are columnar")
-
-  override def createColumnarReader(
-      partition: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
-    new NcColumnarReader(partition.asInstanceOf[RecordRangePartition], required, chunkBytes,
-      serConf)
-}
-
-/** Vectorized reader: each loaded chunk becomes one ColumnarBatch. */
-class NcColumnarReader(part: RecordRangePartition, required: StructType, chunkBytes: Int,
-    serConf: SerializableHadoopConf)
-    extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
-
-  import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
-  import org.apache.spark.sql.vectorized.ColumnarBatch
-
-  private val path = new Path(part.file)
-  private val fs = path.getFileSystem(serConf.value)
-  private val meta = NcFormat.readMeta(fs, path)
-  private val varNames = required.fieldNames.filterNot(_ == "record").toSeq
-  private val reader = new NcFormat.RangeReader(
-    fs, path, meta, part.localStart, part.localEnd, varNames, chunkBytes)
-
-  private val vectors: Array[OnHeapColumnVector] =
-    required.fields.map(f => new OnHeapColumnVector(reader.recordsPerChunk, f.dataType))
-  private val batch = new ColumnarBatch(vectors.toArray[org.apache.spark.sql.vectorized.ColumnVector])
-
-  override def next(): Boolean = {
-    if (!reader.hasNext) return false
-    val n = reader.loadChunk()
-    val base = part.fileOffset + reader.chunkStartRecord
-    var out = 0
-    var slot = 0
-    required.fields.foreach { f =>
-      val v = vectors(out)
-      v.reset()
-      if (f.name == "record") {
-        var i = 0
-        while (i < n) { v.putLong(i, base + i); i += 1 }
-      } else {
-        import NcFormat._
-        val m = reader.slotElems(slot)
-        if (reader.slotType(slot) == NC_CHAR) {
-          // NC_CHAR slab → string: zero-copy from the chunk buffer,
-          // trailing NULs trimmed (fixed-width padding)
-          val buf = reader.rawBuf
-          var i = 0
-          while (i < n) {
-            val base = reader.slotOffset(slot, i)
-            var len = m
-            while (len > 0 && buf(base + len - 1) == 0) len -= 1
-            v.putByteArray(i, buf, base, len)
-            i += 1
-          }
-        } else if (m > 1) {
-          // rank-2 numeric slab → array column: elements append into
-          // the child vector, offsets are the regular i*m stride
-          val child = v.arrayData()
-          reader.slotType(slot) match {
-            case NC_DOUBLE =>
-              var i = 0
-              while (i < n) {
-                var k = 0
-                while (k < m) { child.appendDouble(reader.getDoubleElem(slot, i, k)); k += 1 }
-                v.putArray(i, i * m, m); i += 1
-              }
-            case NC_FLOAT =>
-              var i = 0
-              while (i < n) {
-                var k = 0
-                while (k < m) { child.appendFloat(reader.getFloatElem(slot, i, k)); k += 1 }
-                v.putArray(i, i * m, m); i += 1
-              }
-            case NC_INT =>
-              var i = 0
-              while (i < n) {
-                var k = 0
-                while (k < m) { child.appendInt(reader.getIntElem(slot, i, k)); k += 1 }
-                v.putArray(i, i * m, m); i += 1
-              }
-            case NC_INT64 =>
-              var i = 0
-              while (i < n) {
-                var k = 0
-                while (k < m) { child.appendLong(reader.getLongElem(slot, i, k)); k += 1 }
-                v.putArray(i, i * m, m); i += 1
-              }
-            case NC_SHORT =>
-              var i = 0
-              while (i < n) {
-                var k = 0
-                while (k < m) { child.appendShort(reader.getShortElem(slot, i, k)); k += 1 }
-                v.putArray(i, i * m, m); i += 1
-              }
-            case NC_BYTE =>
-              var i = 0
-              while (i < n) {
-                var k = 0
-                while (k < m) { child.appendByte(reader.getByteElem(slot, i, k)); k += 1 }
-                v.putArray(i, i * m, m); i += 1
-              }
-          }
-        } else reader.slotType(slot) match {
-          case NC_DOUBLE =>
-            var i = 0; while (i < n) { v.putDouble(i, reader.getDoubleAt(slot, i)); i += 1 }
-          case NC_FLOAT =>
-            var i = 0; while (i < n) { v.putFloat(i, reader.getFloatAt(slot, i)); i += 1 }
-          case NC_INT =>
-            var i = 0; while (i < n) { v.putInt(i, reader.getIntAt(slot, i)); i += 1 }
-          case NC_INT64 =>
-            var i = 0; while (i < n) { v.putLong(i, reader.getLongAt(slot, i)); i += 1 }
-          case NC_SHORT =>
-            var i = 0; while (i < n) { v.putShort(i, reader.getShortAt(slot, i)); i += 1 }
-          case NC_BYTE =>
-            var i = 0; while (i < n) { v.putByte(i, reader.getByteAt(slot, i)); i += 1 }
-        }
-        slot += 1
-      }
-      out += 1
-    }
-    batch.setNumRows(n)
-    true
-  }
-
-  override def get(): ColumnarBatch = batch
-  override def close(): Unit = { batch.close(); reader.close() }
 }

@@ -82,6 +82,27 @@ class ChunkedSourceSpec extends AnyFunSuite with TimeLimits {
       }
     }
 
+    test(s"$fmt: a row reader serves the rows of the columnar batches") {
+      val dir = s"/tmp/graft_chunked_spec/$fmt/rows"
+      spark.range(1000).select(col("id").as("k"), (col("id") * 0.5).as("x")).repartition(2)
+        .write.format(fmt).mode("overwrite").save(dir)
+      val df = spark.read.format(fmt).option("recordsPerPartition", "300").load(dir)
+      val batch = df.queryExecution.sparkPlan.collectFirst {
+        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b.scan
+      }.get.toBatch
+      val factory = batch.createReaderFactory()
+      val parts = batch.planInputPartitions().toSeq
+      // inside tasks, as Spark would call it: each reader closes with its task
+      val rows = spark.sparkContext.parallelize(parts, parts.length).mapPartitions(_.flatMap { p =>
+        val reader = factory.createReader(p)
+        Iterator.continually(reader).takeWhile(_.next()).map(_.get())
+          .map(row => (row.getLong(0), row.getLong(1), row.getDouble(2))).toList
+      }).collect()
+      assert(rows.sortBy(_._1).toSeq ==
+        df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sortBy(_._1).toSeq)
+      assert(rows.length == 1000)
+    }
+
     test(s"$fmt: maxFilesPerTrigger must be a positive whole number") {
       val dir = s"/tmp/graft_chunked_spec/$fmt/opts"
       li.limit(100).repartition(1).write.format(fmt).mode("overwrite").save(dir)

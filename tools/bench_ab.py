@@ -17,6 +17,16 @@ whether the change meets the claim rule: it wins at least nine tenths
 of the pairs and its median beats the parent's by more than the
 parent's own interquartile distance.
 
+For every end-to-end metric with a `bound` in the parent's
+BENCHMARK.json it also states the no-regression rule as one verdict:
+
+  worse       the change's median is worse than the parent's by more
+              than the bound (a fraction of the parent's median);
+  unresolved  the parent's own IQR/median exceeds the bound, and not
+              every change run beats every parent run, so the runs
+              spread too widely to tell;
+  holds       otherwise.
+
 Everything this script writes goes under --out: each run's last stdout
 line as `<side>_<pair>.json`, its stderr as `<side>_<pair>.err`, and
 the table as `summary.json`. The runs themselves keep their build cache
@@ -52,14 +62,27 @@ def run_once(checkout, args, seed, out_dir, tag):
     return json.loads(lines[-1])
 
 
-def better_of(checkout):
-    """metric name -> "higher" | "lower", from a BENCHMARK.json."""
+def rules_of(checkout):
+    """(metric name -> "higher" | "lower", end-to-end metric name -> bound),
+    from a BENCHMARK.json."""
     with open(os.path.join(checkout, "BENCHMARK.json")) as f:
         bench = json.load(f)
-    return {m["name"]: m["better"] for m in bench.get("end_to_end", []) + bench.get("per_layer", [])}
+    better = {m["name"]: m["better"] for m in bench.get("end_to_end", []) + bench.get("per_layer", [])}
+    bounds = {m["name"]: m["bound"] for m in bench.get("end_to_end", []) if "bound" in m}
+    return better, bounds
 
 
-def summarize(results, better):
+def verdict(parent, change, pq, cq, sign, bound):
+    """The no-regression verdict on one metric's runs (see the module doc)."""
+    if pq[1] and sign * (cq[1] - pq[1]) / abs(pq[1]) < -bound:
+        return "worse"
+    spread = (pq[2] - pq[0]) / abs(pq[1]) if pq[1] else float("inf")
+    if spread > bound and not all(sign * (c - p) > 0 for c in change for p in parent):
+        return "unresolved"
+    return "holds"
+
+
+def summarize(results, better, bounds=None):
     names = sorted({n for side in results.values() for r in side if r for n in r["metrics"]})
     table = {}
     for name in names:
@@ -72,8 +95,10 @@ def summarize(results, better):
         sign = 1 if direction == "higher" else -1
         wins = sum(1 for p, c in pairs if sign * (c - p) > 0)
         losses = sum(1 for p, c in pairs if sign * (c - p) < 0)
-        pq = quartiles([p for p, _ in pairs])
-        cq = quartiles([c for _, c in pairs])
+        parent = [p for p, _ in pairs]
+        change = [c for _, c in pairs]
+        pq = quartiles(parent)
+        cq = quartiles(change)
         gain = sign * (cq[1] - pq[1])
         table[name] = {
             "better": direction, "pairs": len(pairs), "wins": wins, "losses": losses,
@@ -82,6 +107,9 @@ def summarize(results, better):
             "median_change_frac": (cq[1] - pq[1]) / pq[1] if pq[1] else None,
             "claim_met": wins * 10 >= 9 * len(pairs) and gain > pq[2] - pq[0],
         }
+        if bounds and name in bounds:
+            table[name]["bound"] = bounds[name]
+            table[name]["verdict"] = verdict(parent, change, pq, cq, sign, bounds[name])
     return table
 
 
@@ -109,23 +137,26 @@ def main():
                 print("pair %d %s seed %d: correct=%s failed=%s" % (
                     i, side, args.seed + i, r.get("correct"), r.get("failed")), file=sys.stderr)
 
-    table = summarize(results, better_of(sides["parent"]))
+    table = summarize(results, *rules_of(sides["parent"]))
     failed = {s: sum(r["failed"] for r in rs if r) for s, rs in results.items()}
     incorrect = {s: sum(1 for r in rs if not r or not r.get("correct")) for s, rs in results.items()}
+    verdicts = {n: m["verdict"] for n, m in table.items() if "verdict" in m}
     summary = {"workload": args.workload, "pairs": args.pairs, "seed": args.seed,
                "seconds": args.seconds, "trace": args.trace, "failed_ops": failed,
-               "incorrect_or_missing_runs": incorrect, "metrics": table}
+               "incorrect_or_missing_runs": incorrect, "verdicts": verdicts, "metrics": table}
     with open(os.path.join(args.out, "summary.json"), "w") as f:
         json.dump(summary, f, indent=1, sort_keys=True)
 
-    print("%-34s %-28s %-28s %6s %6s %s" % (
-        "metric", "parent q1 / median / q3", "change q1 / median / q3", "wins", "delta", "claim"))
+    print("%-34s %-28s %-28s %6s %6s %-5s %s" % (
+        "metric", "parent q1 / median / q3", "change q1 / median / q3", "wins", "delta", "claim",
+        "verdict"))
     for name, m in table.items():
         fmt = lambda q: "%8.4g %8.4g %8.4g" % (q["q1"], q["median"], q["q3"])
         delta = m["median_change_frac"]
-        print("%-34s %-28s %-28s %3d/%-2d %+6.1f%% %s" % (
+        print("%-34s %-28s %-28s %3d/%-2d %+6.1f%% %-5s %s" % (
             name, fmt(m["parent"]), fmt(m["change"]), m["wins"], m["pairs"],
-            100 * delta if delta is not None else float("nan"), "met" if m["claim_met"] else "-"))
+            100 * delta if delta is not None else float("nan"), "met" if m["claim_met"] else "-",
+            m.get("verdict", "")))
     print("failed operations: parent %d, change %d; incorrect or missing runs: parent %d, change %d" % (
         failed["parent"], failed["change"], incorrect["parent"], incorrect["change"]))
     return 0 if all(v == 0 for v in incorrect.values()) else 1
