@@ -55,15 +55,16 @@ class ChunkCodecSpec extends AnyFunSuite {
   }
 
   /** Read every value of an HDF5 file written by [[h5]] back through
-    * `VarReader` and compare it with the inputs. */
-  private def checkH5(p: Path): Unit = {
+    * `VarReader` and compare it with the inputs (`fieldOf` gives the
+    * expected field values). */
+  private def checkH5(p: Path, fieldOf: Int => Array[Float] = field): Unit = {
     val meta = Hdf5Format.readMeta(fs, p)
     meta.vars.foreach { v =>
       val rd = new Hdf5Format.VarReader(fs, p, v, 0L, n.toLong)
       try (0 until n).foreach { r =>
         v.name match {
           case "field" =>
-            val f = field(r)
+            val f = fieldOf(r)
             f.indices.foreach(k => assert(rd.getFloatElem(r, k) == f(k), s"$p field($r, $k)"))
           case "time" => assert(rd.getDouble(r) == time(r), s"$p time($r)")
           case "station" => assert(rd.getInt(r) == station(r), s"$p station($r)")
@@ -75,8 +76,9 @@ class ChunkCodecSpec extends AnyFunSuite {
 
   // SHA-256 of each file below, recorded from the writers before the
   // two containers shared one codec (the h5_tiled_* files: before the
-  // writer and the readers shared one tile geometry); any drift means
-  // the bytes changed
+  // writer and the readers shared one tile geometry; the sparse, paged
+  // and depth-2 index files: before each chunk index was encoded and
+  // decoded in one place); any drift means the bytes changed
   private val golden = Map(
     "h5_deflate" -> "d1abc55700e2a681aa367c00d23f1266e171b2871532b8f9376825d7e2da3a7d",
     "h5_shuffle_fletcher_deflate" -> "728c9f658c58e3b42981f16c8586f6029d2fb8f299faf82e5212c4afb604eb8d",
@@ -89,6 +91,12 @@ class ChunkCodecSpec extends AnyFunSuite {
     "h5_tiled_rank3_extarray" -> "9571684c983f8836032543fcf3d7249b53c81e873bbde97b8051395762e21b1c",
     "h5_tiled_rank3_btree2" -> "42313700735b21a4a2e142db09ec9e547de453d1586682d848c41361aa3a317e",
     "h5_tiled_rank3_implicit" -> "10a51656c6c312494019281c7517d07c823a1ecdfb0d87e05eb61befee83272e",
+    "h5_sparse_fixedarray" -> "823a51b309cc64235576143659d1e5a57446567a183a55acbdb7f053b8650cf8",
+    "h5_sparse_extarray" -> "51594dfd58aa91029bc7c4ddd258b0e92f638fcae609fff188f13533356ac3e9",
+    "h5_sparse_btree2" -> "a513ab56f82492ca7ebdb88a4441db08054e94d59e30b4e5fd5860359b670a95",
+    "h5_paged_fixedarray" -> "576bc2e00164da45dc8c04125792343e81dbd93f4c9d8c039e471494e48fdf22",
+    "h5_paged_extarray" -> "b4782d3d3b38fba8914af969621873c8d063bf83c7401844a0211eab892631d7",
+    "h5_btree2_depth2" -> "d1fb1f4d51086dc461f05e8ec9e07f0bbb93c9d3eb19cb5cf320169f34a924c3",
     "ncz_grf3" -> "7596121ff724823cac3d6533ccbc932928bccd65659cf043664fd0367ef92196",
     "ncz_grf3_stored" -> "c15bda4d9bd37cd41b65712809133260c9b441e51df0e9ca9e417aa5ab4580a5",
     "ncz_v2_store_deflate_zstd" -> "212aa34210a3f7ea6419df6ddc29a682db1930066e758bf66d08764fa27aa1a1")
@@ -145,6 +153,61 @@ class ChunkCodecSpec extends AnyFunSuite {
       checkH5(save(s"$name.nc4", bytes))
       assert(sha(bytes) == golden(name), name)
     }
+  }
+
+  test("golden bytes: sparse, paged and deep chunk indexes write as recorded") {
+    // the field alone, tiled, through the index shapes the goldens above
+    // leave out: unallocated chunks in each gap-capable index, a fixed
+    // array past its 4096-entry page, an extensible array whose
+    // secondary-block data blocks page at 64 entries, and a v2 B-tree
+    // past the 1183 records one depth-1 tree holds for its record size
+    val fieldOnly = StructType(h5Schema.fields.take(1))
+    def fieldFile(value: Int => Array[Float])(make: => Hdf5Format.Hdf5Writer): Array[Byte] = {
+      val w = make
+      (0 until n).foreach(r => w.putFloatArrAt(0, value(r)))
+      w.finish()
+    }
+    def index(name: String, chunkRecs: Int, dims: Seq[Int], chunk: Seq[Int],
+        filtered: Boolean = true, sparse: Boolean = false, eaPageBits: Int = 13) =
+      new Hdf5Format.Hdf5Writer(fieldOnly, chunkRecs = chunkRecs, deflate = filtered,
+        h5ver = 2, chunkIndex = name, arrayLens = Map("field" -> 16), shuffle = filtered,
+        fletcher = filtered, trailDims = Map("field" -> dims), trailChunks = Map("field" -> chunk),
+        fillValues = if (sparse) Map("field" -> -999.0) else Map.empty, sparse = sparse,
+        eaPageBits = eaPageBits)
+    // rows 64-191 hold only the fill value, and so does tile 1 (the top
+    // right 2x2 of the 4x4 field) of every later row: whole row blocks
+    // and single tiles stay unallocated
+    def sparseField(r: Int): Array[Float] =
+      if (r >= 64 && r < 192) Array.fill(16)(-999f)
+      else field(r).zipWithIndex.map { case (x, k) =>
+        if (r >= 192 && k / 4 < 2 && k % 4 >= 2) -999f else x }
+    val sparse = Seq("fixedarray", "extarray", "btree2").map { idx =>
+      s"h5_sparse_$idx" -> fieldFile(sparseField)(
+        index(idx, 32, Seq(4, 4), Seq(2, 2), sparse = true))
+    }
+    sparse.foreach { case (name, bytes) =>
+      val p = save(s"$name.nc4", bytes)
+      checkH5(p, sparseField)
+      // 10 row blocks of 4 tiles; 16 chunks in the fill rows, 3 more per
+      // row block from row 192 on, except the last, whose zero padding
+      // is not the fill
+      assert(Hdf5Format.readMeta(fs, p).vars.head.chunks.length == 40 - 16 - 3, name)
+    }
+    val shapes = Seq(
+      "h5_paged_fixedarray" -> fieldFile(field)(
+        index("fixedarray", 1, Seq(4, 4), Seq(1, 1), filtered = false)),
+      "h5_paged_extarray" -> fieldFile(field)(
+        index("extarray", 1, Seq(4, 4), Seq(2, 2), eaPageBits = 6)),
+      "h5_btree2_depth2" -> fieldFile(field)(
+        index("btree2", 3, Seq(2, 2, 2, 2), Seq(1, 1, 1, 1))))
+    shapes.foreach { case (name, bytes) => checkH5(save(s"$name.nc4", bytes)) }
+    // the v2 B-tree header's depth (u16 after signature, version, type,
+    // node size and record size)
+    val bt2 = shapes.last._2
+    val bthd = bt2.indices.indexWhere(i => i + 4 <= bt2.length &&
+      bt2(i) == 'B' && bt2(i + 1) == 'T' && bt2(i + 2) == 'H' && bt2(i + 3) == 'D')
+    assert(bthd > 0 && (bt2(bthd + 12) & 0xff) == 2, "the v2 B-tree should be depth 2")
+    (sparse ++ shapes).foreach { case (name, bytes) => assert(sha(bytes) == golden(name), name) }
   }
 
   private val ncSchema = StructType(Seq(

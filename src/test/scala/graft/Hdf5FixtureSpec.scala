@@ -262,6 +262,72 @@ class Hdf5FixtureSpec extends AnyFunSuite {
     }
   }
 
+  test("patched chunk B-tree node that points at itself is an IOException naming it") {
+    import org.apache.spark.sql.types._
+    val w = new Hdf5Format.Hdf5Writer(StructType(Seq(StructField("f", FloatType,
+      nullable = false))), chunkRecs = 32)
+    (0 until 100).foreach(r => w.putFloatAt(0, r * 0.5f))
+    val base = w.finish()
+    val tree = base.indices.indexWhere(i => i + 5 <= base.length &&
+      base(i) == 'T' && base(i + 1) == 'R' && base(i + 2) == 'E' && base(i + 3) == 'E' &&
+      base(i + 4) == 1)
+    assert(tree > 0, "chunk B-tree not found in writer output")
+    readAll(writeFile("btree_loop_base.nc4", base)) // unpatched: reads
+    // level 1, so its entries point at child nodes, and the first child
+    // (after the 24-byte header and a 24-byte key) is the node itself:
+    // the walk used to recurse until the stack overflowed
+    val patched = base.clone()
+    patched(tree + 5) = 1
+    u64At(patched, tree + 24 + 24, tree.toLong)
+    val e = intercept[java.io.IOException](readAll(writeFile("btree_loop.nc4", patched)))
+    assert(e.getMessage.contains("btree_loop.nc4") && e.getMessage.contains("variable f") &&
+      e.getMessage.contains("level"), e.getMessage)
+  }
+
+  test("fixed-array stored size past the array bound is an IOException naming it") {
+    import org.apache.spark.sql.types._
+    val w = new Hdf5Format.Hdf5Writer(StructType(Seq(StructField("f", FloatType,
+      nullable = false))), chunkRecs = 32, h5ver = 2, chunkIndex = "fixedarray")
+    (0 until 100).foreach(r => w.putFloatAt(0, r * 0.5f))
+    val base = w.finish()
+    // the one variable's fixed array ends the file: a 28-byte FAHD, then
+    // an FADB of 14 prefix bytes, 4 filtered 16-byte entries (address,
+    // u32 size, u32 mask) and a checksum
+    val fahd = base.indices.indexWhere(i => i + 4 <= base.length &&
+      base(i) == 'F' && base(i + 1) == 'A' && base(i + 2) == 'H' && base(i + 3) == 'D')
+    assert(fahd > 0 && fahd + 28 + 14 + 4 * 16 + 4 == base.length, s"FAHD at $fahd")
+    readAll(writeFile("fa_size_base.nc4", base)) // unpatched: reads
+    // rewrite it with 5-byte sizes (17-byte entries, as a file of larger
+    // chunks has them); `wide` gives chunk 2 a size 2^32 past its real
+    // one, whose low 32 bits alone used to pass as the stored size
+    val bb = java.nio.ByteBuffer.wrap(base).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    val entries = (0 until 4).map { i =>
+      val e = fahd + 28 + 14 + i * 16
+      (bb.getLong(e), bb.getInt(e + 8).toLong & 0xffffffffL, bb.getInt(e + 12))
+    }
+    def fiveByteSizes(wide: Boolean): Array[Byte] = {
+      val fa = buf(28 + 14 + 4 * 17 + 4)
+      fa.put("FAHD".getBytes("ASCII")).put(0.toByte).put(1.toByte).put(17.toByte)
+        .put(12.toByte).putLong(4L).putLong(fahd + 28L)
+      ck(fa, 0, 24)
+      fa.position(28)
+      fa.put("FADB".getBytes("ASCII")).put(0.toByte).put(1.toByte).putLong(fahd.toLong)
+      entries.zipWithIndex.foreach { case ((addr, size, mask), i) =>
+        val sz = if (wide && i == 2) size + (1L << 32) else size
+        fa.putLong(addr)
+        (0 until 5).foreach(k => fa.put((sz >>> (8 * k)).toByte))
+        fa.putInt(mask)
+      }
+      ck(fa, 28, 14 + 4 * 17)
+      java.util.Arrays.copyOf(base, fahd) ++ fa.array()
+    }
+    readAll(writeFile("fa_size_5byte.nc4", fiveByteSizes(wide = false)))
+    val e = intercept[java.io.IOException](
+      readAll(writeFile("fa_size_wide.nc4", fiveByteSizes(wide = true))))
+    assert(e.getMessage.contains("fa_size_wide.nc4") && e.getMessage.contains("variable f"),
+      e.getMessage)
+  }
+
   // -----------------------------------------------------------------
   // dense attributes: FRHP (root direct block) + v2 B-tree type 8 +
   // serialized v3 AND v1 attribute messages as managed heap objects

@@ -1301,4 +1301,38 @@ class Hdf5Spec extends AnyFunSuite {
     assert(back.select(col(s"`$name`")(0)).collect().map(_.getDouble(0)).sorted.toSeq ==
       Seq(0.0, 1.0, 2.0, 3.0))
   }
+
+  test("B-tree v1 writer refuses 65,536 chunks, naming the variable, instead of wrapping") {
+    val schema = StructType(Seq(StructField("n", LongType, nullable = false)))
+    def write(recs: Int): Array[Byte] = {
+      val w = new Hdf5Format.Hdf5Writer(schema, chunkRecs = 1)
+      (0 until recs).foreach(r => w.putLongAt(0, r.toLong))
+      w.finish()
+    }
+    // 65,535 chunks, the most one node's u16 entry count holds: exact
+    val p = new Path("/tmp/graft_h5/btree1_65535.nc4")
+    val out = fs.create(p, true)
+    try out.write(write(65535)) finally out.close()
+    val v = Hdf5Format.readMeta(fs, p).vars.head
+    assert(v.chunks.length == 65535)
+    val rd = new Hdf5Format.VarReader(fs, p, v, 0L, 65535L)
+    try (0 until 65535).foreach(r => assert(rd.getLong(r) == r, s"record $r"))
+    finally rd.close()
+    // one more chunk used to wrap the count to 0: every value read as fill
+    val e = intercept[IllegalArgumentException](write(65536))
+    assert(e.getMessage.contains("variable n") && e.getMessage.contains("65536") &&
+      e.getMessage.contains("chunkindex=extarray|btree2"), e.getMessage)
+  }
+
+  test("a bad chunkindex fails on the driver, naming the option, even for an empty write") {
+    val dir = "/tmp/graft_h5/bad_chunkindex"
+    // an unknown kind, and a layout-v4 kind under the default h5ver=0
+    for ((idx, named) <- Seq("btree3" -> "chunkindex", "fixedarray" -> "h5ver=2");
+         n <- Seq(10L, 0L)) {
+      val e = intercept[IllegalArgumentException] {
+        spark.range(n).write.format(SRC).mode("overwrite").option("chunkindex", idx).save(dir)
+      }
+      assert(e.getMessage.contains(named) && e.getMessage.contains(idx), e.getMessage)
+    }
+  }
 }
