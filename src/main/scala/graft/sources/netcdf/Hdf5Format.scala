@@ -1,6 +1,6 @@
 package graft.sources.netcdf
 
-import java.io.{ByteArrayOutputStream, DataInputStream}
+import java.io.ByteArrayOutputStream
 import java.nio.{ByteBuffer, ByteOrder}
 
 import org.apache.hadoop.fs.{FSDataInputStream, FileSystem, Path}
@@ -39,8 +39,9 @@ import org.apache.spark.sql.types._
   * public-domain codec on this classpath), filtered fractal heaps,
   * and paged directly-addressed extensible-array data blocks. The
   * writer exists to produce honest fixtures (and is a real, if
-  * minimal, HDF5 writer; it splits v2 B-trees to depth ≤ 1 only);
-  * the READ path is the user-facing capability.
+  * minimal, HDF5 writer); the READ path is the user-facing capability.
+  * Each chunk index kind is encoded and decoded in one place,
+  * [[ChunkIndex]].
   *
   * Scale posture: `readMeta` touches only superblock + object headers
   * + chunk B-trees (metadata, O(#chunks) bytes); data reads are
@@ -51,7 +52,7 @@ import org.apache.spark.sql.types._
   */
 object Hdf5Format {
 
-  val UNDEF: Long = -1L // 0xFFFFFFFFFFFFFFFF — the spec's undefined address
+  private[netcdf] val UNDEF: Long = -1L // 0xFFFFFFFFFFFFFFFF — the spec's undefined address
 
   // ---------------------------------------------------------------
   // data model
@@ -233,13 +234,13 @@ object Hdf5Format {
     /** Tile index of a flattened corner offset (inverse of [[cornerOfTile]]). */
     def tileOfCorner(corner: Int): Int = (locate(corner) >>> 32).toInt
 
-    /** Flattened corner of the tile that starts at `start(i)` along each
-      * dim: element offsets (B-tree v1 keys) or, when `scaled`, offsets
-      * in chunk extents (v2 B-tree records). A start off the tile grid —
-      * past its dim, or not on a tile edge — is an IOException naming
-      * `where` and the offset. */
-    def cornerOf(start: Array[Long], scaled: Boolean, where: => String): Int = {
-      var corner = 0
+    /** The tile that starts at `start(i)` along each dim: element
+      * offsets (B-tree v1 keys) or, when `scaled`, offsets in chunk
+      * extents (v2 B-tree records). A start off the tile grid — past its
+      * dim, or not on a tile edge — is an IOException naming `where` and
+      * the offset. */
+    def tileOf(start: Array[Long], scaled: Boolean, where: => String): Int = {
+      var t = 0
       var i = 0
       while (i < rank) {
         val s = start(i)
@@ -247,10 +248,10 @@ object Hdf5Format {
         // a zero-length dim still keys its chunks at offset 0
         if (tile < 0 || tile >= math.max(1, tilesPerDim(i))) throw new java.io.IOException(
           s"$where: chunk offset $s along trailing dim ${i + 1} is off the tile grid $this")
-        corner += tile.toInt * c(i) * elemStride(i)
+        if (tiled) t += tile.toInt * tileStride(i)
         i += 1
       }
-      corner
+      t
     }
 
     /** Element `k` of a flattened row → its tile (high 32 bits) and its
@@ -306,60 +307,6 @@ object Hdf5Format {
 
     /** Row-major strides: out(i) = Π dims(i+1..) (1 for the last dim). */
     private def suffixProducts(dims: Array[Int]): Array[Int] = dims.scanRight(1)(_ * _).tail
-  }
-
-  /** Extensible-array geometry (HDF5 spec III.J — the ≥1.10 chunk
-    * index for ONE unlimited dimension, i.e. exactly the shape of a
-    * record-streamed variable): superblock s holds 2^(s/2) data
-    * blocks of minElmts·2^((s+1)/2) elements each (so superblock s
-    * covers minElmts·2^s elements); the index block stores the first
-    * idxElmts elements inline, directly addresses the data blocks of
-    * the first 2·log2(minPtrs) superblocks (2·(minPtrs−1) blocks),
-    * and holds secondary-block pointers for the rest. Shared by the
-    * reader and writer so one addressing law serves both. */
-  private[netcdf] final case class EaGeom(
-      maxBits: Int, idxElmts: Int, minPtrs: Int, minElmts: Int, pageBits: Int) {
-    require(Integer.bitCount(minElmts) == 1 && Integer.bitCount(minPtrs) == 1,
-      s"extensible-array minElmts/minPtrs must be powers of two ($minElmts, $minPtrs)")
-    val nSblks: Int = 2 * (maxBits - Integer.numberOfTrailingZeros(minElmts))
-    /** first superblock whose data blocks live behind a secondary block */
-    val firstSblk: Int = 2 * Integer.numberOfTrailingZeros(minPtrs)
-    val nDblkAddrs: Int = 2 * (minPtrs - 1)
-    val nSblkAddrs: Int = nSblks - firstSblk
-    /** Int accessors serve only superblocks within the unpaged bound
-      * (dblkNelmts ≤ 2^pageBits); span arithmetic over the FULL
-      * superblock range must use the Long forms — the Int shift
-      * overflows from s ≈ 53 (minElmts·2^27), and round 8 learned the
-      * hard way that a wrapped span can turn a 300-chunk index into a
-      * 2 GB render. */
-    def ndblks(s: Int): Int = 1 << (s / 2)
-    def dblkNelmts(s: Int): Int = minElmts << ((s + 1) / 2)
-    def ndblksL(s: Int): Long = 1L << (s / 2)
-    def dblkNelmtsL(s: Int): Long = minElmts.toLong << ((s + 1) / 2)
-    /** block offsets are stored in ceil(maxBits/8) bytes */
-    val arrOffSize: Int = (maxBits + 7) / 8
-    /** elements per data-block page; blocks above this go PAGED */
-    val pageNelmts: Int = 1 << pageBits
-    def dblkPaged(s: Int): Boolean = dblkNelmtsL(s) > pageNelmts
-    def dblkNpages(s: Int): Int = dblkNelmts(s) / pageNelmts
-    /** per-data-block page-init bitmap bytes (lives in the EASB) */
-    def pageInitSize(s: Int): Int = (dblkNpages(s) + 7) / 8
-    def iblkSize(elemSize: Int): Int =
-      6 + 8 + idxElmts * elemSize + (nDblkAddrs + nSblkAddrs) * 8 + 4
-    /** unpaged data block: prefix + elements + checksum */
-    def dblkSize(s: Int, elemSize: Int): Int =
-      6 + 8 + arrOffSize + dblkNelmts(s) * elemSize + 4
-    /** paged data block: bare prefix + checksum; pages follow it */
-    def dblkPrefixSize: Int = 6 + 8 + arrOffSize + 4
-    def pageBytes(elemSize: Int): Int = pageNelmts * elemSize + 4
-    /** full on-disk extent of a data block, either form */
-    def dblkExtent(s: Int, elemSize: Int): Int =
-      if (dblkPaged(s)) dblkPrefixSize + dblkNpages(s) * pageBytes(elemSize)
-      else dblkSize(s, elemSize)
-    def sblkSize(s: Int): Int =
-      6 + 8 + arrOffSize +
-        (if (dblkPaged(s)) ndblks(s) * pageInitSize(s) else 0) +
-        ndblks(s) * 8 + 4
   }
 
   case class H5Var(
@@ -545,9 +492,10 @@ object Hdf5Format {
 
   // ---------------------------------------------------------------
   // Jenkins lookup3 (public-domain hash, Bob Jenkins 2006) — the
-  // checksum HDF5 applies to v2 superblocks and v2 object headers.
-  // Only the WRITE path needs a correct value (readers here do not
-  // verify); implemented faithfully anyway (hashlittle, init 0).
+  // checksum HDF5 applies to v2 superblocks, v2 object headers and
+  // the v2-generation chunk indexes; the writer emits it, and the
+  // readers verify it on chunk indexes and v2 B-trees (hashlittle,
+  // init 0).
   // ---------------------------------------------------------------
   private[graft] def lookup3(data: Array[Byte], initval: Int = 0): Int = {
     def u8(i: Int): Int = data(i) & 0xff
@@ -597,7 +545,7 @@ object Hdf5Format {
   // ---------------------------------------------------------------
   // byte-building helpers (all HDF5 metadata is little-endian)
   // ---------------------------------------------------------------
-  private final class Buf {
+  private[netcdf] final class Buf {
     private val out = new ByteArrayOutputStream(256)
     def size: Int = out.size()
     def u8(v: Int): this.type = { out.write(v & 0xff); this }
@@ -836,6 +784,8 @@ object Hdf5Format {
     private val tileBytes =
       if (geom.tiled) geom.chunkBytes(kind.elemSize, chunkRecs, s"variable $name") else 0
     val raw = new Array[Byte]((kind.rowBytes * chunkRecs).toInt)
+    /** any filter in the pipeline: index entries then store size and mask */
+    val filtered: Boolean = deflate || shuffle || fletcher || zstd > 0
     val bb: ByteBuffer = ByteBuffer.wrap(raw).order(
       if (bigEndian) ByteOrder.BIG_ENDIAN else ByteOrder.LITTLE_ENDIAN)
     var inChunk = 0
@@ -1102,6 +1052,25 @@ object Hdf5Format {
       endValue()
     }
 
+    /** The allocated chunks as index entries, stored back to back in
+      * chunk order from file offset `at`. */
+    def entries(at: Long): ChunkIndex.Entries = {
+      val out = new scala.collection.mutable.ArrayBuffer[ChunkIndex.Entry](stored.size)
+      var a = at
+      var i = 0
+      while (i < stored.size) {
+        val (bytes, mask) = stored(i)
+        if (bytes != null) { out += ChunkIndex.Entry(i, a, bytes.length, mask); a += bytes.length }
+        i += 1
+      }
+      out
+    }
+
+    /** What this variable's chunk index is built over. */
+    def indexShape(eaPageBits: Int): ChunkIndex.Shape = ChunkIndex.Shape(geom, chunkRecs,
+      stored.size, filtered, if (geom.tiled) tileBytes else raw.length, s"variable $name",
+      eaPageBits)
+
     /** Push materialized global-heap references through the normal
       * chunk pipeline (fletcher/shuffle/deflate apply to the 16-byte
       * refs exactly as to fixed elements). */
@@ -1232,8 +1201,9 @@ object Hdf5Format {
       require(!bigEndian, "arraydt bases are little-endian (class-10 wraps an LE atomic)")
     }
     require(chunkCols >= 0, s"chunkCols must be >= 0, got $chunkCols")
-    require(chunkCols == 0 || chunkIndex != "single",
-      "partial-width tiling produces several chunks per row block — single-chunk index excluded")
+    private val index = ChunkIndex.byName(chunkIndex, h5ver)
+    require(chunkCols == 0 || index.holdsTiles,
+      s"partial-width tiling produces several chunks per row block — ${index.name} index excluded")
     require(layout == "chunked" || layout == "contiguous" || layout == "compact",
       s"layout must be chunked, contiguous, or compact, got $layout")
     /** contiguous (class 1) data layout — what the netCDF4 library
@@ -1246,12 +1216,8 @@ object Hdf5Format {
       (!deflate && !shuffle && !fletcher && zstdLevel == 0 && !vlenStrings && !vlenSeqs && chunkCols == 0),
       s"$layout layout admits no filters, vlen data, or tiling (HDF5 contract)")
     require(!denseRoot || h5ver == 2, "dense root groups require the 1.8+ layout (h5ver=2)")
-    require(Seq("btree1", "fixedarray", "btree2", "single", "implicit", "extarray").contains(chunkIndex),
-      s"chunkIndex must be btree1, fixedarray, btree2, single, implicit, or extarray; got $chunkIndex")
-    require(chunkIndex != "implicit" || (!deflate && !shuffle && !fletcher && zstdLevel == 0),
-      "implicit chunk indexes admit no filter pipeline (HDF5 contract)")
-    require(chunkIndex == "btree1" || h5ver == 2,
-      "fixed-array chunk indexes require the 1.8+/1.10 layout (h5ver=2)")
+    require(index.holdsFilters || (!deflate && !shuffle && !fletcher && zstdLevel == 0),
+      s"${index.name} chunk indexes admit no filter pipeline (HDF5 contract)")
     require(!denseAttrs || h5ver == 2,
       "dense attribute storage requires the 1.8+ layout (h5ver=2)")
     require(!commitTypes || (h5ver == 2 && !denseRoot),
@@ -1341,8 +1307,7 @@ object Hdf5Format {
       })), s"trailDims targets a fixed-width numeric array column: $c")
     }
 
-    require(!sparse || (layout == "chunked" && chunkIndex != "single" &&
-      chunkIndex != "implicit" && !vlenStrings && !vlenSeqs),
+    require(!sparse || (layout == "chunked" && index.holdsGaps && !vlenStrings && !vlenSeqs),
       "sparse writes need a chunked layout with a gap-capable chunk index")
     require(dimScales.isEmpty || (h5ver == 2 && !denseRoot && !denseAttrs),
       "dimension scales need the 1.8+ layout with compact links/attrs")
@@ -1452,9 +1417,11 @@ object Hdf5Format {
     def putAnyAt(i: Int, v: Any): Unit = vars(i).putValue(v)
 
     /** The dataset's message set — shared by the v1 and v2 header
-      * framings; sizes are address-independent, so the same builder
-      * serves the sizing pass (btreeAddr = 0) and the render pass. */
+      * framings; sizes depend on no address and no chunk entry, so the
+      * same builder serves the sizing pass (btreeAddr = 0, no entries)
+      * and the render pass. */
     private def datasetMsgs(v: VarState, btreeAddr: Long,
+        entries: ChunkIndex.Entries,
         attrInfoAddr: Long = UNDEF,
         typeAddr: Long = UNDEF,
         dimRefs: Seq[(Long, Int)] = Nil,
@@ -1541,56 +1508,11 @@ object Hdf5Format {
         // on-disk run may carry the final row block's zero padding
         // beyond the logical size — readers bound by the dataspace)
         lay.u8(3).u8(1).u64(btreeAddr).u64(v.numRecs * v.kind.rowBytes)
-      } else if (chunkIndex == "fixedarray") {
-        // layout v4 (HDF5 ≥1.10): chunk dims EXCLUDE the element dim;
-        // index type 3 = fixed array + its page-bits creation param
-        lay.u8(4).u8(2).u8(0).u8(chunkDims.size).u8(4)
-        chunkDims.foreach(lay.u32)
-        lay.u8(3).u8(FA_PAGE_BITS)
-        lay.u64(btreeAddr)
-      } else if (chunkIndex == "btree2") {
-        // index type 5 = v2 B-tree + node size / split / merge params
-        lay.u8(4).u8(2).u8(0).u8(chunkDims.size).u8(4)
-        chunkDims.foreach(lay.u32)
-        lay.u8(5).u32(2048).u8(100).u8(40)
-        lay.u64(btreeAddr)
-      } else if (chunkIndex == "single") {
-        // index type 1 = single chunk: the address IS the chunk; the
-        // filtered variant carries (stored size, filter mask) inline
-        require(v.stored.size <= 1,
-          s"single-chunk index needs chunkRecs >= numRecs for ${v.name}")
-        val filtered = v.deflate || v.shuffle || v.fletcher || v.zstd > 0
-        lay.u8(4).u8(2).u8(if (filtered) 2 else 0).u8(chunkDims.size).u8(4)
-        chunkDims.foreach(lay.u32)
-        lay.u8(1)
-        if (filtered) {
-          lay.u64(v.stored.headOption.map(_._1.length.toLong).getOrElse(0L))
-          lay.u32(v.stored.headOption.map(_._2).getOrElse(0))
-        }
-        lay.u64(btreeAddr)
-      } else if (chunkIndex == "implicit") {
-        // index type 2 = implicit: an unfiltered contiguous chunk run
-        // starting at the address — no index structure at all
-        lay.u8(4).u8(2).u8(0).u8(chunkDims.size).u8(4)
-        chunkDims.foreach(lay.u32)
-        lay.u8(2)
-        lay.u64(btreeAddr)
-      } else if (chunkIndex == "extarray") {
-        // index type 4 = extensible array + its five creation params
-        // (max bits, index elements, min pointers, min elements, page
-        // bits) — the index the library emits for ONE unlimited dim
-        lay.u8(4).u8(2).u8(0).u8(chunkDims.size).u8(4)
-        chunkDims.foreach(lay.u32)
-        lay.u8(4)
-        lay.u8(EA_MAX_BITS).u8(EA_IDX_ELMTS).u8(EA_MIN_PTRS)
-        lay.u8(EA_MIN_ELMTS).u8(eaPageBits)
-        lay.u64(btreeAddr)
       } else {
-        lay.u8(3).u8(2).u8(dims.size + 1).u64(btreeAddr) // layout v3, chunked
-        chunkDims.foreach(lay.u32)
-        // the element-size dim: for a class-10 array datatype the
-        // ELEMENT is the whole k-vector, so its size is rowBytes
-        lay.u32(if (v.arrayDt) v.kind.rowBytes.toInt else v.kind.elemSize)
+        // the element-size dim of layout v3: for a class-10 array
+        // datatype the ELEMENT is the whole k-vector, so its size is rowBytes
+        index.writeLayout(lay, chunkDims, if (v.arrayDt) v.kind.rowBytes.toInt else v.kind.elemSize,
+          btreeAddr, entries, v.indexShape(eaPageBits))
       }
       msgs += MSG_LAYOUT -> lay.result()
       if (denseAttrs && allAttrs(v).nonEmpty) {
@@ -1698,8 +1620,9 @@ object Hdf5Format {
       b.result()
     }
 
-    private def datasetHeaderV1(v: VarState, btreeAddr: Long): Array[Byte] =
-      objectHeaderV1(datasetMsgs(v, btreeAddr))
+    private def datasetHeaderV1(v: VarState, btreeAddr: Long,
+        entries: ChunkIndex.Entries): Array[Byte] =
+      objectHeaderV1(datasetMsgs(v, btreeAddr, entries))
 
     /** v1 object header: 12-byte prefix + 4 pad + message block, each
       * message 8-byte header + 8-padded body (spec IV.A.1.a). */
@@ -1739,424 +1662,24 @@ object Hdf5Format {
     }
 
     private def datasetHeaderV2(v: VarState, btreeAddr: Long,
-        attrInfoAddr: Long = UNDEF, typeAddr: Long, dimRefs: Seq[(Long, Int)],
-        objRefs: Seq[(String, Seq[Long])]): Array[Byte] =
-      objectHeaderV2(datasetMsgs(v, btreeAddr, attrInfoAddr, typeAddr, dimRefs, objRefs),
+        entries: ChunkIndex.Entries, attrInfoAddr: Long = UNDEF, typeAddr: Long,
+        dimRefs: Seq[(Long, Int)], objRefs: Seq[(String, Seq[Long])]): Array[Byte] =
+      objectHeaderV2(datasetMsgs(v, btreeAddr, entries, attrInfoAddr, typeAddr, dimRefs, objRefs),
         if (typeAddr != UNDEF) Set(MSG_DATATYPE) else Set.empty)
 
-    /** Chunk B-tree v1, single level-0 node (type 1): entries carry
-      * (stored size, filter mask, logical offsets) keys and chunk
-      * addresses; the trailing key marks one-past-the-end
-      * (spec III.A.1). */
-    private def chunkBtree(v: VarState, chunkAddrs: Seq[Long]): Array[Byte] = {
-      // sparse: unallocated (null) chunks simply have NO entry — the
-      // reader serves the fill value for uncovered blocks
-      val present = v.stored.zipWithIndex.filter(_._1._1 != null)
-      val b = new Buf
-      b.bytes("TREE".getBytes("ASCII")).u8(1).u8(0).u16(present.size)
-      b.u64(UNDEF).u64(UNDEF)
-      def key(idx: Int, size: Int, mask: Int): Unit = {
-        b.u32(size).u32(mask)
-        // row-major tile order: chunk idx → (row block, trailing tile
-        // coords), one logical offset per dataset dim
-        val g = v.geom
-        b.u64((idx.toLong / g.nTiles) * v.chunkRecs)
-        (0 until g.rank).foreach(i => b.u64(g.tileCoord(idx % g.nTiles, i).toLong * g.chunk(i)))
-        b.u64(0) // element-size dimension offset
-      }
-      present.foreach { case ((bytes, mask), i) =>
-        key(i, bytes.length, mask)
-        b.u64(chunkAddrs(i))
-      }
-      key(v.stored.size, 0, 0)
-      b.result()
+    /** The variable's chunk index over `entries`, at `selfAddr`; the
+      * contiguous and compact layouts have none. */
+    private def indexBytes(v: VarState, entries: ChunkIndex.Entries,
+        selfAddr: Long): Array[Byte] =
+      if (contiguousLayout || compactLayout) Array.emptyByteArray
+      else index.encode(entries, v.indexShape(eaPageBits), selfAddr)
+
+    /** The address the layout message carries: the contiguous run's or
+      * the index kind's (per-var chunk payloads are consecutive). */
+    private def layoutAddr(entries: ChunkIndex.Entries, indexAddr: Long): Long = {
+      val first = entries.headOption.fold(UNDEF)(_.addr)
+      if (contiguousLayout) first else index.layoutAddr(first, indexAddr)
     }
-
-    private final val FA_PAGE_BITS = 12 // unpaged up to 4096 chunks/var
-
-    // extensible-array creation params: library-like defaults; the
-    // page size is the `eaPageBits` constructor param (default 13-bit
-    // pages — data blocks stay unpaged through superblock 18, ≈ 8.4M
-    // chunks/var — smaller values exercise the paged walk)
-    private final val EA_MAX_BITS = 32
-    private final val EA_IDX_ELMTS = 4
-    private final val EA_MIN_PTRS = 4
-    private final val EA_MIN_ELMTS = 16
-
-    /** Fixed Array chunk index (HDF5 ≥1.10 layout-v4 alternative to
-      * the v1 B-tree): FAHD header + FADB data block of per-chunk
-      * elements (addr, plus size+mask when filtered). Past
-      * 2^FA_PAGE_BITS chunks the FADB goes PAGED per the spec: the
-      * block carries only an all-initialized page bitmap, and the
-      * element pages — each with its own lookup3 checksum — follow.
-      * FADB follows FAHD directly, so only the index's own address
-      * (`selfAddr`, 0 in the sizing pass — sizes are address-free)
-      * feeds the header's data-block pointer. */
-    private def fixedArrayIndex(v: VarState, chunkAddrs: Seq[Long],
-        selfAddr: Long): Array[Byte] = {
-      val filtered = v.deflate || v.shuffle || v.fletcher || v.zstd > 0
-      val entrySize = if (filtered) 16 else 8
-      val n = v.stored.size
-      val pageSize = 1 << FA_PAGE_BITS
-      require(n <= (1 << 24), s"fixed array writer bound: $n chunks > ${1 << 24}")
-      val b = new Buf
-      val hd = new Buf
-      hd.bytes("FAHD".getBytes("ASCII")).u8(0)
-      hd.u8(if (filtered) 1 else 0).u8(entrySize).u8(FA_PAGE_BITS)
-      hd.u64(n.toLong)
-      hd.u64(selfAddr + 28) // FADB directly follows the 28-byte FAHD
-      val hdBytes = hd.result()
-      b.bytes(hdBytes).u32(lookup3(hdBytes))
-      require(b.size == 28, s"FAHD size ${b.size}")
-      def elem(db: Buf, i: Int): Unit = {
-        // sparse: unallocated chunks keep their positional element,
-        // marked by the undefined address (the reader skips them)
-        if (v.stored(i)._1 == null) { db.u64(UNDEF); if (filtered) db.u32(0).u32(0) }
-        else {
-          db.u64(chunkAddrs(i))
-          if (filtered) db.u32(v.stored(i)._1.length).u32(v.stored(i)._2)
-        }
-      }
-      if (n <= pageSize) {
-        val db = new Buf
-        db.bytes("FADB".getBytes("ASCII")).u8(0)
-        db.u8(if (filtered) 1 else 0).u64(selfAddr)
-        (0 until n).foreach(i => elem(db, i))
-        val dbBytes = db.result()
-        b.bytes(dbBytes).u32(lookup3(dbBytes))
-      } else {
-        val npages = (n + pageSize - 1) / pageSize
-        val db = new Buf
-        db.bytes("FADB".getBytes("ASCII")).u8(0)
-        db.u8(if (filtered) 1 else 0).u64(selfAddr)
-        (0 until (npages + 7) / 8).foreach { k =>
-          var bits = 0
-          (0 until 8).foreach(j => if (k * 8 + j < npages) bits |= (1 << j))
-          db.u8(bits)
-        }
-        val dbBytes = db.result()
-        b.bytes(dbBytes).u32(lookup3(dbBytes))
-        (0 until npages).foreach { p =>
-          val pg = new Buf
-          (p * pageSize until math.min(n, (p + 1) * pageSize)).foreach(i => elem(pg, i))
-          val pgBytes = pg.result()
-          b.bytes(pgBytes).u32(lookup3(pgBytes))
-        }
-      }
-      b.result()
-    }
-
-    private final val BT2_NODE = 2048
-
-    /** v2 B-tree chunk index: BTHD + type-10/11 records in ascending
-      * scaled-offset order. Fits one leaf when the record count
-      * respects the declared node size; beyond that the writer splits
-      * honestly into a depth-1 tree — BTIN internal root holding the
-      * separator records + child pointers, leaves after it — instead
-      * of over-stuffing a single leaf past its declared capacity. */
-    private def btree2Index(v: VarState, chunkAddrs: Seq[Long],
-        selfAddr: Long): Array[Byte] = {
-      val filtered = v.deflate || v.shuffle || v.fletcher || v.zstd > 0
-      val rank = 1 + v.geom.rank // dataspace dims (record + trailing)
-      val recSize = if (filtered) 8 + 4 + 4 + 8 * rank else 8 + 8 * rank
-      // sparse: unallocated (null) chunks have NO record — positions
-      // below index through the PRESENT chunks only
-      val presentIdx: IndexedSeq[Int] =
-        v.stored.zipWithIndex.collect { case ((b, _), i) if b != null => i }.toIndexedSeq
-      val n = presentIdx.length
-      val typ = if (filtered) 11 else 10
-      val maxLeaf = (BT2_NODE - 10) / recSize
-      def record(out: Buf, p: Int): Unit = {
-        val i = presentIdx(p)
-        out.u64(chunkAddrs(i))
-        if (filtered) out.u32(v.stored(i)._1.length).u32(v.stored(i)._2)
-        val g = v.geom
-        out.u64(i.toLong / g.nTiles) // scaled offset along the record dim
-        (0 until g.rank).foreach(d => out.u64(g.tileCoord(i % g.nTiles, d)))
-      }
-      def leaf(indices: Range): Array[Byte] = {
-        val lf = new Buf
-        lf.bytes("BTLF".getBytes("ASCII")).u8(0).u8(typ)
-        indices.foreach(i => record(lf, i))
-        val lfBytes = lf.result()
-        val out = new Buf
-        out.bytes(lfBytes).u32(lookup3(lfBytes))
-        out.result()
-      }
-      def header(depth: Int, rootAddr: Long, rootNRecs: Int): Array[Byte] = {
-        val hd = new Buf
-        hd.bytes("BTHD".getBytes("ASCII")).u8(0).u8(typ)
-        hd.u32(BT2_NODE).u16(recSize).u16(depth).u8(100).u8(40)
-        hd.u64(rootAddr).u16(rootNRecs).u64(n.toLong)
-        val hdBytes = hd.result()
-        val out = new Buf
-        out.bytes(hdBytes).u32(lookup3(hdBytes))
-        require(out.size == 38, s"BTHD size ${out.size}")
-        out.result()
-      }
-      // GENERAL-DEPTH builder (r9 — the writer previously split to
-      // depth ≤ 1 only): capacities mirror the reader's spec laws
-      //   maxRec(0) = (nodeSize − 10) / recSize
-      //   ptr(d)    = 8 + w(maxRec(d−1)) + (d ≥ 2 ? w(cum(d−1)) : 0)
-      //   maxRec(d) = (nodeSize − 10 − ptr(d)) / (recSize + ptr(d))
-      //   cum(d)    = (maxRec(d) + 1)·cum(d−1) + maxRec(d)
-      // so a rank-2+ variable with hundreds of thousands of chunks
-      // gets an honest depth-2+ tree instead of a loud refusal. The
-      // depth-1 output is byte-identical to the previous special case.
-      def wdt(x: Long): Int = {
-        var k = 1
-        while (k < 8 && (1L << (8 * k)) <= x) k += 1
-        k
-      }
-      val maxRecL = scala.collection.mutable.ArrayBuffer[Long](maxLeaf.toLong)
-      val cumL = scala.collection.mutable.ArrayBuffer[Long](maxLeaf.toLong)
-      def ensureDepth(d: Int): Unit = while (cumL.size <= d) {
-        val dd = cumL.size
-        val ptr = 8 + wdt(maxRecL(dd - 1)) + (if (dd >= 2) wdt(cumL(dd - 1)) else 0)
-        maxRecL += (BT2_NODE - 10 - ptr).toLong / (recSize + ptr)
-        cumL += (maxRecL(dd) + 1) * cumL(dd - 1) + maxRecL(dd)
-      }
-      var depth = 0
-      while (cumL(depth) < n) { ensureDepth(depth + 1); depth += 1 }
-      // plan the uniform-depth tree: an internal subtree over `cnt`
-      // records keeps m separators in the node and spreads the rest
-      // over m+1 children, m minimal so every child subtree fits
-      final case class Plan(d: Int, start: Int, cnt: Int, children: Seq[Plan]) {
-        val ownRecs: Int = if (d == 0) cnt else children.length - 1
-      }
-      def plan(d: Int, start: Int, cnt: Int): Plan =
-        if (d == 0) Plan(0, start, cnt, Nil)
-        else {
-          val cap = cumL(d - 1)
-          val m = math.max(1L, (cnt - cap + cap) / (cap + 1)).toInt // ceil((cnt−cap)/(cap+1))
-          val kids = m + 1
-          val inKids = cnt - m
-          val base = inKids / kids
-          val extra = inKids % kids
-          var s = start
-          val children = (0 until kids).map { c =>
-            val cc = base + (if (c < extra) 1 else 0)
-            val child = plan(d - 1, s, cc)
-            s += cc + 1 // the record after each non-final child is its separator
-            child
-          }
-          Plan(d, start, cnt, children)
-        }
-      def nodeSize(p: Plan): Int =
-        if (p.d == 0) 6 + p.ownRecs * recSize + 4
-        else {
-          val n1 = wdt(maxRecL(p.d - 1))
-          val n2 = if (p.d >= 2) wdt(cumL(p.d - 1)) else 0
-          6 + p.ownRecs * recSize + (p.children.length) * (8 + n1 + n2) + 4
-        }
-      def subtreeSize(p: Plan): Int = nodeSize(p) + p.children.map(subtreeSize).sum
-      // DFS pre-order layout: node, then each child's whole subtree
-      def emit(p: Plan, addr: Long, out: Buf): Unit =
-        if (p.d == 0) out.bytes(leaf(p.start until (p.start + p.cnt)))
-        else {
-          val n1 = wdt(maxRecL(p.d - 1))
-          val n2 = if (p.d >= 2) wdt(cumL(p.d - 1)) else 0
-          val childAddrs = p.children.scanLeft(addr + nodeSize(p)) {
-            case (a, c) => a + subtreeSize(c)
-          }
-          val in = new Buf
-          in.bytes("BTIN".getBytes("ASCII")).u8(0).u8(typ)
-          p.children.dropRight(1).foreach(c => record(in, c.start + c.cnt))
-          p.children.zipWithIndex.foreach { case (c, i) =>
-            in.u64(childAddrs(i))
-            (0 until n1).foreach(k => in.u8((c.ownRecs >> (8 * k)) & 0xff))
-            (0 until n2).foreach(k => in.u8((c.cnt >> (8 * k)) & 0xff))
-          }
-          val inBytes = in.result()
-          require(inBytes.length + 4 == nodeSize(p),
-            s"BTIN size ${inBytes.length + 4} != ${nodeSize(p)}")
-          out.bytes(inBytes).u32(lookup3(inBytes))
-          p.children.zipWithIndex.foreach { case (c, i) => emit(c, childAddrs(i), out) }
-        }
-      val b = new Buf
-      if (depth == 0) {
-        b.bytes(header(0, selfAddr + 38, n))
-        b.bytes(leaf(0 until n))
-      } else {
-        val root = plan(depth, 0, n)
-        b.bytes(header(depth, selfAddr + 38, root.ownRecs))
-        emit(root, selfAddr + 38, b)
-      }
-      b.result()
-    }
-
-    /** Extensible Array chunk index (layout-v4 type 4 — HDF5 ≥1.10's
-      * index for chunked data with ONE unlimited dimension, the exact
-      * shape of a record-streamed variable): EAHD header + EAIB index
-      * block (first EA_IDX_ELMTS elements inline, direct data-block
-      * pointers for superblocks 0..firstSblk−1, secondary-block
-      * pointers beyond) + unpaged EADB data blocks, with EASB
-      * secondary blocks once the direct region is exhausted. All
-      * blocks are emitted in one contiguous blob whose internal
-      * addresses derive from `selfAddr` (0 in the sizing pass — the
-      * layout is size-deterministic given the chunk count), and every
-      * v2-structure checksum is a real lookup3 over the block body. */
-    private def extensibleArrayIndex(v: VarState, chunkAddrs: Seq[Long],
-        selfAddr: Long): Array[Byte] = {
-      val filtered = v.deflate || v.shuffle || v.fletcher || v.zstd > 0
-      val elemSize = if (filtered) 16 else 8 // addr + (size u32 + mask u32)
-      val g = EaGeom(EA_MAX_BITS, EA_IDX_ELMTS, EA_MIN_PTRS, EA_MIN_ELMTS, eaPageBits)
-      val n = v.stored.size
-      require(n <= (1 << 24),
-        s"extensible-array writer bound: $n chunks > ${1 << 24} for ${v.name}")
-      // directly-addressed data blocks (superblocks < firstSblk) must
-      // stay unpaged — their page bitmaps would have nowhere to live
-      require(g.firstSblk == 0 || !g.dblkPaged(g.firstSblk - 1),
-        s"eaPageBits $eaPageBits pages the index block's direct data blocks")
-      // plan: which data blocks / secondary blocks are allocated
-      // (a block is allocated iff its element range starts before n)
-      final case class Db(s: Int, startElem: Long)
-      var pos: Long = g.idxElmts
-      val directDbs = Seq.tabulate(g.firstSblk) { s =>
-        Seq.fill(g.ndblks(s)) {
-          val p = if (pos < n) Some(Db(s, pos)) else None
-          pos += g.dblkNelmts(s); p
-        }
-      }.flatten
-      // allocation is monotone: once pos reaches n no later superblock
-      // allocates, so planning stops outright — iterating the full
-      // 56-superblock table would also need Long-safe spans (the Int
-      // dblkNelmts shift overflows from s ≈ 53)
-      val sblks: Seq[Option[(Int, Long, Seq[Option[Db]])]] =
-        (g.firstSblk until g.nSblks).map { s =>
-          if (pos >= n) None
-          else {
-            val sblkStart = pos
-            Some((s, sblkStart, Seq.fill(g.ndblks(s)) {
-              val p = if (pos < n) Some(Db(s, pos)) else None
-              pos += g.dblkNelmts(s); p
-            }))
-          }
-        }
-      // address assignment: EAHD | EAIB | direct DBs | (EASB | its DBs)*
-      val iblkAddr = selfAddr + 72
-      var cur = iblkAddr + g.iblkSize(elemSize)
-      val directAddrs: Seq[Long] = directDbs.map {
-        case Some(db) => val a = cur; cur += g.dblkSize(db.s, elemSize); a
-        case None => UNDEF
-      }
-      val sblkAddrs: Seq[(Long, Seq[Long])] = sblks.map {
-        case Some((s, _, dbs)) =>
-          val sa = cur; cur += g.sblkSize(s)
-          val das = dbs.map {
-            case Some(db) => val a = cur; cur += g.dblkExtent(db.s, elemSize); a
-            case None => UNDEF
-          }
-          (sa, das)
-        case None => (UNDEF, Nil)
-      }
-      def elem(b: Buf, i: Long): Unit =
-        if (i < n && v.stored(i.toInt)._1 != null) {
-          b.u64(chunkAddrs(i.toInt))
-          if (filtered) b.u32(v.stored(i.toInt)._1.length).u32(v.stored(i.toInt)._2)
-        } else { b.u64(UNDEF); if (filtered) b.u32(0).u32(0) }
-      def blockOff(b: Buf, off: Long): Unit =
-        (0 until g.arrOffSize).foreach(k => b.u8(((off >> (8 * k)) & 0xff).toInt))
-      val out = new Buf
-      // EAHD: params, then statistics (allocated secondary/data block
-      // counts and byte totals, max index set, realized elements)
-      val nDbAlloc = directAddrs.count(_ != UNDEF) +
-        sblkAddrs.flatMap(_._2).count(_ != UNDEF)
-      val dbBytes = directDbs.flatten.map(db => g.dblkSize(db.s, elemSize).toLong).sum +
-        sblks.flatten.flatMap(_._3.flatten).map(db => g.dblkExtent(db.s, elemSize).toLong).sum
-      val nSbAlloc = sblks.count(_.isDefined)
-      val sbBytes = sblks.flatten.map { case (s, _, _) => g.sblkSize(s).toLong }.sum
-      val hd = new Buf
-      hd.bytes("EAHD".getBytes("ASCII")).u8(0).u8(if (filtered) 1 else 0)
-      hd.u8(elemSize).u8(EA_MAX_BITS).u8(EA_IDX_ELMTS)
-      hd.u8(EA_MIN_ELMTS).u8(EA_MIN_PTRS).u8(eaPageBits)
-      hd.u64(nSbAlloc.toLong).u64(sbBytes).u64(nDbAlloc.toLong).u64(dbBytes)
-      hd.u64(n.toLong).u64(n.toLong)
-      hd.u64(iblkAddr)
-      val hdBytes = hd.result()
-      out.bytes(hdBytes).u32(lookup3(hdBytes))
-      require(out.size == 72, s"EAHD size ${out.size}")
-      // EAIB
-      val ib = new Buf
-      ib.bytes("EAIB".getBytes("ASCII")).u8(0).u8(if (filtered) 1 else 0)
-      ib.u64(selfAddr)
-      (0 until g.idxElmts).foreach(i => elem(ib, i.toLong))
-      directAddrs.foreach(ib.u64)
-      sblkAddrs.foreach { case (sa, _) => ib.u64(sa) }
-      val ibBytes = ib.result()
-      out.bytes(ibBytes).u32(lookup3(ibBytes))
-      // data blocks: unpaged inline elements, or — past 2^eaPageBits
-      // elements — a bare prefix followed by per-checksummed pages
-      def dataBlock(db: Db): Unit = {
-        if (g.dblkPaged(db.s)) {
-          val b = new Buf
-          b.bytes("EADB".getBytes("ASCII")).u8(0).u8(if (filtered) 1 else 0)
-          b.u64(selfAddr)
-          blockOff(b, db.startElem)
-          val bb = b.result()
-          out.bytes(bb).u32(lookup3(bb))
-          (0 until g.dblkNpages(db.s)).foreach { p =>
-            val pg = new Buf
-            val base = db.startElem + p.toLong * g.pageNelmts
-            (0 until g.pageNelmts).foreach(i => elem(pg, base + i))
-            val pgBytes = pg.result()
-            out.bytes(pgBytes).u32(lookup3(pgBytes))
-          }
-        } else {
-          val b = new Buf
-          b.bytes("EADB".getBytes("ASCII")).u8(0).u8(if (filtered) 1 else 0)
-          b.u64(selfAddr)
-          blockOff(b, db.startElem)
-          (0 until g.dblkNelmts(db.s)).foreach(i => elem(b, db.startElem + i))
-          val bb = b.result()
-          out.bytes(bb).u32(lookup3(bb))
-        }
-      }
-      directDbs.flatten.foreach(dataBlock)
-      sblks.flatten.zip(sblkAddrs.filter(_._1 != UNDEF)).foreach {
-        case ((s, sblkStart, dbs), (_, das)) =>
-          val b = new Buf
-          b.bytes("EASB".getBytes("ASCII")).u8(0).u8(if (filtered) 1 else 0)
-          b.u64(selfAddr)
-          blockOff(b, sblkStart)
-          if (g.dblkPaged(s)) {
-            // per-data-block page-init bitmaps: every page of an
-            // ALLOCATED block is initialized (unset elements are
-            // UNDEF addresses); unallocated blocks' pages are not
-            dbs.foreach { d =>
-              val bits = if (d.isDefined) 0xff else 0x00
-              (0 until g.pageInitSize(s)).foreach { k =>
-                val rem = g.dblkNpages(s) - k * 8
-                val mask = if (rem >= 8) 0xff else (1 << rem) - 1
-                b.u8(bits & mask)
-              }
-            }
-          }
-          das.foreach(b.u64)
-          val bb = b.result()
-          out.bytes(bb).u32(lookup3(bb))
-          dbs.flatten.foreach(dataBlock)
-      }
-      out.result()
-    }
-
-    private def chunkIndexBytes(v: VarState, addrs: Seq[Long], selfAddr: Long): Array[Byte] =
-      if (contiguousLayout || compactLayout) Array.emptyByteArray // no external index
-      else chunkIndex match {
-        case "fixedarray" => fixedArrayIndex(v, addrs, selfAddr)
-        case "btree2" => btree2Index(v, addrs, selfAddr)
-        case "extarray" => extensibleArrayIndex(v, addrs, selfAddr)
-        case "single" | "implicit" => Array.emptyByteArray // address points at the data
-        case _ => chunkBtree(v, addrs)
-      }
-
-    /** The address the layout message carries: an index structure for
-      * indexed types, the first chunk itself for single/implicit and
-      * the contiguous run (per-var chunk payloads are consecutive). */
-    private def layoutAddr(chunkAddrs: Seq[Long], indexAddr: Long): Long =
-      if (contiguousLayout || chunkIndex == "single" || chunkIndex == "implicit")
-        chunkAddrs.headOption.getOrElse(UNDEF)
-      else indexAddr
 
     /** Assemble and return the complete file. */
     def finish(): Array[Byte] = {
@@ -2319,19 +1842,15 @@ object Hdf5Format {
 
       val varHdrAddrs = new Array[Long](vars.length)
       val varBtreeAddrs = new Array[Long](vars.length)
-      val varChunkAddrs = new Array[Seq[Long]](vars.length)
+      val varEntries = new Array[ChunkIndex.Entries](vars.length)
       vars.zipWithIndex.foreach { case (v, i) =>
         varHdrAddrs(i) = cursor
-        cursor += datasetHeaderV1(v, 0L).length // size is address-independent
-        val addrs =
-          if (compactLayout) Seq.empty[Long] // data rides in the header
-          else v.stored.map { case (bytes, _) =>
-            if (bytes == null) UNDEF // sparse: unallocated chunk
-            else { val a = cursor; cursor += bytes.length; a }
-          }.toSeq
-        varChunkAddrs(i) = addrs
+        cursor += datasetHeaderV1(v, 0L, Vector.empty).length // size is address-independent
+        // a compact layout's data rides in its header
+        varEntries(i) = if (compactLayout) Vector.empty else v.entries(cursor)
+        cursor += varEntries(i).map(_.storedSize).sum
         varBtreeAddrs(i) = cursor
-        cursor += chunkIndexBytes(v, addrs, 0L).length
+        cursor += indexBytes(v, varEntries(i), 0L).length
       }
       val eof = cursor
 
@@ -2395,10 +1914,10 @@ object Hdf5Format {
       }
       // datasets
       vars.zipWithIndex.foreach { case (v, i) =>
-        out.bytes(datasetHeaderV1(v, layoutAddr(varChunkAddrs(i), varBtreeAddrs(i))))
+        out.bytes(datasetHeaderV1(v, layoutAddr(varEntries(i), varBtreeAddrs(i)), varEntries(i)))
         if (!compactLayout)
           v.stored.foreach { case (bytes, _) => if (bytes != null) out.bytes(bytes) }
-        out.bytes(chunkIndexBytes(v, varChunkAddrs(i), varBtreeAddrs(i)))
+        out.bytes(indexBytes(v, varEntries(i), varBtreeAddrs(i)))
       }
       val res = out.result()
       require(res.length == eof, s"layout drift: ${res.length} != $eof")
@@ -2602,24 +2121,20 @@ object Hdf5Format {
       val varHdrAddrs = new Array[Long](vars.length)
       val varAttrAddrs = new Array[Long](vars.length)
       val varBtreeAddrs = new Array[Long](vars.length)
-      val varChunkAddrs = new Array[Seq[Long]](vars.length)
+      val varEntries = new Array[ChunkIndex.Entries](vars.length)
       vars.zipWithIndex.foreach { case (v, i) =>
         varHdrAddrs(i) = cursor
-        cursor += datasetHeaderV2(v, 0L,
+        cursor += datasetHeaderV2(v, 0L, Vector.empty,
           typeAddr = typeAddrOf.getOrElse(v.kind, UNDEF),
           dimRefs = dimRefsFor(v),
           objRefs = objRefsFor(v, vars.map(_ => 0L))).length
         varAttrAddrs(i) = cursor
         if (denseAttrs && allAttrs(v).nonEmpty) cursor += denseAttrGeom(v)._2
-        val addrs =
-          if (compactLayout) Seq.empty[Long] // data rides in the header
-          else v.stored.map { case (bytes, _) =>
-            if (bytes == null) UNDEF // sparse: unallocated chunk
-            else { val a = cursor; cursor += bytes.length; a }
-          }.toSeq
-        varChunkAddrs(i) = addrs
+        // a compact layout's data rides in its header
+        varEntries(i) = if (compactLayout) Vector.empty else v.entries(cursor)
+        cursor += varEntries(i).map(_.storedSize).sum
         varBtreeAddrs(i) = cursor
-        cursor += chunkIndexBytes(v, addrs, 0L).length
+        cursor += indexBytes(v, varEntries(i), 0L).length
       }
       val eof = cursor
 
@@ -2664,7 +2179,7 @@ object Hdf5Format {
         out.bytes(denseSeg(varHdrAddrs.toSeq, denseAddr))
       }
       vars.zipWithIndex.foreach { case (v, i) =>
-        out.bytes(datasetHeaderV2(v, layoutAddr(varChunkAddrs(i), varBtreeAddrs(i)),
+        out.bytes(datasetHeaderV2(v, layoutAddr(varEntries(i), varBtreeAddrs(i)), varEntries(i),
           varAttrAddrs(i), typeAddrOf.getOrElse(v.kind, UNDEF), dimRefsFor(v),
           objRefsFor(v, varHdrAddrs.toSeq)))
         if (denseAttrs && allAttrs(v).nonEmpty) {
@@ -2674,7 +2189,7 @@ object Hdf5Format {
         }
         if (!compactLayout)
           v.stored.foreach { case (bytes, _) => if (bytes != null) out.bytes(bytes) }
-        out.bytes(chunkIndexBytes(v, varChunkAddrs(i), varBtreeAddrs(i)))
+        out.bytes(indexBytes(v, varEntries(i), varBtreeAddrs(i)))
       }
       val res = out.result()
       require(res.length == eof, s"layout drift: ${res.length} != $eof")
@@ -2688,7 +2203,7 @@ object Hdf5Format {
 
   /** Positioned reads of a file opened by [[openShifted]]; `eof` is its
     * length from the superblock, where [[readMeta]] knows it. */
-  private final class R(in: FSDataInputStream, val eof: Long = Long.MaxValue) {
+  private[netcdf] final class R(in: FSDataInputStream, val eof: Long = Long.MaxValue) {
     def seek(pos: Long): Unit = in.seek(pos)
     def pos: Long = in.getPos
     def readFully(b: Array[Byte]): Array[Byte] = { in.readFully(b, 0, b.length); b }
@@ -2697,7 +2212,7 @@ object Hdf5Format {
     }
   }
 
-  private final class BB(val data: Array[Byte]) {
+  private[netcdf] final class BB(val data: Array[Byte]) {
     var off = 0
     def u8(): Int = { val v = data(off) & 0xff; off += 1; v }
     def u16(): Int = u8() | (u8() << 8)
@@ -2885,22 +2400,11 @@ object Hdf5Format {
     msgs.toSeq
   }
 
-  /** (name → object header address) links of a group header: old-style
-    * symbol table or new-style compact Link messages. */
-  /** Fixed Array chunk index (HDF5 ≥1.10, spec III.K — the index the
-    * library emits for chunked datasets with no unlimited dimension):
-    * FAHD header → FADB data block of per-chunk elements. Past
-    * 2^pageBits entries the data block is PAGED — the FADB carries
-    * only an initialization bitmap and the element pages (each with
-    * its own checksum) follow it — which a year of hourly chunks in
-    * one wild file easily reaches. Elements are chunk addresses, plus
-    * (size, filter mask) when the dataset is filtered; uninitialized
-    * pages and UNDEF addresses are unallocated (sparse) chunks. */
   /** Verify a v2-generation structure's trailing lookup3 checksum:
     * `bytes[0, upto)` must hash to the LE u32 at `upto`. Corruption
     * fails LOUDLY — a flipped bit in a chunk-index node must never
     * silently misaddress data. */
-  private def verifyCk(bytes: Array[Byte], upto: Int, what: String, addr: Long): Unit = {
+  private[netcdf] def verifyCk(bytes: Array[Byte], upto: Int, what: String, addr: Long): Unit = {
     val stored = (bytes(upto) & 0xff) | ((bytes(upto + 1) & 0xff) << 8) |
       ((bytes(upto + 2) & 0xff) << 16) | ((bytes(upto + 3) & 0xff) << 24)
     val computed = lookup3(java.util.Arrays.copyOfRange(bytes, 0, upto))
@@ -2908,248 +2412,6 @@ object Hdf5Format {
       f"$what checksum mismatch at $addr (stored 0x$stored%08x, computed 0x$computed%08x)")
   }
 
-  private def readFixedArrayChunks(r: R, addr: Long, chunkRecs: Int, geom: TileGeom,
-      filtered: Boolean, rawChunkBytes: Long, name: String): Array[H5Chunk] = {
-    val h = new BB(r.bytesAt(addr, 28))
-    verifyCk(h.data, 24, "fixed array header", addr)
-    require(h.u8() == 'F' && h.u8() == 'A' && h.u8() == 'H' && h.u8() == 'D',
-      s"bad fixed array signature at $addr for $name")
-    h.skip(1) // version
-    val clientId = h.u8()
-    require((clientId == 0) == !filtered,
-      s"fixed array client id $clientId inconsistent with filter pipeline of $name")
-    val entrySize = h.u8()
-    val pageBits = h.u8()
-    val nEntries = h.u64()
-    val dblkAddr = h.u64()
-    require(nEntries <= (1L << 24),
-      s"fixed array too large for $name ($nEntries entries)")
-    val szBytes = entrySize - 12 // filtered element: addr(8) + size + mask(4)
-    val acc = scala.collection.mutable.ArrayBuffer.empty[H5Chunk]
-    def elemAt(db: BB, i: Long): Unit = {
-      val cAddr = db.u64()
-      val (sz, mask) =
-        if (filtered) {
-          var s = 0L
-          (0 until szBytes).foreach(k => s |= (db.u8().toLong << (8 * k)))
-          (s.toInt, db.u32().toInt)
-        } else (rawChunkBytes.toInt, 0) // unfiltered chunks store full-size
-      if (cAddr != UNDEF) acc += H5Chunk((i / geom.nTiles) * chunkRecs, cAddr, sz, mask,
-        geom.cornerOfTile(i % geom.nTiles))
-    }
-    val pageSize = 1L << pageBits
-    if (nEntries <= pageSize) {
-      // unpaged: sig + version + client id + header address, elements,
-      // trailing checksum
-      val used = 14 + (nEntries * entrySize).toInt
-      val db = new BB(r.bytesAt(dblkAddr, used + 4))
-      verifyCk(db.data, used, "fixed array data block", dblkAddr)
-      require(db.u8() == 'F' && db.u8() == 'A' && db.u8() == 'D' && db.u8() == 'B',
-        s"bad fixed array data block signature at $dblkAddr for $name")
-      db.skip(2 + 8)
-      (0L until nEntries).foreach(i => elemAt(db, i))
-    } else {
-      // paged: the FADB holds an initialization bitmap + checksum and
-      // the element pages (each page + its own checksum) follow it
-      val npages = ((nEntries + pageSize - 1) / pageSize).toInt
-      val bitmapBytes = (npages + 7) / 8
-      val total = 6 + 8 + bitmapBytes + 4 +
-        nEntries * entrySize + npages.toLong * 4
-      val db = new BB(r.bytesAt(dblkAddr, total.toInt))
-      verifyCk(db.data, 14 + bitmapBytes, "fixed array data block", dblkAddr)
-      require(db.u8() == 'F' && db.u8() == 'A' && db.u8() == 'D' && db.u8() == 'B',
-        s"bad fixed array data block signature at $dblkAddr for $name")
-      db.skip(2 + 8)
-      val bitmap = new Array[Int](bitmapBytes)
-      (0 until bitmapBytes).foreach(k => bitmap(k) = db.u8())
-      db.skip(4) // FADB checksum (verified above)
-      var i = 0L
-      (0 until npages).foreach { p =>
-        val inPage = math.min(pageSize, nEntries - p.toLong * pageSize)
-        val pageBytes = (inPage * entrySize).toInt
-        if ((bitmap(p / 8) & (1 << (p % 8))) != 0) {
-          val pg = java.util.Arrays.copyOfRange(db.data, db.off, db.off + pageBytes + 4)
-          verifyCk(pg, pageBytes, s"fixed array page $p", dblkAddr)
-          (0L until inPage).foreach { _ => elemAt(db, i); i += 1 }
-        } else { db.skip(pageBytes); i += inPage } // uninit: bytes unchecked
-        db.skip(4) // per-page checksum
-      }
-    }
-    acc.toArray
-  }
-
-  /** Extensible Array chunk index (HDF5 ≥1.10, spec III.J — the index
-    * the library emits for chunked datasets with ONE unlimited
-    * dimension, i.e. the record-streamed shape): EAHD header → EAIB
-    * index block (inline elements, direct data-block pointers,
-    * secondary-block pointers) → EASB secondary blocks → unpaged EADB
-    * data blocks. The element→position law is the [[EaGeom]]
-    * superblock doubling table re-derived from the header's own
-    * creation params, so wild-file parameter choices (not just this
-    * writer's) resolve correctly. Data blocks past 2^pageBits
-    * elements are PAGED (reached past ~65k chunks per file under
-    * library defaults): the owning secondary block carries per-block
-    * page-init bitmaps ahead of the addresses, and each page ends in
-    * its own checksum. UNDEF addresses and uninitialized pages are
-    * unallocated (sparse) regions and simply skip their element
-    * span. */
-  private def readExtensibleArrayChunks(r: R, addr: Long, chunkRecs: Int, geom: TileGeom,
-      filtered: Boolean, rawChunkBytes: Long, nChunks: Long,
-      name: String): Array[H5Chunk] = {
-    val h = new BB(r.bytesAt(addr, 72))
-    verifyCk(h.data, 68, "extensible array header", addr)
-    require(h.u8() == 'E' && h.u8() == 'A' && h.u8() == 'H' && h.u8() == 'D',
-      s"bad extensible array signature at $addr for $name")
-    h.skip(1) // version
-    val clientId = h.u8()
-    require((clientId == 0) == !filtered,
-      s"extensible array client id $clientId inconsistent with filter pipeline of $name")
-    val elemSize = h.u8()
-    val maxBits = h.u8(); val idxElmts = h.u8(); val minElmts = h.u8()
-    val minPtrs = h.u8(); val pageBits = h.u8()
-    h.skip(6 * 8) // statistics (block counts/sizes, max index, nelmts)
-    val iblkAddr = h.u64()
-    val g = EaGeom(maxBits, idxElmts, minPtrs, minElmts, pageBits)
-    val szBytes = elemSize - 12 // filtered element: addr(8) + size + mask(4)
-    val acc = scala.collection.mutable.ArrayBuffer.empty[H5Chunk]
-    def elemAt(b: BB, posIdx: Long): Unit = {
-      val cAddr = b.u64()
-      val (sz, mask) =
-        if (filtered) {
-          var s = 0L
-          (0 until szBytes).foreach(k => s |= (b.u8().toLong << (8 * k)))
-          (s.toInt, b.u32().toInt)
-        } else (rawChunkBytes.toInt, 0)
-      if (cAddr != UNDEF) acc += H5Chunk((posIdx / geom.nTiles) * chunkRecs, cAddr, sz, mask,
-        geom.cornerOfTile(posIdx % geom.nTiles))
-    }
-    /** One data block's elements. Unpaged blocks carry them inline;
-      * paged blocks (past 2^pageBits elements) are a bare prefix with
-      * per-checksummed pages following — `initBits` (from the owning
-      * secondary block's page bitmap) marks which pages exist;
-      * uninitialized pages are unallocated (fill) spans. */
-    def readDb(dbAddr: Long, s: Int, startPos: Long,
-        initBits: Array[Int]): Unit = {
-      val ne = g.dblkNelmts(s)
-      if (!g.dblkPaged(s)) {
-        val db = new BB(r.bytesAt(dbAddr, g.dblkSize(s, elemSize)))
-        verifyCk(db.data, g.dblkSize(s, elemSize) - 4,
-          "extensible array data block", dbAddr)
-        require(db.u8() == 'E' && db.u8() == 'A' && db.u8() == 'D' && db.u8() == 'B',
-          s"bad extensible array data block signature at $dbAddr for $name")
-        db.skip(2 + 8 + g.arrOffSize) // version, client, header addr, block offset
-        var i = 0
-        while (i < ne) { elemAt(db, startPos + i); i += 1 }
-      } else {
-        val npages = g.dblkNpages(s)
-        val db = new BB(r.bytesAt(dbAddr, g.dblkExtent(s, elemSize)))
-        verifyCk(db.data, g.dblkPrefixSize - 4,
-          "extensible array data block prefix", dbAddr)
-        require(db.u8() == 'E' && db.u8() == 'A' && db.u8() == 'D' && db.u8() == 'B',
-          s"bad extensible array data block signature at $dbAddr for $name")
-        db.skip(2 + 8 + g.arrOffSize + 4) // prefix + its checksum (verified)
-        val pageBytes = g.pageNelmts * elemSize
-        (0 until npages).foreach { p =>
-          val base = startPos + p.toLong * g.pageNelmts
-          if ((initBits(p / 8) & (1 << (p % 8))) != 0) {
-            val pg = java.util.Arrays.copyOfRange(db.data, db.off, db.off + pageBytes + 4)
-            verifyCk(pg, pageBytes, s"extensible array page $p", dbAddr)
-            var i = 0
-            while (i < g.pageNelmts) { elemAt(db, base + i); i += 1 }
-          } else db.skip(pageBytes) // uninit: bytes unchecked
-          db.skip(4) // page checksum
-        }
-      }
-    }
-    val ib = new BB(r.bytesAt(iblkAddr, g.iblkSize(elemSize)))
-    verifyCk(ib.data, g.iblkSize(elemSize) - 4, "extensible array index block", iblkAddr)
-    require(ib.u8() == 'E' && ib.u8() == 'A' && ib.u8() == 'I' && ib.u8() == 'B',
-      s"bad extensible array index block signature at $iblkAddr for $name")
-    ib.skip(2 + 8)
-    var pos = 0L
-    (0 until idxElmts).foreach { _ => elemAt(ib, pos); pos += 1 }
-    val directAddrs = (0 until g.nDblkAddrs).map(_ => ib.u64())
-    val sblkAddrs = (0 until g.nSblkAddrs).map(_ => ib.u64())
-    var slot = 0
-    (0 until g.firstSblk).foreach { s =>
-      (0 until g.ndblks(s)).foreach { _ =>
-        val a = directAddrs(slot); slot += 1
-        if (a != UNDEF) {
-          require(!g.dblkPaged(s),
-            s"paged directly-addressed extensible-array data block for $name (superblock $s)")
-          readDb(a, s, pos, Array.empty)
-        }
-        pos += g.dblkNelmts(s)
-      }
-    }
-    val allInit = Array.fill(32)(0xff) // unpaged blocks need no bitmap
-    (g.firstSblk until g.nSblks).foreach { s =>
-      if (pos < nChunks) {
-        val sa = sblkAddrs(s - g.firstSblk)
-        if (sa == UNDEF) pos += g.ndblksL(s) * g.dblkNelmtsL(s)
-        else {
-          val sb = new BB(r.bytesAt(sa, g.sblkSize(s)))
-          verifyCk(sb.data, g.sblkSize(s) - 4, "extensible array secondary block", sa)
-          require(sb.u8() == 'E' && sb.u8() == 'A' && sb.u8() == 'S' && sb.u8() == 'B',
-            s"bad extensible array secondary block signature at $sa for $name")
-          sb.skip(2 + 8 + g.arrOffSize)
-          // paged superblocks carry per-data-block page-init bitmaps
-          // AHEAD of the data block addresses
-          val bitmaps: IndexedSeq[Array[Int]] =
-            if (g.dblkPaged(s))
-              (0 until g.ndblks(s)).map(_ =>
-                Array.fill(g.pageInitSize(s))(sb.u8()))
-            else (0 until g.ndblks(s)).map(_ => allInit)
-          (0 until g.ndblks(s)).foreach { d =>
-            val a = sb.u64()
-            if (a != UNDEF) readDb(a, s, pos, bitmaps(d))
-            pos += g.dblkNelmts(s)
-          }
-        }
-      }
-    }
-    acc.toArray
-  }
-
-  /** v2 B-tree chunk index (HDF5 ≥1.10, record types 10/11 — the
-    * index the library emits for chunked datasets with >1 unlimited
-    * dimension): depth-0 and depth-1 trees via [[btree2Records]].
-    * Type 10 records are (address, scaled offsets); type 11 adds
-    * (chunk size, filter mask) with the size width derivable from the
-    * record size. Scaled offset × chunk dim = start position; a scaled
-    * offset off the tile grid is an IOException naming `where`. */
-  private def readBtree2Chunks(r: R, addr: Long, chunkRecs: Int, rank: Int,
-      geom: TileGeom, filtered: Boolean, rawChunkBytes: Long, where: String): Array[H5Chunk] = {
-    val (recSize, n, recs) = btree2Records(r, addr, if (filtered) 11 else 10)
-    val szLen = recSize - 8 - 4 - 8 * rank // type 11 chunk-size width
-    (0 until n).map { _ =>
-      val cAddr = recs.u64()
-      val (sz, mask) =
-        if (filtered) {
-          var s = 0L
-          (0 until szLen).foreach(k => s |= (recs.u8().toLong << (8 * k)))
-          (s.toInt, recs.u32().toInt)
-        } else (rawChunkBytes.toInt, 0)
-      val scaled0 = recs.u64()
-      val scaledTrail = new Array[Long](rank - 1)
-      var d = 0
-      while (d < rank - 1) { scaledTrail(d) = recs.u64(); d += 1 }
-      H5Chunk(scaled0 * chunkRecs, cAddr, sz, mask, geom.cornerOf(scaledTrail, scaled = true, where))
-    }.sortBy(c => (c.startRec, c.startCol)).toArray
-  }
-
-  /** DENSE group links (HDF5 ≥1.8 `Link Info` storage — what the
-    * library switches to above its compact-link threshold, so
-    * many-variable wild files are unreadable without it): the Link
-    * Info message carries a FRACTAL HEAP holding the serialized link
-    * messages and a v2 B-TREE (record type 5) indexing them by name
-    * hash. The walk is header-only like the rest of readMeta: B-tree
-    * leaf records → managed heap IDs → heap offsets → link bodies.
-    *
-    * Subset bounds (loud, never silent): unfiltered heaps, root
-    * direct block or one level of indirect→direct blocks (the
-    * doubling table), B-tree depth ≤ 1 — ample for any realistic
-    * variable count; beyond that the reader names what it met. */
   /** Fractal heap access (spec III.G): header parse + managed-object
     * resolution, shared by dense links and dense attributes. Root is
     * either one direct block (curRows == 0) or an indirect block whose
@@ -3245,17 +2507,6 @@ object Hdf5Format {
     }
   }
 
-  /** Test hook: walk a v2 B-tree chunk index at `addr` — drives the
-    * general-depth record walk against hand-assembled fixtures (the
-    * writer splits to depth ≤ 1 only). */
-  private[graft] def btree2ChunksForTest(fs: FileSystem, path: Path, addr: Long,
-      chunkRecs: Int): Array[H5Chunk] = {
-    val in = fs.open(path)
-    try readBtree2Chunks(new R(in), addr, chunkRecs, 1, TileGeom(Nil, Nil),
-      filtered = false, 16L, "test")
-    finally in.close()
-  }
-
   /** Test hook: resolve a managed heap id against a fractal heap at
     * `fheapAddr` in `path` — exercises the full heap walk (incl.
     * NESTED indirect blocks, which the writer never emits, so the
@@ -3319,29 +2570,6 @@ object Hdf5Format {
     try gcolAll(in, addr, "test") finally in.close()
   }
 
-  /** Test hook: walk a fixed-array chunk index at `addr` — drives the
-    * FAHD/FADB parse (incl. PAGED data blocks with init bitmaps and
-    * per-page checksums) against hand-assembled fixtures. */
-  private[graft] def fixedArrayChunksForTest(fs: FileSystem, path: Path, addr: Long,
-      chunkRecs: Int, filtered: Boolean, rawChunkBytes: Long): Array[H5Chunk] = {
-    val in = fs.open(path)
-    try readFixedArrayChunks(new R(in), addr, chunkRecs, TileGeom(Nil, Nil),
-      filtered, rawChunkBytes, "test")
-    finally in.close()
-  }
-
-  /** Test hook: walk an extensible-array chunk index at `addr` —
-    * drives the EAHD/EAIB/EASB/EADB parse (incl. EASB-owned PAGED
-    * data blocks) against hand-assembled fixtures. */
-  private[graft] def extArrayChunksForTest(fs: FileSystem, path: Path, addr: Long,
-      chunkRecs: Int, filtered: Boolean, rawChunkBytes: Long,
-      nChunks: Long): Array[H5Chunk] = {
-    val in = fs.open(path)
-    try readExtensibleArrayChunks(new R(in), addr, chunkRecs, TileGeom(Nil, Nil),
-      filtered, rawChunkBytes, nChunks, "test")
-    finally in.close()
-  }
-
   /** Test hook: resolve dense attributes from a hand-built Attribute
     * Info message body against fixture heap + B-tree bytes in `path`. */
   private[graft] def denseAttrsForTest(fs: FileSystem, path: Path,
@@ -3351,15 +2579,14 @@ object Hdf5Format {
   }
 
   /** A v2 B-tree's records, raw and concatenated in key order:
-    * (recordSize, count, BB positioned at the first record). Depth 0
-    * reads the root leaf directly; depth 1 walks the BTIN internal
-    * root, interleaving each child leaf's records with the root's own
-    * separator records (child0 < rec0 < child1 < …) — the shape any
-    * file reaches once its records outgrow one node. The child
-    * pointer's record-count width derives from the leaf capacity
-    * ((nodeSize − 10) / recSize), per the format spec's variable-size
-    * encoding. Deeper trees are rejected loudly. */
-  private def btree2Records(r: R, addr: Long, expectType: Int): (Int, Int, BB) = {
+    * (recordSize, count, BB positioned at the first record) — the one
+    * walk of chunk indexes, dense links and dense attributes. Depth 0
+    * reads the root leaf directly; deeper trees walk their BTIN
+    * internal nodes, interleaving each child subtree's records with
+    * the node's own separator records (child0 < rec0 < child1 < …).
+    * Child pointers store their counts at the widths the capacity law
+    * ([[ChunkIndex.Bt2Capacity]]) gives for the declared node size. */
+  private[netcdf] def btree2Records(r: R, addr: Long, expectType: Int): (Int, Int, BB) = {
     val bt = new BB(r.bytesAt(addr, 38))
     verifyCk(bt.data, 34, "v2 B-tree header", addr)
     require(bt.u8() == 'B' && bt.u8() == 'T' && bt.u8() == 'H' && bt.u8() == 'D',
@@ -3385,30 +2612,10 @@ object Hdf5Format {
     }
     if (depth == 0) (recSize, rootNRecs, new BB(leafBytes(btRootAddr, rootNRecs)))
     else {
-      // general depth: internal child pointers carry (address, child
-      // record count, and — when the child is itself internal — the
-      // child SUBTREE's total record count), each field at the
-      // minimum width for the maximum value possible at that level
-      // (the spec's variable-size encoding). Capacities derive from
-      // the declared node size exactly as the library computes them:
-      //   maxRec(0)   = (nodeSize − 10) / recSize
-      //   ptr(d)      = 8 + w(maxRec(d−1)) + (d ≥ 2 ? w(cum(d−1)) : 0)
-      //   maxRec(d)   = (nodeSize − 10 − ptr(d)) / (recSize + ptr(d))
-      //   cum(d)      = (maxRec(d) + 1)·cum(d−1) + maxRec(d)
-      def w(x: Long): Int = {
-        var n = 1
-        while (n < 8 && (1L << (8 * n)) <= x) n += 1
-        n
-      }
-      val maxRec = new Array[Long](depth + 1)
-      val cum = new Array[Long](depth + 1)
-      maxRec(0) = (nodeSize - 10).toLong / recSize
-      cum(0) = maxRec(0)
-      (1 to depth).foreach { d =>
-        val ptr = 8 + w(maxRec(d - 1)) + (if (d >= 2) w(cum(d - 1)) else 0)
-        maxRec(d) = (nodeSize - 10 - ptr).toLong / (recSize + ptr)
-        cum(d) = (maxRec(d) + 1) * cum(d - 1) + maxRec(d)
-      }
+      // internal child pointers carry (address, child record count,
+      // and — when the child is itself internal — the child SUBTREE's
+      // total record count)
+      val cap = new ChunkIndex.Bt2Capacity(nodeSize, recSize)
       val out = new java.io.ByteArrayOutputStream()
       var total = 0
       def walk(a: Long, nrec: Int, d: Int): Unit =
@@ -3416,8 +2623,8 @@ object Hdf5Format {
           out.write(leafBytes(a, nrec))
           total += nrec
         } else {
-          val n1 = w(maxRec(d - 1))
-          val n2 = if (d >= 2) w(cum(d - 1)) else 0
+          val n1 = cap.countBytes(d)
+          val n2 = cap.totalBytes(d)
           val sz = 6 + nrec * recSize + (nrec + 1) * (8 + n1 + n2) + 4
           val nb = r.bytesAt(a, sz)
           verifyCk(nb, sz - 4, "v2 B-tree internal node", a)
@@ -3450,6 +2657,14 @@ object Hdf5Format {
     }
   }
 
+  /** DENSE group links (HDF5 ≥1.8 `Link Info` storage — what the
+    * library switches to above its compact-link threshold, so
+    * many-variable wild files are unreadable without it): the Link
+    * Info message carries a FRACTAL HEAP holding the serialized link
+    * messages and a v2 B-TREE (record type 5) indexing them by name
+    * hash. The walk is header-only like the rest of readMeta: B-tree
+    * leaf records → managed heap IDs → heap offsets → link bodies.
+    * Filtered heaps are a loud reject. */
   private def readDenseLinks(r: R, body: Array[Byte]): Seq[(String, Long)] = {
     val li = new BB(body)
     val liVer = li.u8()
@@ -3518,6 +2733,8 @@ object Hdf5Format {
     if (linkType == 0) Some(name -> b.u64()) else None
   }
 
+  /** (name → object header address) links of a group header: old-style
+    * symbol table or new-style compact Link messages. */
   private def readLinks(r: R, msgs: Seq[(Int, Array[Byte])]): Seq[(String, Long)] = {
     val links = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
     msgs.foreach {
@@ -3714,16 +2931,14 @@ object Hdf5Format {
 
   /** Parse one dataset's object header into an H5Var. */
   private def readDataset(r: R, path: Path, name: String, addr: Long): Option[H5Var] = {
+    val where = s"$path: variable $name"
     val msgs = readMessages(r, addr)
     var dims: Seq[Long] = Nil
     var kindCls = -1
     var compMembers: Seq[(String, H5Kind, Int)] = Nil
     var elemSize = 0
-    var signed = true
     var strWidth = 0
-    var chunkRecs = 0
-    var chunkDims: Seq[Int] = Nil
-    var btreeAddr = UNDEF
+    var chunked: Option[ChunkIndex.Layout] = None
     var contiguous = UNDEF
     var compactBytes: Array[Byte] = Array.emptyByteArray
     var vlenBase: Option[H5Kind] = None
@@ -3731,11 +2946,6 @@ object Hdf5Format {
     var opaqueTag = ""
     var arrInfo: Option[(H5Kind, Int)] = None
     var bigEndian = false
-    var layoutV4 = false
-    var chunkIdxType = 0
-    var idxPageBits = 0
-    var singleChunkSize = 0L
-    var singleChunkMask = 0
     var deflate = false
     var zstdF = false
     var shuffle = false
@@ -3792,7 +3002,6 @@ object Hdf5Format {
         // written wild files) are served by order-aware accessors in
         // the range reader.
         if ((kindCls <= 1 || kindCls == 4) && (bf0 & 1) != 0) bigEndian = true
-        signed = kindCls != 0 || (bf0 & 0x08) != 0
         if (kindCls == 3) strWidth = elemSize
         if (kindCls == 5) {
           // opaque: the class bit field is the ASCII tag length; the
@@ -3859,38 +3068,8 @@ object Hdf5Format {
         val ver = b.u8()
         require(ver == 3 || ver == 4, s"only data layout v3/v4 supported, got v$ver")
         val cls = b.u8()
-        if (ver == 3 && cls == 2) {
-          val rank = b.u8()
-          btreeAddr = b.u64()
-          val cdims = (0 until rank).map(_ => b.u32().toInt)
-          chunkRecs = cdims.head
-          chunkDims = cdims
-        } else if (ver == 4 && cls == 2) {
-          // HDF5 ≥1.10 chunked layout: chunk dims EXCLUDE the element
-          // dim, then a typed chunk index replaces the v1 B-tree
-          val flags = b.u8()
-          val rank = b.u8()
-          val encLen = b.u8()
-          val cdims = (0 until rank).map { _ =>
-            var v = 0L
-            (0 until encLen).foreach(i => v |= (b.u8().toLong << (8 * i)))
-            v.toInt
-          }
-          chunkRecs = cdims.head
-          chunkDims = cdims
-          layoutV4 = true
-          chunkIdxType = b.u8()
-          chunkIdxType match {
-            case 1 => // single chunk: filtered variant carries size+mask
-              if ((flags & 2) != 0) { singleChunkSize = b.u64(); singleChunkMask = b.u32().toInt }
-            case 2 => // implicit: contiguous unfiltered chunk run
-            case 3 => idxPageBits = b.u8()
-            case 4 => b.skip(5) // extensible array creation params (EAHD re-states them)
-            case 5 => b.skip(6) // v2 B-tree node size + split/merge params
-            case t => throw new java.io.IOException(s"unknown chunk index type $t for $name")
-          }
-          btreeAddr = b.u64() // the index structure's address
-        } else if (cls == 1) {
+        if (cls == 2) chunked = Some(ChunkIndex.byLayout(b, ver, where))
+        else if (cls == 1) {
           contiguous = b.u64()
         } else if (cls == 0) {
           // compact (class 0): the data is inline, right here in the
@@ -3943,24 +3122,23 @@ object Hdf5Format {
       case _ =>
     }
     if (dims.isEmpty || kindCls < 0) return None
-    val where = s"$path: variable $name"
     // ---- the chunk grid over the trailing dims: rank-2 partial-width
     // column tiles, or (time, lat, lon) with the library's default
-    // chunking, partial in EVERY dim. v3 chunk dims carry a trailing
-    // element-size dim; v4 dims do not. ----
+    // chunking, partial in EVERY dim ----
     require(dims.length <= 8, s"rank ${dims.length} > 8 unsupported for $name")
     val flatW: Long = if (dims.length >= 2) dims.tail.product else 1L
     require(flatW <= Int.MaxValue,
       s"flattened trailing width $flatW exceeds array-column bound for $name")
     val trailAll: Seq[Int] = dims.drop(1).map(_.toInt)
+    val chunkDims = chunked.fold(Seq.empty[Int])(_.chunkDims)
+    val chunkRecs = math.max(1, chunkDims.headOption.getOrElse(1))
     val geom: TileGeom = {
       val ext =
         if (trailAll.isEmpty || chunkDims.isEmpty) trailAll // contiguous/compact: untiled
         else {
-          val cd = if (layoutV4) chunkDims else chunkDims.dropRight(1)
-          require(cd.length == dims.length,
-            s"chunk rank ${cd.length} != dataset rank ${dims.length} for $name")
-          cd.tail
+          require(chunkDims.length == dims.length,
+            s"chunk rank ${chunkDims.length} != dataset rank ${dims.length} for $name")
+          chunkDims.tail
         }
       TileGeom(trailAll, ext.zip(trailAll).map { case (c, d) => math.max(1, math.min(c, d)) })
     }
@@ -4004,77 +3182,14 @@ object Hdf5Format {
         s"unsupported dataset datatype ${classNameOf(c)} " +
           s"(elemSize=$sz, rank=$rk) for $name")
     }
-    val _ = signed
-    val filtered = deflate || shuffle || fletcher || zstdF
     /** stored bytes of ONE chunk = one tile (full-width when untiled),
       * bounded so every reader buffer fits one array */
-    val chunkBytesOf: Int = geom.chunkBytes(elemSize, math.max(1, chunkRecs), where)
-    val nChunksOf: Long =
-      if (chunkRecs <= 0) 0L
-      else ((dims.head + chunkRecs - 1) / chunkRecs) * geom.nTiles
+    val shape = ChunkIndex.Shape(geom, chunkRecs,
+      ((dims.head + chunkRecs - 1) / chunkRecs) * geom.nTiles,
+      filtered = deflate || shuffle || fletcher || zstdF,
+      geom.chunkBytes(elemSize, chunkRecs, where), where)
     val chunks: Array[H5Chunk] =
-      if (btreeAddr == UNDEF) Array.empty
-      else if (layoutV4) chunkIdxType match {
-        // HDF5 ≥1.10 chunk indexes, in increasing structure: the
-        // address field points at the chunk itself (1), a bare run
-        // (2), a Fixed Array (3), an Extensible Array (4, one
-        // unlimited dim), or a v2 B-tree (5, several unlimited dims).
-        case 1 =>
-          require(!geom.tiled, s"single-chunk index with partial-width tiling for $name")
-          val sz = if (singleChunkSize > 0) singleChunkSize.toInt else chunkBytesOf
-          Array(H5Chunk(0L, btreeAddr, sz, singleChunkMask))
-        case 2 =>
-          require(!filtered, s"implicit chunk index with filters for $name")
-          (0L until nChunksOf).map(i =>
-            H5Chunk((i / geom.nTiles) * chunkRecs, btreeAddr + i * chunkBytesOf,
-              chunkBytesOf, 0, geom.cornerOfTile(i % geom.nTiles))).toArray
-        case 3 =>
-          readFixedArrayChunks(r, btreeAddr, chunkRecs, geom,
-            filtered, chunkBytesOf, name)
-        case 4 =>
-          readExtensibleArrayChunks(r, btreeAddr, chunkRecs, geom,
-            filtered, chunkBytesOf, nChunksOf, name)
-        case 5 =>
-          readBtree2Chunks(r, btreeAddr, chunkRecs, chunkDims.length,
-            geom, filtered, chunkBytesOf, where)
-        case t => throw new java.io.IOException(
-          s"unknown layout-v4 chunk index type $t for $name")
-      }
-      else {
-        val acc = scala.collection.mutable.ArrayBuffer.empty[H5Chunk]
-        val keyDims = dims.size + 1
-        def walk(nodeAddr: Long): Unit = {
-          val hdr = new BB(r.bytesAt(nodeAddr, 24))
-          hdr.skip(4)
-          val nodeType = hdr.u8()
-          val level = hdr.u8()
-          val entries = hdr.u16()
-          require(nodeType == 1, s"expected chunk B-tree node, got type $nodeType")
-          val keySize = 8 + keyDims * 8
-          val body = new BB(r.bytesAt(nodeAddr + 24, entries * (keySize + 8) + keySize))
-          (0 until entries).foreach { _ =>
-            val size = body.u32().toInt
-            val mask = body.u32().toInt
-            val startRec = body.u64()
-            // trailing-dim element offsets: the chunk's tile corner
-            val start = Array.fill(geom.rank)(body.u64())
-            body.u64() // element-size dimension offset (always 0)
-            val child = body.u64()
-            if (level > 0) walk(child)
-            else acc += H5Chunk(startRec, child, size, mask,
-              geom.cornerOf(start, scaled = false, where))
-          }
-        }
-        walk(btreeAddr)
-        acc.sortBy(c => (c.startRec, c.startCol)).toArray
-      }
-    // every index kind's stored sizes size a reader's buffer: bound each
-    // chunk by the file before any reader allocates for it
-    chunks.foreach { c =>
-      if (c.storedSize < 0 || c.addr < 0 || c.addr > r.eof - c.storedSize)
-        throw new java.io.IOException(s"$where: chunk at record ${c.startRec} stores " +
-          s"${c.storedSize} bytes at ${c.addr}, past the file's ${r.eof} bytes")
-    }
+      chunked.fold(Array.empty[H5Chunk])(l => ChunkIndex.toChunks(l.decode(r, shape), shape, r.eof))
     // the enum member table surfaces as a synthetic attribute so the
     // metadata path (readAttrs) can gate it — derived from the
     // datatype message, never stored as a real attribute
@@ -4088,7 +3203,7 @@ object Hdf5Format {
         Seq(H5Attr("_opaque_tag", Some(tag), Array.empty))
       case _ => Nil
     })
-    Some(H5Var(name, kind, dims.head, math.max(1, chunkRecs), deflate,
+    Some(H5Var(name, kind, dims.head, chunkRecs, deflate,
       contiguous, chunks, attrsOut, shuffle = shuffle, fletcher = fletcher,
       geom = geom, compactData = compactBytes,
       bigEndian = bigEndian,

@@ -30,7 +30,8 @@ import org.apache.spark.sql.types._
   * root-group link storage: fractal heap + v2 B-tree, h5ver=2),
   * `denseattrs` (dense per-variable attribute storage, h5ver=2),
   * `chunkindex` (`btree1` | `fixedarray` | `btree2` | `single` |
-  * `implicit` — the on-disk chunk index generation). */
+  * `implicit` | `extarray` — the on-disk chunk index kind,
+  * [[ChunkIndex]]). */
 private[netcdf] class Nc4DataWriter(schema: StructType, dir: String, baseName: String,
     options: Map[String, String], serConf: SerializableHadoopConf,
     varAttrs: Map[String, Seq[Attr]] = Map.empty,

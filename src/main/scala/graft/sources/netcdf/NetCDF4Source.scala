@@ -63,6 +63,13 @@ object NetCDF4 extends ChunkedContainer {
   def openRuns(part: RecordRangePartition, vars: StructType, options: Map[String, String],
       conf: Configuration): RecordRuns = new Nc4Runs(part, vars, conf)
 
+  /** The writer's chunk-index rule, on the driver: an unknown
+    * `chunkindex`, or a layout-v4 one under `h5ver=0`, fails before any
+    * task runs, even for a write with no rows. */
+  override def checkWriteOptions(options: Map[String, String]): Unit =
+    ChunkIndex.byName(options.getOrElse("chunkindex", "btree1"),
+      options.getOrElse("h5ver", "0").toInt)
+
   def dataWriter(schema: StructType, dir: String, baseName: String,
       options: Map[String, String], serConf: SerializableHadoopConf,
       varAttrs: Map[String, Seq[Attr]]): DataWriter[InternalRow] =

@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.netcdf.Hdf5Format
+import graft.sources.netcdf.{ChunkIndex, ChunkIndexSpec, Hdf5Format}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.scalatest.funsuite.AnyFunSuite
@@ -388,6 +388,15 @@ class Hdf5FixtureSpec extends AnyFunSuite {
     assert(e.getMessage.contains("checksum mismatch"), e.getMessage)
   }
 
+  /** The chunks of fixture `p`'s `index` at offset 0 (untiled, so each
+    * entry's position is its row block), decoded directly. */
+  private def chunksAt(p: Path, index: ChunkIndex, chunkRecs: Int, chunkBytes: Int,
+      nChunks: Long = 0L): Array[Hdf5Format.H5Chunk] = {
+    val s = ChunkIndex.Shape(Hdf5Format.TileGeom(Nil, Nil), chunkRecs, nChunks,
+      filtered = false, chunkBytes, p.getName)
+    ChunkIndex.toChunks(ChunkIndexSpec.decodeFile(fs, p, index, 0L, s), s, Long.MaxValue)
+  }
+
   // -----------------------------------------------------------------
   // paged FIXED ARRAY: FAHD + paged FADB (init bitmap, per-page
   // checksums, uninitialized middle page)
@@ -417,8 +426,7 @@ class Hdf5FixtureSpec extends AnyFunSuite {
 
   test("paged fixed-array data block resolves; uninit pages skip as fill") {
     val p = writeFile("fa_paged_fixture.bin", pagedFaFixture())
-    val chunks = Hdf5Format.fixedArrayChunksForTest(fs, p, 0L,
-      chunkRecs = 5, filtered = false, rawChunkBytes = 40L)
+    val chunks = chunksAt(p, ChunkIndex.FixedArray, chunkRecs = 5, chunkBytes = 40)
     assert(chunks.map(_.startRec).toSeq == Seq(0L, 5L, 10L, 15L, 40L, 45L),
       chunks.map(_.startRec).mkString(","))
     assert(chunks.map(_.addr).toSeq == Seq(1000L, 1001L, 1002L, 1003L, 1008L, 1009L))
@@ -429,14 +437,12 @@ class Hdf5FixtureSpec extends AnyFunSuite {
     val bytes = pagedFaFixture()
     bytes(83) = (bytes(83) ^ 0x40).toByte // page-0 checksum bit flip
     val pc = writeFile("fa_paged_corrupt.bin", bytes)
-    val e = intercept[java.io.IOException](Hdf5Format.fixedArrayChunksForTest(
-      fs, pc, 0L, 5, filtered = false, 40L))
+    val e = intercept[java.io.IOException](chunksAt(pc, ChunkIndex.FixedArray, 5, 40))
     assert(e.getMessage.contains("checksum mismatch"), e.getMessage)
     // truncation mid-page: the positioned read must throw, not serve
     // a short page
     val pt = writeFile("fa_paged_trunc.bin", java.util.Arrays.copyOf(pagedFaFixture(), 100))
-    intercept[java.io.IOException](Hdf5Format.fixedArrayChunksForTest(
-      fs, pt, 0L, 5, filtered = false, 40L))
+    intercept[java.io.IOException](chunksAt(pt, ChunkIndex.FixedArray, 5, 40))
   }
 
   // -----------------------------------------------------------------
@@ -504,8 +510,7 @@ class Hdf5FixtureSpec extends AnyFunSuite {
 
   test("paged extensible-array data blocks resolve through EASB bitmaps") {
     val p = writeFile("ea_paged_fixture.bin", pagedEaFixture())
-    val chunks = Hdf5Format.extArrayChunksForTest(fs, p, 0L,
-      chunkRecs = 3, filtered = false, rawChunkBytes = 24L, nChunks = 32L)
+    val chunks = chunksAt(p, ChunkIndex.ExtArray, chunkRecs = 3, chunkBytes = 24, nChunks = 32L)
     val present = (0 to 27).filter(_ != 7)
     assert(chunks.map(_.startRec).toSeq == present.map(_ * 3L),
       chunks.map(_.startRec).mkString(","))
@@ -518,19 +523,16 @@ class Hdf5FixtureSpec extends AnyFunSuite {
     val b1 = pagedEaFixture()
     b1(716 + 32) = (b1(716 + 32) ^ 0x10).toByte
     val p1 = writeFile("ea_paged_corrupt_page.bin", b1)
-    val e1 = intercept[java.io.IOException](Hdf5Format.extArrayChunksForTest(
-      fs, p1, 0L, 3, filtered = false, 24L, 32L))
+    val e1 = intercept[java.io.IOException](chunksAt(p1, ChunkIndex.ExtArray, 3, 24, 32L))
     assert(e1.getMessage.contains("checksum mismatch"), e1.getMessage)
     // flipped secondary-block checksum
     val b2 = pagedEaFixture()
     b2(620 + 34) = (b2(620 + 34) ^ 0x01).toByte
     val p2 = writeFile("ea_paged_corrupt_sb.bin", b2)
-    val e2 = intercept[java.io.IOException](Hdf5Format.extArrayChunksForTest(
-      fs, p2, 0L, 3, filtered = false, 24L, 32L))
+    val e2 = intercept[java.io.IOException](chunksAt(p2, ChunkIndex.ExtArray, 3, 24, 32L))
     assert(e2.getMessage.contains("checksum mismatch"), e2.getMessage)
     // truncated mid paged-block: loud, never a short silent page
     val p3 = writeFile("ea_paged_trunc.bin", java.util.Arrays.copyOf(pagedEaFixture(), 700))
-    intercept[java.io.IOException](Hdf5Format.extArrayChunksForTest(
-      fs, p3, 0L, 3, filtered = false, 24L, 32L))
+    intercept[java.io.IOException](chunksAt(p3, ChunkIndex.ExtArray, 3, 24, 32L))
   }
 }

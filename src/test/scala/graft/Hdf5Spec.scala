@@ -1,6 +1,7 @@
 package graft
 
-import graft.sources.netcdf.{ChunkCodec, Hdf5Format, Hdf5IO, NetCDF4, RecordRangePartition}
+import graft.sources.netcdf.{ChunkCodec, ChunkIndex, ChunkIndexSpec, Hdf5Format, Hdf5IO, NetCDF4,
+  RecordRangePartition}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row}
@@ -714,7 +715,10 @@ class Hdf5Spec extends AnyFunSuite {
     val p = new Path("/tmp/graft_h5/btree2_d2.bin")
     val out = fs.create(p, true)
     try out.write(bb.array()) finally out.close()
-    val chunks = Hdf5Format.btree2ChunksForTest(fs, p, 0L, 10)
+    val shape = ChunkIndex.Shape(Hdf5Format.TileGeom(Nil, Nil), chunkRecs = 10, nChunks = 11,
+      filtered = false, chunkBytes = 16, where = "btree2_d2.bin")
+    val chunks = ChunkIndex.toChunks(
+      ChunkIndexSpec.decodeFile(fs, p, ChunkIndex.BtreeV2, 0L, shape), shape, Long.MaxValue)
     assert(chunks.length == 11, s"${chunks.length} chunks")
     assert(chunks.map(_.startRec).toSeq == (0L to 10L).map(_ * 10),
       chunks.map(_.startRec).mkString(","))
@@ -1100,7 +1104,7 @@ class Hdf5Spec extends AnyFunSuite {
         .option("chunkrecs", "1024").save(dir)
       val f = NetCDF4.listFiles(fs, new Path(dir)).head
       val meta = Hdf5Format.readMeta(fs, f)
-      assert(meta.vars.forall(v => v.contiguousAddr != Hdf5Format.UNDEF),
+      assert(meta.vars.forall(v => v.contiguousAddr != -1L),
         s"h5ver=$h5ver: contiguous address missing")
       assert(meta.vars.forall(_.chunks.isEmpty))
       val back = spark.read.format(SRC).load(dir)

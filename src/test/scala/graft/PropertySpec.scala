@@ -358,8 +358,8 @@ class PropertySpec extends AnyFunSuite {
           val s = starts(t).map(_.toLong).toArray
           g.tileOfCorner(corner) == t && brute(corner) == (t, 0) &&
             (0 until g.rank).forall(i => g.tileCoord(t, i) == starts(t)(i)) &&
-            g.cornerOf(s, scaled = true, "p") == corner &&
-            g.cornerOf(s.zip(g.chunk).map { case (x, c) => x * c }, scaled = false, "p") == corner
+            g.tileOf(s, scaled = true, "p") == t &&
+            g.tileOf(s.zip(g.chunk).map { case (x, c) => x * c }, scaled = false, "p") == t
         } &&
         (0 until g.rowElems).forall { k =>
           val loc = g.locate(k)
