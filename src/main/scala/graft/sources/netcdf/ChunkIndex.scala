@@ -6,8 +6,8 @@ import scala.collection.mutable.ArrayBuffer
 
 import graft.sources.netcdf.Hdf5Format.{BB, Buf, H5Chunk, R, TileGeom, UNDEF, lookup3, verifyCk}
 
-/** One HDF5 chunk index kind (spec III.A.1, III.A.2 and the layout-v4
-  * index structures of VII): the writer encodes a variable's chunks
+/** One HDF5 chunk index kind (spec III.A.1, III.A.2, III.J and III.K):
+  * the writer encodes a variable's chunks
   * through it and `readDataset` decodes them back, over the same
   * [[ChunkIndex.Entry]] list. Each kind owns its option name, its part
   * of the chunked data layout message, its encoder and its decoder. */
@@ -202,7 +202,7 @@ private[graft] object ChunkIndex {
     * }}}
     * where w(x) is the fewest bytes holding x: an internal node's child
     * pointer stores its child's record count in w(maxRec(d−1)) bytes
-    * and, below depth 2, its subtree's total in w(cum(d−1)). */
+    * and, from depth 2 up, the child subtree's total in w(cum(d−1)). */
   private[netcdf] final class Bt2Capacity(nodeSize: Int, recSize: Int) {
     private val maxRec = ArrayBuffer((nodeSize - 10).toLong / recSize)
     private val cum = ArrayBuffer(maxRec(0))
@@ -356,7 +356,7 @@ private[graft] object ChunkIndex {
     }
   }
 
-  /** Fixed array (layout-v4 type 3, spec VII.C.2): an FAHD header and an
+  /** Fixed array (layout-v4 type 3, spec III.K): an FAHD header and an
     * FADB data block with one element per position — its address, plus
     * size and mask when filtered; the undefined address marks an
     * unallocated chunk. Past 2^pageBits elements the FADB is PAGED: it
@@ -460,7 +460,7 @@ private[graft] object ChunkIndex {
     }
   }
 
-  /** Extensible-array geometry (spec VII.C.3 — the ≥1.10 chunk index for
+  /** Extensible-array geometry (spec III.J — the ≥1.10 chunk index for
     * ONE unlimited dimension, i.e. exactly the shape of a record-streamed
     * variable): superblock s holds 2^(s/2) data blocks of
     * minElmts·2^((s+1)/2) elements each (so superblock s covers
