@@ -1418,8 +1418,8 @@ object Hdf5Format {
 
     /** The dataset's message set — shared by the v1 and v2 header
       * framings; sizes depend on no address and no chunk entry, so the
-      * same builder serves the sizing pass (btreeAddr = 0, no entries)
-      * and the render pass. */
+      * sizing pass (btreeAddr = 0, no entries) and the render pass both
+      * call it. */
     private def datasetMsgs(v: VarState, btreeAddr: Long,
         entries: ChunkIndex.Entries,
         attrInfoAddr: Long = UNDEF,

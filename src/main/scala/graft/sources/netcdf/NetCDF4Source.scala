@@ -63,7 +63,7 @@ object NetCDF4 extends ChunkedContainer {
   def openRuns(part: RecordRangePartition, vars: StructType, options: Map[String, String],
       conf: Configuration): RecordRuns = new Nc4Runs(part, vars, conf)
 
-  /** The writer's chunk-index rule, on the driver: an unknown
+  /** The writer's chunk-index rule, checked up front: an unknown
     * `chunkindex`, or a layout-v4 one under `h5ver=0`, fails before any
     * task runs, even for a write with no rows. */
   override def checkWriteOptions(options: Map[String, String]): Unit =

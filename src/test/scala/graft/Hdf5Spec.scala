@@ -1328,7 +1328,7 @@ class Hdf5Spec extends AnyFunSuite {
       e.getMessage.contains("chunkindex=extarray|btree2"), e.getMessage)
   }
 
-  test("a bad chunkindex fails on the driver, naming the option, even for an empty write") {
+  test("a bad chunkindex fails before any task runs, naming the option, even for an empty write") {
     val dir = "/tmp/graft_h5/bad_chunkindex"
     // an unknown kind, and a layout-v4 kind under the default h5ver=0
     for ((idx, named) <- Seq("btree3" -> "chunkindex", "fixedarray" -> "h5ver=2");
